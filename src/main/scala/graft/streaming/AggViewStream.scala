@@ -43,9 +43,7 @@ object AggViewStream {
     import spark.implicits._
     if (ViewStore.alreadyApplied(spark, viewPath, batchId)) return
     val part = partials(batch)
-    val touched = part.toDF()
-      .select(ViewStore.bucketOf(col("user_id")).as("b")).distinct()
-      .collect().map(_.getLong(0).toInt).toSeq.sorted
+    val touched = ViewStore.touchedBuckets(part.toDF(), "user_id")
     val existing: Dataset[UserTotals] =
       ViewStore.readBuckets(spark, viewPath, touched)
         .map(_.as[UserTotals])

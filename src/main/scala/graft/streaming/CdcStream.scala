@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.{col, timestamp_millis}
+import org.apache.spark.sql.functions.{col, lit, pmod, timestamp_millis}
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 import graft.cdc.{CdcEvent, ReferenceFold, TransactionView}
 
@@ -39,7 +39,11 @@ object CdcStream {
     * timeout (not processing-time) is deliberate: with processing-time
     * timeouts Spark schedules continuous empty micro-batches to re-check
     * timers — a busy-loop on an idle stream; event-time timers only fire
-    * when the watermark advances, i.e. when data actually flows. */
+    * when the watermark advances, i.e. when data actually flows.
+    *
+    * The watermark moves in whole-hour steps ([[WatermarkQuantumMs]]), so
+    * a key is evicted within one event-time hour of when a
+    * raw-millisecond watermark would have evicted it. */
   val StateTtlMs: Long = 3L * 24 * 3600 * 1000
 
   /** Allowed out-of-orderness for the watermark. Deliberately WIDE: the
@@ -51,19 +55,37 @@ object CdcStream {
     * out" in the reference's ops model. */
   val WatermarkDelay: String = "30 days"
 
+  /** Event time is quantized to this step before it feeds the watermark:
+    * each event counts at the end of its hour (`tsMs` floored to the hour,
+    * plus one hour). With `EventTimeTimeout`, every watermark advance
+    * makes Spark run an extra no-data micro-batch that sweeps all state
+    * for timeouts and commits every state partition; a raw-millisecond
+    * watermark advances after nearly every data batch. The watermark only
+    * drives the 3-day TTL, so an hour of resolution costs nothing.
+    * Quantizing is monotone and commutes with subtracting
+    * [[WatermarkDelay]] (a whole number of hours): an event is dropped
+    * only if its hour starts a full delay or more before the newest
+    * event's hour, so nothing under 30 days minus one hour late is
+    * dropped, and a key is evicted at most one hour of event time early.
+    * The end of the hour, not its start, keeps events of the epoch's
+    * first hour above Spark's initial watermark of 0 (rows at or below
+    * the watermark are dropped). Computed on epoch ms, not `date_trunc`,
+    * so it does not depend on the session time zone or DST. */
+  val WatermarkQuantumMs: Long = 3600L * 1000
+
   /** O3 op-filter → O5 ttl anti-filter applied before keying; O6 decode
     * errors are expected to be dropped upstream (PERMISSIVE parse). */
-  def preFilter(events: Dataset[CdcEvent]): Dataset[CdcEvent] = {
-    import events.sparkSession.implicits._
-    val knownCodes = graft.cdc.EventCodes.all.toSet
+  def preFilter(events: Dataset[CdcEvent]): Dataset[CdcEvent] =
+    // Column predicates, not typed lambdas: Catalyst evaluates them on the
+    // decoded columns, so dropped rows are never deserialized. A null in
+    // any tested field drops the row, as the lambdas did.
     events
-      .filter(e => Set("insert", "update", "replace").contains(e.operationType))
-      .filter(_.ttl.isEmpty)
+      .filter(col("operationType").isin("insert", "update", "replace"))
+      .filter(col("ttl").isNull)
       // unknown event types are skipped, mirroring the reference's
       // non-retriable-error-then-drop path (ReferenceFold.processOne
       // would throw, killing the query)
-      .filter(e => knownCodes.contains(e.eventCode))
-  }
+      .filter(col("eventCode").isin(graft.cdc.EventCodes.all: _*))
 
   /** The per-key stateful merge. Emits the updated view once per key per
     * micro-batch (update-mode semantics). */
@@ -114,14 +136,16 @@ object CdcStream {
   }
 
   /** Wire a streaming Dataset of events into a stream of view updates.
-    * The watermark on the event-time column drives both late-data
-    * accounting and state-TTL timers. */
+    * The watermark on the hour-quantized event-time column drives both
+    * late-data accounting and state-TTL timers. */
   def viewUpdates(
       events: Dataset[CdcEvent],
       metrics: Option[OutcomeCountsAccumulator] = None): Dataset[TransactionView] = {
     import events.sparkSession.implicits._
     preFilter(events)
-      .withColumn("eventTime", timestamp_millis(col("tsMs")))
+      .withColumn("eventTime",
+        timestamp_millis(
+          col("tsMs") - pmod(col("tsMs"), lit(WatermarkQuantumMs)) + lit(WatermarkQuantumMs)))
       .withWatermark("eventTime", WatermarkDelay)
       .as[CdcEvent]
       .groupByKey(_.transactionId)
@@ -129,15 +153,6 @@ object CdcStream {
         updateKeyInstrumented(metrics))
   }
 
-  /** foreachBatch alternative: merge each micro-batch into the bucketed
-    * [[ViewStore]] view (plain-parquet MERGE stand-in — no transactional
-    * table format is guaranteed on the classpath, SURVEY.md §7; on
-    * Delta/Iceberg this collapses to one `MERGE INTO`). Fully
-    * distributed: a cogroup on the key folds each key's batch events onto
-    * its stored view row — exactly the ladder, one shuffle, no
-    * driver-side state. Only buckets containing batch keys are re-read
-    * and rewritten; replayed batchIds are skipped (the ladder itself is
-    * replay-idempotent, the skip just saves the I/O). */
   /** One row of the view's OWN change feed (see `changelog` below): the
     * before/after image of a key the batch touched — `op` is "c" (created)
     * or "u" (updated). The reference CONSUMES a change stream; a view
@@ -165,6 +180,17 @@ object CdcStream {
     else Some(spark.read.parquet(s"$viewPath/_changelog/*").as[ViewChange])
   }
 
+  /** foreachBatch alternative: merge each micro-batch into the bucketed
+    * [[ViewStore]] view (plain-parquet MERGE stand-in — no transactional
+    * table format is guaranteed on the classpath, SURVEY.md §7; on
+    * Delta/Iceberg this collapses to one `MERGE INTO`). Fully
+    * distributed: a cogroup on the key folds each key's batch events onto
+    * its stored view row — exactly the ladder, one shuffle, no
+    * driver-side state. Only buckets containing batch keys are re-read
+    * and rewritten; replayed batchIds are skipped (the ladder itself is
+    * replay-idempotent, the skip just saves the I/O). The pre-filtered
+    * batch is persisted for the call, so it is decoded once for both the
+    * touched-bucket scan and the cogroup. */
   def mergeBatchIntoParquet(
       spark: SparkSession,
       batch: Dataset[CdcEvent],
@@ -173,12 +199,24 @@ object CdcStream {
       metrics: Option[OutcomeCountsAccumulator] = None,
       trace: Option[TraceLog.Emitter] = None,
       changelog: Boolean = false): Unit = {
-    import spark.implicits._
     if (ViewStore.alreadyApplied(spark, viewPath, batchId)) return
-    val filtered = preFilter(batch)
-    val touched = filtered.toDF()
-      .select(ViewStore.bucketOf(col("transactionId")).as("b")).distinct()
-      .collect().map(_.getLong(0).toInt).toSeq.sorted
+    val filtered = preFilter(batch).persist()
+    try mergeFiltered(spark, filtered, viewPath, batchId, metrics, changelog)
+    finally filtered.unpersist()
+    // span-parity structured records: one JSON line per (eventCode,
+    // outcome) delta this batch (TraceLog scaladoc for the design)
+    trace.foreach(_.emit(batchId))
+  }
+
+  private def mergeFiltered(
+      spark: SparkSession,
+      filtered: Dataset[CdcEvent],
+      viewPath: String,
+      batchId: Long,
+      metrics: Option[OutcomeCountsAccumulator],
+      changelog: Boolean): Unit = {
+    import spark.implicits._
+    val touched = ViewStore.touchedBuckets(filtered.toDF(), "transactionId")
     // a throw on a transient read error fails the batch (checkpoint
     // retries); untouched buckets are never read, let alone rewritten
     val existing: Dataset[TransactionView] =
@@ -222,8 +260,5 @@ object CdcStream {
         merged.flatMap(_.change.toSeq).write.mode("overwrite")
           .parquet(f"$viewPath/_changelog/batch-$batchId%020d")
     } finally if (changelog) merged.unpersist()
-    // span-parity structured records: one JSON line per (eventCode,
-    // outcome) delta this batch (TraceLog scaladoc for the design)
-    trace.foreach(_.emit(batchId))
   }
 }

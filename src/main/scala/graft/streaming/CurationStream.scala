@@ -64,9 +64,7 @@ object CurationStream {
             .agg(min("ts_ms").as("ts_ms"),
               (count(lit(1)) === sum(when(col("known"), 1L).otherwise(0L)))
                 .cast("int").as("is_near_dup"))
-          val touched = flags
-            .select(ViewStore.bucketOf(col("doc_id")).as("__bucket"))
-            .distinct().collect().map(_.getLong(0).toInt).toSeq
+          val touched = ViewStore.touchedBuckets(flags, "doc_id")
           if (touched.nonEmpty) {
             // ledger merge: union new decisions into the touched buckets
             // (insert-only by contract — doc ids are unique; keep-first

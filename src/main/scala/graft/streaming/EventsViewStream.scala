@@ -80,9 +80,7 @@ object EventsView {
       spark: SparkSession, batch: DataFrame, viewPath: String, batchId: Long): Unit = {
     if (ViewStore.alreadyApplied(spark, viewPath, batchId)) return
     val incoming = partials(prepared(batch))
-    val touched = incoming
-      .select(ViewStore.bucketOf(col("user_id")).as("b")).distinct()
-      .collect().map(_.getLong(0).toInt).toSeq.sorted
+    val touched = ViewStore.touchedBuckets(incoming, "user_id")
     // re-read ONLY the touched buckets; everything else stays untouched on
     // disk (no transient read failure can reset the view: a throw here
     // fails the batch and the checkpoint retries it)

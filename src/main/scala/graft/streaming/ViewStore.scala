@@ -3,9 +3,18 @@ package graft.streaming
 import java.net.URI
 import java.nio.charset.StandardCharsets
 
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
+import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.GraftSqlBridge
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 
 /** Hash-bucketed, manifest-pointed parquet view store — the plain-parquet
   * stand-in for a transactional MERGE INTO sink (no Delta/Iceberg jar is
@@ -27,6 +36,13 @@ import org.apache.spark.sql.functions._
   *    after commit, before the checkpoint advances) is detected by
   *    `alreadyApplied` and skipped, so additive partials (fee totals,
   *    event counts) are never double-merged.
+  *  - '''The manifest is the file index''': a read never asks Spark to
+  *    discover the view. The manifest names the live bucket dirs; a read
+  *    lists only those, on the driver, takes the schema from one file's
+  *    footer and hands Spark the files as a [[FileIndex]]. Building a
+  *    read runs no Spark job (no parallel listing, no schema inference)
+  *    and yields the rows and schema `spark.read.parquet` would over the
+  *    same dirs.
   *
   * Single-writer by contract (foreachBatch serializes micro-batches), and
   * the manifest flip enforces it: publishing is a rename-if-absent CAS on
@@ -44,6 +60,16 @@ object ViewStore {
     * retries (xxhash64 is a fixed algorithm, not a session-seeded hash). */
   def bucketOf(key: Column, numBuckets: Int = NumBuckets): Column =
     pmod(xxhash64(key), lit(numBuckets.toLong))
+
+  /** The sorted buckets that `df`'s `keyCol` values fall into. Each task
+    * reduces its partition to a set, so this is one stage with no
+    * shuffle. */
+  def touchedBuckets(df: DataFrame, keyCol: String): Seq[Int] = {
+    import df.sparkSession.implicits._
+    df.select(bucketOf(col(keyCol)).cast("int")).as[Int]
+      .mapPartitions(it => Iterator.single(it.toSet.toArray))
+      .collect().flatten.distinct.sorted.toSeq
+  }
 
   /** The live pointer state: manifest sequence number, last applied
     * foreachBatch id, bucket → dir (relative to the view root). */
@@ -127,9 +153,7 @@ object ViewStore {
     val f = fs(spark, viewPath)
     val root = new Path(viewPath)
     manifestSeqs(f, root).find(_._1 == seq).flatMap { case (s, name) =>
-      val m = parseManifest(f, root, s, name)
-      if (m.buckets.isEmpty) None
-      else Some(spark.read.parquet(m.buckets.values.map(rel => s"$viewPath/$rel").toSeq: _*))
+      relation(spark, viewPath, parseManifest(f, root, s, name).buckets.values)
     }
   }
 
@@ -138,17 +162,50 @@ object ViewStore {
 
   /** The whole view (all live buckets), or None if never written. */
   def read(spark: SparkSession, viewPath: String): Option[DataFrame] =
-    readManifest(spark, viewPath).flatMap { m =>
-      if (m.buckets.isEmpty) None
-      else Some(spark.read.parquet(m.buckets.values.map(rel => s"$viewPath/$rel").toSeq: _*))
-    }
+    readManifest(spark, viewPath).flatMap(m => relation(spark, viewPath, m.buckets.values))
 
   /** Only the named buckets' current rows (None if none of them exist). */
   def readBuckets(spark: SparkSession, viewPath: String, touched: Seq[Int]): Option[DataFrame] =
-    readManifest(spark, viewPath).flatMap { m =>
-      val paths = touched.flatMap(m.buckets.get).map(rel => s"$viewPath/$rel")
-      if (paths.isEmpty) None else Some(spark.read.parquet(paths: _*))
+    readManifest(spark, viewPath).flatMap(m => relation(spark, viewPath, touched.flatMap(m.buckets.get)))
+
+  /** The parquet files of the bucket dirs `rels` as a DataFrame, or None
+    * if they hold no file. The dirs are listed here, on the driver, and
+    * the schema is read from one footer the way `spark.read.parquet`
+    * reads it (Spark's row metadata, made nullable), so no Spark job
+    * runs. Each dir is read as a leaf, with no partition column. */
+  private def relation(spark: SparkSession, viewPath: String, rels: Iterable[String]): Option[DataFrame] = {
+    val f = fs(spark, viewPath)
+    val dirs = rels.map(rel => new Path(viewPath, rel)).toSeq
+    // Spark's rule for data files: hidden and underscore names are not
+    // data, nor are empty files
+    val files = dirs.flatMap(d => f.listStatus(d)).filter { st =>
+      val n = st.getPath.getName
+      st.isFile && st.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
     }
+    files.headOption.map { first =>
+      val conf = spark.sparkContext.hadoopConfiguration
+      val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(first, conf))
+      val footer = try reader.getFooter finally reader.close()
+      val schema = ParquetFileFormat.readSchemaFromFooter(
+        new Footer(first.getPath, footer), new ParquetToSparkSchemaConverter(SQLConf.get))
+      spark.baseRelationToDataFrame(HadoopFsRelation(
+        new ManifestFileIndex(dirs, files), new StructType(), GraftSqlBridge.asNullable(schema),
+        None, new ParquetFileFormat, Map.empty)(spark))
+    }
+  }
+
+  /** A fixed file list as Spark's file index: what the manifest resolved
+    * to when the read was built. */
+  private final class ManifestFileIndex(
+      override val rootPaths: Seq[Path], files: Seq[FileStatus]) extends FileIndex {
+    override def listFiles(
+        partitionFilters: Seq[Expression], dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
+      Seq(PartitionDirectory(InternalRow.empty, files.toArray))
+    override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+    override def refresh(): Unit = ()
+    override def sizeInBytes: Long = files.map(_.getLen).sum
+    override def partitionSchema: StructType = new StructType()
+  }
 
   /** Land `merged` (carrying a `__bucket` column covering exactly the
     * `touched` buckets) as generation `gen-<batchId>`, then flip the
@@ -196,8 +253,7 @@ object ViewStore {
     val root = new Path(viewPath)
     readManifest(spark, viewPath).foreach { m =>
       if (m.buckets.nonEmpty) {
-        val df = spark.read
-          .parquet(m.buckets.values.map(rel => s"$viewPath/$rel").toSeq: _*)
+        val df = relation(spark, viewPath, m.buckets.values).get
           .withColumn("__bucket", bucketOf(col(keyCol)))
         val genRel = f"compact-${m.seq + 1}%020d"
         df.repartition(m.buckets.size, col("__bucket"))
@@ -265,10 +321,8 @@ object ViewStore {
       org.apache.spark.sql.types.StructField("__k", keyType, nullable = true)))
     val probeRows = keys.map(k => org.apache.spark.sql.Row(k))
     import scala.jdk.CollectionConverters._
-    val touched = spark.createDataFrame(probeRows.asJava, probeSchema)
-      .select(bucketOf(col("__k")).as("b"))
-      .distinct().collect().map(_.getLong(0).toInt)
-      .filter(m.buckets.contains).sorted.toSeq
+    val touched = touchedBuckets(spark.createDataFrame(probeRows.asJava, probeSchema), "__k")
+      .filter(m.buckets.contains)
     if (touched.isEmpty) { retireHistory(f, root); return 0L }
     val current = readBuckets(spark, viewPath, touched)
       .getOrElse { retireHistory(f, root); return 0L }

@@ -122,6 +122,64 @@ class CdcStreamSpec extends SparkSpec {
     }
   }
 
+  test("a 4-batch drain within one event-time hour runs at most one empty micro-batch") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    // EventGen lifecycles all fall inside one event-time hour, so the
+    // hour-quantized watermark moves once (from unset) and no later batch
+    // makes Spark schedule a no-data batch to sweep for timeouts
+    val events = EventGen.generate(nTx = 40, seed = 91L)
+    val hours = events.map(e => e.tsMs / CdcStream.WatermarkQuantumMs).distinct
+    assert(hours.size == 1, s"precondition: events span hours $hours")
+    val ms = MemoryStream[CdcEvent]
+    val q = CdcStream.viewUpdates(ms.toDS()).writeStream
+      .format("memory").queryName("views_hour").outputMode("update")
+      .option("checkpointLocation",
+        java.nio.file.Files.createTempDirectory("graft-hour-ckpt").toString)
+      .start()
+    try {
+      events.grouped(math.ceil(events.size / 4.0).toInt).foreach { b =>
+        ms.addData(b); q.processAllAvailable()
+      }
+      // executed batches only: an idle trigger also reports progress, but
+      // runs no addBatch
+      val ran = q.recentProgress.filter(_.durationMs.containsKey("addBatch"))
+        .groupBy(_.batchId).values.map(_.head).toSeq
+      assert(ran.count(_.numInputRows > 0) == 4)
+      assert(ran.count(_.numInputRows == 0) <= 1,
+        s"empty batches: ${ran.filter(_.numInputRows == 0).map(_.batchId).sorted}")
+      val keys = spark.table("views_hour").select("transactionId").as[String].collect().toSet
+      assert(keys == canonical(events).keySet)
+    } finally q.stop()
+  }
+
+  test("an event 29 days behind the newest is applied; one 31 days behind is dropped") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val day = 24L * 3600 * 1000
+    val now = 1700000000000L + 40 * day
+    def activated(tx: String, ts: Long) =
+      CdcEvent(s"$tx-e0", tx, EventCodes.Activated, java.time.Instant.ofEpochMilli(ts).toString, ts)
+    val ms = MemoryStream[CdcEvent]
+    val emitted = scala.collection.mutable.ArrayBuffer.empty[TransactionView]
+    val q = CdcStream.viewUpdates(ms.toDS()).writeStream
+      .outputMode("update")
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[TransactionView], _: Long) =>
+        emitted.synchronized { emitted ++= b.collect() }
+        ()
+      }
+      .start()
+    try {
+      ms.addData(Seq(activated("tx-now", now)))
+      q.processAllAvailable()
+      ms.addData(Seq(activated("tx-29d", now - 29 * day), activated("tx-31d", now - 31 * day)))
+      q.processAllAvailable()
+      val keys = emitted.synchronized(emitted.map(_.transactionId).toSet)
+      assert(keys.contains("tx-29d"), "an event within the watermark delay must be applied")
+      assert(!keys.contains("tx-31d"), "an event past the watermark delay is dropped")
+    } finally q.stop()
+  }
+
   test("foreachBatch parquet merge across micro-batches equals canonical replay") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-view").toString

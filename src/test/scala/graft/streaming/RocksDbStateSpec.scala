@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import graft.SparkSpec
-import graft.cdc.{CdcEvent, EventGen, ReferenceFold, TransactionView}
+import graft.cdc.{CdcEvent, EventCodes, EventGen, ReferenceFold, TransactionView}
 
 /** The stateful merge ladder under the RocksDB state-store provider (with
   * changelog checkpointing) must produce exactly the canonical fold — the
@@ -13,13 +13,22 @@ class RocksDbStateSpec extends SparkSpec {
 
   import spark.implicits._
 
-  test("flatMapGroupsWithState merge under RocksDB equals the canonical fold") {
-    implicit val ctx = spark.sqlContext
+  private def withRocksDb[T](body: => T): T = {
     spark.conf.set("spark.sql.streaming.stateStore.providerClass",
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     spark.conf.set(
       "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
-    try {
+    try body
+    finally {
+      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
+      spark.conf.unset(
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+    }
+  }
+
+  test("flatMapGroupsWithState merge under RocksDB equals the canonical fold") {
+    implicit val ctx = spark.sqlContext
+    withRocksDb {
       val events = EventGen.generate(nTx = 25, seed = 77L)
       val ms = MemoryStream[CdcEvent]
       val got = scala.collection.concurrent.TrieMap.empty[String, TransactionView]
@@ -39,10 +48,40 @@ class RocksDbStateSpec extends SparkSpec {
       val want = ReferenceFold.replay(
         events.filter(_.ttl.isEmpty).distinctBy(_.id).sortBy(e => (e.tsMs, e.id)))
       assert(got.toMap == want)
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      spark.conf.unset(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled")
+    }
+  }
+
+  test("state TTL: a key is evicted once the watermark passes lastProcessedEventAt + StateTtlMs") {
+    implicit val ctx = spark.sqlContext
+    withRocksDb {
+      val hour = CdcStream.WatermarkQuantumMs
+      val delay = 30L * 24 * hour
+      val t0 = 1700000000000L
+      def activated(tx: String, ts: Long) =
+        CdcEvent(s"$tx-e0", tx, EventCodes.Activated, java.time.Instant.ofEpochMilli(ts).toString, ts)
+      val ckpt = java.nio.file.Files.createTempDirectory("graft-rocks-ttl").toString
+      val ms = MemoryStream[CdcEvent]
+      val q = CdcStream.viewUpdates(ms.toDS())
+        .writeStream.format("noop").outputMode("update")
+        .option("checkpointLocation", ckpt)
+        .start()
+      def stateKeys(): Set[String] =
+        spark.read.format("statestore").load(ckpt)
+          .select("value.groupState.view.transactionId").as[String].collect().toSet
+      try {
+        ms.addData(Seq(activated("tx-a", t0)))
+        q.processAllAvailable()
+        assert(stateKeys() == Set("tx-a"))
+        // the watermark lands two hours short of tx-a's expiry: kept
+        ms.addData(Seq(activated("tx-c", t0 + delay + CdcStream.StateTtlMs - 2 * hour)))
+        q.processAllAvailable()
+        assert(stateKeys() == Set("tx-a", "tx-c"))
+        // the watermark passes tx-a's expiry by more than one quantum:
+        // the no-data batch that follows sweeps it out
+        ms.addData(Seq(activated("tx-b", t0 + delay + CdcStream.StateTtlMs + 2 * hour)))
+        q.processAllAvailable()
+        assert(stateKeys() == Set("tx-b", "tx-c"))
+      } finally q.stop()
     }
   }
 }

@@ -19,6 +19,97 @@ class ViewStoreSpec extends SparkSpec {
     ViewStore.commit(spark, path, df, touched.toSeq, batchId)
   }
 
+  /** Rows with nullable, non-nullable, string and timestamp columns. */
+  private def commitWide(path: String, batchId: Long, keys: Seq[Long]): Unit = {
+    val df = keys.map { k =>
+      (k, if (k % 3 == 0) None else Some(s"n$k"), new java.sql.Timestamp(1700000000000L + k))
+    }.toDF("k", "name", "ts").withColumn("__bucket", ViewStore.bucketOf(col("k")))
+    ViewStore.commit(spark, path, df, ViewStore.touchedBuckets(df, "k"), batchId)
+  }
+
+  /** `spark.read.parquet` over the dirs the live manifest names. */
+  private def readParquet(path: String, buckets: Option[Seq[Int]] = None) = {
+    val m = ViewStore.readManifest(spark, path).get.buckets
+    val rels = buckets.fold(m.values.toSeq)(_.flatMap(m.get))
+    spark.read.parquet(rels.map(rel => s"$path/$rel"): _*)
+  }
+
+  private def assertSameAsParquet(
+      got: org.apache.spark.sql.DataFrame, want: org.apache.spark.sql.DataFrame): Unit = {
+    assert(got.schema == want.schema)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Long]).toSeq
+    assert(rows(got) == rows(want))
+  }
+
+  test("touchedBuckets: the distinct buckets of the key column, sorted") {
+    val df = (0L until 500L).toDF("k").repartition(7)
+    val want = df.select(ViewStore.bucketOf(col("k"))).distinct().as[Long].collect()
+      .map(_.toInt).sorted.toSeq
+    assert(ViewStore.touchedBuckets(df, "k") == want)
+    assert(ViewStore.touchedBuckets(df.limit(0), "k").isEmpty)
+  }
+
+  test("building read, readBuckets and readAt submits no Spark job") {
+    val path = tmp()
+    // enough keys to fill every bucket: more dirs than Spark's parallel
+    // listing threshold (32)
+    commitWide(path, 0L, 0L until 400L)
+    val buckets = ViewStore.readManifest(spark, path).get.buckets
+    assert(buckets.size > 32, s"precondition: ${buckets.size} buckets")
+    val seq = ViewStore.snapshots(spark, path).last
+    val sc = spark.sparkContext
+    val group = s"viewstore-build-${System.nanoTime()}"
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull)
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "build ViewStore reads")
+      val built = Seq(
+        ViewStore.read(spark, path),
+        ViewStore.readBuckets(spark, path, buckets.keys.toSeq.sorted.take(40)),
+        ViewStore.readAt(spark, path, seq))
+      assert(built.forall(_.isDefined))
+      // listener events arrive in order: once this sentinel job is seen,
+      // every job the builds submitted has been seen too
+      sc.setJobGroup(group + "-sentinel", "sentinel")
+      spark.range(1).collect()
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!jobs.contains(group + "-sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(jobs.contains(group + "-sentinel"), "sentinel job never reported")
+      assert(!jobs.contains(group), "building a ViewStore read submitted a Spark job")
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  test("manifest reads equal spark.read.parquet over the same dirs: after commit, compact, purgeKeys") {
+    val path = tmp()
+    commitWide(path, 0L, 0L until 200L)
+    // a commit replaces the buckets it touches: batch 1 carries every key
+    commitWide(path, 1L, 0L until 260L)
+    def check(stage: String): Unit = withClue(stage) {
+      assertSameAsParquet(ViewStore.read(spark, path).get, readParquet(path))
+      val some = ViewStore.readManifest(spark, path).get.buckets.keys.toSeq.sorted.take(5)
+      assertSameAsParquet(ViewStore.readBuckets(spark, path, some).get,
+        readParquet(path, Some(some)))
+      assertSameAsParquet(
+        ViewStore.readAt(spark, path, ViewStore.snapshots(spark, path).last).get, readParquet(path))
+    }
+    check("after commit")
+    assert(ViewStore.read(spark, path).get.schema.map(_.name) == Seq("k", "name", "ts"))
+    ViewStore.compact(spark, path, "k")
+    check("after compact")
+    assert(ViewStore.read(spark, path).get.count() == 260L)
+    assert(ViewStore.purgeKeys(spark, path, "k", Seq(3L, 7L, 151L)) == 3L)
+    check("after purgeKeys")
+    assert(ViewStore.read(spark, path).get.count() == 257L)
+  }
+
   test("time travel: each retained snapshot reads its own state") {
     val path = tmp()
     commitBatch(path, 0L, Seq((1L, 10L)))
