@@ -2,9 +2,38 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session tunings shared by every entry point (Bench, Verify, the dev
-  * timers). These change PLANS, never results — each is an optimizer/
-  * AQE knob with a measured rationale:
+/** The one way a `main` builds its session: [[local]] applies [[conf]],
+  * which is [[tune]]'s plan tunings plus the settings every local run of
+  * the engine shares (Bench, Verify, Dev and the test session). Each
+  * setting and its reason:
+  *
+  *  - `spark.sql.shuffle.partitions = cpus`: one post-shuffle partition
+  *    per local core (AQE coalesces from there).
+  *  - `spark.ui.enabled = false`, `spark.sql.session.timeZone = UTC`.
+  *  - `spark.sql.legacy.parquet.nanosAsLong = true`: events.parquet has
+  *    carried TIMESTAMP(NANOS), unsupported by Spark 4 unless read as raw
+  *    nanos (`Tables.events` converts to epoch millis).
+  *  - `spark.sql.adaptive.enabled = true`.
+  *  - `spark.sql.codegen.cache.maxEntries = 5000`: static conf, default
+  *    100. The query surface compiles far more whole-stage-codegen units
+  *    than that across warmup and measured passes, and cache thrash
+  *    re-Janinos every stage (measured 5× total-time regression when the
+  *    surface outgrew the default).
+  *  - `spark.cleaner.periodicGC.interval = 30s`: Spark's ContextCleaner
+  *    releases shuffle files / broadcasts only when the DRIVER GCs their
+  *    references — under a large heap the JVM may not GC for the whole
+  *    run, so state from every prior query accumulates (measured at the
+  *    10× probe scale: q76 23 s → 81 s → 112 s across identical passes;
+  *    stable 8 s once the cleaner runs). A 30 s periodic GC bounds the
+  *    accumulation at negligible pause cost; the same reasoning applies
+  *    to any long-running driver (see README cluster notes).
+  *
+  * Driver memory is NOT a session setting: in local mode the driver JVM
+  * is already running when the builder runs, so the heap comes from the
+  * launching JVM's options (`SPARK_DRIVER_MEM` in build.sbt).
+  *
+  * [[tune]]'s tunings change PLANS, never results — each is an
+  * optimizer/AQE knob with a measured rationale:
   *
   *  - `InferFiltersFromGenerate` excluded: the rule copies a
   *    generator's input into a `size(...) > 0` filter, and predicate
@@ -32,8 +61,33 @@ object Sessions {
   val ExcludedOptimizerRules: String =
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 
+  /** The plan tunings [[tune]] applies. */
+  val Tunings: Seq[(String, String)] = Seq(
+    "spark.sql.optimizer.excludedRules" -> ExcludedOptimizerRules,
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "65536")
+
   /** Apply the shared tunings to a session builder. */
-  def tune(b: SparkSession.Builder): SparkSession.Builder = b
-    .config("spark.sql.optimizer.excludedRules", ExcludedOptimizerRules)
-    .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "65536")
+  def tune(b: SparkSession.Builder): SparkSession.Builder =
+    Tunings.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
+
+  /** Every setting [[local]] applies, in order: master, [[Tunings]], the
+    * shared settings, then `extra` (a later key overrides an earlier one). */
+  def conf(cpus: Int, extra: (String, String)*): Seq[(String, String)] =
+    Seq("spark.master" -> s"local[$cpus]") ++ Tunings ++ Seq(
+      "spark.sql.shuffle.partitions" -> cpus.toString,
+      "spark.ui.enabled" -> "false",
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true",
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.codegen.cache.maxEntries" -> "5000",
+      "spark.cleaner.periodicGC.interval" -> "30s") ++ extra
+
+  /** A `local[cpus]` session built from [[conf]]. */
+  def local(cpus: Int, extra: (String, String)*): SparkSession =
+    conf(cpus, extra: _*).foldLeft(SparkSession.builder()) {
+      case (b, (k, v)) => b.config(k, v)
+    }.getOrCreate()
+
+  /** Local cores for a `main`: `SPARK_GRAFT_CPUS`, default 32. */
+  def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
 }

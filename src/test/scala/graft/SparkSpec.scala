@@ -29,20 +29,10 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // static conf, default 100: the suite executes hundreds of distinct
-      // plans; cache thrash re-compiles codegen per stage (see Bench.scala)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // managed tables (BucketingSpec) must not land in the repo cwd
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
-      .getOrCreate()
+    // the conf Bench and Verify ship (SessionsSpec pins it); managed
+    // tables (BucketingSpec) must not land in the repo cwd
+    val s = Sessions.local(4, "spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
     s.sparkContext.setLogLevel("ERROR")
     s
   }
