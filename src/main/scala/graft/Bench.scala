@@ -13,7 +13,8 @@ import java.nio.file.{Files, Paths}
   * dominated small-SF numbers by 5×: q22 5.0 s cold vs 0.9 s warm).
   */
 object Bench {
-  private val WarmupDir = "/root/testdata/sf0.001"
+  /** Smallest scale factor: where every timed run warms its codegen. */
+  val WarmupDir = "/root/testdata/sf0.001"
 
   /** One-line JVM health snapshot: cumulative GC and JIT compilation time
     * plus CodeHeap occupancy. The round-2 driver run degraded uniformly
@@ -112,29 +113,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // static conf, default 100: the 38-query surface compiles far more
-      // whole-stage-codegen units than that across warmup+measured passes,
-      // and cache thrash re-Janinos every stage (measured 5× total-time
-      // regression when the surface outgrew the default)
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // Spark's ContextCleaner releases shuffle files / broadcasts only
-      // when the DRIVER GCs their references — under a large heap the JVM
-      // may not GC for the whole run, so state from every prior query
-      // accumulates (measured at the 10× probe scale: q76 23 s → 81 s →
-      // 112 s across identical passes; stable 8 s once the cleaner runs).
-      // A 30 s periodic GC bounds the accumulation at negligible pause
-      // cost; same reasoning applies to any long-running driver (see
-      // README cluster notes).
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     // Pre-touch the measured SF's parquet bytes so a cold page cache can't
     // dominate the numbers (the round-1 driver run was 3× the warm cost —
@@ -396,11 +375,12 @@ object Bench {
       } }
     } catch { case t: Throwable =>
       System.err.println(s"[bench] duck pairing failed: ${t.getMessage}"); "null" }
-    // sf1 (10×) full-board section (round-10 VERDICT #3): Sf1Board +
-    // tools/pair_sf1.py write SF1_BOARD.json (per-query seconds at a 10×
-    // disjoint-replica corpus + a timeout-guarded DuckDB pairing); embed
-    // it verbatim so the driver artifact carries the scale run. The file
-    // records its own provenance (single-rep builder run, replica dir,
+    // sf1 (10×) full-board section (round-10 VERDICT #3): `graft.Dev
+    // scale` + tools/pair_sf1.py write SF1_BOARD.json (per-query seconds
+    // at a 10× disjoint-replica corpus + a timeout-guarded DuckDB
+    // pairing), copied here from the replica dir; embed it verbatim so
+    // the driver artifact carries the scale run. The file records its own
+    // provenance (single-rep builder run, replica dir,
     // generation timestamps) — this is a checked-in measurement, not a
     // per-round re-run: a 10× board + its DuckDB pairing is hours of
     // wall, re-generated when the plans it measures change.

@@ -3,10 +3,10 @@ package graft
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scale probe: synthesize an N×-replica corpus from a base scale factor
-  * and time selected queries at both scales — the reproducible form of the
-  * README's "heavy five at 10×" experiment (the work is linear by design;
-  * this measures it).
+/** Replica corpora for scale runs: synthesize an N× corpus from a base
+  * scale factor, so `graft.Dev scale` can time queries at N× the data.
+  * The work is linear by design; the round-4 "heavy five at 10×" table
+  * (commit e84cbea) measured it on such a corpus.
   *
   * Construction (disjoint-replica, oracle-countable): replica `r` of
   * `documents` prefixes every token with `r<r>x` (shingles/grams become
@@ -14,9 +14,6 @@ import org.apache.spark.sql.functions._
   * replica `r` of `embeddings` multiplies element i by the ±1 sign of
   * md5("<r>:<i>") (mᵢ² = 1 keeps every within-replica cosine EXACTLY,
   * while cross-replica dots decorrelate). Ids shift by r·max.
-  *
-  * Usage: `runMain graft.Probe <baseDir> <factor> <q1> <q2> ...`
-  * Prints one JSON line: {"probe":factor,"queries":{name:[baseSec,bigSec]}}.
   */
 object Probe {
 
@@ -104,49 +101,5 @@ object Probe {
     }.reduce(_ unionByName _)
     evReps.repartition(32).write.mode(SaveMode.Overwrite)
       .parquet(s"$outDir/events.parquet")
-  }
-
-  private def time(f: => Long): Double = {
-    val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-  }
-
-  def main(args: Array[String]): Unit = {
-    val baseDir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val factor = args.lift(1).map(_.toInt).getOrElse(10)
-    val names = if (args.length > 2) args.drop(2).toSeq
-      else Seq("q112_source_overlap", "q114_neardup_flow", "q119_ann_recall",
-        "q131_pagerank")
-    val spark = Sessions.tune(SparkSession.builder())
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .appName("graft-probe")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // driver memory must come from the LAUNCHING JVM's opts (e.g.
-      // `sbt -J-Xmx24g` / spark-submit --driver-memory): in local mode the
-      // JVM is already running here, so a builder conf would be a no-op
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val outDir = java.nio.file.Files.createTempDirectory("graft-probe").toString
-    val synthSec = time { replicate(spark, baseDir, outDir, factor); 0L }
-    val results = names.map { name =>
-      val q = SparkEntry.queries(name)
-      def run(dir: String): Double = {
-        q(spark, dir).count() // warm
-        System.gc()
-        Seq.fill(2)(time(q(spark, dir).count())).min
-      }
-      val base = run(baseDir)
-      val big = run(outDir)
-      name -> (math.round(base * 100) / 100.0, math.round(big * 100) / 100.0)
-    }
-    val qs = results.map { case (n, (b, g)) => s""""$n":[$b,$g]""" }.mkString(",")
-    // one-line JSON last so drivers tailing stdout parse it
-    println(s"""{"probe":$factor,"synth_sec":${math.round(synthSec * 10) / 10.0},"queries":{$qs}}""")
-    spark.stop()
   }
 }

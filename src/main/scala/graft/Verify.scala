@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,23 +11,7 @@ object Verify {
       if (args.length > 2) Some(args(2).split(",").toSeq) else None
     def selected(name: String): Boolean =
       only.forall(_.exists(name.startsWith))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = Sessions.tune(SparkSession.builder())
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // events.parquet carries TIMESTAMP(NANOS), unsupported by Spark 4
-      // unless read as raw nanos (Tables.events converts to epoch millis).
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // static conf, default 100 — see Bench.scala: the 38-query surface
-      // churns the whole-stage-codegen class cache otherwise
-      .config("spark.sql.codegen.cache.maxEntries", "5000")
-      // GC-triggered ContextCleaner under a big heap starves shuffle/
-      // broadcast release across the 93-query session — see Bench.scala
-      .config("spark.cleaner.periodicGC.interval", "30s")
-      .getOrCreate()
+    val spark = Sessions.local(Sessions.envCpus)
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
@@ -42,6 +25,14 @@ object Verify {
     // the pinned shared-core tier (q16/q76 family) lives across queries by
     // design; release it once the whole board is dumped
     graft.ops.Dedup.unpersistPinned(spark)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracleJson(SparkEntry.oracleSql.filter(kv => selected(kv._1))))
+    spark.stop()
+  }
+
+  /** The `oracle_sql.json` body: one JSON object, name → oracle SQL,
+    * sorted by name. */
+  def oracleJson(oracles: Iterable[(String, String)]): String = {
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.
@@ -54,9 +45,7 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
-    spark.stop()
+    oracles.toSeq.sortBy(_._1).map { case (k, v) => s"${q(k)}: ${q(v)}" }
+      .mkString("{\n", ",\n", "\n}")
   }
 }

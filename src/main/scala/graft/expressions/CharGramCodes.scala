@@ -25,7 +25,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * (deterministic). A string shorter than n yields an empty array.
   *
   * Round-11 A/B vs [[CharGramCounts]] (the round-10 string-keyed form)
-  * on the q372 walk is recorded in README — this is the VERDICT r10 #7
+  * on the q372 walk is recorded in `OPTIMIZATION_r11.md` (q372 entry;
+  * commit c1b9342) — this is the VERDICT r10 #7
   * "codegen A/B" resolution: the hot cost was never the
   * CodegenFallback dispatch (one virtual call per document) but the
   * per-gram UTF8String allocation + map churn, which packing removes.

@@ -109,8 +109,8 @@ object Relational {
     * CALLER OBLIGATION (applies to [[globalCumSum]] too): the sorted
     * frame is persisted via [[Dedup.cacheTracked]] — load-bearing for
     * correctness, see the comment in the body — and the entry lives
-    * until `Dedup.unpersistIntermediates(spark)` runs. Bench/Verify/
-    * TimeQ/Plans call it after every query action; a long-lived session
+    * until `Dedup.unpersistIntermediates(spark)` runs. Bench, Verify and
+    * Dev call it after every query action; a long-lived session
     * embedding these operators as a library must do the same after each
     * consuming action, or MEMORY_AND_DISK entries accumulate without
     * bound (round-6 ADVICE).

@@ -69,7 +69,7 @@ object KmvQueries {
     *     packed to BIGINT by [[graft.expressions.CharGramCodes]] (21
     *     bits per code point — exact bijection, so counts are identical
     *     to the string-keyed form while the aggregate hashes fixed-width
-    *     longs; A/B in README);
+    *     longs; A/B in `OPTIMIZATION_r11.md`, commit c1b9342);
     *  2. per-gram posting lists (vocabulary-sized input — ≤ charset³
     *     rows at ANY corpus scale) emit in-row ordered pair products
     *     INCLUDING the diagonal, so the norms n2 = Σc² arrive as the

@@ -1,10 +1,9 @@
 package graft
 
 /** Pins the session conf every `main` builds through [[Sessions.local]].
-  * The expected map is written out by hand: it is the conf `Bench.main`
-  * and `Verify.main` each built with their own hand-copied builder before
-  * both moved onto the factory, so a change to the factory that would move
-  * the bench or the correctness dump fails here. */
+  * The expected map is the conf `Bench` and `Verify` run on, written out
+  * by hand, so a change to the factory that would move the bench or the
+  * correctness dump fails here. */
 class SessionsSpec extends SparkSpec {
 
   private def benchVerifyConf(cpus: Int): Map[String, String] = Map(
@@ -39,5 +38,16 @@ class SessionsSpec extends SparkSpec {
     Sessions.conf(4).filterNot(_._1 == "spark.master").foreach { case (k, v) =>
       assert(spark.conf.get(k) == v, k)
     }
+  }
+
+  test("Sessions.scala is the only SparkSession builder under src/main") {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main")
+    assert(java.nio.file.Files.isDirectory(root))
+    val builders = java.nio.file.Files.walk(root).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala"))
+      .filter(p => java.nio.file.Files.readString(p).contains("SparkSession.builder("))
+      .map(_.getFileName.toString).toSeq
+    assert(builders == Seq("Sessions.scala"))
   }
 }

@@ -9,7 +9,8 @@ Scala/Spark.
 
 Usage: pair_duckdb.py [SF_DIR] [ORACLE_JSON]
   SF_DIR       parquet dir (default /root/testdata/sf0.1)
-  ORACLE_JSON  oracle_sql.json from a graft.Verify run (default
+  ORACLE_JSON  oracle_sql.json from a graft.Verify run, or from
+               `graft.Dev oracle`, which runs no query (default
                /tmp/verify_pair/oracle_sql.json)
 Timing: 1 warm-up + 2 measured reps per query, min of the measured reps
 (same robust-estimator reasoning as Bench's min-of-reps)."""

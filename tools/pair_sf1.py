@@ -1,18 +1,20 @@
 #!/usr/bin/env python3
 """DuckDB pairing for the sf1 (10x) full-board run: times every oracle SQL
-over the SAME replica parquet dir graft.Sf1Board ran against, with a hard
+over the SAME replica parquet dir `graft.Dev scale` ran against, with a hard
 per-query timeout (recursive-CTE oracles that take 40-100 s at sf0.1 can
 take hours at sf1 — a timeout is recorded as a LOWER BOUND and excluded
 from the ratio, listed explicitly in the artifact). Merges the pairing
-into SF1_BOARD.json in place. Dev/driver-side tool only.
+into the SF1_BOARD.json `graft.Dev scale` wrote into the replica dir, in
+place; copy that file to the repo root for graft.Bench to embed.
+Dev/driver-side tool only.
 
 Usage: pair_sf1.py [REPLICA_DIR] [ORACLE_JSON] [BOARD_JSON] [TIMEOUT_S]
 """
 import json, sys, time, datetime, multiprocessing as mp
 
 REP_DIR = sys.argv[1] if len(sys.argv) > 1 else "/tmp/graft-sf1-10x"
-ORACLE = sys.argv[2] if len(sys.argv) > 2 else "/tmp/verify_r11a/oracle_sql.json"
-BOARD = sys.argv[3] if len(sys.argv) > 3 else "SF1_BOARD.json"
+ORACLE = sys.argv[2] if len(sys.argv) > 2 else "/tmp/oracle_sql.json"
+BOARD = sys.argv[3] if len(sys.argv) > 3 else f"{REP_DIR}/SF1_BOARD.json"
 TIMEOUT = float(sys.argv[4]) if len(sys.argv) > 4 else 300.0
 TABLES = ["region", "nation", "customer", "supplier", "part", "orders",
           "lineitem", "events", "documents", "embeddings"]
