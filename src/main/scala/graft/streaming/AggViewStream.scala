@@ -36,28 +36,20 @@ object AggViewStream {
       .as[UserTotals]
   }
 
-  /** foreachBatch body: fold the batch's partials into the stored view.
-    * Skips replayed batchIds; only buckets containing batch keys are
-    * read/rewritten. */
+  /** foreachBatch body: fold the batch's partials into the stored view
+    * through [[ViewStore.mergeKeyed]]. */
   def mergeBatch(spark: SparkSession, batch: DataFrame, viewPath: String, batchId: Long): Unit = {
     import spark.implicits._
-    if (ViewStore.alreadyApplied(spark, viewPath, batchId)) return
     val part = partials(batch)
-    val touched = ViewStore.touchedBuckets(part.toDF(), "user_id")
-    val existing: Dataset[UserTotals] =
-      ViewStore.readBuckets(spark, viewPath, touched)
-        .map(_.as[UserTotals])
-        .getOrElse(spark.emptyDataset[UserTotals])
-    val merged = existing.groupByKey(_.user_id).cogroup(part.groupByKey(_.user_id)) {
-      (k, olds, news) =>
-        val merged = (olds ++ news).reduceOption { (a, b) =>
-          UserTotals(k, a.n_events + b.n_events, a.purchase_c + b.purchase_c,
-            math.max(a.last_ts_ms, b.last_ts_ms))
+    ViewStore.mergeKeyed(spark, viewPath, batchId, part.toDF(), "user_id") { existing =>
+      existing.map(_.as[UserTotals]).getOrElse(spark.emptyDataset[UserTotals])
+        .groupByKey(_.user_id).cogroup(part.groupByKey(_.user_id)) { (k, olds, news) =>
+          (olds ++ news).reduceOption { (a, b) =>
+            UserTotals(k, a.n_events + b.n_events, a.purchase_c + b.purchase_c,
+              math.max(a.last_ts_ms, b.last_ts_ms))
+          }.iterator
         }
-        merged.iterator
+        .toDF()
     }
-    ViewStore.commit(spark, viewPath,
-      merged.toDF().withColumn("__bucket", ViewStore.bucketOf(col("user_id"))),
-      touched, batchId)
   }
 }

@@ -12,20 +12,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * flagged docs) fold by ADDITION into the persisted state — the
   * compliance dashboard's counters over everything ingested.
   *
-  * Persistence is the [[GenState]] generation + pointer-flip + sweep
-  * discipline: addition is NOT idempotent, so the batchId guard is
-  * load-bearing (spec-pinned), and superseded generations are swept.
+  * Committed through [[GenState]]: addition is NOT idempotent, so its
+  * batchId guard is load-bearing (spec-pinned).
   */
 object BlocklistStream {
 
   /** Running totals (empty, correctly-shaped frame if none). */
   def snapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.currentGen(statePath) match {
-      case Some(gen) => spark.read.parquet(new java.io.File(statePath, gen).toString)
-      case None =>
-        import spark.implicits._
-        Seq.empty[(String, Long, Long, Long, Long)]
-          .toDF("category", "n_docs_hit", "n_term_hits", "n_phrase_hits", "n_flagged")
+    GenState.read(spark, statePath) {
+      import spark.implicits._
+      Seq.empty[(String, Long, Long, Long, Long)]
+        .toDF("category", "n_docs_hit", "n_term_hits", "n_phrase_hits", "n_flagged")
     }
 
   /** One batch's per-category screen delta — q214's plan over the
@@ -47,7 +44,7 @@ object BlocklistStream {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > GenState.lastBatchId(statePath) && !batch.isEmpty) {
+        GenState.advance(statePath, batch, batchId) { dir =>
           val spark = batch.sparkSession
           val next = snapshot(spark, statePath)
             .unionByName(screenDelta(batch))
@@ -56,13 +53,8 @@ object BlocklistStream {
               sum("n_term_hits").as("n_term_hits"),
               sum("n_phrase_hits").as("n_phrase_hits"),
               sum("n_flagged").as("n_flagged"))
-          val gen = s"gen-${System.currentTimeMillis()}-$batchId"
-          next.write.mode("overwrite")
-            .parquet(new java.io.File(statePath, gen).toString)
-          // atomic pointer flip + superseded-generation sweep (GenState)
-          GenState.flip(statePath, batchId, gen)
+          next.write.mode("overwrite").parquet(dir)
         }
-        ()
       }
       .start()
   }

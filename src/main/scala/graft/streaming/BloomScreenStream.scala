@@ -18,32 +18,19 @@ import graft.functions.TextFunctions._
   * touching raw eval text: the bitset is the only state, 64 Ki rows at
   * most, regardless of how much eval material has ever streamed in.
   *
-  * The batchId guard (generation + atomic pointer flip) is kept for
-  * write hygiene (skip exact replays, readers see complete
-  * generations) even though the merge itself is idempotent.
+  * Committed through [[GenState]]; its batchId guard only saves the
+  * rewrite of an exact replay, since the merge itself is idempotent.
   */
 object BloomScreenStream {
 
-  private val Pointer = "_CURRENT"
   val BloomBits: Long = graft.queries.RetrievalQueries.BloomBits
 
   /** Current set-bit table (single `bit` column; empty if none). */
-  def bitsSnapshot(spark: SparkSession, statePath: String): DataFrame = {
-    val ptr = new java.io.File(statePath, Pointer)
-    if (ptr.exists()) {
-      val gen = java.nio.file.Files.readString(ptr.toPath).trim.split(':')(1)
-      spark.read.parquet(new java.io.File(statePath, gen).toString)
-    } else {
+  def bitsSnapshot(spark: SparkSession, statePath: String): DataFrame =
+    GenState.read(spark, statePath) {
       import spark.implicits._
       Seq.empty[Long].toDF("bit")
     }
-  }
-
-  private def lastBatchId(statePath: String): Long = {
-    val ptr = new java.io.File(statePath, Pointer)
-    if (ptr.exists()) java.nio.file.Files.readString(ptr.toPath).trim.split(':')(0).toLong
-    else -1L
-  }
 
   /** Both bloom bits of every distinct word n-gram of a (doc_id, text)
     * frame — q192's hash arithmetic, shared by maintain and screen. */
@@ -62,19 +49,14 @@ object BloomScreenStream {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastBatchId(statePath) && !batch.isEmpty) {
+        GenState.advance(statePath, batch, batchId) { dir =>
           val spark = batch.sparkSession
           val gb = gramBits(batch, n)
           val delta = gb.select(col("h1").as("bit"))
             .union(gb.select(col("h2").as("bit")))
           val next = bitsSnapshot(spark, statePath).unionByName(delta).distinct()
-          val gen = s"gen-${System.currentTimeMillis()}-$batchId"
-          next.write.mode("overwrite")
-            .parquet(new java.io.File(statePath, gen).toString)
-          // atomic pointer flip + superseded-generation sweep (GenState)
-          GenState.flip(statePath, batchId, gen)
+          next.write.mode("overwrite").parquet(dir)
         }
-        ()
       }
       .start()
   }

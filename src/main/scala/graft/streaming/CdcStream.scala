@@ -87,16 +87,35 @@ object CdcStream {
       // would throw, killing the query)
       .filter(col("eventCode").isin(graft.cdc.EventCodes.all: _*))
 
-  /** The per-key stateful merge. Emits the updated view once per key per
-    * micro-batch (update-mode semantics). */
-  def updateKey(
-      txId: String,
+  /** One ladder step, shared by the stateful and the foreachBatch path: a
+    * key's batch events fold onto `view` in (tsMs, id) order through
+    * [[ReferenceFold.processOne]]; an id already in `seen`, or repeated
+    * in the batch, is dropped and counted as DupDropped, so the copy with
+    * the earliest tsMs is the one applied. Returns the new view and the
+    * ids seen after the batch. */
+  private def ladder(
+      view: Option[TransactionView],
+      seen: Set[String],
       events: Iterator[CdcEvent],
-      state: GroupState[KeyState]): Iterator[TransactionView] =
-    updateKeyInstrumented(None)(txId, events, state)
+      metrics: Option[OutcomeCountsAccumulator]): (Option[TransactionView], Set[String]) =
+    // within a micro-batch we impose (tsMs, id) order — deterministic where
+    // the reference's arrival order is racy (its comment diagram,
+    // TransactionViewUpsertService.kt:83-103); across batches it's the
+    // ladder's arrival-order compare-and-set
+    events.toSeq.sortBy(e => (e.tsMs, e.id)).foldLeft((view, seen)) { case ((v, ids), e) =>
+      if (ids.contains(e.id)) {
+        metrics.foreach(_.add(MergeMetrics.key(e.eventCode, MergeMetrics.DupDropped)))
+        (v, ids)
+      } else {
+        metrics.foreach(_.add(MergeMetrics.key(e.eventCode, MergeMetrics.classify(v, e))))
+        (Some(ReferenceFold.processOne(v, e)), ids + e.id)
+      }
+    }
 
-  /** [[updateKey]] with optional O14/span-parity counters (task-side
-    * accumulator adds; `observe()` can't see inside the state function). */
+  /** The per-key stateful merge. Emits the updated view once per key per
+    * micro-batch (update-mode semantics), with optional O14/span-parity
+    * counters (task-side accumulator adds; `observe()` can't see inside
+    * the state function). */
   def updateKeyInstrumented(metrics: Option[OutcomeCountsAccumulator])(
       txId: String,
       events: Iterator[CdcEvent],
@@ -106,26 +125,11 @@ object CdcStream {
       return Iterator.empty
     }
     val initial = state.getOption
-    var view = initial.map(_.view)
-    var seen = initial.map(_.seenIds).getOrElse(Set.empty[String])
-    var changed = false
-    // within a micro-batch we impose (tsMs, id) order — deterministic where
-    // the reference's arrival order is racy (its comment diagram,
-    // TransactionViewUpsertService.kt:83-103); across batches it's the
-    // ladder's arrival-order compare-and-set
-    events.toSeq.sortBy(e => (e.tsMs, e.id)).foreach { e =>
-      if (seen.contains(e.id))
-        metrics.foreach(_.add(MergeMetrics.key(e.eventCode, MergeMetrics.DupDropped)))
-      else {
-        metrics.foreach(_.add(MergeMetrics.key(e.eventCode, MergeMetrics.classify(view, e))))
-        seen += e.id
-        view = Some(ReferenceFold.processOne(view, e))
-        changed = true
-      }
-    }
+    val seen = initial.map(_.seenIds).getOrElse(Set.empty[String])
+    val (view, seenAfter) = ladder(initial.map(_.view), seen, events, metrics)
     view match {
-      case Some(v) if changed =>
-        state.update(KeyState(v, seen))
+      case Some(v) if seenAfter.size > seen.size =>
+        state.update(KeyState(v, seenAfter))
         // evict when the watermark passes lastProcessedEventAt + TTL
         state.setTimeoutTimestamp(
           math.max(v.lastProcessedEventAt.getOrElse(0L) + StateTtlMs,
@@ -181,84 +185,59 @@ object CdcStream {
   }
 
   /** foreachBatch alternative: merge each micro-batch into the bucketed
-    * [[ViewStore]] view (plain-parquet MERGE stand-in — no transactional
-    * table format is guaranteed on the classpath, SURVEY.md §7; on
-    * Delta/Iceberg this collapses to one `MERGE INTO`). Fully
-    * distributed: a cogroup on the key folds each key's batch events onto
-    * its stored view row — exactly the ladder, one shuffle, no
-    * driver-side state. Only buckets containing batch keys are re-read
-    * and rewritten; replayed batchIds are skipped (the ladder itself is
-    * replay-idempotent, the skip just saves the I/O). The pre-filtered
-    * batch is persisted for the call, so it is decoded once for both the
-    * touched-bucket scan and the cogroup. */
+    * [[ViewStore]] view through [[ViewStore.mergeKeyed]] (plain-parquet
+    * MERGE stand-in — no transactional table format is guaranteed on the
+    * classpath, SURVEY.md §7; on Delta/Iceberg this collapses to one
+    * `MERGE INTO`). Fully distributed: a cogroup on the key folds each
+    * key's batch events onto its stored view row — exactly the ladder,
+    * one shuffle, no driver-side state. Replayed batchIds are skipped
+    * (the ladder itself is replay-idempotent, the skip just saves the
+    * I/O). The pre-filtered batch is persisted for the call, so it is
+    * decoded once for both the touched-bucket scan and the cogroup.
+    *
+    * With `changelog`, the batch's change feed is written to
+    * `_changelog/batch-<batchId>` inside the combine step, so before the
+    * manifest flip records the batch: a crash in between leaves the batch
+    * unapplied, and its re-delivery overwrites the same feed dir — the
+    * feed stays exactly-once. */
   def mergeBatchIntoParquet(
       spark: SparkSession,
       batch: Dataset[CdcEvent],
       viewPath: String,
       batchId: Long,
       metrics: Option[OutcomeCountsAccumulator] = None,
-      trace: Option[TraceLog.Emitter] = None,
       changelog: Boolean = false): Unit = {
-    if (ViewStore.alreadyApplied(spark, viewPath, batchId)) return
-    val filtered = preFilter(batch).persist()
-    try mergeFiltered(spark, filtered, viewPath, batchId, metrics, changelog)
-    finally filtered.unpersist()
-    // span-parity structured records: one JSON line per (eventCode,
-    // outcome) delta this batch (TraceLog scaladoc for the design)
-    trace.foreach(_.emit(batchId))
-  }
-
-  private def mergeFiltered(
-      spark: SparkSession,
-      filtered: Dataset[CdcEvent],
-      viewPath: String,
-      batchId: Long,
-      metrics: Option[OutcomeCountsAccumulator],
-      changelog: Boolean): Unit = {
     import spark.implicits._
-    val touched = ViewStore.touchedBuckets(filtered.toDF(), "transactionId")
-    // a throw on a transient read error fails the batch (checkpoint
-    // retries); untouched buckets are never read, let alone rewritten
-    val existing: Dataset[TransactionView] =
-      ViewStore.readBuckets(spark, viewPath, touched)
-        .map(_.as[TransactionView])
-        .getOrElse(spark.emptyDataset[TransactionView])
-    val merged = existing
-      .groupByKey(_.transactionId)
-      .cogroup(filtered.groupByKey(_.transactionId)) { (_, views, events) =>
-        val v0 = views.toSeq.headOption
-        val raw = events.toSeq
-        val evs = raw.distinctBy(_.id).sortBy(e => (e.tsMs, e.id))
-        metrics.foreach { m =>
-          raw.diff(evs).foreach(e => m.add(MergeMetrics.key(e.eventCode, MergeMetrics.DupDropped)))
+    val filtered = preFilter(batch).persist()
+    // with changelog on, the cogroup feeds two actions (feed + view) —
+    // persisted so the merge ladder and bucket reads run once, not twice
+    var cached: Option[Dataset[MergedRow]] = None
+    try ViewStore.mergeKeyed(spark, viewPath, batchId, filtered.toDF(), "transactionId") { existing =>
+      val rows = existing.map(_.as[TransactionView]).getOrElse(spark.emptyDataset[TransactionView])
+        .groupByKey(_.transactionId)
+        .cogroup(filtered.groupByKey(_.transactionId)) { (_, views, events) =>
+          val v0 = views.toSeq.headOption
+          ladder(v0, Set.empty, events, metrics) match {
+            case (Some(after), applied) if applied.nonEmpty =>
+              Iterator.single(MergedRow(after, Some(ViewChange(
+                after.transactionId,
+                if (v0.isEmpty) "c" else "u",
+                v0.flatMap(_.status), after.status,
+                v0.flatMap(_.lastProcessedEventAt), after.lastProcessedEventAt,
+                batchId))))
+            case _ => v0.map(MergedRow(_, None)).iterator
+          }
         }
-        if (evs.isEmpty) v0.map(MergedRow(_, None)).iterator
-        else {
-          val after = evs.foldLeft(v0) { (v, e) =>
-            metrics.foreach(_.add(MergeMetrics.key(e.eventCode, MergeMetrics.classify(v, e))))
-            Some(ReferenceFold.processOne(v, e))
-          }.get
-          Iterator.single(MergedRow(after, Some(ViewChange(
-            after.transactionId,
-            if (v0.isEmpty) "c" else "u",
-            v0.flatMap(_.status), after.status,
-            v0.flatMap(_.lastProcessedEventAt), after.lastProcessedEventAt,
-            batchId))))
-        }
-      }
-    // with changelog on, the cogroup feeds two actions (view + feed) —
-    // persist so the merge ladder and bucket reads run once, not twice
-    if (changelog) merged.persist()
-    try {
-      ViewStore.commit(spark, viewPath,
-        merged.map(_.view).toDF()
-          .withColumn("__bucket", ViewStore.bucketOf(col("transactionId"))),
-        touched, batchId)
-      if (changelog)
-        // per-batch dir, overwrite mode: a batch retry after a commit
-        // failure rewrites the same dir — the feed stays exactly-once
-        merged.flatMap(_.change.toSeq).write.mode("overwrite")
+      if (changelog) {
+        cached = Some(rows.persist())
+        // per-batch dir, overwrite mode: a re-delivery rewrites the same dir
+        rows.flatMap(_.change.toSeq).write.mode("overwrite")
           .parquet(f"$viewPath/_changelog/batch-$batchId%020d")
-    } finally if (changelog) merged.unpersist()
+      }
+      rows.map(_.view).toDF()
+    } finally {
+      cached.foreach(_.unpersist())
+      filtered.unpersist()
+    }
   }
 }

@@ -22,30 +22,23 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *    ingested (spec-pinned, batch-split-invariant).
   *
   * State = edges (bounded by users × item vocabulary) + pair counts
-  * (bounded by item vocabulary²) under the [[GenState]]
-  * generation-per-batch + atomic-flip + batchId-guard discipline —
-  * pair addition is not idempotent, so the guard is load-bearing.
+  * (bounded by item vocabulary²), committed through [[GenState]] —
+  * pair addition is not idempotent, so its batchId guard is load-bearing.
   */
 object CoEngageStream {
 
   /** Standing (user_id, item) edge set (empty frame if none yet). */
   def edgesSnapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.currentGen(statePath) match {
-      case Some(gen) =>
-        spark.read.parquet(s"$statePath/$gen/edges")
-      case None =>
-        import spark.implicits._
-        Seq.empty[(Long, Long)].toDF("user_id", "item")
+    GenState.read(spark, statePath, "edges") {
+      import spark.implicits._
+      Seq.empty[(Long, Long)].toDF("user_id", "item")
     }
 
   /** Standing (item_a, item_b, co) pair counts (item_a < item_b). */
   def coSnapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.currentGen(statePath) match {
-      case Some(gen) =>
-        spark.read.parquet(s"$statePath/$gen/co")
-      case None =>
-        import spark.implicits._
-        Seq.empty[(Long, Long, Long)].toDF("item_a", "item_b", "co")
+    GenState.read(spark, statePath, "co") {
+      import spark.implicits._
+      Seq.empty[(Long, Long, Long)].toDF("item_a", "item_b", "co")
     }
 
   /** Maintain the co-engagement state from a STREAMING frame with
@@ -59,7 +52,7 @@ object CoEngageStream {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > GenState.lastBatchId(statePath) && !batch.isEmpty) {
+        GenState.advance(statePath, batch, batchId) { dir =>
           val spark = batch.sparkSession
           val seen = edgesSnapshot(spark, statePath)
           val fresh = batch.select(col("user_id").cast("long"),
@@ -79,13 +72,9 @@ object CoEngageStream {
           val nextCo = coSnapshot(spark, statePath)
             .unionByName(delta)
             .groupBy("item_a", "item_b").agg(sum("co").as("co"))
-          val gen = s"gen-${System.currentTimeMillis()}-$batchId"
-          seen.unionByName(fresh).write.mode("overwrite")
-            .parquet(s"$statePath/$gen/edges")
-          nextCo.write.mode("overwrite").parquet(s"$statePath/$gen/co")
-          GenState.flip(statePath, batchId, gen)
+          seen.unionByName(fresh).write.mode("overwrite").parquet(s"$dir/edges")
+          nextCo.write.mode("overwrite").parquet(s"$dir/co")
         }
-        ()
       }
       .start()
   }

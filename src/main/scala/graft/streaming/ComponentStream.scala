@@ -10,40 +10,21 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * O(arriving edges) plus ONE relabel pass over the assignment, never a
   * recompute over the standing edge set (q33's batch form).
   *
-  * Persistence is a generation-per-batch parquet dir with an atomic
-  * pointer flip (the ViewStore manifest discipline in miniature): each
-  * batch writes `gen-<epoch>-<batchId>/` then atomically rewrites
-  * `_CURRENT` to point at it — readers always see a complete snapshot,
-  * a crash mid-write leaves the previous pointer intact.
-  *
-  * At-least-once safety: foreachBatch can re-deliver a batch after its
-  * generation committed. Re-folding already-reflected edges collapses
-  * them to self-loops inside `incrementalComponents` (a no-op), so
-  * replay converges to the same assignment — additionally the batchId
-  * is recorded in the pointer and an exact re-delivery (batchId ≤ last)
-  * is skipped without reading the edges at all.
+  * Committed through [[GenState]]. At-least-once safety: foreachBatch
+  * can re-deliver a batch after its generation committed. Re-folding
+  * already-reflected edges collapses them to self-loops inside
+  * `incrementalComponents` (a no-op), so replay converges to the same
+  * assignment; GenState's batchId guard also skips an exact re-delivery
+  * without reading the edges at all.
   */
 object ComponentStream {
 
-  private val Pointer = "_CURRENT"
-
   /** Read the current assignment snapshot (empty frame if none yet). */
-  def assignment(spark: SparkSession, statePath: String): DataFrame = {
-    val ptr = new java.io.File(statePath, Pointer)
-    if (ptr.exists()) {
-      val gen = java.nio.file.Files.readString(ptr.toPath).trim.split(':')(1)
-      spark.read.parquet(new java.io.File(statePath, gen).toString)
-    } else {
+  def assignment(spark: SparkSession, statePath: String): DataFrame =
+    GenState.read(spark, statePath) {
       import spark.implicits._
       Seq.empty[(Long, Long)].toDF("id", "component_id")
     }
-  }
-
-  private def lastBatchId(statePath: String): Long = {
-    val ptr = new java.io.File(statePath, Pointer)
-    if (ptr.exists()) java.nio.file.Files.readString(ptr.toPath).trim.split(':')(0).toLong
-    else -1L
-  }
 
   /** Start maintaining the assignment at `statePath` from a STREAMING
     * frame of edges (`srcCol`, `dstCol`). */
@@ -58,19 +39,12 @@ object ComponentStream {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastBatchId(statePath) && !batch.isEmpty) {
+        GenState.advance(statePath, batch, batchId) { dir =>
           val spark = batch.sparkSession
           val next = graft.ops.Graph
             .incrementalComponents(assignment(spark, statePath), batch, srcCol, dstCol)
-          val gen = s"gen-${System.currentTimeMillis()}-$batchId"
-          val dir = new java.io.File(statePath, gen)
-          next.write.mode("overwrite").parquet(dir.toString)
-          // atomic pointer flip: write-to-temp + rename, so a reader never
-          // sees a partial pointer and a crash leaves the old snapshot live
-          // atomic pointer flip + superseded-generation sweep (GenState)
-          GenState.flip(statePath, batchId, gen)
+          next.write.mode("overwrite").parquet(dir)
         }
-        ()
       }
       .start()
   }

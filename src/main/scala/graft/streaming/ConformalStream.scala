@@ -20,33 +20,18 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * this alarm keeps its guarantee; one that doesn't is silently
   * shipping an invalid one.
   *
-  * Addition is NOT idempotent, so the batchId guard (generation +
-  * atomic pointer flip via [[GenState]]) is load-bearing: an exact
-  * re-delivery after a crash is skipped, readers always see a complete
-  * generation, and the merge is commutative ⇒ counts are invariant to
-  * how the stream was batched (spec-pinned).
+  * Committed through [[GenState]]: addition is NOT idempotent, so its
+  * batchId guard is load-bearing, and the merge is commutative ⇒ counts
+  * are invariant to how the stream was batched (spec-pinned).
   */
 object ConformalStream {
 
-  private val Pointer = "_CURRENT"
-
   /** Current (source, n_seen, n_covered) counts — empty if none. */
-  def snapshot(spark: SparkSession, statePath: String): DataFrame = {
-    val ptr = new java.io.File(statePath, Pointer)
-    if (ptr.exists()) {
-      val gen = java.nio.file.Files.readString(ptr.toPath).trim.split(':')(1)
-      spark.read.parquet(new java.io.File(statePath, gen).toString)
-    } else {
+  def snapshot(spark: SparkSession, statePath: String): DataFrame =
+    GenState.read(spark, statePath) {
       import spark.implicits._
       Seq.empty[(String, Long, Long)].toDF("source", "n_seen", "n_covered")
     }
-  }
-
-  private def lastBatchId(statePath: String): Long = {
-    val ptr = new java.io.File(statePath, Pointer)
-    if (ptr.exists()) java.nio.file.Files.readString(ptr.toPath).trim.split(':')(0).toLong
-    else -1L
-  }
 
   /** The per-batch coverage delta of a (source, score) frame against the
     * frozen threshold: covered ⇔ score ≥ `thrScore` (q272 reports
@@ -68,18 +53,14 @@ object ConformalStream {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastBatchId(statePath) && !batch.isEmpty) {
+        GenState.advance(statePath, batch, batchId) { dir =>
           val spark = batch.sparkSession
           val next = snapshot(spark, statePath)
             .unionByName(coverageDelta(batch, thrScore))
             .groupBy("source")
             .agg(sum("n_seen").as("n_seen"), sum("n_covered").as("n_covered"))
-          val gen = s"gen-${System.currentTimeMillis()}-$batchId"
-          next.write.mode("overwrite")
-            .parquet(new java.io.File(statePath, gen).toString)
-          GenState.flip(statePath, batchId, gen)
+          next.write.mode("overwrite").parquet(dir)
         }
-        ()
       }
       .start()
   }

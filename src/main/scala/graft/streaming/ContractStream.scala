@@ -13,28 +13,20 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * canonical thing to watch continuously: by the time a batch audit
   * runs, the poisoned rows have already joined.
   *
-  * Persistence is the [[SprtStream]] generation + pointer-flip
-  * discipline; counts are additive (NOT idempotent), so the batchId
-  * guard is load-bearing, while the MIN component would be idempotent
-  * on its own — the guard protects the pair.
+  * Committed through [[GenState]]; counts are additive (NOT
+  * idempotent), so its batchId guard is load-bearing, while the MIN
+  * component would be idempotent on its own — the guard protects the
+  * pair.
   */
 object ContractStream {
 
-  /** Current per-group (n_lines, n_violations, min_lag) state.
-    * Pointer format is owned by [[GenState]] (round-8 ADVICE: one
-    * owner, not three private parsers). */
+  /** Current per-group (n_lines, n_violations, min_lag) state. */
   def snapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.currentGen(statePath) match {
-      case Some(gen) =>
-        spark.read.parquet(new java.io.File(statePath, gen).toString)
-      case None =>
-        import spark.implicits._
-        Seq.empty[(String, Long, Long, Long)]
-          .toDF("g", "n_lines", "n_violations", "min_lag_days")
+    GenState.read(spark, statePath) {
+      import spark.implicits._
+      Seq.empty[(String, Long, Long, Long)]
+        .toDF("g", "n_lines", "n_violations", "min_lag_days")
     }
-
-  private def lastBatchId(statePath: String): Long =
-    GenState.lastBatchId(statePath)
 
   /** The q379-shaped report off a state snapshot. */
   def report(state: DataFrame): DataFrame =
@@ -55,7 +47,7 @@ object ContractStream {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastBatchId(statePath) && !batch.isEmpty) {
+        GenState.advance(statePath, batch, batchId) { dir =>
           val spark = batch.sparkSession
           val delta = batch.groupBy("g")
             .agg(count(lit(1)).as("n_lines"),
@@ -66,12 +58,8 @@ object ContractStream {
             .agg(sum("n_lines").as("n_lines"),
               sum("n_violations").as("n_violations"),
               min("min_lag_days").as("min_lag_days"))
-          val gen = s"gen-${System.currentTimeMillis()}-$batchId"
-          next.write.mode("overwrite")
-            .parquet(new java.io.File(statePath, gen).toString)
-          GenState.flip(statePath, batchId, gen)
+          next.write.mode("overwrite").parquet(dir)
         }
-        ()
       }
       .start()
   }

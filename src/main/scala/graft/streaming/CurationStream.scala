@@ -51,37 +51,22 @@ object CurationStream {
       .outputMode("update")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val spark = batch.sparkSession
-        if (!ViewStore.alreadyApplied(spark, ledgerPath, batchId)) {
-          // per-doc verdict: near-dup iff every band key was already claimed
-          // (all of a doc's bands arrive in this batch — see NearDupStream)
-          // NOTE: no __bucket here — ViewStore.readBuckets reads leaf
-          // partition dirs, so existing rows come back WITHOUT the bucket
-          // column; the union below must be bucket-free on both sides and
-          // the column is re-derived just before commit (the same shape as
-          // the sibling AggViewStream/CdcStream merges).
-          val flags = batch.groupBy("doc_id")
-            .agg(min("ts_ms").as("ts_ms"),
-              (count(lit(1)) === sum(when(col("known"), 1L).otherwise(0L)))
-                .cast("int").as("is_near_dup"))
-          val touched = ViewStore.touchedBuckets(flags, "doc_id")
-          if (touched.nonEmpty) {
-            // ledger merge: union new decisions into the touched buckets
-            // (insert-only by contract — doc ids are unique; keep-first
-            // makes a replayed doc row idempotent)
-            val existing = ViewStore.readBuckets(spark, ledgerPath, touched)
-            val merged = existing match {
-              case Some(cur) => cur.unionByName(flags)
-                .withColumn("__rn", row_number().over(
-                  org.apache.spark.sql.expressions.Window
-                    .partitionBy("doc_id").orderBy(col("ts_ms"), col("is_near_dup"))))
-                .filter(col("__rn") === 1).drop("__rn")
-              case None => flags
-            }
-            ViewStore.commit(spark, ledgerPath,
-              merged.withColumn("__bucket", ViewStore.bucketOf(col("doc_id"))),
-              touched, batchId)
-          }
+        // per-doc verdict: near-dup iff every band key was already claimed
+        // (all of a doc's bands arrive in this batch — see NearDupStream)
+        val flags = batch.groupBy("doc_id")
+          .agg(min("ts_ms").as("ts_ms"),
+            (count(lit(1)) === sum(when(col("known"), 1L).otherwise(0L)))
+              .cast("int").as("is_near_dup"))
+        // ledger merge: union new decisions into the touched buckets
+        // (insert-only by contract — doc ids are unique; keep-first
+        // makes a replayed doc row idempotent)
+        ViewStore.mergeKeyed(batch.sparkSession, ledgerPath, batchId, flags, "doc_id") {
+          case Some(cur) => cur.unionByName(flags)
+            .withColumn("__rn", row_number().over(
+              org.apache.spark.sql.expressions.Window
+                .partitionBy("doc_id").orderBy(col("ts_ms"), col("is_near_dup"))))
+            .filter(col("__rn") === 1).drop("__rn")
+          case None => flags
         }
       }
       .start()

@@ -69,27 +69,14 @@ object EventsView {
       col("n_events"))
 
   /** foreachBatch body: merge this micro-batch's partials into the
-    * bucketed [[ViewStore]] view (a transactional table format would make
-    * this a single MERGE INTO). Only the buckets containing batch keys
-    * are re-read and rewritten; the manifest flip is atomic; a replayed
-    * batchId (at-least-once foreachBatch delivery) is skipped, so the
-    * additive partials (fee_total_c, n_events) cannot double-count.
+    * bucketed [[ViewStore]] view through [[ViewStore.mergeKeyed]] (a
+    * transactional table format would make this a single MERGE INTO).
     * Dedup is per-batch: duplicate deliveries ACROSS micro-batches need
     * the stateful id-tracking path (CdcStream) or an idempotent upstream. */
   def mergeBatchIntoParquet(
       spark: SparkSession, batch: DataFrame, viewPath: String, batchId: Long): Unit = {
-    if (ViewStore.alreadyApplied(spark, viewPath, batchId)) return
     val incoming = partials(prepared(batch))
-    val touched = ViewStore.touchedBuckets(incoming, "user_id")
-    // re-read ONLY the touched buckets; everything else stays untouched on
-    // disk (no transient read failure can reset the view: a throw here
-    // fails the batch and the checkpoint retries it)
-    val merged = ViewStore.readBuckets(spark, viewPath, touched) match {
-      case Some(existing) => merge(existing, incoming)
-      case None => incoming
-    }
-    ViewStore.commit(spark, viewPath,
-      merged.withColumn("__bucket", ViewStore.bucketOf(col("user_id"))),
-      touched, batchId)
+    ViewStore.mergeKeyed(spark, viewPath, batchId, incoming, "user_id")(
+      _.fold(incoming)(merge(_, incoming)))
   }
 }

@@ -14,20 +14,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * cutoff-relative features from THIS table's semantics at corpus
   * scale.
   *
-  * Persistence is the [[GenState]] generation + pointer-flip + sweep
-  * discipline: sum-folding is NOT idempotent, so the batchId guard is
-  * load-bearing (spec-pinned), and superseded generations are swept.
+  * Committed through [[GenState]]: sum-folding is NOT idempotent, so
+  * its batchId guard is load-bearing (spec-pinned).
   */
 object FeatureStoreStream {
 
   /** Current per-user counters (empty, correctly-shaped if none). */
   def snapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.currentGen(statePath) match {
-      case Some(gen) => spark.read.parquet(new java.io.File(statePath, gen).toString)
-      case None =>
-        import spark.implicits._
-        Seq.empty[(Long, Long, Long, Long)]
-          .toDF("user_id", "n_events", "first_day", "last_day")
+    GenState.read(spark, statePath) {
+      import spark.implicits._
+      Seq.empty[(Long, Long, Long, Long)]
+        .toDF("user_id", "n_events", "first_day", "last_day")
     }
 
   /** One batch's per-user delta from a (user_id, day) frame. */
@@ -54,16 +51,11 @@ object FeatureStoreStream {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > GenState.lastBatchId(statePath) && !batch.isEmpty) {
+        GenState.advance(statePath, batch, batchId) { dir =>
           val spark = batch.sparkSession
           val next = merge(snapshot(spark, statePath), delta(batch))
-          val gen = s"gen-${System.currentTimeMillis()}-$batchId"
-          next.write.mode("overwrite")
-            .parquet(new java.io.File(statePath, gen).toString)
-          // atomic pointer flip + superseded-generation sweep (GenState)
-          GenState.flip(statePath, batchId, gen)
+          next.write.mode("overwrite").parquet(dir)
         }
-        ()
       }
       .start()
   }

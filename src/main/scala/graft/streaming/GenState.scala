@@ -1,14 +1,21 @@
 package graft.streaming
 
-/** Shared generation-per-batch persistence discipline of the snapshot
-  * maintainers (SketchStream, RetractStream, QualityMonitorStream,
-  * RollingDistinctStream, BloomScreenStream, SuggestStream,
-  * ComponentStream, PrioritySampleStream): each micro-batch writes a
-  * fresh `gen-<epochMillis>-<batchId>/` parquet snapshot, then
-  * atomically rewrites the `_CURRENT` pointer (`<batchId>:<gen>`), so
-  * readers always see a complete snapshot, a crash mid-write leaves the
-  * previous generation live, and an exact re-delivery (batchId ≤
-  * pointer's) is skipped by the guard.
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+
+/** The foreachBatch commit protocol of the snapshot maintainers (every
+  * stream whose state is one small table rewritten whole per batch:
+  * SketchStream, RetractStream, ComponentStream, KmvStream, ...), and the
+  * one owner of its on-disk format. A maintainer reads its state with
+  * [[read]] and commits a batch with [[advance]]:
+  *
+  *  - an empty batch, or one whose batchId the `_CURRENT` pointer already
+  *    records (an exact re-delivery after a crash), is skipped, so a fold
+  *    that is not idempotent (addition) never applies a batch twice;
+  *  - otherwise the caller writes the next snapshot into a fresh
+  *    `gen-<epochMillis>-<batchId>/` dir, and only then is the pointer
+  *    (`<batchId>:<gen>`) atomically rewritten, so readers always see a
+  *    complete snapshot and a crash mid-write leaves the previous
+  *    generation live.
   *
   * [[flip]] also SWEEPS superseded generations (round-5 ADVICE): a
   * long-running stream otherwise grows the state path by one full
@@ -43,6 +50,27 @@ private[streaming] object GenState {
       java.nio.file.Files.readString(ptr.toPath).trim.split(':')(0).toLong
     else -1L
   }
+
+  /** The current snapshot (its `part` subdir, if given), or `empty`
+    * before the first flip. */
+  def read(spark: SparkSession, statePath: String, part: String = "")(
+      empty: => DataFrame): DataFrame =
+    currentGen(statePath) match {
+      case Some(gen) =>
+        spark.read.parquet(if (part.isEmpty) s"$statePath/$gen" else s"$statePath/$gen/$part")
+      case None => empty
+    }
+
+  /** Commit one foreachBatch call: unless `batch` is empty or `batchId`
+    * is already applied, `write` fills a fresh generation dir (its path
+    * is the argument) with the next snapshot, and the pointer flips to
+    * it. If `write` throws, nothing flips. */
+  def advance(statePath: String, batch: Dataset[_], batchId: Long)(write: String => Unit): Unit =
+    if (batchId > lastBatchId(statePath) && !batch.isEmpty) {
+      val gen = s"gen-${System.currentTimeMillis()}-$batchId"
+      write(s"$statePath/$gen")
+      flip(statePath, batchId, gen)
+    }
 
   /** Atomically flip the pointer to `gen` (tmp write + ATOMIC_MOVE),
     * then sweep superseded generation dirs. Call AFTER `gen`'s data is

@@ -24,19 +24,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * pins determinism and assignment-consistency, not split
   * invariance).
   *
-  * Persistence is the [[GenState]] generation + pointer-flip + sweep
-  * discipline; addition is not idempotent, so the batchId guard is
-  * load-bearing.
+  * Committed through [[GenState]]; addition is not idempotent, so its
+  * batchId guard is load-bearing.
   */
 object KMeansStream {
 
   /** Current accumulators `(cluster, pos, s, n)` — empty if none. */
   def accSnapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.currentGen(statePath) match {
-      case Some(gen) => spark.read.parquet(new java.io.File(statePath, gen).toString)
-      case None =>
-        import spark.implicits._
-        Seq.empty[(Long, Int, Long, Long)].toDF("cluster", "pos", "s", "n")
+    GenState.read(spark, statePath) {
+      import spark.implicits._
+      Seq.empty[(Long, Int, Long, Long)].toDF("cluster", "pos", "s", "n")
     }
 
   /** Served centroids `(cluster, cvq)` derived from the accumulators
@@ -80,7 +77,7 @@ object KMeansStream {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > GenState.lastBatchId(statePath) && !batch.isEmpty) {
+        GenState.advance(statePath, batch, batchId) { dir =>
           val spark = batch.sparkSession
           val haveState = GenState.currentGen(statePath).isDefined
           val cents =
@@ -90,13 +87,8 @@ object KMeansStream {
             .unionByName(assignDelta(batch, cents))
             .groupBy("cluster", "pos")
             .agg(sum("s").as("s"), sum("n").as("n"))
-          val gen = s"gen-${System.currentTimeMillis()}-$batchId"
-          next.write.mode("overwrite")
-            .parquet(new java.io.File(statePath, gen).toString)
-          // atomic pointer flip + superseded-generation sweep (GenState)
-          GenState.flip(statePath, batchId, gen)
+          next.write.mode("overwrite").parquet(dir)
         }
-        ()
       }
       .start()
   }

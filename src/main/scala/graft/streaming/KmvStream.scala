@@ -8,23 +8,18 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * X403): the per-group k-smallest-hash state folds per micro-batch by
   * union → re-bottom-k — bottom-k sketches are MERGEABLE and the merge
   * is IDEMPOTENT (re-delivering the same hashes cannot change a set
-  * minimum), so unlike [[SprtStream]]'s additive fold no batchId guard
-  * is load-bearing; the generation + pointer flip stays for
-  * atomic-visibility only. State is ≤ k rows per group at any corpus
-  * size, and any moment's snapshot yields the exact q371 estimator
-  * (k−1)·2⁶⁰ div h₍ₖ₎.
+  * minimum), so unlike [[SprtStream]]'s additive fold the batchId guard
+  * of [[GenState]], which commits it, only saves the rewrite of an exact
+  * replay. State is ≤ k rows per group at any corpus size, and any
+  * moment's snapshot yields the exact q371 estimator (k−1)·2⁶⁰ div h₍ₖ₎.
   */
 object KmvStream {
 
-  /** Current (group, h) bottom-k state (empty frame if none).
-    * Pointer format is owned by [[GenState]] (round-8 ADVICE). */
+  /** Current (group, h) bottom-k state (empty frame if none). */
   def snapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.currentGen(statePath) match {
-      case Some(gen) =>
-        spark.read.parquet(new java.io.File(statePath, gen).toString)
-      case None =>
-        import spark.implicits._
-        Seq.empty[(String, Long)].toDF("g", "h")
+    GenState.read(spark, statePath) {
+      import spark.implicits._
+      Seq.empty[(String, Long)].toDF("g", "h")
     }
 
   /** Bottom-k of a (g, h) frame — distinct hashes, k smallest per g. */
@@ -62,16 +57,12 @@ object KmvStream {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (!batch.isEmpty) {
+        GenState.advance(statePath, batch, batchId) { dir =>
           val spark = batch.sparkSession
           val next = bottomK(
             snapshot(spark, statePath).unionByName(batch.select("g", "h")), k)
-          val gen = s"gen-${System.currentTimeMillis()}-$batchId"
-          next.write.mode("overwrite")
-            .parquet(new java.io.File(statePath, gen).toString)
-          GenState.flip(statePath, batchId, gen)
+          next.write.mode("overwrite").parquet(dir)
         }
-        ()
       }
       .start()
   }

@@ -18,19 +18,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * batch.
   *
   * State = the current histogram (bounded by |sources| × |length
-  * domain|) under the [[GenState]] generation + atomic-flip + batchId
-  * guard (cell addition is not idempotent). The spec pins stream ≡
-  * batch under uneven splits and the redelivery guard.
+  * domain|), committed through [[GenState]], whose batchId guard is
+  * load-bearing (cell addition is not idempotent). The spec pins stream
+  * ≡ batch under uneven splits and the redelivery guard.
   */
 object KsDriftStream {
 
   /** Standing (source, n_chars, cnt) histogram (empty if none yet). */
   def histSnapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.currentGen(statePath) match {
-      case Some(gen) => spark.read.parquet(s"$statePath/$gen")
-      case None =>
-        import spark.implicits._
-        Seq.empty[(String, Long, Long)].toDF("source", "n_chars", "cnt")
+    GenState.read(spark, statePath) {
+      import spark.implicits._
+      Seq.empty[(String, Long, Long)].toDF("source", "n_chars", "cnt")
     }
 
   /** Maintain the current histogram from a STREAMING frame with
@@ -44,7 +42,7 @@ object KsDriftStream {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > GenState.lastBatchId(statePath) && !batch.isEmpty) {
+        GenState.advance(statePath, batch, batchId) { dir =>
           val spark = batch.sparkSession
           val delta = batch
             .select(col("source"), col("n_chars").cast("long"))
@@ -52,11 +50,8 @@ object KsDriftStream {
           val next = histSnapshot(spark, statePath)
             .unionByName(delta)
             .groupBy("source", "n_chars").agg(sum("cnt").as("cnt"))
-          val gen = s"gen-${System.currentTimeMillis()}-$batchId"
-          next.write.mode("overwrite").parquet(s"$statePath/$gen")
-          GenState.flip(statePath, batchId, gen)
+          next.write.mode("overwrite").parquet(dir)
         }
-        ()
       }
       .start()
   }

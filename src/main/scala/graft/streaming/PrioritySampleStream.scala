@@ -13,31 +13,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * everything seen so far — order of arrival, batch splits, and replays
   * cannot change it (re-delivered ids dedup by id before the take).
   *
-  * Persistence is the ComponentStream generation-pointer discipline:
-  * `gen-<epoch>-<batchId>/` + atomic `_CURRENT` flip — readers always see
-  * a complete sample, a crash mid-write leaves the previous one live.
+  * Committed through [[GenState]].
   */
 object PrioritySampleStream {
 
-  private val Pointer = "_CURRENT"
-
   /** Current sample snapshot `(id, weight, priority)` (empty if none). */
-  def current(spark: SparkSession, statePath: String): DataFrame = {
-    val ptr = new java.io.File(statePath, Pointer)
-    if (ptr.exists()) {
-      val gen = java.nio.file.Files.readString(ptr.toPath).trim.split(':')(1)
-      spark.read.parquet(new java.io.File(statePath, gen).toString)
-    } else {
+  def current(spark: SparkSession, statePath: String): DataFrame =
+    GenState.read(spark, statePath) {
       import spark.implicits._
       Seq.empty[(Long, Long, Long)].toDF("id", "weight", "priority")
     }
-  }
-
-  private def lastBatchId(statePath: String): Long = {
-    val ptr = new java.io.File(statePath, Pointer)
-    if (ptr.exists()) java.nio.file.Files.readString(ptr.toPath).trim.split(':')(0).toLong
-    else -1L
-  }
 
   /** Priority column for a row with `idCol`/`weightCol` (the q149
     * formula — shared so the spec can assert stream ≡ batch).
@@ -68,7 +53,7 @@ object PrioritySampleStream {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastBatchId(statePath) && !batch.isEmpty) {
+        GenState.advance(statePath, batch, batchId) { dir =>
           val spark = batch.sparkSession
           val scored = batch
             .select(col(idCol).cast("long").as("id"),
@@ -77,13 +62,8 @@ object PrioritySampleStream {
           val next = current(spark, statePath).unionByName(scored)
             .groupBy("id").agg(max("weight").as("weight"), max("priority").as("priority"))
             .orderBy(col("priority").desc, col("id")).limit(k)
-          val gen = s"gen-${System.currentTimeMillis()}-$batchId"
-          next.write.mode("overwrite")
-            .parquet(new java.io.File(statePath, gen).toString)
-          // atomic pointer flip + superseded-generation sweep (GenState)
-          GenState.flip(statePath, batchId, gen)
+          next.write.mode("overwrite").parquet(dir)
         }
-        ()
       }
       .start()
   }

@@ -16,36 +16,21 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * throughput metrics: accuracy sliding off means the upstream corpus
   * moved, not that Spark broke.
   *
-  * Addition is NOT idempotent, so the batchId guard (generation +
-  * atomic pointer flip) is load-bearing: an exact re-delivery after a
-  * crash is skipped, readers always see a complete generation, and the
-  * merge is commutative ⇒ counts are invariant to how the stream was
-  * batched (spec-pinned).
+  * Committed through [[GenState]]: addition is NOT idempotent, so its
+  * batchId guard is load-bearing, and the merge is commutative ⇒ counts
+  * are invariant to how the stream was batched (spec-pinned).
   */
 object QualityMonitorStream {
-
-  private val Pointer = "_CURRENT"
 
   /** Current (label, n_true, tp, n_pred) counts — empty if none. The
     * label is STRING in the persisted state (see [[confusionDelta]]'s
     * explicit cast), so the state schema is identical whether or not
     * the first batch was empty and for any incoming label type. */
-  def snapshot(spark: SparkSession, statePath: String): DataFrame = {
-    val ptr = new java.io.File(statePath, Pointer)
-    if (ptr.exists()) {
-      val gen = java.nio.file.Files.readString(ptr.toPath).trim.split(':')(1)
-      spark.read.parquet(new java.io.File(statePath, gen).toString)
-    } else {
+  def snapshot(spark: SparkSession, statePath: String): DataFrame =
+    GenState.read(spark, statePath) {
       import spark.implicits._
       Seq.empty[(String, Long, Long, Long)].toDF("label", "n_true", "tp", "n_pred")
     }
-  }
-
-  private def lastBatchId(statePath: String): Long = {
-    val ptr = new java.io.File(statePath, Pointer)
-    if (ptr.exists()) java.nio.file.Files.readString(ptr.toPath).trim.split(':')(0).toLong
-    else -1L
-  }
 
   /** The per-batch confusion delta of a (true_label, pred_label) frame —
     * two |labels|-row aggregates full-outer-merged (q184's shape). The
@@ -74,20 +59,15 @@ object QualityMonitorStream {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastBatchId(statePath) && !batch.isEmpty) {
+        GenState.advance(statePath, batch, batchId) { dir =>
           val spark = batch.sparkSession
           val next = snapshot(spark, statePath)
             .unionByName(confusionDelta(batch))
             .groupBy("label")
             .agg(sum("n_true").as("n_true"), sum("tp").as("tp"),
               sum("n_pred").as("n_pred"))
-          val gen = s"gen-${System.currentTimeMillis()}-$batchId"
-          next.write.mode("overwrite")
-            .parquet(new java.io.File(statePath, gen).toString)
-          // atomic pointer flip + superseded-generation sweep (GenState)
-          GenState.flip(statePath, batchId, gen)
+          next.write.mode("overwrite").parquet(dir)
         }
-        ()
       }
       .start()
   }

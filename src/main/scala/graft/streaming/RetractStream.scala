@@ -22,31 +22,17 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * commutative, so any batch split of the same change set folds to the
   * same totals (spec-pinned).
   *
-  * Persistence: generation-per-batch + atomic pointer flip with a
-  * batchId re-delivery guard ([[ComponentStream]] discipline — addition
-  * is not idempotent, the guard is load-bearing).
+  * Committed through [[GenState]]: addition is not idempotent, so its
+  * batchId guard is load-bearing.
   */
 object RetractStream {
 
-  private val Pointer = "_CURRENT"
-
   /** Current per-key net counts (empty, correctly-shaped if none). */
-  def totals(spark: SparkSession, statePath: String): DataFrame = {
-    val ptr = new java.io.File(statePath, Pointer)
-    if (ptr.exists()) {
-      val gen = java.nio.file.Files.readString(ptr.toPath).trim.split(':')(1)
-      spark.read.parquet(new java.io.File(statePath, gen).toString)
-    } else {
+  def totals(spark: SparkSession, statePath: String): DataFrame =
+    GenState.read(spark, statePath) {
       import spark.implicits._
       Seq.empty[(String, Long)].toDF("k", "net")
     }
-  }
-
-  private def lastBatchId(statePath: String): Long = {
-    val ptr = new java.io.File(statePath, Pointer)
-    if (ptr.exists()) java.nio.file.Files.readString(ptr.toPath).trim.split(':')(0).toLong
-    else -1L
-  }
 
   /** Maintain net counts from a STREAMING frame of changes with columns
     * `opCol` ('c' creates, 'd' deletes — other ops ignored) and `keyCol`. */
@@ -61,7 +47,7 @@ object RetractStream {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastBatchId(statePath) && !batch.isEmpty) {
+        GenState.advance(statePath, batch, batchId) { dir =>
           val spark = batch.sparkSession
           val delta = batch
             .filter(col(opCol).isin("c", "d"))
@@ -70,13 +56,8 @@ object RetractStream {
           val next = totals(spark, statePath).unionByName(delta)
             .groupBy("k").agg(sum("net").cast("long").as("net"))
             .filter(col("net") =!= 0L)
-          val gen = s"gen-${System.currentTimeMillis()}-$batchId"
-          next.write.mode("overwrite")
-            .parquet(new java.io.File(statePath, gen).toString)
-          // atomic pointer flip + superseded-generation sweep (GenState)
-          GenState.flip(statePath, batchId, gen)
+          next.write.mode("overwrite").parquet(dir)
         }
-        ()
       }
       .start()
   }

@@ -18,10 +18,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Re-delivery: HLL insertion is SET-like (re-adding a seen user is a
   * no-op), so duplicated events across batches cannot inflate the
   * estimate — union-idempotence makes the store safe under at-least-once
-  * delivery by construction. The batchId guard (generation + atomic
-  * pointer flip, the [[SketchStream]] discipline) still skips exact
-  * replays so crash-looping on one batch does no wasted writes, and
-  * readers always see a complete snapshot.
+  * delivery by construction. The batchId guard of [[GenState]], which
+  * commits it, still skips exact replays so crash-looping on one batch
+  * does no wasted writes.
   *
   * Reference scale framing: the CDC consumer's per-day activity tiles
   * (`EcommerceTransactionsLogEventsStream.kt`-fed views) at 100 TB —
@@ -29,27 +28,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   */
 object RollingDistinctStream {
 
-  private val Pointer = "_CURRENT"
-
   /** Current (day, sk) snapshot — empty, correctly-shaped if none. */
-  def snapshot(spark: SparkSession, statePath: String): DataFrame = {
-    val ptr = new java.io.File(statePath, Pointer)
-    if (ptr.exists()) {
-      val gen = java.nio.file.Files.readString(ptr.toPath).trim.split(':')(1)
-      spark.read.parquet(new java.io.File(statePath, gen).toString)
-    } else {
+  def snapshot(spark: SparkSession, statePath: String): DataFrame =
+    GenState.read(spark, statePath) {
       import org.apache.spark.sql.types._
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
         StructType(Seq(StructField("day", LongType), StructField("sk", BinaryType))))
     }
-  }
-
-  private def lastBatchId(statePath: String): Long = {
-    val ptr = new java.io.File(statePath, Pointer)
-    if (ptr.exists()) java.nio.file.Files.readString(ptr.toPath).trim.split(':')(0).toLong
-    else -1L
-  }
 
   /** Maintain the daily sketch table from a STREAMING frame with
     * (`user_id`, `ts_ms`) columns. */
@@ -59,7 +45,7 @@ object RollingDistinctStream {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastBatchId(statePath) && !batch.isEmpty) {
+        GenState.advance(statePath, batch, batchId) { dir =>
           val spark = batch.sparkSession
           val delta = batch
             .select(expr("ts_ms div 86400000").as("day"), col("user_id"))
@@ -68,13 +54,8 @@ object RollingDistinctStream {
           val next = snapshot(spark, statePath).unionByName(delta)
             .groupBy("day")
             .agg(expr("hll_union_agg(sk)").as("sk"))
-          val gen = s"gen-${System.currentTimeMillis()}-$batchId"
-          next.write.mode("overwrite")
-            .parquet(new java.io.File(statePath, gen).toString)
-          // atomic pointer flip + superseded-generation sweep (GenState)
-          GenState.flip(statePath, batchId, gen)
+          next.write.mode("overwrite").parquet(dir)
         }
-        ()
       }
       .start()
   }

@@ -12,34 +12,17 @@ import graft.ops.CountMin
   * history. Any moment's snapshot answers frequency estimates over
   * EVERYTHING ingested so far ([[CountMin.estimate]]).
   *
-  * Persistence is the generation-per-batch + atomic pointer flip
-  * discipline of [[ComponentStream]]: readers always see a complete
-  * sketch, a crash mid-write leaves the previous generation live, and an
-  * exact re-delivery (batchId ≤ last) is skipped by the pointer's
-  * batchId guard — cell addition is NOT idempotent, so the guard is
-  * load-bearing (the spec pins it).
+  * Committed through [[GenState]]: cell addition is NOT idempotent, so
+  * its batchId guard is load-bearing (the spec pins it).
   */
 object SketchStream {
 
-  private val Pointer = "_CURRENT"
-
   /** Current sketch snapshot (empty, correctly-shaped frame if none). */
-  def cellsSnapshot(spark: SparkSession, statePath: String): DataFrame = {
-    val ptr = new java.io.File(statePath, Pointer)
-    if (ptr.exists()) {
-      val gen = java.nio.file.Files.readString(ptr.toPath).trim.split(':')(1)
-      spark.read.parquet(new java.io.File(statePath, gen).toString)
-    } else {
+  def cellsSnapshot(spark: SparkSession, statePath: String): DataFrame =
+    GenState.read(spark, statePath) {
       import spark.implicits._
       Seq.empty[(Int, Long, Long)].toDF("r", "bucket", "cell")
     }
-  }
-
-  private def lastBatchId(statePath: String): Long = {
-    val ptr = new java.io.File(statePath, Pointer)
-    if (ptr.exists()) java.nio.file.Files.readString(ptr.toPath).trim.split(':')(0).toLong
-    else -1L
-  }
 
   /** Maintain the sketch at `statePath` from a STREAMING frame with a
     * `tokenCol` column (one token occurrence per row). */
@@ -55,18 +38,13 @@ object SketchStream {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastBatchId(statePath) && !batch.isEmpty) {
+        GenState.advance(statePath, batch, batchId) { dir =>
           val spark = batch.sparkSession
           val next = CountMin.merge(
             cellsSnapshot(spark, statePath),
             CountMin.cells(batch, tokenCol, depth, width))
-          val gen = s"gen-${System.currentTimeMillis()}-$batchId"
-          next.write.mode("overwrite")
-            .parquet(new java.io.File(statePath, gen).toString)
-          // atomic pointer flip + superseded-generation sweep (GenState)
-          GenState.flip(statePath, batchId, gen)
+          next.write.mode("overwrite").parquet(dir)
         }
-        ()
       }
       .start()
   }

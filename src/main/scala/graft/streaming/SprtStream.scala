@@ -15,25 +15,17 @@ import graft.queries.IsotonicQueries
   * crossed, so the stream form is the production shape and the batch
   * form is its audit.
   *
-  * Persistence is the generation-per-batch + atomic pointer flip
-  * discipline of [[SketchStream]]: per-day addition is NOT idempotent,
-  * so the batchId guard on the pointer is load-bearing (spec-pinned).
+  * Committed through [[GenState]]: per-day addition is NOT idempotent,
+  * so its batchId guard is load-bearing (spec-pinned).
   */
 object SprtStream {
 
-  /** Current per-day (n_trials, n_succ) state (empty frame if none).
-    * Pointer format is owned by [[GenState]] (round-8 ADVICE). */
+  /** Current per-day (n_trials, n_succ) state (empty frame if none). */
   def daysSnapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.currentGen(statePath) match {
-      case Some(gen) =>
-        spark.read.parquet(new java.io.File(statePath, gen).toString)
-      case None =>
-        import spark.implicits._
-        Seq.empty[(Long, Long, Long)].toDF("day", "n_trials", "n_succ")
+    GenState.read(spark, statePath) {
+      import spark.implicits._
+      Seq.empty[(Long, Long, Long)].toDF("day", "n_trials", "n_succ")
     }
-
-  private def lastBatchId(statePath: String): Long =
-    GenState.lastBatchId(statePath)
 
   /** The llr walk + decisions over a (day, n_trials, n_succ) frame —
     * shared by the stream snapshot and the batch-equivalence spec. */
@@ -64,7 +56,7 @@ object SprtStream {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastBatchId(statePath) && !batch.isEmpty) {
+        GenState.advance(statePath, batch, batchId) { dir =>
           val spark = batch.sparkSession
           val delta = batch.groupBy("day")
             .agg(count(lit(1)).as("n_trials"), sum("is_succ").as("n_succ"))
@@ -72,12 +64,8 @@ object SprtStream {
             .unionByName(delta)
             .groupBy("day")
             .agg(sum("n_trials").as("n_trials"), sum("n_succ").as("n_succ"))
-          val gen = s"gen-${System.currentTimeMillis()}-$batchId"
-          next.write.mode("overwrite")
-            .parquet(new java.io.File(statePath, gen).toString)
-          GenState.flip(statePath, batchId, gen)
+          next.write.mode("overwrite").parquet(dir)
         }
-        ()
       }
       .start()
   }

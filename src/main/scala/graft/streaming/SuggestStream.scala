@@ -15,31 +15,18 @@ import graft.functions.TextFunctions._
   * every search box reads is thus never rebuilt from the corpus: state
   * is |vocab| rows regardless of how many documents streamed through.
   *
-  * Addition is NOT idempotent ⇒ the batchId guard (generation + atomic
-  * pointer flip) is load-bearing; the merge is commutative ⇒ counts
+  * Committed through [[GenState]]. Addition is NOT idempotent ⇒ its
+  * batchId guard is load-bearing; the merge is commutative ⇒ counts
   * are invariant to batching (spec-pinned, the X207 contract).
   */
 object SuggestStream {
 
-  private val Pointer = "_CURRENT"
-
   /** Current (token, freq) vocabulary — empty if none. */
-  def snapshot(spark: SparkSession, statePath: String): DataFrame = {
-    val ptr = new java.io.File(statePath, Pointer)
-    if (ptr.exists()) {
-      val gen = java.nio.file.Files.readString(ptr.toPath).trim.split(':')(1)
-      spark.read.parquet(new java.io.File(statePath, gen).toString)
-    } else {
+  def snapshot(spark: SparkSession, statePath: String): DataFrame =
+    GenState.read(spark, statePath) {
       import spark.implicits._
       Seq.empty[(String, Long)].toDF("token", "freq")
     }
-  }
-
-  private def lastBatchId(statePath: String): Long = {
-    val ptr = new java.io.File(statePath, Pointer)
-    if (ptr.exists()) java.nio.file.Files.readString(ptr.toPath).trim.split(':')(0).toLong
-    else -1L
-  }
 
   /** Maintain the vocabulary from a STREAMING frame with a `text`
     * column. */
@@ -49,20 +36,15 @@ object SuggestStream {
       .outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        if (batchId > lastBatchId(statePath) && !batch.isEmpty) {
+        GenState.advance(statePath, batch, batchId) { dir =>
           val spark = batch.sparkSession
           val delta = batch
             .select(explode(wsTokens(normalizeText(col("text")))).as("token"))
             .groupBy("token").agg(count(lit(1)).as("freq"))
           val next = snapshot(spark, statePath).unionByName(delta)
             .groupBy("token").agg(sum("freq").as("freq"))
-          val gen = s"gen-${System.currentTimeMillis()}-$batchId"
-          next.write.mode("overwrite")
-            .parquet(new java.io.File(statePath, gen).toString)
-          // atomic pointer flip + superseded-generation sweep (GenState)
-          GenState.flip(statePath, batchId, gen)
+          next.write.mode("overwrite").parquet(dir)
         }
-        ()
       }
       .start()
   }

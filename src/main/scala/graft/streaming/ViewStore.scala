@@ -33,9 +33,12 @@ import org.apache.spark.sql.types.StructType
   *    at every instant at least one complete manifest + its dirs exist.
   *  - '''Replay idempotence''': the manifest records the last applied
   *    foreachBatch batchId; re-delivery of a committed batch (failure
-  *    after commit, before the checkpoint advances) is detected by
-  *    `alreadyApplied` and skipped, so additive partials (fee totals,
-  *    event counts) are never double-merged.
+  *    after commit, before the checkpoint advances) is skipped, so
+  *    additive partials (fee totals, event counts) are never
+  *    double-merged. [[mergeKeyed]] is the one foreachBatch commit
+  *    protocol every keyed view (CdcStream, AggViewStream, EventsView,
+  *    CurationStream) runs: replay check, touched-bucket read, the
+  *    caller's combine, generation write and flip.
   *  - '''The manifest is the file index''': a read never asks Spark to
   *    discover the view. The manifest names the live bucket dirs; a read
   *    lists only those, on the driver, takes the schema from one file's
@@ -61,10 +64,17 @@ object ViewStore {
   def bucketOf(key: Column, numBuckets: Int = NumBuckets): Column =
     pmod(xxhash64(key), lit(numBuckets.toLong))
 
+  /** The partition column a generation is written with; a read lists the
+    * leaf dirs, so rows come back without it. */
+  private val BucketCol = "__bucket"
+
+  private def bucketed(df: DataFrame, keyCol: String): DataFrame =
+    df.withColumn(BucketCol, bucketOf(col(keyCol)))
+
   /** The sorted buckets that `df`'s `keyCol` values fall into. Each task
     * reduces its partition to a set, so this is one stage with no
     * shuffle. */
-  def touchedBuckets(df: DataFrame, keyCol: String): Seq[Int] = {
+  private[streaming] def touchedBuckets(df: DataFrame, keyCol: String): Seq[Int] = {
     import df.sparkSession.implicits._
     df.select(bucketOf(col(keyCol)).cast("int")).as[Int]
       .mapPartitions(it => Iterator.single(it.toSet.toArray))
@@ -157,7 +167,7 @@ object ViewStore {
     }
   }
 
-  def alreadyApplied(spark: SparkSession, viewPath: String, batchId: Long): Boolean =
+  private[streaming] def alreadyApplied(spark: SparkSession, viewPath: String, batchId: Long): Boolean =
     readManifest(spark, viewPath).exists(_.lastBatchId >= batchId)
 
   /** The whole view (all live buckets), or None if never written. */
@@ -165,8 +175,13 @@ object ViewStore {
     readManifest(spark, viewPath).flatMap(m => relation(spark, viewPath, m.buckets.values))
 
   /** Only the named buckets' current rows (None if none of them exist). */
-  def readBuckets(spark: SparkSession, viewPath: String, touched: Seq[Int]): Option[DataFrame] =
-    readManifest(spark, viewPath).flatMap(m => relation(spark, viewPath, touched.flatMap(m.buckets.get)))
+  private[streaming] def readBuckets(
+      spark: SparkSession, viewPath: String, touched: Seq[Int]): Option[DataFrame] =
+    readManifest(spark, viewPath).flatMap(bucketsOf(spark, viewPath, _, touched))
+
+  private def bucketsOf(
+      spark: SparkSession, viewPath: String, m: Manifest, touched: Seq[Int]): Option[DataFrame] =
+    relation(spark, viewPath, touched.flatMap(m.buckets.get))
 
   /** The parquet files of the bucket dirs `rels` as a DataFrame, or None
     * if they hold no file. The dirs are listed here, on the driver, and
@@ -207,35 +222,76 @@ object ViewStore {
     override def partitionSchema: StructType = new StructType()
   }
 
+  /** The foreachBatch commit protocol of a view keyed by `keyCol`:
+    *
+    *  1. a batchId the manifest already records is skipped (a re-delivery
+    *     after a crash past the flip), so additive partials are never
+    *     merged twice;
+    *  1. `combine` gets the current rows of the buckets `incoming`'s keys
+    *     fall into (None if none holds a row) and returns their new
+    *     contents, with `keyCol`; untouched buckets are never read or
+    *     rewritten;
+    *  1. the result lands as generation `gen-<batchId>` and the manifest
+    *     flips to it, recording `batchId`.
+    *
+    * One manifest read serves steps 1 and 2. An empty batch calls no
+    * `combine` and writes no generation; it only records its batchId.
+    * Whatever `combine` writes beside the view (CdcStream's change feed)
+    * is written before the flip, so a crash in between leaves the batch
+    * unrecorded and its re-delivery rewrites both. A throw anywhere
+    * fails the batch with the manifest unchanged; the checkpoint retries
+    * it. */
+  def mergeKeyed(
+      spark: SparkSession, viewPath: String, batchId: Long,
+      incoming: DataFrame, keyCol: String)(
+      combine: Option[DataFrame] => DataFrame): Unit = {
+    val prior = readManifest(spark, viewPath)
+    if (prior.exists(_.lastBatchId >= batchId)) return
+    val touched = touchedBuckets(incoming, keyCol)
+    publish(spark, viewPath, writeGen(spark, viewPath, prior, s"gen-$batchId", touched, batchId) {
+      bucketed(combine(prior.flatMap(bucketsOf(spark, viewPath, _, touched))), keyCol)
+    })
+  }
+
   /** Land `merged` (carrying a `__bucket` column covering exactly the
-    * `touched` buckets) as generation `gen-<batchId>`, then flip the
-    * manifest. Crash-safe at every point: before the manifest rename the
-    * old state is fully live; a batch retry overwrites the half-written
-    * generation dir and commits again. */
-  def commit(
+    * `touched` buckets) as generation `gen-<batchId>` and flip the
+    * manifest to it. */
+  private[streaming] def commit(
       spark: SparkSession,
       viewPath: String,
       merged: DataFrame,
       touched: Seq[Int],
-      batchId: Long): Unit = {
+      batchId: Long): Unit =
+    publish(spark, viewPath,
+      writeGen(spark, viewPath, readManifest(spark, viewPath), s"gen-$batchId", touched, batchId)(merged))
+
+  /** Write `rows` (carrying `__bucket`, evaluated only if `touched` is
+    * not empty) as generation dir `genRel` and return the manifest that
+    * publishes it over `base`, by the one bucket-map rule of every
+    * writer: a touched bucket maps to the dir it was written to, or leaves
+    * the map if it got no rows; every other bucket keeps its dir.
+    * Crash-safe: until the manifest is published the old state is fully
+    * live, and a retry overwrites the half-written generation dir. */
+  private def writeGen(
+      spark: SparkSession, viewPath: String, base: Option[Manifest],
+      genRel: String, touched: Seq[Int], lastBatchId: Long)(rows: => DataFrame): Manifest = {
     val f = fs(spark, viewPath)
     val root = new Path(viewPath)
     f.mkdirs(root)
-    val prior = readManifest(spark, viewPath)
-    val genRel = s"gen-$batchId"
     if (touched.nonEmpty)
-      merged.write.mode("overwrite").partitionBy("__bucket").parquet(s"$viewPath/$genRel")
-    // a touched bucket with no output rows writes no dir (existing side was
-    // empty and the batch contributed nothing) — keep its prior mapping
-    val updated = touched.flatMap { b =>
-      val rel = s"$genRel/__bucket=$b"
+      rows.write.mode("overwrite").partitionBy(BucketCol).parquet(s"$viewPath/$genRel")
+    val written = touched.flatMap { b =>
+      val rel = s"$genRel/$BucketCol=$b"
       if (f.exists(new Path(root, rel))) Some(b -> rel) else None
-    }.toMap
-    val next = Manifest(
-      seq = prior.map(_.seq + 1).getOrElse(0L),
-      lastBatchId = batchId,
-      buckets = prior.map(_.buckets).getOrElse(Map.empty) ++ updated)
-    writeManifest(f, root, next)
+    }
+    Manifest(base.map(_.seq + 1).getOrElse(0L), lastBatchId,
+      base.map(_.buckets).getOrElse(Map.empty[Int, String]) -- touched ++ written)
+  }
+
+  private def publish(spark: SparkSession, viewPath: String, m: Manifest): Unit = {
+    val f = fs(spark, viewPath)
+    val root = new Path(viewPath)
+    writeManifest(f, root, m)
     gc(f, root)
   }
 
@@ -248,26 +304,15 @@ object ViewStore {
     * serializes). `keyCol` re-derives `__bucket` (the partition column is
     * not recoverable from the leaf-dir reads). The compacted manifest
     * keeps `lastBatchId`, so replay idempotence is unaffected. */
-  def compact(spark: SparkSession, viewPath: String, keyCol: String): Unit = {
-    val f = fs(spark, viewPath)
-    val root = new Path(viewPath)
-    readManifest(spark, viewPath).foreach { m =>
-      if (m.buckets.nonEmpty) {
-        val df = relation(spark, viewPath, m.buckets.values).get
-          .withColumn("__bucket", bucketOf(col(keyCol)))
-        val genRel = f"compact-${m.seq + 1}%020d"
-        df.repartition(m.buckets.size, col("__bucket"))
-          .write.mode("overwrite").partitionBy("__bucket")
-          .parquet(s"$viewPath/$genRel")
-        val live = m.buckets.keys.flatMap { b =>
-          val rel = s"$genRel/__bucket=$b"
-          if (f.exists(new Path(root, rel))) Some(b -> rel) else None
-        }.toMap
-        writeManifest(f, root, Manifest(m.seq + 1, m.lastBatchId, live))
-        gc(f, root)
+  def compact(spark: SparkSession, viewPath: String, keyCol: String): Unit =
+    readManifest(spark, viewPath).filter(_.buckets.nonEmpty).foreach { m =>
+      val next = writeGen(spark, viewPath, Some(m), f"compact-${m.seq + 1}%020d",
+          m.buckets.keys.toSeq.sorted, m.lastBatchId) {
+        bucketed(relation(spark, viewPath, m.buckets.values).get, keyCol)
+          .repartition(m.buckets.size, col(BucketCol))
       }
+      publish(spark, viewPath, next)
     }
-  }
 
   /** Right-to-erasure purge: remove every row whose `keyCol` is in `keys`,
     * rewriting ONLY the buckets those keys hash into (I/O = touched
@@ -324,7 +369,7 @@ object ViewStore {
     val touched = touchedBuckets(spark.createDataFrame(probeRows.asJava, probeSchema), "__k")
       .filter(m.buckets.contains)
     if (touched.isEmpty) { retireHistory(f, root); return 0L }
-    val current = readBuckets(spark, viewPath, touched)
+    val current = bucketsOf(spark, viewPath, m, touched)
       .getOrElse { retireHistory(f, root); return 0L }
     // null-safe match: isin is NULL (not false) on a null key, which a bare
     // filter(!isPurged) would drop — coalesce keeps null-keyed rows unless
@@ -335,29 +380,16 @@ object ViewStore {
     val isPurged =
       if (purgeNull) inList || col(keyCol).isNull else inList
     val removed = current.filter(isPurged).count()
-    val kept = current.filter(!isPurged)
-      .withColumn("__bucket", bucketOf(col(keyCol)))
-    val genRel = f"purge-${m.seq + 1}%020d"
-    kept.write.mode("overwrite").partitionBy("__bucket").parquet(s"$viewPath/$genRel")
-    val rewritten = touched.flatMap { b =>
-      val rel = s"$genRel/__bucket=$b"
-      if (f.exists(new Path(root, rel))) Some(b -> rel) else None
-    }.toMap
-    // touched buckets not rewritten are now EMPTY — drop them entirely
-    val next = Manifest(m.seq + 1, m.lastBatchId,
-      (m.buckets -- touched.toSet) ++ rewritten)
+    // a touched bucket the purge empties leaves the manifest
+    val next = writeGen(spark, viewPath, Some(m), f"purge-${m.seq + 1}%020d",
+      touched, m.lastBatchId)(bucketed(current.filter(!isPurged), keyCol))
     // history truncation FIRST: drop every snapshot older than the current
     // one before declaring the purge, so a crash can never leave purged
     // rows readable further back than the immediately-prior state
-    manifestSeqs(f, root).dropRight(1).foreach { case (_, name) =>
-      f.delete(new Path(root, name), false)
-    }
+    dropOlderManifests(f, root)
     writeManifest(f, root, next)
     // now retire the pre-purge snapshot itself
-    manifestSeqs(f, root).dropRight(1).foreach { case (_, name) =>
-      f.delete(new Path(root, name), false)
-    }
-    gc(f, root)
+    retireHistory(f, root)
     removed
   }
 
@@ -417,11 +449,15 @@ object ViewStore {
     * cannot leave purged rows readable via time travel after the
     * documented re-invocation. */
   private def retireHistory(f: FileSystem, root: Path): Unit = {
+    dropOlderManifests(f, root)
+    gc(f, root)
+  }
+
+  /** Delete every manifest but the newest. */
+  private def dropOlderManifests(f: FileSystem, root: Path): Unit =
     manifestSeqs(f, root).dropRight(1).foreach { case (_, name) =>
       f.delete(new Path(root, name), false)
     }
-    gc(f, root)
-  }
 
   /** Drop manifests beyond the retention window, then every bucket dir no
     * retained manifest references. Runs AFTER the new manifest is live, so
@@ -457,12 +493,12 @@ object ViewStore {
       }
       .foreach { gen =>
         f.listStatus(gen.getPath)
-          .filter(_.getPath.getName.startsWith("__bucket="))
+          .filter(_.getPath.getName.startsWith(s"$BucketCol="))
           .foreach { st =>
             val rel = s"${gen.getPath.getName}/${st.getPath.getName}"
             if (!live.contains(rel)) f.delete(st.getPath, true)
           }
-        if (!f.listStatus(gen.getPath).exists(_.getPath.getName.startsWith("__bucket=")))
+        if (!f.listStatus(gen.getPath).exists(_.getPath.getName.startsWith(s"$BucketCol=")))
           f.delete(gen.getPath, true)
       }
   }

@@ -229,6 +229,37 @@ class CdcStreamSpec extends SparkSpec {
     }
   }
 
+  test("changelog: a failed feed write leaves the batch unrecorded; its re-delivery lands in the feed once") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("graft-view-clcrash").toString
+    val viewPath = dir + "/transactions-view"
+    val events = EventGen.generate(nTx = 8, seed = 57L)
+      .distinctBy(_.id).sortBy(e => (e.tsMs, e.id))
+    val (b0, b1) = events.splitAt(events.size / 2)
+    CdcStream.mergeBatchIntoParquet(spark, b0.toDS(), viewPath, 0L)
+    // a plain file where the feed dir goes: the feed write of batch 1 throws
+    val blocker = new java.io.File(viewPath, "_changelog")
+    java.nio.file.Files.writeString(blocker.toPath, "not a directory")
+    intercept[Exception] {
+      CdcStream.mergeBatchIntoParquet(spark, b1.toDS(), viewPath, 1L, changelog = true)
+    }
+    assert(ViewStore.readManifest(spark, viewPath).get.lastBatchId == 0L,
+      "batch 1 was recorded although its feed was never written")
+    assert(blocker.delete())
+    // at-least-once delivery: the failed batch comes again
+    CdcStream.mergeBatchIntoParquet(spark, b1.toDS(), viewPath, 1L, changelog = true)
+    assert(ViewStore.readManifest(spark, viewPath).get.lastBatchId == 1L)
+    val feed = CdcStream.readChangelog(spark, viewPath).get.collect()
+    val keys = CdcStream.preFilter(b1.toDS()).map(_.transactionId).collect().toSet
+    assert(keys.nonEmpty)
+    assert(feed.forall(_.batchId == 1L))
+    assert(feed.map(_.transactionId).sorted.toSeq == keys.toSeq.sorted,
+      "every key of batch 1 must be in the feed exactly once")
+    val got = ViewStore.read(spark, viewPath).get.as[TransactionView]
+      .collect().map(v => v.transactionId -> v).toMap
+    assert(got == canonical(events))
+  }
+
   test("merge sink: replayed batchId is a no-op; untouched buckets' files unchanged") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-view2").toString

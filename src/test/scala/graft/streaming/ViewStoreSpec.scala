@@ -414,4 +414,82 @@ class ViewStoreSpec extends SparkSpec {
       .contains(Seq(7L).toDF("k").select(ViewStore.bucketOf(col("k")))
         .as[Long].head().toInt))
   }
+
+  /** One mergeKeyed batch of (k, v) rows whose combine keeps the max v
+    * per key, counting its calls in `calls`. */
+  private def mergeMax(path: String, batchId: Long, rows: Seq[(Long, Long)],
+      calls: java.util.concurrent.atomic.AtomicInteger): Unit = {
+    val incoming = rows.toDF("k", "v")
+    ViewStore.mergeKeyed(spark, path, batchId, incoming, "k") { existing =>
+      calls.incrementAndGet()
+      existing.fold(incoming)(_.unionByName(incoming).groupBy("k").agg(max("v").as("v")))
+    }
+  }
+
+  private def kv(path: String): Set[(Long, Long)] =
+    ViewStore.read(spark, path).get.select("k", "v").as[(Long, Long)].collect().toSet
+
+  test("mergeKeyed: a replayed batchId never calls combine") {
+    val path = tmp()
+    val calls = new java.util.concurrent.atomic.AtomicInteger()
+    mergeMax(path, 0L, Seq((1L, 10L), (2L, 20L)), calls)
+    val m = ViewStore.readManifest(spark, path)
+    mergeMax(path, 0L, Seq((1L, 99L)), calls)
+    assert(calls.get == 1, "a replayed batch reached combine")
+    assert(ViewStore.readManifest(spark, path) == m)
+    assert(kv(path) == Set((1L, 10L), (2L, 20L)))
+  }
+
+  test("mergeKeyed: an empty batch records its batchId and writes no generation") {
+    val path = tmp()
+    val calls = new java.util.concurrent.atomic.AtomicInteger()
+    mergeMax(path, 0L, Seq((1L, 10L)), calls)
+    val before = ViewStore.readManifest(spark, path).get
+    mergeMax(path, 1L, Seq.empty, calls)
+    assert(calls.get == 1, "an empty batch reached combine")
+    val after = ViewStore.readManifest(spark, path).get
+    assert(after.lastBatchId == 1L && after.buckets == before.buckets)
+    assert(!new java.io.File(path, "gen-1").exists(), "an empty batch wrote a generation")
+    assert(kv(path) == Set((1L, 10L)))
+  }
+
+  test("mergeKeyed: combine sees exactly the touched buckets' rows, without the bucket column") {
+    val path = tmp()
+    val calls = new java.util.concurrent.atomic.AtomicInteger()
+    mergeMax(path, 0L, (0L until 200L).map(k => (k, k)), calls)
+    val incoming = Seq((3L, 1000L), (150L, 1L), (500L, 5L)).toDF("k", "v")
+    val touched = ViewStore.touchedBuckets(incoming, "k").map(_.toLong)
+    assert(touched.size < ViewStore.NumBuckets, s"precondition: $touched")
+    val want = (0L until 200L).toDF("k")
+      .where(ViewStore.bucketOf(col("k")).isin(touched: _*)).as[Long].collect().toSet
+    var seen = Option.empty[org.apache.spark.sql.DataFrame]
+    ViewStore.mergeKeyed(spark, path, 1L, incoming, "k") { existing =>
+      seen = existing
+      existing.get.unionByName(incoming).groupBy("k").agg(max("v").as("v"))
+    }
+    assert(seen.get.columns.toSeq == Seq("k", "v"))
+    assert(seen.get.select("k").as[Long].collect().toSet == want)
+    assert(kv(path) == (0L until 200L).map(k => (k, if (k == 3L) 1000L else k)).toSet + ((500L, 5L)))
+  }
+
+  test("mergeKeyed: a combine that throws, or whose rows fail to write, leaves the manifest unchanged") {
+    val path = tmp()
+    val calls = new java.util.concurrent.atomic.AtomicInteger()
+    mergeMax(path, 0L, Seq((1L, 10L), (2L, 20L)), calls)
+    val before = ViewStore.readManifest(spark, path)
+    val incoming = Seq((1L, 11L)).toDF("k", "v")
+    intercept[IllegalStateException] {
+      ViewStore.mergeKeyed(spark, path, 1L, incoming, "k")(_ => throw new IllegalStateException("boom"))
+    }
+    assert(ViewStore.readManifest(spark, path) == before)
+    intercept[Exception] {
+      ViewStore.mergeKeyed(spark, path, 1L, incoming, "k")(
+        _ => incoming.withColumn("v", expr("CAST(raise_error('boom') AS BIGINT)")))
+    }
+    assert(ViewStore.readManifest(spark, path) == before)
+    assert(kv(path) == Set((1L, 10L), (2L, 20L)))
+    // the re-delivery applies
+    mergeMax(path, 1L, Seq((1L, 11L)), calls)
+    assert(kv(path) == Set((1L, 11L), (2L, 20L)))
+  }
 }
