@@ -2,9 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
+import graft.io.LocalFs
+
 /** The one way a `main` builds its session: [[local]] applies [[conf]],
-  * which is [[tune]]'s plan tunings plus the settings every local run of
-  * the engine shares (Bench, Verify, Dev and the test session). Each
+  * which is [[tune]]'s plan tunings and local filesystem plus the
+  * settings every local run of the engine shares (Bench, Verify, Dev and
+  * the test session; cdcbench's harness applies [[tune]] itself). Each
   * setting and its reason:
   *
   *  - `spark.sql.shuffle.partitions = cpus`: one post-shuffle partition
@@ -55,6 +58,17 @@ import org.apache.spark.sql.SparkSession
   *    CPU. 64 KB keeps tiny-byte CPU-dense stages at local[32]
   *    parallelism; at cluster scale partitions dwarf both floors, so
   *    the knob is inert there.
+  *
+  * [[tune]] also applies [[LocalFiles]]: `spark.hadoop.fs.file.impl` and
+  * `spark.hadoop.fs.AbstractFileSystem.file.impl` name the in-process
+  * local filesystem of [[graft.io.LocalFs]]. Without the native-hadoop
+  * library, Hadoop's stock one forks a `chmod` for every file and dir it
+  * creates and a `readlink` twice per file on every `FileContext`
+  * rename, ~3 ms each. On a 4-vCPU host, a JFR recording of one cdcbench
+  * `cdc-backfill` run counted 2,705 of them (541 per drain), about ten
+  * in each offset-log and commit-log write: `stream.wal_ms_p50` and
+  * `stream.commit_ms_p50` went from 42 and 38 ms to 2 ms each. The same
+  * files, modes, checksums and renames happen, minus the forks.
   */
 object Sessions {
 
@@ -66,14 +80,19 @@ object Sessions {
     "spark.sql.optimizer.excludedRules" -> ExcludedOptimizerRules,
     "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "65536")
 
-  /** Apply the shared tunings to a session builder. */
-  def tune(b: SparkSession.Builder): SparkSession.Builder =
-    Tunings.foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
+  /** The Hadoop filesystem settings [[tune]] applies. */
+  val LocalFiles: Seq[(String, String)] =
+    LocalFs.HadoopConf.map { case (k, v) => s"spark.hadoop.$k" -> v }
 
-  /** Every setting [[local]] applies, in order: master, [[Tunings]], the
-    * shared settings, then `extra` (a later key overrides an earlier one). */
+  /** Apply the shared tunings and [[LocalFiles]] to a session builder. */
+  def tune(b: SparkSession.Builder): SparkSession.Builder =
+    (Tunings ++ LocalFiles).foldLeft(b) { case (acc, (k, v)) => acc.config(k, v) }
+
+  /** Every setting [[local]] applies, in order: master, [[Tunings]],
+    * [[LocalFiles]], the shared settings, then `extra` (a later key
+    * overrides an earlier one). */
   def conf(cpus: Int, extra: (String, String)*): Seq[(String, String)] =
-    Seq("spark.master" -> s"local[$cpus]") ++ Tunings ++ Seq(
+    Seq("spark.master" -> s"local[$cpus]") ++ Tunings ++ LocalFiles ++ Seq(
       "spark.sql.shuffle.partitions" -> cpus.toString,
       "spark.ui.enabled" -> "false",
       "spark.sql.session.timeZone" -> "UTC",

@@ -73,9 +73,15 @@ object Dedup {
       java.util.concurrent.ConcurrentLinkedQueue[DataFrame]]()
 
   /** Release every intermediate this session's dedup operators persisted.
-    * Call after the consuming action; safe anytime (a later re-execution
-    * just recomputes). Pinned intermediates (see [[cachePinned]]) survive —
-    * release those with [[unpersistPinned]]. */
+    * Call after the consuming action. For the [[cacheTracked]] tier the
+    * release is harmless: a later re-execution just recomputes. For the
+    * [[checkpointTracked]] tier it is destructive: the local checkpoint's
+    * blocks are the only copy and its lineage is truncated, so any later
+    * action on a plan that still holds the released frame fails with a
+    * missing checkpoint block instead of recomputing. Release only once
+    * every frame built on a checkpointed intermediate is done with.
+    * Pinned intermediates (see [[cachePinned]]) survive — release those
+    * with [[unpersistPinned]]. */
   def unpersistIntermediates(spark: org.apache.spark.sql.SparkSession): Unit = {
     val q = tracked.remove(spark)
     if (q != null) q.forEach(df => df.unpersist(blocking = false))

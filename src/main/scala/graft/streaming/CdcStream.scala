@@ -192,8 +192,8 @@ object CdcStream {
     * key's batch events onto its stored view row — exactly the ladder,
     * one shuffle, no driver-side state. Replayed batchIds are skipped
     * (the ladder itself is replay-idempotent, the skip just saves the
-    * I/O). The pre-filtered batch is persisted for the call, so it is
-    * decoded once for both the touched-bucket scan and the cogroup.
+    * I/O). `mergeKeyed` persists the pre-filtered batch for the call, so
+    * it is decoded once for both the touched-bucket scan and the cogroup.
     *
     * With `changelog`, the batch's change feed is written to
     * `_changelog/batch-<batchId>` inside the combine step, so before the
@@ -208,7 +208,7 @@ object CdcStream {
       metrics: Option[OutcomeCountsAccumulator] = None,
       changelog: Boolean = false): Unit = {
     import spark.implicits._
-    val filtered = preFilter(batch).persist()
+    val filtered = preFilter(batch)
     // with changelog on, the cogroup feeds two actions (feed + view) —
     // persisted so the merge ladder and bucket reads run once, not twice
     var cached: Option[Dataset[MergedRow]] = None
@@ -235,9 +235,6 @@ object CdcStream {
           .parquet(f"$viewPath/_changelog/batch-$batchId%020d")
       }
       rows.map(_.view).toDF()
-    } finally {
-      cached.foreach(_.unpersist())
-      filtered.unpersist()
-    }
+    } finally cached.foreach(_.unpersist())
   }
 }

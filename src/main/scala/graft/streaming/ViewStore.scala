@@ -234,8 +234,12 @@ object ViewStore {
     *  1. the result lands as generation `gen-<batchId>` and the manifest
     *     flips to it, recording `batchId`.
     *
-    * One manifest read serves steps 1 and 2. An empty batch calls no
-    * `combine` and writes no generation; it only records its batchId.
+    * One manifest read serves steps 1 and 2. `incoming` is persisted for
+    * the call and released when it returns, so the touched-bucket scan
+    * and `combine` (which reads the cache when it builds on the same
+    * frame) evaluate it once; a caller must not persist it itself. An
+    * empty batch calls no `combine` and writes no generation; it only
+    * records its batchId.
     * Whatever `combine` writes beside the view (CdcStream's change feed)
     * is written before the flip, so a crash in between leaves the batch
     * unrecorded and its re-delivery rewrites both. A throw anywhere
@@ -247,10 +251,13 @@ object ViewStore {
       combine: Option[DataFrame] => DataFrame): Unit = {
     val prior = readManifest(spark, viewPath)
     if (prior.exists(_.lastBatchId >= batchId)) return
-    val touched = touchedBuckets(incoming, keyCol)
-    publish(spark, viewPath, writeGen(spark, viewPath, prior, s"gen-$batchId", touched, batchId) {
-      bucketed(combine(prior.flatMap(bucketsOf(spark, viewPath, _, touched))), keyCol)
-    })
+    incoming.persist()
+    try {
+      val touched = touchedBuckets(incoming, keyCol)
+      publish(spark, viewPath, writeGen(spark, viewPath, prior, s"gen-$batchId", touched, batchId) {
+        bucketed(combine(prior.flatMap(bucketsOf(spark, viewPath, _, touched))), keyCol)
+      })
+    } finally incoming.unpersist()
   }
 
   /** Land `merged` (carrying a `__bucket` column covering exactly the

@@ -11,6 +11,8 @@ class SessionsSpec extends SparkSpec {
     "spark.sql.optimizer.excludedRules" ->
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
     "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "65536",
+    "spark.hadoop.fs.file.impl" -> "graft.io.InProcessLocalFileSystem",
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.io.InProcessLocalFs",
     "spark.sql.shuffle.partitions" -> cpus.toString,
     "spark.ui.enabled" -> "false",
     "spark.sql.session.timeZone" -> "UTC",
@@ -37,6 +39,19 @@ class SessionsSpec extends SparkSpec {
     assert(spark.sparkContext.master == "local[4]")
     Sessions.conf(4).filterNot(_._1 == "spark.master").foreach { case (k, v) =>
       assert(spark.conf.get(k) == v, k)
+    }
+  }
+
+  test("the test session's local FileSystem and FileContext are the in-process ones") {
+    // FileSystem.get caches one instance per scheme for the JVM whatever
+    // conf asks, so this checks what the session's writes really run on
+    val conf = spark.sparkContext.hadoopConfiguration
+    val local = java.net.URI.create("file:///")
+    assert(org.apache.hadoop.fs.FileSystem.get(local, conf).isInstanceOf[graft.io.InProcessLocalFileSystem])
+    assert(org.apache.hadoop.fs.FileSystem.getLocal(conf).getRaw.isInstanceOf[graft.io.InProcessRawLocalFileSystem])
+    Seq(conf, spark.sessionState.newHadoopConf()).foreach { c =>
+      assert(org.apache.hadoop.fs.FileContext.getFileContext(c).getDefaultFileSystem
+        .isInstanceOf[graft.io.InProcessLocalFs])
     }
   }
 

@@ -43,4 +43,16 @@ class AggViewStreamSpec extends SparkSpec {
     assert(state() == expected)
     assert(ViewStore.alreadyApplied(spark, dir, 3L))
   }
+
+  test("each batch is evaluated once for the bucket scan and the merge") {
+    val evals = spark.sparkContext.longAccumulator("aggview-evals")
+    def counted(df: org.apache.spark.sql.DataFrame) =
+      df.map { r => evals.add(1); r }(org.apache.spark.sql.Encoders.row(df.schema))
+    val dir = java.nio.file.Files.createTempDirectory("graft-aggview-evals").toString
+    AggViewStream.mergeBatch(spark,
+      counted(events((1L, "purchase", 100L, 10L), (2L, "click", 0L, 20L), (3L, "view", 0L, 30L))), dir, 0L)
+    assert(evals.value == 3L)
+    AggViewStream.mergeBatch(spark, counted(events((1L, "purchase", 7L, 40L), (4L, "view", 0L, 50L))), dir, 1L)
+    assert(evals.value == 5L)
+  }
 }

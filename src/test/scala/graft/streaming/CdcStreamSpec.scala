@@ -310,4 +310,17 @@ class CdcStreamSpec extends SparkSpec {
       .collect().map(v => v.transactionId -> v).toMap
     assert(got == canonical(batch0 ++ oneTx))
   }
+
+  test("merge sink: each batch is decoded once for the bucket scan and the cogroup") {
+    import spark.implicits._
+    val evals = spark.sparkContext.longAccumulator("cdc-merge-evals")
+    val viewPath = java.nio.file.Files.createTempDirectory("graft-view-evals").toString + "/view"
+    val ordered = EventGen.generate(nTx = 12, seed = 17L).distinctBy(_.id).sortBy(e => (e.tsMs, e.id))
+    val (b0, b1) = ordered.splitAt(ordered.size / 2)
+    CdcStream.mergeBatchIntoParquet(spark, b0.toDS().map { e => evals.add(1); e }, viewPath, 0L)
+    assert(evals.value == b0.size)
+    CdcStream.mergeBatchIntoParquet(spark, b1.toDS().map { e => evals.add(1); e }, viewPath, 1L,
+      changelog = true)
+    assert(evals.value == b0.size + b1.size)
+  }
 }

@@ -61,4 +61,20 @@ class EventsViewStreamSpec extends SparkSpec {
       .collect().map(r => r.getLong(0) -> (r.getAs[Long]("fee_total_c"), r.getAs[Long]("n_events"))).toMap
     assert(twice == once, "replayed batch double-counted additive partials")
   }
+
+  test("each batch is evaluated once for the bucket scan and the merge") {
+    val evals = spark.sparkContext.longAccumulator("eventsview-evals")
+    def counted(df: org.apache.spark.sql.DataFrame) =
+      df.map { r => evals.add(1); r }(org.apache.spark.sql.Encoders.row(df.schema))
+    val viewPath = Files.createTempDirectory("graft-eventsview-evals").toString + "/view"
+    val events = Tables.eventsCents(spark, "/root/testdata/sf0.001")
+    val b0 = events.filter(col("user_id") % 2 === 0)
+    val b1 = events.filter(col("user_id") % 2 === 1)
+    val (n0, n1) = (b0.count(), b1.count())
+    assert(n0 > 0 && n1 > 0)
+    EventsView.mergeBatchIntoParquet(spark, counted(b0), viewPath, 0L)
+    assert(evals.value == n0)
+    EventsView.mergeBatchIntoParquet(spark, counted(b1), viewPath, 1L)
+    assert(evals.value == n0 + n1)
+  }
 }

@@ -429,6 +429,26 @@ class ViewStoreSpec extends SparkSpec {
   private def kv(path: String): Set[(Long, Long)] =
     ViewStore.read(spark, path).get.select("k", "v").as[(Long, Long)].collect().toSet
 
+  test("mergeKeyed: incoming is evaluated once per batch and released after the call") {
+    val path = tmp()
+    val evals = spark.sparkContext.longAccumulator("mergekeyed-evals")
+    def counted(rows: Seq[(Long, Long)]) = {
+      val df = rows.toDF("k", "v")
+      df.map { r => evals.add(1); r }(org.apache.spark.sql.Encoders.row(df.schema))
+    }
+    Seq(Seq((1L, 10L), (2L, 20L), (3L, 30L)), Seq((2L, 5L), (4L, 40L))).zipWithIndex.foreach {
+      case (rows, batchId) =>
+        val before = evals.value
+        val incoming = counted(rows)
+        ViewStore.mergeKeyed(spark, path, batchId.toLong, incoming, "k") { existing =>
+          existing.fold(incoming)(_.unionByName(incoming).groupBy("k").agg(max("v").as("v")))
+        }
+        assert(evals.value - before == rows.size, s"batch $batchId")
+        assert(incoming.storageLevel == org.apache.spark.storage.StorageLevel.NONE, "incoming left cached")
+    }
+    assert(kv(path) == Set((1L, 10L), (2L, 20L), (3L, 30L), (4L, 40L)))
+  }
+
   test("mergeKeyed: a replayed batchId never calls combine") {
     val path = tmp()
     val calls = new java.util.concurrent.atomic.AtomicInteger()
