@@ -1,6 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.ops.Materialize
 
 /** Driver-run benchmark: one JSON line with per-query wall seconds at
   * `SPARK_GRAFT_SF_DIR`.
@@ -24,7 +25,7 @@ object Bench {
     * per-query plan problem. Recorded per section INTO the emitted
     * artifact ("diag") — round 4 showed the same late-run signature and
     * the stderr-only diag left the official record unattributable. */
-  private def jvmDiag(): String = {
+  private def jvmDiag(): Diag = {
     import java.lang.management.ManagementFactory
     import scala.jdk.CollectionConverters._
     val gcMs = ManagementFactory.getGarbageCollectorMXBeans.asScala
@@ -41,7 +42,15 @@ object Bench {
     // artifact alone (round-9 VERDICT: the 1× stream halving was plausible
     // CPU steal but "not yet attributed" — now it's in the record)
     val (st, tot) = cpuSample()
-    s"gcMs=$gcMs jitMs=$compMs heapMB=$heapMb stealJf=$st totJf=$tot $code"
+    Diag(gcMs, compMs, heapMb, st, tot, code)
+  }
+
+  /** One [[jvmDiag]] snapshot: the whole line for stderr and the full
+    * artifact line, the gc/jit/heap triple for the compact one. */
+  private[graft] final case class Diag(
+      gcMs: Long, jitMs: Long, heapMb: Long, stealJf: Long, totJf: Long, code: String) {
+    def compact: String = s"gcMs=$gcMs jitMs=$jitMs heapMB=$heapMb"
+    override def toString: String = s"$compact stealJf=$stealJf totJf=$totJf $code"
   }
 
   /** Host CPU counters from `/proc/stat`: (steal jiffies, total jiffies)
@@ -111,6 +120,20 @@ object Bench {
     System.gc(); Thread.sleep(500); System.gc()
   }
 
+  /** Stream attribution: each run drives 8 micro-batches, so t(N) = 8c +
+    * N·v — the 1×/10× best reps solve for c (per-micro-batch fixed cost:
+    * state-store open/commit + batch planning) and v (per-event merge
+    * cost). A RocksDB c ≫ HDFS c with comparable v says the 1× gap is
+    * store open/commit amortization, not the merge ladder. */
+  private def attrib(rate1x: Long, rate10x: Long): (Double, Double) = {
+    if (rate1x <= 0 || rate10x <= 0) return (-1.0, -1.0)
+    val t1 = 10000.0 / rate1x
+    val t10 = 100000.0 / rate10x
+    val v = (t10 - t1) / 90000.0
+    val c = (t1 - 10000.0 * v) / 8.0
+    (c * 1000.0, v * 1e6) // (ms per micro-batch, us per event)
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark = Sessions.local(Sessions.envCpus)
@@ -128,7 +151,7 @@ object Bench {
     }
     // per-section JVM health, emitted into the artifact (round-4 lesson:
     // stderr-only diag left the degradation unattributable)
-    val diag = scala.collection.mutable.LinkedHashMap.empty[String, String]
+    val diag = scala.collection.mutable.LinkedHashMap.empty[String, Diag]
     // STREAMING FIRST: the stateful merge-ladder throughput is measured
     // before 141 queries of whole-stage codegen fill the code cache and
     // accumulate driver state — round 4's driver artifact had stream rates
@@ -168,7 +191,7 @@ object Bench {
     // steal% measured across exactly its own wall window, so a halved rate
     // with elevated steal is attributed IN the artifact, not in a postmortem
     val streamSteal = scala.collection.mutable.LinkedHashMap.empty[String, Vector[Double]]
-    def bestOf2(label: String, provider: Option[String], nTx: Int): Long = {
+    def bestOf2(label: String, provider: Option[String], nTx: Int): Unit = {
       def rep(): (Double, Double) = {
         val c0 = cpuSample()
         val r = safeThroughput(provider, nTx)
@@ -180,37 +203,21 @@ object Bench {
       gcBetweenSections()
       streamReps(label) = Vector(a.round, b.round)
       streamSteal(label) = Vector(sa, sb)
-      math.max(a, b).round
     }
-    val evHdfs = bestOf2("hdfs_1x", None, nTx = 10000)
-    val evRocks = bestOf2("rocksdb_1x", Some(RocksProvider), nTx = 10000)
-    val evHdfs10x = bestOf2("hdfs_10x", None, nTx = 100000)
-    val evRocks10x = bestOf2("rocksdb_10x", Some(RocksProvider), nTx = 100000)
-    // attribution: each run drives 8 micro-batches, so t(N) = 8c + N·v —
-    // the 1×/10× best reps solve for c (per-micro-batch fixed cost:
-    // state-store open/commit + batch planning) and v (per-event merge
-    // cost). A RocksDB c ≫ HDFS c with comparable v says the 1× gap is
-    // store open/commit amortization, not the merge ladder.
-    def attrib(rate1x: Long, rate10x: Long): (Double, Double) = {
-      if (rate1x <= 0 || rate10x <= 0) return (-1.0, -1.0)
-      val t1 = 10000.0 / rate1x
-      val t10 = 100000.0 / rate10x
-      val v = (t10 - t1) / 90000.0
-      val c = (t1 - 10000.0 * v) / 8.0
-      (c * 1000.0, v * 1e6) // (ms per micro-batch, us per event)
-    }
-    val (hdfsBatchMs, hdfsEvUs) = attrib(evHdfs, evHdfs10x)
-    val (rocksBatchMs, rocksEvUs) = attrib(evRocks, evRocks10x)
+    bestOf2("hdfs_1x", None, nTx = 10000)
+    bestOf2("rocksdb_1x", Some(RocksProvider), nTx = 10000)
+    bestOf2("hdfs_10x", None, nTx = 100000)
+    bestOf2("rocksdb_10x", Some(RocksProvider), nTx = 100000)
     spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     diag("stream") = jvmDiag()
     gcBetweenSections()
     val names = SparkEntry.queries.keys.toSeq.sorted
-    names.foreach { name =>
-      try SparkEntry.queries(name)(spark, WarmupDir).count()
-      catch { case _: Throwable => () }
-      finally graft.ops.Dedup.unpersistIntermediates(spark)
-    }
-    graft.ops.Dedup.unpersistPinned(spark)
+    // one query's action in its own query scope; false where it failed
+    def run(name: String, dir: String): Boolean =
+      try { Materialize.scoped(spark)(SparkEntry.queries(name)(spark, dir).count()); true }
+      catch { case t: Throwable => System.err.println(s"[bench] $name failed: ${t.getMessage}"); false }
+    names.foreach(run(_, WarmupDir))
+    Materialize.releaseSession(spark)
     diag("warmup") = jvmDiag()
     gcBetweenSections()
     System.err.println(s"[bench] warmup done ${jvmDiag()}")
@@ -227,12 +234,7 @@ object Bench {
     def timeOne(name: String): Double = {
       val t0 = System.nanoTime()
       // a failed query must NOT be reported as a (fast) success — mark -1
-      val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-      catch { case t: Throwable =>
-        System.err.println(s"[bench] $name failed: ${t.getMessage}"); false
-      }
-      finally graft.ops.Dedup.unpersistIntermediates(spark)
-      if (ok) (System.nanoTime() - t0) / 1e9 else -1.0
+      if (run(name, sfDir)) (System.nanoTime() - t0) / 1e9 else -1.0
     }
     val byName = scala.collection.mutable.Map(
       names.map(n => n -> Vector.empty[Double]): _*)
@@ -256,7 +258,7 @@ object Bench {
       // core accounting we want to report); across passes min-of-reps must
       // not let the builder query inherit a prior pass's cache and report
       // reuse cost as build cost
-      graft.ops.Dedup.unpersistPinned(spark)
+      Materialize.releaseSession(spark)
       gcBetweenSections()
     }
     // targeted retry: a query whose best time is still slow may have had
@@ -272,222 +274,14 @@ object Bench {
       if (ts.forall(_ < 0) || ts.filter(_ >= 0).min > RetryAboveSec)
         byName(name) :+= timeOne(name)
     }
-    val results = names.map { name =>
-      val times = byName(name)
-      System.err.println(s"[bench] $name reps=${times.map(t => f"$t%.2f").mkString(",")}")
-      // failed_reps surfaces intermittent failures that min-of-reps would
-      // otherwise mask as a clean (fastest-passing) success
-      name -> (
-        (if (times.exists(_ >= 0)) times.filter(_ >= 0).min else -1.0),
-        times.count(_ < 0))
+    names.foreach { name =>
+      System.err.println(s"[bench] $name reps=${byName(name).map(t => f"$t%.2f").mkString(",")}")
     }
-    val qs = results.map { case (k, (v, _)) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val failedReps = results.collect { case (k, (_, f)) if f > 0 => "\"" + k + "\":" + f }
-      .mkString("{", ",", "}")
-    // headline total stays comparable with rounds ≤6 (where core builds
-    // hid inside first-consumer queries): per-query mins + per-core mins
-    val coreMins = coreTimes.toSeq.sortBy(_._1).map { case (k, v) => k -> v.min }
-    val coresTotal = coreMins.map(_._2).sum
-    val coresJson = coreMins.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
-    val queriesTotal = results.map(_._2._1).filter(_ >= 0).sum
-    val total = queriesTotal + coresTotal
     diag("end") = jvmDiag()
-    val diagJson = diag.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
-    val streamRepsJson = streamReps.map { case (k, v) =>
-      "\"" + k + "\":" + v.mkString("[", ",", "]") }.mkString("{", ",", "}")
-    val streamStealJson = streamSteal.map { case (k, v) =>
-      "\"" + k + "\":" + v.map(p => f"$p%.1f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val streamAttribJson =
-      f"""{"hdfs_batch_overhead_ms":$hdfsBatchMs%.1f,"hdfs_per_event_us":$hdfsEvUs%.2f,""" +
-      f""""rocksdb_batch_overhead_ms":$rocksBatchMs%.1f,"rocksdb_per_event_us":$rocksEvUs%.2f,""" +
-      s""""model":"t(N)=8c+Nv over the 1x/10x best reps; c=per-micro-batch fixed cost (state-store open/commit + batch planning), v=per-event merge cost"}"""
-    // fresh DuckDB pairing (round-6 VERDICT #1): tools/pair_duckdb.py
-    // writes DUCK_PAIRING.json (per-query DuckDB seconds on the same
-    // oracle SQL/parquet/SF); the ratio below pairs THIS run's spark
-    // times — cores are charged to the spark side, since DuckDB pays
-    // every query's full cost with no staged tables
-    // per-query DuckDB seconds, parsed once — the pairing block builds
-    // its summary from this, and reps_detail uses it to cover every
-    // query whose ratio exceeds 1.5x (round-10 VERDICT #2: boundary
-    // names must not rotate on single-rep weather)
-    val duckTimes: Map[String, Double] = try {
-      val p = Paths.get("DUCK_PAIRING.json")
-      if (!Files.exists(p)) Map.empty else {
-        val txt = Files.readString(p)
-        val sfRe = """"sf_dir":\s*"([^"]+)"""".r
-        if (!sfRe.findFirstMatchIn(txt).exists(_.group(1) == sfDir)) Map.empty
-        else {
-          val re = """"(q[0-9][^"]*)":\s*([0-9.eE+]+)""".r
-          re.findAllMatchIn(txt).map(m => m.group(1) -> m.group(2).toDouble).toMap
-        }
-      }
-    } catch { case _: Throwable => Map.empty }
-    val duckJson: String = try {
-      val p = Paths.get("DUCK_PAIRING.json")
-      if (!Files.exists(p)) "null" else {
-        val txt = Files.readString(p)
-        // the pairing is only meaningful at the SAME scale factor: a
-        // sf0.1 DuckDB artifact paired against a sf0.01 spark run
-        // produces a nonsense ratio (measured: 0.40 with 94 fake
-        // over-2x rows) — require the recorded sf_dir to match
-        val sfRe = """"sf_dir":\s*"([^"]+)"""".r
-        val sfOk = sfRe.findFirstMatchIn(txt).exists(_.group(1) == sfDir)
-        if (!sfOk) "null" else {
-        val re = """"(q[0-9][^"]*)":\s*([0-9.eE+]+)""".r
-        val duck = re.findAllMatchIn(txt)
-          .map(m => m.group(1) -> m.group(2).toDouble).toMap
-        val resMap = results.toMap
-        val paired = duck.keys.filter(k => resMap.get(k).exists(_._1 >= 0)).toSeq.sorted
-        val sparkSum = paired.map(k => resMap(k)._1).sum + coresTotal
-        val duckSum = paired.map(duck).sum
-        // Per-query ratios on sub-100ms DuckDB queries measure Spark's
-        // fixed per-query scheduling overhead (~0.2 s in local mode, an
-        // embedded engine has none), not plan quality — so decompose:
-        // estimate the overhead as the median spark−duck gap on the 50
-        // smallest-duck queries, and report the PLAN-DOMINATED subset
-        // (duck ≥ 0.5 s) separately; its over-2x list is the actionable
-        // one. The board ratio stays the headline (the driver bar).
-        val overheadS = {
-          val small = paired.sortBy(duck).take(50)
-            .map(k => resMap(k)._1 - duck(k)).sorted
-          if (small.isEmpty) 0.0 else small(small.size / 2)
-        }
-        val heavy = paired.filter(k => duck(k) >= 0.5)
-        val heavySpark = heavy.map(k => resMap(k)._1).sum
-        val heavyDuck = heavy.map(duck).sum
-        val overH = heavy.filter(k => resMap(k)._1 > 2.0 * duck(k))
-          .sortBy(k => -resMap(k)._1 / duck(k))
-        val overHJson = overH.map(k =>
-          "\"" + k + "\":" + f"${resMap(k)._1 / duck(k)}%.2f").mkString("{", ",", "}")
-        val nOverAll = paired.count(k => resMap(k)._1 > 2.0 * duck(k))
-        f"""{"n_paired":${paired.size},"spark_total_s":$sparkSum%.2f,""" +
-        f""""spark_cores_s":$coresTotal%.2f,"duck_total_s":$duckSum%.2f,""" +
-        f""""ratio":${sparkSum / duckSum}%.3f,""" +
-        f""""fixed_overhead_s":$overheadS%.3f,"n_over_2x_raw":$nOverAll,""" +
-        f""""heavy":{"min_duck_s":0.5,"n":${heavy.size},""" +
-        f""""spark_s":$heavySpark%.2f,"duck_s":$heavyDuck%.2f,""" +
-        (if (heavyDuck > 0) f""""ratio":${heavySpark / heavyDuck}%.3f,""" else "") +
-        f""""n_over_2x":${overH.size},"over_2x":$overHJson}}"""
-      } }
-    } catch { case t: Throwable =>
-      System.err.println(s"[bench] duck pairing failed: ${t.getMessage}"); "null" }
-    // sf1 (10×) full-board section (round-10 VERDICT #3): `graft.Dev
-    // scale` + tools/pair_sf1.py write SF1_BOARD.json (per-query seconds
-    // at a 10× disjoint-replica corpus + a timeout-guarded DuckDB
-    // pairing), copied here from the replica dir; embed it verbatim so
-    // the driver artifact carries the scale run. The file records its own
-    // provenance (single-rep builder run, replica dir,
-    // generation timestamps) — this is a checked-in measurement, not a
-    // per-round re-run: a 10× board + its DuckDB pairing is hours of
-    // wall, re-generated when the plans it measures change.
-    val sf1Json: String = try {
-      val p = Paths.get("SF1_BOARD.json")
-      if (Files.exists(p)) Files.readString(p).trim else "null"
-    } catch { case _: Throwable => "null" }
-    val streamJson =
-      s""""sf1":$sf1Json,""" +
-      s""""stream_hdfs_events_per_sec":$evHdfs,"stream_rocksdb_events_per_sec":$evRocks,""" +
-      s""""stream_hdfs_events_per_sec_10x":$evHdfs10x,"stream_rocksdb_events_per_sec_10x":$evRocks10x,""" +
-      s""""stream_reps":$streamRepsJson,"stream_steal_pct":$streamStealJson,""" +
-      s""""stream_attrib":$streamAttribJson,""" +
-      s""""cores_detail":$coresJson,"cores_total_s":${f"$coresTotal%.2f"},""" +
-      s""""duck_pairing":$duckJson"""
-    // the ten slowest queries inline in the COMPACT line, so even a
-    // tail-truncated capture still attributes where the time went
-    val slowest = results.sortBy(-_._2._1).take(10)
-      .map { case (k, (v, _)) => "\"" + k + "\":" + f"$v%.2f" }.mkString("{", ",", "}")
-    // per-query rep spreads (round-9 VERDICT #5, widened in round 11 per
-    // round-10 VERDICT #2): the 20 largest spark-time queries PLUS every
-    // query whose min exceeds 1.5x its DuckDB pairing — over-2× verdicts
-    // are made on per-query mins while same-VM runs disagree by ~15%, so
-    // every boundary-adjacent name carries its full rep vector in the
-    // artifact and a boundary call is readable as weather vs structure
-    val repsDetailNames = (
-      results.sortBy(-_._2._1).take(20).map(_._1) ++
-      results.collect { case (k, (v, _))
-        if v >= 0 && duckTimes.get(k).exists(d => d > 0 && v > 1.5 * d) => k }
-    ).distinct
-    val repsDetail = repsDetailNames.map { k =>
-      "\"" + k + "\":" + byName(k).map(t => f"$t%.2f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
-    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
-      s""""failed_reps":$failedReps,"reps_detail":$repsDetail,$streamJson,""" +
-      s""""diag":$diagJson,"sf":"$sfDir"}"""
-    // COMPACT line: scalar summaries ONLY. The driver's tail capture is
-    // 2000 bytes (measured from BENCH_r07.json, whose parsed:null was this
-    // line outgrowing the window once duck_pairing/cores/diag moved in) —
-    // everything verbose lives in the full line / BENCH_LATEST.json, and a
-    // hard length guard trims the slowest map before ever exceeding 1500.
-    val duckCompact: String = {
-      // extract the handful of headline numbers back out of duckJson
-      def grab(key: String): String = {
-        val re = ("\"" + key + "\":([0-9.eE+-]+)").r
-        re.findFirstMatchIn(duckJson).map(_.group(1)).getOrElse("null")
-      }
-      if (duckJson == "null") "null"
-      else {
-        val heavyRatio = {
-          val re = """"heavy":\{[^}]*"ratio":([0-9.eE+-]+)""".r
-          re.findFirstMatchIn(duckJson).map(_.group(1)).getOrElse("null")
-        }
-        val heavyOver = {
-          val re = """"n_over_2x":([0-9]+)""".r
-          re.findFirstMatchIn(duckJson).map(_.group(1)).getOrElse("null")
-        }
-        s"""{"n_paired":${grab("n_paired")},"ratio":${grab("ratio")},""" +
-        s""""heavy_ratio":$heavyRatio,"heavy_n_over_2x":$heavyOver}"""
-      }
-    }
-    // gc/jit/heap per section INSIDE the compact line (round-8 VERDICT
-    // #5: cross-VM streaming variance must be attributable from the
-    // tail capture alone) — the scalar triple only, not the full
-    // code-cache breakdown, to stay inside the 1.5 KB guard
-    val diagCompact = diag.map { case (k, v) =>
-      def grabD(key: String): String = {
-        val re = (key + "=([0-9]+)").r
-        re.findFirstMatchIn(v).map(_.group(1)).getOrElse("-1")
-      }
-      "\"" + k + "\":\"" +
-        s"gcMs=${grabD("gcMs")} jitMs=${grabD("jitMs")} heapMB=${grabD("heapMB")}" + "\""
-    }.mkString("{", ",", "}")
-    // sf1 scalar summary for the compact line (full table in the full line)
-    val sf1Compact: String =
-      if (sf1Json == "null") "null"
-      else {
-        def grabS(key: String): String = {
-          val re = ("\"" + key + "\":([0-9.eE+-]+)").r
-          re.findFirstMatchIn(sf1Json).map(_.group(1)).getOrElse("null")
-        }
-        // ratio recomputed from the two totals — "ratio" appears at two
-        // nesting levels in the pairing block and a regex grab of the
-        // first occurrence would pick the wrong one
-        val ratio = (grabS("spark_total_s"), grabS("duck_total_s")) match {
-          case (s, d) if s != "null" && d != "null" && d.toDouble > 0 =>
-            f"${s.toDouble / d.toDouble}%.3f"
-          case _ => "null"
-        }
-        s"""{"total_s":${grabS("total_s")},"ratio":$ratio,""" +
-        s""""n_over_2x":${grabS("n_over_2x")},"n_failed":${grabS("n_failed")}}"""
-      }
-    def compactWith(slow: String): String =
-      s"""{"metric":"total","value":${f"$total%.2f"},"unit":"sec",""" +
-      s""""n_queries":${names.size},"sf1":$sf1Compact,""" +
-      s""""stream_hdfs_events_per_sec":$evHdfs,"stream_rocksdb_events_per_sec":$evRocks,""" +
-      s""""stream_hdfs_events_per_sec_10x":$evHdfs10x,"stream_rocksdb_events_per_sec_10x":$evRocks10x,""" +
-      s""""stream_steal_pct":$streamStealJson,""" +
-      s""""cores_total_s":${f"$coresTotal%.2f"},"duck_pairing":$duckCompact,""" +
-      s""""slowest":$slow,"failed_reps":$failedReps,"diag":$diagCompact,""" +
-      s""""queries_detail":"BENCH_LATEST.json","sf":"$sfDir"}"""
-    val compactLine = {
-      val c = compactWith(slowest)
-      if (c.length <= 1500) c
-      else compactWith(results.sortBy(-_._2._1).take(4)
-        .map { case (k, (v, _)) => "\"" + k + "\":" + f"$v%.2f" }.mkString("{", ",", "}"))
-    }
+    val (fullLine, compactLine) = lines(Run(sfDir, names.map(n => n -> byName(n)),
+      coreTimes.toSeq.sortBy(_._1).map { case (k, v) => k -> v.min },
+      streamReps.toSeq, streamSteal.toSeq,
+      diag.toSeq, duckPairing(sfDir), sf1Board()))
     // Belt-and-braces for the driver's parse: the FULL JSON at a well-known
     // path first (immune to any log prefixing/truncation of stdout) …
     try Files.writeString(Paths.get("BENCH_LATEST.json"), fullLine + "\n")
@@ -501,5 +295,213 @@ object Bench {
     println(fullLine)
     println(compactLine)
     System.out.flush()
+  }
+
+  /** What one run measured, as [[lines]] renders it: each query's seconds
+    * per rep (-1 where the rep failed), each core's min build seconds,
+    * each stream configuration's rates (events/s) and host steal share
+    * per rep, the per-section diag, the DuckDB seconds per query (when
+    * DUCK_PAIRING.json matches the SF) and the SF1_BOARD.json text (when
+    * present). */
+  private[graft] final case class Run(
+      sfDir: String,
+      reps: Seq[(String, Vector[Double])],
+      cores: Seq[(String, Double)],
+      streamReps: Seq[(String, Vector[Long])],
+      streamSteal: Seq[(String, Vector[Double])],
+      diag: Seq[(String, Diag)],
+      duck: Option[Map[String, Double]],
+      sf1: Option[String])
+
+  /** Fresh DuckDB pairing (round-6 VERDICT #1): tools/pair_duckdb.py
+    * writes DUCK_PAIRING.json (per-query DuckDB seconds on the same
+    * oracle SQL/parquet/SF), read here once. The pairing is only
+    * meaningful at the SAME scale factor: a sf0.1 DuckDB artifact paired
+    * against a sf0.01 spark run produces a nonsense ratio (measured: 0.40
+    * with 94 fake over-2x rows) — None unless the recorded sf_dir
+    * matches. */
+  private def duckPairing(sfDir: String): Option[Map[String, Double]] =
+    artifact("DUCK_PAIRING.json")
+      .filter(txt => """"sf_dir":\s*"([^"]+)"""".r.findFirstMatchIn(txt).exists(_.group(1) == sfDir))
+      .flatMap(txt => try Some(""""(q[0-9][^"]*)":\s*([0-9.eE+]+)""".r.findAllMatchIn(txt)
+        .map(m => m.group(1) -> m.group(2).toDouble).toMap)
+      catch { case t: NumberFormatException =>
+        System.err.println(s"[bench] duck pairing failed: ${t.getMessage}"); None })
+
+  /** A checked-in artifact of the working dir, trimmed; None where it is
+    * absent or unreadable. */
+  private def artifact(name: String): Option[String] =
+    try Some(Paths.get(name)).filter(Files.exists(_)).map(Files.readString(_).trim)
+    catch { case t: Throwable => System.err.println(s"[bench] read $name failed: ${t.getMessage}"); None }
+
+  /** sf1 (10×) full-board section (round-10 VERDICT #3): `graft.Dev
+    * scale` + tools/pair_sf1.py write SF1_BOARD.json (per-query seconds
+    * at a 10× disjoint-replica corpus + a timeout-guarded DuckDB
+    * pairing), copied here from the replica dir; the full line embeds it
+    * verbatim so the driver artifact carries the scale run. The file
+    * records its own provenance (single-rep builder run, replica dir,
+    * generation timestamps) — this is a checked-in measurement, not a
+    * per-round re-run: a 10× board + its DuckDB pairing is hours of
+    * wall, re-generated when the plans it measures change. */
+  private def sf1Board(): Option[String] = artifact("SF1_BOARD.json")
+
+  /** The compact line's sf1 scalars, read from SF1_BOARD.json's own
+    * fields: `total_s` and `n_failed` from `graft.Dev scale`, the
+    * pairing's totals and `n_over_2x` from tools/pair_sf1.py. The ratio
+    * is recomputed from the two totals. */
+  private def sf1Summary(sf1Json: String): String = try {
+    import com.fasterxml.jackson.databind.JsonNode
+    val root = new com.fasterxml.jackson.databind.ObjectMapper().readTree(sf1Json)
+    val pairing = root.path("duck_pairing")
+    def num(n: JsonNode): String = if (n.isNumber) n.asText else "null"
+    val (s, d) = (pairing.path("spark_total_s"), pairing.path("duck_total_s"))
+    val ratio =
+      if (s.isNumber && d.isNumber && d.asDouble > 0) f"${s.asDouble / d.asDouble}%.3f" else "null"
+    s"""{"total_s":${num(root.path("total_s"))},"ratio":$ratio,""" +
+    s""""n_over_2x":${num(pairing.path("n_over_2x"))},"n_failed":${num(root.path("n_failed"))}}"""
+  } catch { case _: Exception => "null" }
+
+  /** A ratio at 3 decimals; null where it is undefined (no DuckDB time). */
+  private def ratio3(x: Double): String = if (x.isNaN || x.isInfinite) "null" else f"$x%.3f"
+
+  /** The `duck_pairing` block of the full line and its compact summary,
+    * from one computation. The ratio pairs THIS run's spark times with
+    * the DuckDB ones — cores are charged to the spark side, since DuckDB
+    * pays every query's full cost with no staged tables.
+    *
+    * Per-query ratios on sub-100ms DuckDB queries measure Spark's fixed
+    * per-query scheduling overhead (~0.2 s in local mode, an embedded
+    * engine has none), not plan quality — so decompose: estimate the
+    * overhead as the median spark−duck gap on the 50 smallest-duck
+    * queries, and report the PLAN-DOMINATED subset (duck ≥ 0.5 s)
+    * separately; its over-2x list is the actionable one. The board ratio
+    * stays the headline (the driver bar). */
+  private def pairing(
+      duck: Map[String, Double], mins: Map[String, Double], coresTotal: Double): (String, String) = {
+    val paired = duck.keys.filter(k => mins.get(k).exists(_ >= 0)).toSeq.sorted
+    val sparkSum = paired.map(mins).sum + coresTotal
+    val duckSum = paired.map(duck).sum
+    val overheadS = {
+      val small = paired.sortBy(duck).take(50).map(k => mins(k) - duck(k)).sorted
+      if (small.isEmpty) 0.0 else small(small.size / 2)
+    }
+    val heavy = paired.filter(k => duck(k) >= 0.5)
+    val heavySpark = heavy.map(mins).sum
+    val heavyDuck = heavy.map(duck).sum
+    val overH = heavy.filter(k => mins(k) > 2.0 * duck(k)).sortBy(k => -mins(k) / duck(k))
+    val overHJson = overH.map(k => "\"" + k + "\":" + f"${mins(k) / duck(k)}%.2f").mkString("{", ",", "}")
+    val nOverAll = paired.count(k => mins(k) > 2.0 * duck(k))
+    val ratio = ratio3(sparkSum / duckSum)
+    val heavyRatio = if (heavyDuck > 0) Some(ratio3(heavySpark / heavyDuck)) else None
+    val full =
+      f"""{"n_paired":${paired.size},"spark_total_s":$sparkSum%.2f,""" +
+      f""""spark_cores_s":$coresTotal%.2f,"duck_total_s":$duckSum%.2f,""" +
+      s""""ratio":$ratio,""" +
+      f""""fixed_overhead_s":$overheadS%.3f,"n_over_2x_raw":$nOverAll,""" +
+      f""""heavy":{"min_duck_s":0.5,"n":${heavy.size},""" +
+      f""""spark_s":$heavySpark%.2f,"duck_s":$heavyDuck%.2f,""" +
+      heavyRatio.fold("")(r => s""""ratio":$r,""") +
+      s""""n_over_2x":${overH.size},"over_2x":$overHJson}}"""
+    val compact =
+      s"""{"n_paired":${paired.size},"ratio":$ratio,""" +
+      s""""heavy_ratio":${heavyRatio.getOrElse("null")},"heavy_n_over_2x":${overH.size}}"""
+    (full, compact)
+  }
+
+  /** The full line (every query, BENCH_LATEST.json) and the COMPACT line
+    * of a run. */
+  private[graft] def lines(r: Run): (String, String) = {
+    // failed_reps surfaces intermittent failures that min-of-reps would
+    // otherwise mask as a clean (fastest-passing) success
+    val results = r.reps.map { case (name, times) =>
+      name -> ((if (times.exists(_ >= 0)) times.filter(_ >= 0).min else -1.0), times.count(_ < 0))
+    }
+    val qs = results.map { case (k, (v, _)) => "\"" + k + "\":" + v }
+      .mkString("{", ",", "}")
+    val failedReps = results.collect { case (k, (_, f)) if f > 0 => "\"" + k + "\":" + f }
+      .mkString("{", ",", "}")
+    // headline total stays comparable with rounds ≤6 (where core builds
+    // hid inside first-consumer queries): per-query mins + per-core mins
+    val coresTotal = r.cores.map(_._2).sum
+    val coresJson = r.cores.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
+      .mkString("{", ",", "}")
+    val total = results.map(_._2._1).filter(_ >= 0).sum + coresTotal
+    val diagJson = r.diag.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
+      .mkString("{", ",", "}")
+    val streamRepsJson = r.streamReps.map { case (k, v) =>
+      "\"" + k + "\":" + v.mkString("[", ",", "]") }.mkString("{", ",", "}")
+    val streamStealJson = r.streamSteal.map { case (k, v) =>
+      "\"" + k + "\":" + v.map(p => f"$p%.1f").mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    // each configuration's rate is the best of its reps
+    val rate = r.streamReps.map { case (k, v) => k -> v.max }.toMap.withDefaultValue(-1L)
+    val streamRates =
+      s""""stream_hdfs_events_per_sec":${rate("hdfs_1x")},""" +
+      s""""stream_rocksdb_events_per_sec":${rate("rocksdb_1x")},""" +
+      s""""stream_hdfs_events_per_sec_10x":${rate("hdfs_10x")},""" +
+      s""""stream_rocksdb_events_per_sec_10x":${rate("rocksdb_10x")},"""
+    val (hdfsBatchMs, hdfsEvUs) = attrib(rate("hdfs_1x"), rate("hdfs_10x"))
+    val (rocksBatchMs, rocksEvUs) = attrib(rate("rocksdb_1x"), rate("rocksdb_10x"))
+    val streamAttribJson =
+      f"""{"hdfs_batch_overhead_ms":$hdfsBatchMs%.1f,"hdfs_per_event_us":$hdfsEvUs%.2f,""" +
+      f""""rocksdb_batch_overhead_ms":$rocksBatchMs%.1f,"rocksdb_per_event_us":$rocksEvUs%.2f,""" +
+      s""""model":"t(N)=8c+Nv over the 1x/10x best reps; c=per-micro-batch fixed cost (state-store open/commit + batch planning), v=per-event merge cost"}"""
+    val (duckJson, duckCompact) =
+      r.duck.fold(("null", "null"))(pairing(_, results.map { case (k, (v, _)) => k -> v }.toMap, coresTotal))
+    val sf1Json = r.sf1.getOrElse("null")
+    val streamJson =
+      s""""sf1":$sf1Json,$streamRates""" +
+      s""""stream_reps":$streamRepsJson,"stream_steal_pct":$streamStealJson,""" +
+      s""""stream_attrib":$streamAttribJson,""" +
+      s""""cores_detail":$coresJson,"cores_total_s":${f"$coresTotal%.2f"},""" +
+      s""""duck_pairing":$duckJson"""
+    // the ten slowest queries inline in the COMPACT line, so even a
+    // tail-truncated capture still attributes where the time went
+    def slowest(n: Int): String = results.sortBy(-_._2._1).take(n)
+      .map { case (k, (v, _)) => "\"" + k + "\":" + f"$v%.2f" }.mkString("{", ",", "}")
+    // per-query rep spreads (round-9 VERDICT #5, widened in round 11 per
+    // round-10 VERDICT #2): the 20 largest spark-time queries PLUS every
+    // query whose min exceeds 1.5x its DuckDB pairing — over-2× verdicts
+    // are made on per-query mins while same-VM runs disagree by ~15%, so
+    // every boundary-adjacent name carries its full rep vector in the
+    // artifact and a boundary call is readable as weather vs structure
+    val duckTimes = r.duck.getOrElse(Map.empty)
+    val repsDetailNames = (
+      results.sortBy(-_._2._1).take(20).map(_._1) ++
+      results.collect { case (k, (v, _))
+        if v >= 0 && duckTimes.get(k).exists(d => d > 0 && v > 1.5 * d) => k }
+    ).distinct
+    val byName = r.reps.toMap
+    val repsDetail = repsDetailNames.map { k =>
+      "\"" + k + "\":" + byName(k).map(t => f"$t%.2f").mkString("[", ",", "]")
+    }.mkString("{", ",", "}")
+    val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
+      s""""failed_reps":$failedReps,"reps_detail":$repsDetail,$streamJson,""" +
+      s""""diag":$diagJson,"sf":"${r.sfDir}"}"""
+    // COMPACT line: scalar summaries ONLY. The driver's tail capture is
+    // 2000 bytes (measured from BENCH_r07.json, whose parsed:null was this
+    // line outgrowing the window once duck_pairing/cores/diag moved in) —
+    // everything verbose lives in the full line / BENCH_LATEST.json, and a
+    // hard length guard trims the slowest map before ever exceeding 1500.
+    // gc/jit/heap per section INSIDE the compact line (round-8 VERDICT
+    // #5: cross-VM streaming variance must be attributable from the
+    // tail capture alone) — the scalar triple only, not the full
+    // code-cache breakdown, to stay inside the 1.5 KB guard
+    val diagCompact = r.diag.map { case (k, v) => "\"" + k + "\":\"" + v.compact + "\"" }
+      .mkString("{", ",", "}")
+    // sf1 scalar summary for the compact line (full table in the full line)
+    val sf1Compact = r.sf1.fold("null")(sf1Summary)
+    def compactWith(slow: String): String =
+      s"""{"metric":"total","value":${f"$total%.2f"},"unit":"sec",""" +
+      s""""n_queries":${r.reps.size},"sf1":$sf1Compact,$streamRates""" +
+      s""""stream_steal_pct":$streamStealJson,""" +
+      s""""cores_total_s":${f"$coresTotal%.2f"},"duck_pairing":$duckCompact,""" +
+      s""""slowest":$slow,"failed_reps":$failedReps,"diag":$diagCompact,""" +
+      s""""queries_detail":"BENCH_LATEST.json","sf":"${r.sfDir}"}"""
+    val compactLine = {
+      val c = compactWith(slowest(10))
+      if (c.length <= 1500) c else compactWith(slowest(4))
+    }
+    (fullLine, compactLine)
   }
 }

@@ -8,7 +8,7 @@ import org.apache.spark.scheduler._
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
-import graft.ops.Dedup
+import graft.ops.Materialize
 
 /** The dev loop's one entry point (NOT the driver contract — that is
   * [[Bench]] and [[Verify]]):
@@ -89,23 +89,22 @@ object Dev {
       beforePass: () => Unit = () => ())(
       run: (String, Int) => Unit): Map[String, Vector[Double]] = {
     names.foreach { n =>
-      try registry(n)(spark, Bench.WarmupDir).count()
+      try Materialize.scoped(spark)(registry(n)(spark, Bench.WarmupDir).count())
       catch { case t: Throwable => System.err.println(s"[dev] warmup $n: ${t.getMessage}") }
-      finally Dedup.unpersistIntermediates(spark)
     }
-    Dedup.unpersistPinned(spark)
+    Materialize.releaseSession(spark)
     val times = mutable.Map(names.map(_ -> Vector.empty[Double]): _*)
     (1 to reps).foreach { rep =>
       beforePass()
       names.foreach { n =>
         val t0 = System.nanoTime()
         spark.sparkContext.setJobGroup(s"$n/$rep", n)
-        val ok = try { run(n, rep); true }
+        val ok = try { Materialize.scoped(spark)(run(n, rep)); true }
           catch { case t: Throwable => System.err.println(s"[dev] $n FAILED: ${t.getMessage}"); false }
-          finally { Dedup.unpersistIntermediates(spark); spark.sparkContext.clearJobGroup() }
+          finally spark.sparkContext.clearJobGroup()
         times(n) :+= (if (ok) (System.nanoTime() - t0) / 1e9 else -1.0)
       }
-      Dedup.unpersistPinned(spark)
+      Materialize.releaseSession(spark)
     }
     times.toMap
   }
@@ -159,11 +158,10 @@ object Dev {
     * `<outDir>/<q>_<suffix>.txt` per query. */
   private def plans(spark: SparkSession, dir: String, files: Option[(String, String)],
       names: Seq[String]): Unit = {
-    def plan(name: String): String = {
+    def plan(name: String): String = Materialize.scoped(spark) {
       val df = registry(name)(spark, dir)
       df.collect() // let AQE finalize so the printed plan is the executed one
-      try df.queryExecution.explainString(FormattedMode)
-      finally Dedup.unpersistIntermediates(spark)
+      df.queryExecution.explainString(FormattedMode)
     }
     files match {
       case Some((outDir, suffix)) =>
@@ -182,7 +180,7 @@ object Dev {
           names.map(n => s"\n## $n — ${why(n)}\n\n```\n${plan(n)}```\n").mkString)
         println(s"[dev] wrote PLANS.md (${names.size} queries)")
     }
-    Dedup.unpersistPinned(spark)
+    Materialize.releaseSession(spark)
   }
 
   /** Scale run: [[Probe.replicateAll]] builds a `factor`× disjoint-replica

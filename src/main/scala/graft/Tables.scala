@@ -77,4 +77,15 @@ object Tables {
   def region(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "region")
   def documents(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "documents")
   def embeddings(spark: SparkSession, dir: String): DataFrame = table(spark, dir, "embeddings")
+
+  /** Embedding dimensionality per dir — a 1-row probe job per call
+    * otherwise (the dimension is a property of the files like the schema
+    * above, so one probe per process suffices; round-11 job audit). Any
+    * positive width works when the table is empty. */
+  def embeddingDim(spark: SparkSession, dir: String): Int =
+    dimMemo.computeIfAbsent(dir, _ =>
+      embeddings(spark, dir).select(size(col("embedding"))).head(1)
+        .headOption.map(_.getInt(0)).getOrElse(1))
+
+  private val dimMemo = new java.util.concurrent.ConcurrentHashMap[String, Int]
 }

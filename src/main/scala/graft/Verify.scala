@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import graft.ops.Materialize
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -15,16 +16,15 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
+      try Materialize.scoped(spark)(fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name"))
       catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
-      finally graft.ops.Dedup.unpersistIntermediates(spark)
     }
     // the pinned shared-core tier (q16/q76 family) lives across queries by
     // design; release it once the whole board is dumped
-    graft.ops.Dedup.unpersistPinned(spark)
+    Materialize.releaseSession(spark)
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
       oracleJson(SparkEntry.oracleSql.filter(kv => selected(kv._1))))
     spark.stop()

@@ -6,8 +6,8 @@ import java.nio.file.{FileSystems, Files, NoSuchFileException}
 import java.nio.file.attribute.PosixFilePermission
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FileStatus, FsConstants, FsServerDefaults,
-  LocalFileSystem, Path, RawLocalFileSystem}
+import org.apache.hadoop.fs.{ChecksumFs, DelegateToFileSystem, FSDataInputStream, FileStatus, FsConstants,
+  FsServerDefaults, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.local.LocalConfigKeys
 import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.hadoop.io.nativeio.NativeIO
@@ -55,9 +55,14 @@ class InProcessLocalFileSystem extends LocalFileSystem(new InProcessRawLocalFile
   * `LocalFs` (a [[ChecksumFs]] over a [[DelegateToFileSystem]]) with
   * [[InProcessRawLocalFileSystem]] underneath. Structured Streaming's
   * offset and commit logs and the state store's checkpoint files are
-  * written through this path. `uri` is ignored, as `LocalFs` ignores it. */
+  * written through this path. `uri` is ignored, as `LocalFs` ignores it.
+  * `open(path)`, the call that reads them back, checks the `.crc` sidecar
+  * as `open(path, bufferSize)` does: the inherited `FilterFs.open(path)`
+  * skips it, and a flipped byte would resume a query silently. */
 class InProcessLocalFs(uri: URI, conf: Configuration)
-    extends ChecksumFs(new InProcessRawLocalFs(conf))
+    extends ChecksumFs(new InProcessRawLocalFs(conf)) {
+  override def open(f: Path): FSDataInputStream = open(f, getServerDefaults(f).getFileBufferSize)
+}
 
 /** Hadoop's `RawLocalFs` (package-private there) over
   * [[InProcessRawLocalFileSystem]]. */

@@ -352,17 +352,17 @@ object Ann {
       .withColumn("pr", row_number().over(probeW))
       .filter(col("pr") <= probeDepths.max)
       .select(col("query_id"), col("qv"), col("cent_id").as("bucket"), col("pr"))
-    // checkpointTracked (round 12): cand feeds one rerank arm per probe
+    // Materialize.checkpoint (round 12): cand feeds one rerank arm per probe
     // depth and truth joins every arm plus the denominator — uncached,
     // each arm re-ran the full candidate scoring scan and the brute-force
     // pass (AQE re-executes shared subtrees per consuming stage; the
     // round-12 JobProfile finding). Both frames are (query × bounded
     // candidates)-sized, never corpus².
-    val cand = Dedup.checkpointTracked(assigned.join(broadcast(probes), Seq("bucket"))
+    val cand = Materialize.checkpoint(assigned.join(broadcast(probes), Seq("bucket"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("dot", call_function(GraftFunctions.DotLong, col("qv"), col("cv")))
       .select("query_id", "neighbor_id", "dot", "pr"))
-    val truth = Dedup.checkpointTracked(bruteForceTopK(queries, corpus, k, idCol, vecCol)
+    val truth = Materialize.checkpoint(bruteForceTopK(queries, corpus, k, idCol, vecCol)
       .select("query_id", "neighbor_id"))
     val denom = truth.agg(count(lit(1)).as("n_brute"))
     val perDepth = probeDepths.map { np =>

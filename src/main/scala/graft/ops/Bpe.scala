@@ -177,7 +177,7 @@ object Bpe {
         seg = mergeRound(seg, chosenPair(seg))
         done += 1
       }
-      seg = Dedup.checkpointTracked(seg)
+      seg = Materialize.checkpoint(seg)
       target -> seg
     }
   }

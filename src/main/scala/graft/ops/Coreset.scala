@@ -21,7 +21,7 @@ import graft.functions.VectorFunctions._
   * min-distance column updates against the new center (a 1-row broadcast:
   * TakeOrderedAndProject → broadcast nested-loop, never a shuffle), and
   * the argmax is a partial-aggregated top-1. Nothing is collected to the
-  * driver. The running column is `localCheckpoint`ed per round (the
+  * driver. The running column is checkpointed per round (the
   * [[Graph.connectedComponents]] iterative-loop pattern — without
   * truncation, round r's argmax would replay the whole chain: O(k²)
   * corpus passes instead of O(k)); at cluster scale swap in `checkpoint`
@@ -53,19 +53,17 @@ object Coreset {
       .select(col("id").as("cid"), col("qv").as("cqv"))
     var out = s0.select(lit(0L).as("sel_round"), col("cid").as("vec_id"),
       lit(0L).as("radius_d2"))
-    var m = v.crossJoin(broadcast(s0))
-      .select(col("id"), col("qv"), qdist2(col("qv"), col("cqv")).as("d"))
-      .localCheckpoint()
+    var m = Materialize.checkpoint(v.crossJoin(broadcast(s0))
+      .select(col("id"), col("qv"), qdist2(col("qv"), col("cqv")).as("d")))
     for (r <- 1 until k) {
       val c = m.orderBy(col("d").desc, col("id")).limit(1)
         .select(col("id").as("cid"), col("qv").as("cqv"), col("d").as("cd"))
       out = out.unionByName(c.select(lit(r.toLong).as("sel_round"),
         col("cid").as("vec_id"), col("cd").as("radius_d2")))
       if (r < k - 1)
-        m = m.crossJoin(broadcast(c))
+        m = Materialize.checkpoint(m.crossJoin(broadcast(c))
           .select(col("id"), col("qv"),
-            least(col("d"), qdist2(col("qv"), col("cqv"))).as("d"))
-          .localCheckpoint()
+            least(col("d"), qdist2(col("qv"), col("cqv"))).as("d")))
     }
     out
   }

@@ -14,122 +14,15 @@ import graft.functions.TextFunctions._
   * Hashing is `md5` throughout: bit-identical in Spark and DuckDB, which
   * makes even the MinHash signatures oracle-verifiable in ANSI SQL
   * (a lexicographic min over hex strings is a uniform min-hash).
+  * Intermediates and the session-pinned shingle/pair cores materialize
+  * through [[Materialize]].
   */
 object Dedup {
 
-  /** Intermediates persisted by the operators below, per session. The
-    * cached table is referenced by the RETURNED lazy plan, so the operator
-    * itself can never unpersist it; callers running many queries in one
-    * session (Verify/Bench run 29) call [[unpersistIntermediates]] after
-    * each action to keep storage memory from accumulating across queries
-    * (ADVICE r1: the caches were never released). Level is
-    * MEMORY_AND_DISK — under pressure blocks spill instead of evicting
-    * and recomputing the whole shingle subtree. */
-  private val tracked =
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentLinkedQueue[DataFrame]]()
-
-  /** Persist `df` (MEMORY_AND_DISK) and track it for
-    * [[unpersistIntermediates]]. Public so queries that reuse a dedup
-    * intermediate in several plan branches (e.g. q53's banded table, read
-    * by both the eval-keys and contaminated sides) share the same release
-    * mechanism instead of recomputing the subtree per branch. */
-  def cacheTracked(df: DataFrame): DataFrame = {
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    tracked.computeIfAbsent(df.sparkSession,
-      _ => new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()).add(df)
-    df
-  }
-
-  /** Tracked EAGER local checkpoint (round 12): materialize `df` once
-    * into block-manager storage and hand consumers a LogicalRDD leaf.
-    *
-    * Why not [[cacheTracked]] for fan-out intermediates: with AQE on,
-    * a multi-consumer plan re-executes a persisted subtree once per
-    * consuming query stage instead of scanning the built cache —
-    * JobProfile (round 12) showed q312's strong-edge frame recomputed
-    * ~12× per run (~10 s of duplicated stage task-time each, 58 s of
-    * summed job wall → 7 s checkpointed), and an eager count() before
-    * the consumers did NOT stop the re-execution (39.8 s). A local
-    * checkpoint sidesteps the CacheManager entirely: every consumer
-    * streams the materialized blocks, and the leaf also truncates
-    * lineage (smaller plans to canonicalize per round — the
-    * [[graft.ops.Graph]] loop discipline).
-    *
-    * Blocks live at the RDD layer, so [[unpersistIntermediates]]
-    * releases them through the tracked frame's LogicalRDD (a plain
-    * `Dataset.unpersist` would miss them). Same production caveat as
-    * the CC loops: on a cluster, a reliable `checkpoint` replaces this
-    * where executor loss must not recompute. */
-  def checkpointTracked(df: DataFrame): DataFrame = {
-    val out = df.localCheckpoint(eager = true)
-    trackedCkpt.computeIfAbsent(df.sparkSession,
-      _ => new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()).add(out)
-    out
-  }
-
-  private val trackedCkpt =
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentLinkedQueue[DataFrame]]()
-
-  /** Release every intermediate this session's dedup operators persisted.
-    * Call after the consuming action. For the [[cacheTracked]] tier the
-    * release is harmless: a later re-execution just recomputes. For the
-    * [[checkpointTracked]] tier it is destructive: the local checkpoint's
-    * blocks are the only copy and its lineage is truncated, so any later
-    * action on a plan that still holds the released frame fails with a
-    * missing checkpoint block instead of recomputing. Release only once
-    * every frame built on a checkpointed intermediate is done with.
-    * Pinned intermediates (see [[cachePinned]]) survive — release those
-    * with [[unpersistPinned]]. */
-  def unpersistIntermediates(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val q = tracked.remove(spark)
-    if (q != null) q.forEach(df => df.unpersist(blocking = false))
-    val ck = trackedCkpt.remove(spark)
-    if (ck != null) ck.forEach { df =>
-      df.queryExecution.analyzed.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }.foreach(_.unpersist(blocking = false))
-    }
-  }
-
-  /** Session-lifetime cache tier for intermediates SHARED BETWEEN QUERIES.
-    * [[unpersistIntermediates]] (called between queries by Verify/Bench)
-    * leaves these alone, so the second query whose plan contains the same
-    * subtree hits Spark's CacheManager (lookup is by logical plan — the
-    * consumer doesn't even need the same DataFrame reference). Used for
-    * the shingle-intersection core that q16/q76/q114/q125 all rebuild
-    * otherwise — the bench family cost drops to one build. Bounded: the
-    * only pinned plans are the (inter, sizes) pair per distinct
-    * (input, n, maxDf), a handful per session. */
-  def cachePinned(df: DataFrame): DataFrame = {
-    df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    pinnedTracked.computeIfAbsent(df.sparkSession,
-      _ => new java.util.concurrent.ConcurrentLinkedQueue[DataFrame]()).add(df)
-    df
-  }
-
-  private val pinnedTracked =
-    new java.util.concurrent.ConcurrentHashMap[org.apache.spark.sql.SparkSession,
-      java.util.concurrent.ConcurrentLinkedQueue[DataFrame]]()
-
-  /** Release the session-lifetime pinned tier (end of a bench/verify
-    * session or between bench sections). Also evicts the session's
-    * entries from every [[PinnedCoreMemo]], so memoized cores rebuild
-    * (and re-pin) on next use instead of serving unpersisted frames.
-    *
-    * (Round-12 note: a checkpointPinned variant — LogicalRDD leaves for
-    * the cores, mirroring [[checkpointTracked]] — was A/B'd on the full
-    * board and REVERTED: the pinned tier's value is plan-identity
-    * substitution for queries that build their own copy of a core-equal
-    * plan, plus IMR size stats keeping consumer joins broadcast-planned;
-    * a stats-less leaf loses both, +0.3-1.1 s across the shingle/LSH
-    * family.) */
-  def unpersistPinned(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val q = pinnedTracked.remove(spark)
-    if (q != null) q.forEach(df => df.unpersist(blocking = false))
-    PinnedCoreMemo.evictAll(spark)
-  }
+  /** Release the query scope of [[Materialize]]: the name cdcbench's
+    * board harness calls between queries. */
+  def unpersistIntermediates(spark: org.apache.spark.sql.SparkSession): Unit =
+    Materialize.releaseQuery(spark)
 
   /** Spread a narrow input across the session's cores before a
     * compute-heavy scalar stage. The fused signature expressions removed
@@ -324,14 +217,19 @@ object Dedup {
     // spread before the shingle build: without it, an under-split input
     // (one parquet file locally) computes every doc's sorted shingle set
     // on one task before the first shuffle (see spread())
-    val sh = cacheTracked(shinglePlan(docs, n, idCol, textCol))
+    val sh = Materialize.cache(shinglePlan(docs, n, idCol, textCol))
     // (inter, sizes) are the expensive, query-independent core shared by
     // the Jaccard/containment/near-dup-flow family — pin them for the
     // session so a later query with the same (input, n, maxDf) reuses the
     // materialized pair tables instead of re-running the inverted-index
     // self-join (the single most expensive subtree on the bench board)
-    (cachePinned(interFrom(sh, maxDf)), cachePinned(sizesFrom(sh)))
+    (pinnedPlan(interFrom(sh, maxDf)), pinnedPlan(sizesFrom(sh)))
   }
+
+  /** `df` pinned for the session under its canonical plan, the key
+    * Spark's CacheManager matches cached plans on. */
+  private def pinnedPlan(df: DataFrame): DataFrame =
+    Materialize.pinned(df.sparkSession, df.queryExecution.analyzed.canonicalized)(df)
 
   private def sizesFrom(sh: DataFrame): DataFrame =
     sh.groupBy("id").agg(count(lit(1)).as("set_size"))
@@ -408,28 +306,25 @@ object Dedup {
     * PPJoin all start from this one normalize+tokenize+shingle pass
     * instead of re-deriving it per query. At corpus scale this is the
     * staged shingle table a production dedup materializes once per
-    * corpus snapshot. Invalidation contract: [[unpersistPinned]]. */
-  private val shingleMemo = new PinnedCoreMemo[(String, Int)]
+    * corpus snapshot. Invalidation contract: [[Materialize.releaseSession]]. */
   def pinnedShingles(
       spark: org.apache.spark.sql.SparkSession, dir: String, n: Int): DataFrame =
-    shingleMemo.getOrBuild(spark, (dir, n))(
+    Materialize.pinned(spark, ("shingles", dir, n))(
       shinglePlan(graft.Tables.documents(spark, dir), n, "doc_id", "text"))
 
   /** Per-doc distinct-shingle counts `(id, set_size)` over
     * [[pinnedShingles]], pinned (tiny: one row per doc). */
-  private val sizesMemo = new PinnedCoreMemo[(String, Int)]
   def pinnedSetSizes(
       spark: org.apache.spark.sql.SparkSession, dir: String, n: Int): DataFrame =
-    sizesMemo.getOrBuild(spark, (dir, n))(
+    Materialize.pinned(spark, ("set_sizes", dir, n))(
       sizesFrom(pinnedShingles(spark, dir, n)))
 
   /** The pinned (inter, sizes) pair core over [[pinnedShingles]] — see
     * [[jaccardPairsPinned]]. */
-  private val interMemo = new PinnedCoreMemo[(String, Int, Int)]
   def pinnedIntersections(
       spark: org.apache.spark.sql.SparkSession,
       dir: String, n: Int, maxDf: Int): (DataFrame, DataFrame) = {
-    val inter = interMemo.getOrBuild(spark, (dir, n, maxDf))(
+    val inter = Materialize.pinned(spark, ("pair_intersections", dir, n, maxDf))(
       interFrom(pinnedShingles(spark, dir, n), maxDf))
     (inter, pinnedSetSizes(spark, dir, n))
   }
@@ -452,7 +347,7 @@ object Dedup {
       n: Int = 3,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val sh = cacheTracked(
+    val sh = Materialize.cache(
       spread(docs.select(col(idCol).as("id"), col(textCol).as("__text"),
         col(evalCol).cast("boolean").as("__eval")))
         .select(col("id"), col("__eval"),
@@ -489,7 +384,7 @@ object Dedup {
       n: Int = 3,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val sh = cacheTracked(shinglePlan(docs, n, idCol, textCol))
+    val sh = Materialize.cache(shinglePlan(docs, n, idCol, textCol))
     // per-doc shingles are DISTINCT (shinglesFromTokens dedups), so
     // count(*) per shingle IS the distinct-doc frequency
     val hot = sh.groupBy("shingle").agg(count(lit(1)).as("df"))
@@ -578,7 +473,7 @@ object Dedup {
     // persist (tracked): the self-join would otherwise recompute the whole
     // shingle→signature subtree for both sides (measured 2× cost);
     // the banded table is bands-per-doc rows, tiny relative to input
-    cacheTracked(banded)
+    Materialize.cache(banded)
     banded.as("a").join(banded.as("b"), Seq("band", "band_key"))
       .filter(col("a.id") < col("b.id"))
       .select(col("a.id").as("id_a"), col("b.id").as("id_b"))
@@ -609,7 +504,7 @@ object Dedup {
       rowsPerBand: Int = 4,
       idCol: String = "doc_id",
       textCol: String = "text"): DataFrame = {
-    val tagged = cacheTracked(
+    val tagged = Materialize.cache(
       minhashBands(docs, n, bands, rowsPerBand, idCol, textCol)
         .join(docs.select(col(idCol).as("id"), isNew.as("__new")), "id"))
     val nb = tagged.filter(col("__new"))
@@ -734,7 +629,7 @@ object Dedup {
       .select(col("id"), col("simhash"), col("s.seg").as("seg"), col("s.key").as("key"))
     // persist (tracked): self-joined below; avoids recomputing the
     // signature twice
-    cacheTracked(bySeg)
+    Materialize.cache(bySeg)
     // hamming filter BEFORE the distinct: candidates from the 4 segments
     // are much denser than survivors, and hamming is deterministic per
     // pair, so dedup over the filtered set is equivalent and cheaper

@@ -22,20 +22,10 @@ import org.apache.spark.sql.functions._
   *
   * On a real cluster, swap `localCheckpoint` (block-manager backed, lost if
   * an executor dies) for `checkpoint` with a reliable checkpoint dir.
+  * Each loop frees a superseded round's [[Materialize.checkpoint]] once
+  * its successor is materialized; the query scope frees the rest.
   */
 object Graph {
-
-  /** Release the block-manager storage behind a `localCheckpoint`ed
-    * frame (or a projection of one). `Dataset.unpersist` only clears
-    * CacheManager entries — checkpoint blocks live at the RDD layer, so
-    * without this they survive until a driver GC lets the
-    * ContextCleaner find the dead reference (which under a large heap
-    * can be never). Safe to call only once the frame's successors are
-    * materialized. */
-  private def releaseLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed.collect {
-      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-    }.foreach(_.unpersist(blocking = false))
 
   /** Connected components of the undirected graph given by `edges`
     * `(srcCol, dstCol)`. Returns one row per distinct node:
@@ -59,8 +49,8 @@ object Graph {
     // are separate plan subtrees, so an un-materialized `edges` (often an
     // expensive LSH pair pipeline) would execute twice; after this the
     // loop re-reads checkpointed blocks only
-    val e = edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .localCheckpoint(eager = true)
+    val e = Materialize.checkpoint(
+      edges.select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")))
     // The loop runs under the caller's AQE setting. A scoped
     // AQE-off variant was A/B-measured (round 8): it looks faster on a
     // cold JVM (fewer per-stage jobs while scheduling paths are still
@@ -86,19 +76,17 @@ object Graph {
       srcCol: String = "id_a",
       dstCol: String = "id_b",
       maxIter: Int = 50): DataFrame = {
-    val e = edges.select(col(groupCol).as("g"),
-        col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .localCheckpoint(eager = true)
-    val sym = e.union(e.select(col("g"), col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(eager = true)
-    releaseLocalCheckpoint(e)
+    val e = Materialize.checkpoint(edges.select(col(groupCol).as("g"),
+        col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")))
+    val sym = Materialize.checkpoint(
+      e.union(e.select(col("g"), col("dst").as("src"), col("src").as("dst"))))
+    Materialize.release(e)
     // seed comp = min(id, min in-group neighbor): the node enumeration
     // needs the (g, src) exchange anyway, so the 1-hop min is free and the
     // loop starts one round ahead (round 11, same as the ungrouped loop)
-    var labels = sym.groupBy("g", "src").agg(min("dst").as("m"))
+    var labels = Materialize.checkpoint(sym.groupBy("g", "src").agg(min("dst").as("m"))
       .select(col("g"), col("src").as("id"),
-        least(col("src"), col("m")).as("comp"))
-      .localCheckpoint(eager = true)
+        least(col("src"), col("m")).as("comp")))
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -112,22 +100,20 @@ object Graph {
       // twice per round (round-8 ADVICE; round 12 re-A/B'd dropping it,
       // trusting exchange reuse to dedup the agg — the grouped board
       // REGRESSED, q388 3.2 -> 4.9 s, and the fuse was reverted)
-      val hop = labels
+      val hop = Materialize.checkpoint(labels
         .join(incoming, Seq("g", "id"), "left")
         .select(col("g"), col("id"), col("comp").as("prev_comp"),
-          least(col("comp"), coalesce(col("nbr_min"), col("comp"))).as("comp"))
-        .localCheckpoint(eager = true)
+          least(col("comp"), coalesce(col("nbr_min"), col("comp"))).as("comp")))
       // (round 11: a second jump per round A/B'd and reverted — see the
       // ungrouped loop's comment)
-      val next = hop
+      val next = Materialize.checkpoint(hop
         .join(hop.select(col("g"), col("id").as("comp"), col("comp").as("comp2")),
           Seq("g", "comp"), "left")
         .select(col("g"), col("id"), col("prev_comp"),
-          least(col("comp"), coalesce(col("comp2"), col("comp"))).as("comp"))
-        .localCheckpoint(eager = true)
+          least(col("comp"), coalesce(col("comp2"), col("comp"))).as("comp")))
       converged = next.filter(col("comp") < col("prev_comp")).isEmpty
-      releaseLocalCheckpoint(hop)
-      releaseLocalCheckpoint(labels)
+      Materialize.release(hop)
+      Materialize.release(labels)
       labels = next.select("g", "id", "comp")
       iter += 1
     }
@@ -139,18 +125,16 @@ object Graph {
   }
 
   private def connectedComponentsLoop(e: DataFrame, maxIter: Int): DataFrame = {
-    val sym = e.union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(eager = true)
+    val sym = Materialize.checkpoint(e.union(e.select(col("dst").as("src"), col("src").as("dst"))))
     // e's blocks are dead once sym is materialized
-    releaseLocalCheckpoint(e)
+    Materialize.release(e)
     // seed comp = min(id, min neighbor id): the node enumeration needs a
     // groupBy(src) exchange anyway (it was a distinct), so the 1-hop
     // neighbor min is FREE here and the loop starts one propagation round
     // ahead (round 11: q312/q369/q33 family, one round ≈ 5 jobs of chain
     // depth at local[32])
-    var labels = sym.groupBy("src").agg(min("dst").as("m"))
-      .select(col("src").as("id"), least(col("src"), col("m")).as("comp"))
-      .localCheckpoint(eager = true)
+    var labels = Materialize.checkpoint(sym.groupBy("src").agg(min("dst").as("m"))
+      .select(col("src").as("id"), least(col("src"), col("m")).as("comp")))
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
@@ -164,11 +148,10 @@ object Graph {
       // runs twice per round (round-8 ADVICE; round 12 re-A/B'd dropping
       // it — JobProfile read neutral but the full board regressed, q312
       // 1.68 -> 2.38 s — reverted)
-      val hop = labels
+      val hop = Materialize.checkpoint(labels
         .join(incoming, Seq("id"), "left")
         .select(col("id"), col("comp").as("prev_comp"),
-          least(col("comp"), coalesce(col("nbr_min"), col("comp"))).as("comp"))
-        .localCheckpoint(eager = true)
+          least(col("comp"), coalesce(col("nbr_min"), col("comp"))).as("comp")))
       // pointer-jumping shortcut: also adopt the label OF my label
       // (comp(comp(x)) — reachable via comp(x), so the min-reachable
       // invariant holds and the fixpoint is unchanged). One extra
@@ -180,17 +163,16 @@ object Graph {
       // rounds 6 → 5 on q312 but one more checkpoint+join per round, net
       // 7.1 → 7.8 s on the same JobProfile; fewer-but-fatter rounds lose
       // at this chain depth)
-      val next = hop
+      val next = Materialize.checkpoint(hop
         .join(hop.select(col("id").as("comp"), col("comp").as("comp2")),
           Seq("comp"), "left")
         .select(col("id"), col("prev_comp"),
-          least(col("comp"), coalesce(col("comp2"), col("comp"))).as("comp"))
-        .localCheckpoint(eager = true)
+          least(col("comp"), coalesce(col("comp2"), col("comp"))).as("comp")))
       converged = next.filter(col("comp") < col("prev_comp")).isEmpty
       // superseded round's hop + label blocks are dead once `next` is
       // materialized — release eagerly instead of waiting for a driver GC
-      releaseLocalCheckpoint(hop)
-      releaseLocalCheckpoint(labels)
+      Materialize.release(hop)
+      Materialize.release(labels)
       labels = next.select("id", "comp")
       iter += 1
     }
@@ -238,16 +220,14 @@ object Graph {
       newEdges: DataFrame,
       srcCol: String = "id_a",
       dstCol: String = "id_b"): DataFrame = {
-    val e = newEdges
-      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
-      .localCheckpoint(eager = true)
+    val e = Materialize.checkpoint(newEdges
+      .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst")))
     val a = assignment.select(col("id").cast("long").as("id"),
       col("component_id").cast("long").as("component_id"))
     val nodes = e.select(col("src").as("id"))
       .union(e.select(col("dst").as("id"))).distinct()
-    val nodeComp = nodes.join(a, Seq("id"), "left")
-      .select(col("id"), coalesce(col("component_id"), col("id")).as("comp"))
-      .localCheckpoint(eager = true)
+    val nodeComp = Materialize.checkpoint(nodes.join(a, Seq("id"), "left")
+      .select(col("id"), coalesce(col("component_id"), col("id")).as("comp")))
     val compEdges = e
       .join(nodeComp.select(col("id").as("src"), col("comp").as("ca")), "src")
       .join(nodeComp.select(col("id").as("dst"), col("comp").as("cb")), "dst")
@@ -318,26 +298,24 @@ object Graph {
     val e = edges
       .select(col(srcCol).cast("long").as("src"), col(dstCol).cast("long").as("dst"))
       .filter(col("src") =!= col("dst"))
-    var sym = e
+    var sym = Materialize.checkpoint(e
       .union(e.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct()
-      .localCheckpoint(eager = true)
+      .distinct())
     var iter = 0
     var converged = false
     while (!converged && iter < maxIter) {
       val keep = sym.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select("src")
-      val next = sym
+      val next = Materialize.checkpoint(sym
         .join(keep, Seq("src"), "left_semi")
         .join(keep.withColumnRenamed("src", "dst"), Seq("dst"), "left_semi")
-        .select("src", "dst")
-        .localCheckpoint(eager = true)
+        .select("src", "dst"))
       converged = next.count() == sym.count()
       // release the superseded round's checkpoint blocks once `next` is
       // materialized — a deep peel (up to maxIter rounds) would otherwise
       // hold every intermediate edge set in block-manager storage for the
       // life of the job
-      releaseLocalCheckpoint(sym)
+      Materialize.release(sym)
       sym = next
       iter += 1
     }

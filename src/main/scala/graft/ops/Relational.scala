@@ -107,13 +107,10 @@ object Relational {
     * total order — same contract as the oracle's ROW_NUMBER).
     *
     * CALLER OBLIGATION (applies to [[globalCumSum]] too): the sorted
-    * frame is persisted via [[Dedup.cacheTracked]] — load-bearing for
-    * correctness, see the comment in the body — and the entry lives
-    * until `Dedup.unpersistIntermediates(spark)` runs. Bench, Verify and
-    * Dev call it after every query action; a long-lived session
-    * embedding these operators as a library must do the same after each
-    * consuming action, or MEMORY_AND_DISK entries accumulate without
-    * bound (round-6 ADVICE).
+    * frame is a [[Materialize.checkpoint]] (load-bearing for correctness,
+    * see the body). Run each consuming action inside `Materialize.scoped`,
+    * as Bench, Verify and Dev do, or its blocks accumulate without bound
+    * (round-6 ADVICE).
     */
   def globalIndex(df: DataFrame, ordering: Seq[Column], as: String): DataFrame =
     globalIndexWithTotal(df, ordering, as, totalAs = None)
@@ -145,7 +142,7 @@ object Relational {
     // RangePartitioner samples a differently-partitioned input, the two
     // sides disagree on __pid, and the inner join silently DROPS rows.
     // One shared InMemoryRelation removes the recompute entirely.
-    val sorted = Dedup.checkpointTracked(df.repartitionByRange(ordering: _*)
+    val sorted = Materialize.checkpoint(df.repartitionByRange(ordering: _*)
       .sortWithinPartitions(ordering: _*)
       .withColumn("__pid", spark_partition_id())
       .withColumn("__mid", monotonically_increasing_id()))
@@ -194,7 +191,7 @@ object Relational {
   def globalCumSum(df: DataFrame, ordering: Seq[Column], valueCol: Column, as: String): DataFrame = {
     // persisted (tracked) for the same two-consumer layout-consistency
     // reason as globalIndex
-    val sorted = Dedup.checkpointTracked(df.repartitionByRange(ordering: _*)
+    val sorted = Materialize.checkpoint(df.repartitionByRange(ordering: _*)
       .sortWithinPartitions(ordering: _*)
       .withColumn("__pid", spark_partition_id())
       .withColumn("__v", valueCol.cast("long")))

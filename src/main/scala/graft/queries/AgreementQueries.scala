@@ -53,7 +53,7 @@ object AgreementQueries {
     * and the SimHash pigeonhole pairs. Per detector pair: sizes,
     * intersection, overlap jaccard ×10⁴ and both recalls ×10⁴. */
   def q358_detector_agreement(spark: SparkSession, dir: String): DataFrame = {
-    val exact = Dedup.checkpointTracked(
+    val exact = graft.ops.Materialize.checkpoint(
       Dedup.jaccardPairsPinned(spark, dir, n = DataPrepQueries.ShingleN,
           minJaccardX10k = DataPrepQueries.JaccardMinX10k,
           maxDf = DataPrepQueries.JaccardMaxDf)

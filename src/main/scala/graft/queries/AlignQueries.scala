@@ -46,7 +46,7 @@ object AlignQueries {
     // and the postings are already (doc, token)-distinct, so df is a
     // plain count — countDistinct here was a second dedup of the same
     // rows (bench: 9.7 s → ~2 s at sf0.1)
-    val post = graft.ops.Dedup.checkpointTracked(
+    val post = graft.ops.Materialize.checkpoint(
       graft.ops.Dedup.spread(Tables.documents(spark, dir))
         .select(col("doc_id"), col("lang"),
           size(wsTokens(normalizeText(col("text")))).cast("long").as("ntok"),

@@ -100,7 +100,7 @@ object BandQueries {
       graft.ops.Relational.topKPerGroup(
         scored, Seq("query_id"), "dot", "neighbor_id", SparseK)
     }
-    val dense = graft.ops.Dedup.cacheTracked(
+    val dense = graft.ops.Materialize.cache(
       bruteTopK(emb.select(col("vec_id"), col("qv").as("cv"))))
     // ONE scored pass for all four arms (round-8): the per-m masked
     // corpora union into a single (m, vec_id, cv) side — the sorted-|v|

@@ -46,7 +46,7 @@ object BipartiteQueries {
     // full pointer-jumping loop (the meta loop was component-count-sized
     // data but still paid seed + rounds × (2 checkpoints + fixpoint
     // check) of sequential driver-loop jobs).
-    val ldbl = graft.ops.Dedup.checkpointTracked(Graph.connectedComponents(doubled))
+    val ldbl = graft.ops.Materialize.checkpoint(Graph.connectedComponents(doubled))
     val dmin = ldbl.groupBy("component_id")
       .agg(min(expr("id div 2")).as("oc"))
     val plus = ldbl.filter(pmod(col("id"), lit(2L)) === 0)

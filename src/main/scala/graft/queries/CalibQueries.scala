@@ -34,11 +34,11 @@ object CalibQueries {
     * Scale: one distinct pass, an equijoin on user over df-bounded
     * edges, an |items|²-bounded aggregate, per-item top-k heap. */
   def q242_item_item_cf(spark: SparkSession, dir: String): DataFrame = {
-    // checkpointTracked (round 12): ui feeds the item counts AND both
+    // Materialize.checkpoint (round 12): ui feeds the item counts AND both
     // sides of the co-occurrence self-join; sym feeds the top-k rank and
     // the support join-back — uncached, each consuming stage re-ran the
     // JSON-parse distinct / the pair aggregate under AQE
-    val ui = graft.ops.Dedup.checkpointTracked(Tables.events(spark, dir)
+    val ui = graft.ops.Materialize.checkpoint(Tables.events(spark, dir)
       .select(col("user_id"),
         get_json_object(col("props"), "$.k").cast("long").as("item"))
       .filter(col("item").isNotNull)
@@ -48,7 +48,7 @@ object CalibQueries {
         col("a.user_id") === col("b.user_id") && col("a.item") < col("b.item"))
       .groupBy(col("a.item").as("item_a"), col("b.item").as("item_b"))
       .agg(count(lit(1)).as("co"))
-    val sym = graft.ops.Dedup.checkpointTracked(
+    val sym = graft.ops.Materialize.checkpoint(
       co.select(col("item_a").as("item"), col("item_b").as("other"), col("co"))
       .union(co.select(col("item_b").as("item"), col("item_a").as("other"), col("co")))
       .join(broadcast(cnt.select(col("item"), col("n").as("n_i"))), "item")

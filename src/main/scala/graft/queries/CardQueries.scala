@@ -36,7 +36,7 @@ object CardQueries {
     // n_chars column is the one the card reports, so drop the metric twin
     val metrics = qualityMetrics(col("text"))
       .filter(_._1 != "n_chars").map { case (n, c) => c.as(n) }
-    val base = Dedup.checkpointTracked(Dedup.spread(Tables.documents(spark, dir))
+    val base = graft.ops.Materialize.checkpoint(Dedup.spread(Tables.documents(spark, dir))
       .select(Seq(col("doc_id"), col("source"), col("lang"),
         col("n_chars").cast("long").as("n_chars"),
         fingerprint(col("text")).as("fp")) ++ metrics: _*)
@@ -114,7 +114,7 @@ object CardQueries {
     // spread (round 11): the tokenize+explode walk runs in the scan stage
     // and a single-split corpus serialized it on one task; the cache
     // itself is post-shuffle (fine), this parallelizes the BUILD
-    val vocab = Dedup.checkpointTracked(Dedup.spread(Tables.documents(spark, dir)
+    val vocab = graft.ops.Materialize.checkpoint(Dedup.spread(Tables.documents(spark, dir)
         .select(col("text")))
       .select(explode(wsTokens(normalizeText(col("text")))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("n")))
@@ -150,7 +150,7 @@ object CardQueries {
     * second aggregate needed to find the canonical). */
   def q280_effective_tokens(spark: SparkSession, dir: String): DataFrame = {
     import DataPrepQueries.{ShingleN, JaccardMinX10k, JaccardMaxDf}
-    val base = Dedup.checkpointTracked(Dedup.spread(Tables.documents(spark, dir))
+    val base = graft.ops.Materialize.cache(Dedup.spread(Tables.documents(spark, dir))
       .select(col("doc_id"), col("source"), fingerprint(col("text")).as("fp"),
         size(wsTokens(normalizeText(col("text")))).cast("long").as("ntok")))
     val exKept = base

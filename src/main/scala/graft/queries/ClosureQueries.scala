@@ -28,7 +28,7 @@ object ClosureQueries {
   /** X397 — triadic closure of the near-dup pair graph: pairs, wedges
     * (a < c through center b), closed wedges, closure ×10⁴. */
   def q365_triadic_closure(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.cacheTracked(
+    val pairs = graft.ops.Materialize.cache(
       Dedup.jaccardPairsPinned(spark, dir, n = DataPrepQueries.ShingleN,
           minJaccardX10k = DataPrepQueries.JaccardMinX10k,
           maxDf = DataPrepQueries.JaccardMaxDf)
@@ -84,8 +84,8 @@ object ClosureQueries {
     //    [[SweepPack]]), so the three per-arm shuffle chains (postings,
     //    sizes, pair counts ×3) collapse into one chain over the
     //    3-order union — same pair multiset per order, fewer fixed costs.
-    val toks = Dedup.cacheTracked(Dedup.tokensBase(Tables.documents(spark, dir)))
-    val sh = Dedup.cacheTracked(SweepOrders.map { n =>
+    val toks = graft.ops.Materialize.cache(Dedup.tokensBase(Tables.documents(spark, dir)))
+    val sh = graft.ops.Materialize.cache(SweepOrders.map { n =>
       toks.select(lit(n.toLong).as("sn"), col("id"),
         explode(shinglesFromTokens(col("__toks"), n)).as("shingle"))
     }.reduce(_.unionByName(_)))

@@ -49,7 +49,7 @@ object ClusterSweepQueries {
     val tauArr = s"array(${SweepTaus.mkString("L,")}L)"
     val base = Dedup.jaccardPairsPinned(spark, dir, ShingleN, SweepTaus.min, JaccardMaxDf)
       .select(col("id_a"), col("id_b"), col("jaccard_x10k"))
-    val tagged = Dedup.checkpointTracked(base
+    val tagged = graft.ops.Materialize.checkpoint(base
       .select(col("id_a"), col("id_b"),
         explode(expr(s"filter(sequence(0, ${nArms - 1}), " +
           s"i -> jaccard_x10k >= element_at($tauArr, i + 1))")).as("arm")))

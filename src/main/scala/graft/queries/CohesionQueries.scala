@@ -27,7 +27,7 @@ object CohesionQueries {
     * pair graph: component id (min doc id — the CC convention), size,
     * n_pairs, min jaccard ×10⁴, density ×10⁴ = pairs / C(size, 2). */
   def q351_cluster_cohesion(spark: SparkSession, dir: String): DataFrame = {
-    val pairs = Dedup.cacheTracked(
+    val pairs = graft.ops.Materialize.cache(
       Dedup.jaccardPairsPinned(spark, dir, n = DataPrepQueries.ShingleN,
           minJaccardX10k = DataPrepQueries.JaccardMinX10k,
           maxDf = DataPrepQueries.JaccardMaxDf)

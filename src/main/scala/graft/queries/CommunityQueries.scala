@@ -60,7 +60,7 @@ object CommunityQueries {
     * embed-the-scalar convention as q248's gini. */
   def q331_lpa_modularity(spark: SparkSession, dir: String): DataFrame = {
     val und = OlapQueries.knnUndirectedPinned(spark, dir)
-    val lbl = graft.ops.Dedup.checkpointTracked(
+    val lbl = graft.ops.Materialize.checkpoint(
       ActiveQueries.lpaLabels(spark, dir))
     val adj = und.select(col("u").as("node"), col("v").as("nbr"))
       .union(und.select(col("v").as("node"), col("u").as("nbr")))
@@ -96,7 +96,7 @@ object CommunityQueries {
     * node (k-bounded by the kNN core's contract). */
   def q332_two_hop_reach(spark: SparkSession, dir: String): DataFrame = {
     val und = OlapQueries.knnUndirectedPinned(spark, dir)
-    val adj = graft.ops.Dedup.checkpointTracked(
+    val adj = graft.ops.Materialize.checkpoint(
       und.select(col("u").as("node"), col("v").as("nbr"))
         .union(und.select(col("v").as("node"), col("u").as("nbr"))))
     val twoHop = adj.as("x")

@@ -75,17 +75,15 @@ object DataPrepQueries {
   /** Session-pinned LSH candidate pairs (board params) — shared by
     * q17/q358/q386: the candidate set is a staged table at corpus
     * scale, not an artifact rebuilt per consumer. */
-  private val lshPairsMemo = new graft.ops.PinnedCoreMemo[String]
   private[graft] def lshPairsPinned(spark: SparkSession, dir: String): DataFrame =
-    lshPairsMemo.getOrBuild(spark, dir)(
+    graft.ops.Materialize.pinned(spark, ("lsh_pairs", dir))(
       Dedup.minhashLshPairs(Tables.documents(spark, dir),
         n = ShingleN, bands = MinhashBands, rowsPerBand = MinhashRows))
 
   /** Session-pinned SimHash pigeonhole pairs (board params) — shared
     * by q19/q358/q386. */
-  private val simhashPairsMemo = new graft.ops.PinnedCoreMemo[String]
   private[graft] def simhashPairsPinned(spark: SparkSession, dir: String): DataFrame =
-    simhashPairsMemo.getOrBuild(spark, dir)(
+    graft.ops.Materialize.pinned(spark, ("simhash_pairs", dir))(
       Dedup.simhashPairs(Tables.documents(spark, dir), maxDist = SimhashMaxDist))
 
   def q17_minhash_lsh_pairs(spark: SparkSession, dir: String): DataFrame =
@@ -115,20 +113,13 @@ object DataPrepQueries {
     * ([[Ann.lshTopK]], recall-pinned in AnnSpec), but the plane signs are
     * reproducible in DuckDB, so the approximate result is hash-exact
     * oracle-verified — candidate generation AND rerank, end to end. */
-  /** Embedding dimensionality per dir — a 1-row probe job per call
-    * otherwise (the dimension is a property of the dataset, so one probe
-    * per session suffices; round-11 job audit). */
-  private val dimMemo = new java.util.concurrent.ConcurrentHashMap[String, Int]
   def q21_ann_lsh_topk(spark: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(spark, dir)
-    // plane-table width from the data's fixed dimensionality (1-row probe;
-    // any positive width works when the table is empty)
-    val dim = dimMemo.computeIfAbsent(dir, _ =>
-      emb.select(size(col("embedding"))).head(1)
-        .headOption.map(_.getInt(0)).getOrElse(1))
+    // plane-table width from the data's fixed dimensionality
     Ann.mdLshTopK(
       emb.filter(pmod(col("vec_id"), lit(AnnQueryMod)) === 0), emb, AnnK,
-      dim = dim, nBits = LshBits, probes = LshProbes, tables = LshTables)
+      dim = Tables.embeddingDim(spark, dir),
+      nBits = LshBits, probes = LshProbes, tables = LshTables)
       .orderBy("query_id", "rank")
   }
   val LshBits = 4
@@ -456,7 +447,7 @@ object DataPrepQueries {
     // and the contaminated branch — uncached, the full shingle→MinHash
     // signature subtree would execute twice (the same measured 2× cost
     // minhashLshPairs persists against)
-    val banded = Dedup.checkpointTracked(Dedup.minhashBands(docs,
+    val banded = graft.ops.Materialize.checkpoint(Dedup.minhashBands(docs,
       n = ShingleN, bands = MinhashBands, rowsPerBand = MinhashRows))
     val evalKeys = banded.filter(pmod(col("id"), lit(EvalMod)) === 0)
       .select("band", "band_key").distinct()

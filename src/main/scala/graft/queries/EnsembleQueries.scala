@@ -27,7 +27,7 @@ object EnsembleQueries {
     * detector, 2 = both), pairs, truth hits, precision and recall vs
     * the exact pair set. */
   def q386_ensemble_votes(spark: SparkSession, dir: String): DataFrame = {
-    val exact = Dedup.checkpointTracked(
+    val exact = graft.ops.Materialize.checkpoint(
       Dedup.jaccardPairsPinned(spark, dir, n = DataPrepQueries.ShingleN,
           minJaccardX10k = DataPrepQueries.JaccardMinX10k,
           maxDf = DataPrepQueries.JaccardMaxDf)

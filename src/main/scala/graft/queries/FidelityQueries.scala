@@ -39,9 +39,9 @@ object FidelityQueries {
   def q335_histogram_fidelity(spark: SparkSession, dir: String): DataFrame = {
     def arm(name: String, a: DataFrame, ak: String,
         b: DataFrame, bk: String): DataFrame = {
-      val ca = graft.ops.Dedup.checkpointTracked(
+      val ca = graft.ops.Materialize.checkpoint(
         a.groupBy(col(ak).as("k")).agg(count(lit(1)).as("ca")))
-      val cb = graft.ops.Dedup.checkpointTracked(
+      val cb = graft.ops.Materialize.checkpoint(
         b.groupBy(col(bk).as("k")).agg(count(lit(1)).as("cb")))
       val exact = ca.join(cb, "k")
         .agg(coalesce(sum(col("ca") * col("cb")), lit(0L)).as("exact_rows"))
@@ -80,7 +80,7 @@ object FidelityQueries {
     * probe is a false positive iff ALL its positions are set. Reports
     * fill ratio ×10⁶ and measured FPR ×10⁶ per budget. */
   def q336_bloom_calibration(spark: SparkSession, dir: String): DataFrame = {
-    val keys = graft.ops.Dedup.cacheTracked(
+    val keys = graft.ops.Materialize.cache(
       Tables.customer(spark, dir).select(col("c_custkey").as("id")))
     val n = keys.agg(count(lit(1)).as("n_keys"))
     def pos(idCol: String, h: Int, mExpr: String): String =
@@ -91,7 +91,7 @@ object FidelityQueries {
       val bits = (1 to BloomK).map { h =>
         withM.select(expr(pos("id", h, "m_bits")).as("bit"))
       }.reduce(_ unionByName _).distinct()
-      val bitsC = graft.ops.Dedup.cacheTracked(bits)
+      val bitsC = graft.ops.Materialize.cache(bits)
       val nBits = bitsC.agg(count(lit(1)).as("bits_set"))
       val probes = withM.select((col("id") + 10000000L).as("pid"), col("m_bits"))
       val probePos = (1 to BloomK).map { h =>

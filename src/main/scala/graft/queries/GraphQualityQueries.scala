@@ -166,7 +166,7 @@ object GraphQualityQueries {
     // exchange of the edge list; only h¹ pays its cust-keyed shuffle.
     // The re-partition is one |edges|-row exchange at build time, paid
     // once, against two |edges| exchanges per consume.
-    val edges = graft.ops.Dedup.checkpointTracked(graft.ops.Dedup.spread(li)
+    val edges = graft.ops.Materialize.checkpoint(graft.ops.Dedup.spread(li)
       .join(ord, col("l_orderkey") === col("o_orderkey"))
       .join(broadcast(part), col("l_partkey") === col("p_partkey"))
       .select(col("o_custkey").as("cust"), col("p_brand").as("brand"))
@@ -191,7 +191,7 @@ object GraphQualityQueries {
     // The cust-side max itself stays a broadcast aggregate, NOT a window:
     // customers are entity-scaled (billions at 100 TB), so a single-task
     // all-rows window here would be the q10-class scale-killer.
-    val h1 = graft.ops.Dedup.checkpointTracked(edges.join(broadcast(a1n), "brand")
+    val h1 = graft.ops.Materialize.checkpoint(edges.join(broadcast(a1n), "brand")
       .groupBy("cust").agg(sum("a1n").as("h1")))
     val h1max = h1.agg(max("h1").as("h1max"))
     val h1n = h1.crossJoin(broadcast(h1max))

@@ -79,7 +79,7 @@ object HygieneQueries {
       .select(col("doc_id"), coalesce(col("score"), lit(0L)).as("cls_score"))
     // tracked: `both` is read by the first rank chain AND the n_docs
     // total — one tokenize/stopword pass, not two (round-7)
-    val both = graft.ops.Dedup.checkpointTracked(fluency.join(scored, "doc_id"))
+    val both = graft.ops.Materialize.checkpoint(fluency.join(scored, "doc_id"))
     // ONE range shuffle for the two independent signal ranks (round-8):
     // stack each doc twice — (sig=0, fluency) and (sig=1, cls) — and
     // global-index the stack ordered by (sig, value DESC, doc_id). Every

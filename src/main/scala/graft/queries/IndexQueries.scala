@@ -49,11 +49,11 @@ object IndexQueries {
       .select(col("id").as("doc_id"), col("shingle").as("token"))
     val sizes = graft.ops.Dedup.pinnedSetSizes(spark, dir, DataPrepQueries.ShingleN)
       .select(col("id").as("doc_id"), col("set_size"))
-    // checkpointTracked (round 12): pkeys feeds BOTH sides of the
+    // Materialize.checkpoint (round 12): pkeys feeds BOTH sides of the
     // candidate self-join and arrays feeds both pair-side joins — each
     // consuming stage re-executed the uncached subtree (the prefix-rank
     // window / the collect_set aggregate) under AQE
-    val pkeys = graft.ops.Dedup.checkpointTracked(ppjoinPrefixKeys(toks, sizes))
+    val pkeys = graft.ops.Materialize.checkpoint(ppjoinPrefixKeys(toks, sizes))
     // candidate generation = prefix-postings equijoin, pruned by the two
     // EXACT PPJoin filters (no qualifying pair can be lost, so the result
     // is unchanged — only the candidate count drops):
@@ -80,7 +80,7 @@ object IndexQueries {
     // exact rerank the PPJoin way: per candidate pair, intersect the two
     // shingle ARRAYS (O(|x|+|y|) per pair, codegen'd) — never a pair ×
     // postings re-explode
-    val arrays = graft.ops.Dedup.checkpointTracked(
+    val arrays = graft.ops.Materialize.checkpoint(
       toks.groupBy("doc_id").agg(collect_set("token").as("sh")))
     val inter = candPairs
       .join(arrays.select(col("doc_id").as("id_a"), col("sh").as("sa")), "id_a")

@@ -43,7 +43,7 @@ object IsotonicQueries {
     // under DIFFERENT shapes (global vs keyed), so ReuseExchange cannot
     // share the scores⋈documents join subtree between them (the q111/q227
     // different-keys criterion). Two longs per doc — small either way.
-    val sc = graft.ops.Dedup.checkpointTracked(
+    val sc = graft.ops.Materialize.checkpoint(
       TrainPrepQueries.classifierScores(spark, dir)
         .join(Tables.documents(spark, dir).select("doc_id", "n_chars"), "doc_id")
         .select(col("score"),

@@ -71,7 +71,7 @@ object JourneyQueries {
     * the optimizer should pick unaided, pinned in PlanSpec. */
   /** The pre-checkpoint star subtree of q152 (per-(year, nation) volume) —
     * split out so PlanSpec can pin the dims-broadcast shape that q152's
-    * checkpointTracked byNation otherwise hides behind a LogicalRDD leaf. */
+    * checkpointed byNation otherwise hides behind a checkpoint leaf. */
   private[graft] def q152StarForPlanPin(spark: SparkSession, dir: String): DataFrame =
     q152Star(spark, dir)
 
@@ -102,10 +102,10 @@ object JourneyQueries {
   }
 
   def q152_market_share(spark: SparkSession, dir: String): DataFrame = {
-    // checkpointTracked (round 12): byNation is |years×nations|-row but
+    // Materialize.checkpoint (round 12): byNation is |years×nations|-row but
     // feeds BOTH the year rollup and the share join — uncached, each
     // consuming stage re-executed the whole fact star join under AQE
-    val byNation = graft.ops.Dedup.checkpointTracked(q152Star(spark, dir))
+    val byNation = graft.ops.Materialize.checkpoint(q152Star(spark, dir))
     val byYear = byNation.groupBy("o_year").agg(sum("nation_vol_c").as("year_vol_c"))
     byNation.join(broadcast(byYear), "o_year")
       .withColumn("share_x10k", expr("(10000 * nation_vol_c) div year_vol_c"))

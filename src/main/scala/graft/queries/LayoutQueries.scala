@@ -71,9 +71,8 @@ object LayoutQueries {
     * max(ecc) over the two rows is the diameter lower bound. */
   def q360_double_sweep(spark: SparkSession, dir: String): DataFrame = {
     val und = OlapQueries.knnUndirectedPinned(spark, dir)
-    val adj = und.select(col("u").as("node"), col("v").as("nbr"))
-      .unionByName(und.select(col("v").as("node"), col("u").as("nbr")))
-      .localCheckpoint(eager = true)
+    val adj = graft.ops.Materialize.checkpoint(und.select(col("u").as("node"), col("v").as("nbr"))
+      .unionByName(und.select(col("v").as("node"), col("u").as("nbr"))))
     def bfs(seed: DataFrame): DataFrame = {
       // per-hop FRONTIER checkpoints; visited is their lazy union (round
       // 11): re-checkpointing the growing visited set each hop was one
@@ -83,19 +82,18 @@ object LayoutQueries {
       // (Round 12: a two-levels-per-checkpoint fusion was A/B'd on the
       // full board and REVERTED — no win materialized and one wave read
       // +0.7 s; the per-hop expand is already exchange-light.)
-      var frontiers = List(seed.select(col("node")).withColumn("hop", lit(0L))
-        .localCheckpoint(eager = true))
+      var frontiers = List(graft.ops.Materialize.checkpoint(
+        seed.select(col("node")).withColumn("hop", lit(0L))))
       var frontier = frontiers.head.select("node")
       var hops = 0
       var done = false
       while (!done && hops < DiamMaxHops) {
         hops += 1
         val visitedNodes = frontiers.map(_.select("node")).reduce(_.unionByName(_))
-        val next = frontier.join(adj, "node")
+        val next = graft.ops.Materialize.checkpoint(frontier.join(adj, "node")
           .select(col("nbr").as("node")).distinct()
           .join(visitedNodes, Seq("node"), "left_anti")
-          .withColumn("hop", lit(hops.toLong))
-          .localCheckpoint(eager = true)
+          .withColumn("hop", lit(hops.toLong)))
         if (next.isEmpty) done = true
         else {
           frontiers = next :: frontiers

@@ -39,8 +39,6 @@ object LinkageQueries {
     * Scale: blocking keys are one scalar pass + a |keys|-bounded
     * self-join (cap guards hot keys); the expensive exact compare runs
     * on candidates only; CC iterates the confirmed EDGE list. */
-  private val blockCandMemo = new graft.ops.PinnedCoreMemo[String]
-
   /** The multi-key blocking CANDIDATE pairs (distinct, id_a < id_b) —
     * q222's cheap first stage, shared with q245's Fellegi–Sunter scoring
     * and q270's blocking-quality audit. Session-pinned (round-8): three
@@ -48,7 +46,7 @@ object LinkageQueries {
     * prewarmed as core `block_candidates` (at corpus scale this is a
     * staged table next to the shingle core). */
   private[graft] def blockingCandidates(spark: SparkSession, dir: String): DataFrame =
-    blockCandMemo.getOrBuild(spark, dir) { blockingCandidatesBuild(spark, dir) }
+    graft.ops.Materialize.pinned(spark, ("block_candidates", dir))(blockingCandidatesBuild(spark, dir))
 
   private def blockingCandidatesBuild(spark: SparkSession, dir: String): DataFrame = {
     val docs = Tables.documents(spark, dir)
@@ -59,7 +57,7 @@ object LinkageQueries {
         element_at(col("t"), 1).as("ft"), element_at(col("t"), -1).as("lt"))
     // tracked: the key table feeds the two-pass df cap (count + semi
     // join) and the posting collect — one tokenize pass, not three
-    val keys = graft.ops.Dedup.checkpointTracked(heads
+    val keys = graft.ops.Materialize.checkpoint(heads
       .select(col("doc_id"), concat_ws(":", lit("F"),
         expr(s"CAST(ntok div $BlockBucket AS STRING)"), col("ft")).as("bkey"))
       .union(heads.select(col("doc_id"), concat_ws(":", lit("L"),

@@ -35,12 +35,12 @@ object MaskQueries {
     // 0.9 s at sf0.1; a no-op when the input already has >= cores splits
     val base = graft.ops.Dedup.spread(Tables.documents(spark, dir))
       .select(col("doc_id"), wsTokens(normalizeText(col("text"))).as("t"))
-    // checkpointTracked (round 12, reversing the round-9 "NOT cached"
-    // A/B, which compared against cacheTracked — a persisted subtree AQE
+    // Materialize.checkpoint (round 12, reversing the round-9 "NOT cached"
+    // A/B, which compared against Materialize.cache — a persisted subtree AQE
     // re-executes per consuming stage): the gram table feeds the df
     // aggregate AND the position join-back; the eager checkpoint builds
     // the explode walk once and both consumers stream the blocks.
-    val grams = graft.ops.Dedup.checkpointTracked(
+    val grams = graft.ops.Materialize.checkpoint(
       base.select(col("doc_id"),
         posexplode(ngramStrings(col("t"), MaskN)).as(Seq("s0", "gram")))
       .select(col("doc_id"), (col("s0") + 1).as("s"), col("gram")))

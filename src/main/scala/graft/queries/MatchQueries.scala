@@ -48,7 +48,7 @@ object MatchQueries {
     // each round reads the pool three times (endpoint explode, survivor
     // semi-joins, anti-join) and round r+1's pool stacks on round r's —
     // cache per round or the chain re-executes geometrically
-    var pool = graft.ops.Dedup.checkpointTracked(weightedUnd(spark, dir))
+    var pool = graft.ops.Materialize.checkpoint(weightedUnd(spark, dir))
     var out: DataFrame = null
     for (r <- 1 to MatchRounds) {
       // one pass: explode endpoints, rank incident edges per node, then
@@ -67,12 +67,12 @@ object MatchQueries {
             .otherwise(0L)).as("fv"))
         .filter(col("fu") === 1L && col("fv") === 1L)
         .select("u", "v", "w")
-      val survC = graft.ops.Dedup.checkpointTracked(surv)
+      val survC = graft.ops.Materialize.checkpoint(surv)
       val stamped = survC.select(lit(r.toLong).as("round"), col("u"), col("v"), col("w"))
       out = if (out == null) stamped else out.unionByName(stamped)
       val matchedNodes = survC.select(col("u").as("mn"))
         .unionByName(survC.select(col("v").as("mn"))).distinct()
-      pool = graft.ops.Dedup.checkpointTracked(pool
+      pool = graft.ops.Materialize.checkpoint(pool
         .join(matchedNodes, col("u") === col("mn"), "left_anti")
         .join(matchedNodes, col("v") === col("mn"), "left_anti"))
     }
@@ -88,12 +88,12 @@ object MatchQueries {
   val DbscanEps = 300000L
   val DbscanMinPts = 3L
   def q312_dbscan_clusters(spark: SparkSession, dir: String): DataFrame = {
-    // checkpointTracked, not cacheTracked (round 12): strong feeds the
+    // Materialize.checkpoint, not Materialize.cache (round 12): strong feeds the
     // ends union, the core degree pass, coreEdges' two semi-joins and
     // the CC entry — with AQE each consuming stage re-executed the
     // persisted subtree (~12 rebuilds/run, JobProfile); the checkpoint
     // leaf is streamed instead
-    val strong = graft.ops.Dedup.checkpointTracked(
+    val strong = graft.ops.Materialize.checkpoint(
       weightedUnd(spark, dir).filter(col("w") >= DbscanEps))
     val ends = strong.select(col("u").as("node"), col("v").as("other"), col("w"))
       .unionByName(strong.select(col("v").as("node"), col("u").as("other"), col("w")))

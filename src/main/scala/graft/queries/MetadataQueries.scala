@@ -55,7 +55,7 @@ object MetadataQueries {
   def q334_oov_audit(spark: SparkSession, dir: String): DataFrame = {
     val tk = Tables.documents(spark, dir)
       .select(col("source"), explode(wsTokens(normalizeText(col("text")))).as("token"))
-    val cnt = graft.ops.Dedup.checkpointTracked(
+    val cnt = graft.ops.Materialize.checkpoint(
       tk.groupBy("source", "token").agg(count(lit(1)).as("c")))
     val vocab = cnt.groupBy("token").agg(sum("c").as("n"))
       .orderBy(col("n").desc, col("token").asc).limit(OovVocabN)

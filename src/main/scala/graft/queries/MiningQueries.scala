@@ -63,7 +63,7 @@ object MiningQueries {
     // ONE partition, so every consumer of tk ran 1-task (~200 ms each,
     // serial); round-robin first makes the cached layout 32-way — no-op
     // on real multi-split corpora
-    val tk = graft.ops.Dedup.checkpointTracked(graft.ops.Dedup.spread(
+    val tk = graft.ops.Materialize.checkpoint(graft.ops.Dedup.spread(
         Tables.documents(spark, dir).select(col("text")))
       .select(toksOf(col("text")).as("t")))
     val uni = tk.select(explode(col("t")).as("w"))

@@ -41,7 +41,7 @@ object PercolationQueries {
   def q349_percolation_sweep(spark: SparkSession, dir: String): DataFrame = {
     val spark0 = spark
     import spark0.implicits._
-    val pairs = Dedup.cacheTracked(
+    val pairs = graft.ops.Materialize.cache(
       Dedup.jaccardPairsPinned(spark, dir, n = DataPrepQueries.ShingleN,
           minJaccardX10k = PercolationTaus.min,
           maxDf = DataPrepQueries.JaccardMaxDf)
@@ -50,7 +50,7 @@ object PercolationQueries {
     // loops collapse into ONE grouped pointer-jumping run (round count
     // = max over taus, per-round fixed cost paid once)
     val tauArr = PercolationTaus.map(t => s"${t}L").mkString("array(", ", ", ")")
-    val tagged = Dedup.cacheTracked(pairs.select(
+    val tagged = graft.ops.Materialize.cache(pairs.select(
       explode(expr(s"filter($tauArr, t -> t <= jaccard_x10k)")).as("tau_x10k"),
       col("id_a"), col("id_b")))
     val sizes = Graph.connectedComponentsBy(tagged, "tau_x10k")

@@ -31,7 +31,7 @@ object ProjectionQueries {
     * this is the co-engagement artifact its analytics twin publishes.
     */
   def q161_brand_copurchase(spark: SparkSession, dir: String): DataFrame = {
-    // NOT cached (round-9 A/B, re-confirmed round 12): a checkpointTracked
+    // NOT cached (round-9 A/B, re-confirmed round 12): a Materialize.checkpoint
     // form was A/B'd on the full board and read consistently flat-to-worse
     // (1.62 baseline vs 1.65/1.83/1.86 across three waves) — ReuseExchange
     // dedups the self-join pair's exchange and the aggregate branches

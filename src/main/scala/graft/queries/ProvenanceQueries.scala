@@ -124,7 +124,7 @@ object ProvenanceQueries {
     // normalize+tokenize pass re-ran per consumer uncached
     // spread before the cache (round 11, same as q111): a single-split
     // corpus caches as ONE partition and serializes every consumer
-    val tk = graft.ops.Dedup.checkpointTracked(graft.ops.Dedup.spread(
+    val tk = graft.ops.Materialize.checkpoint(graft.ops.Dedup.spread(
         Tables.documents(spark, dir).select(col("text")))
       .select(wsTokens(normalizeText(col("text"))).as("t")))
     val uni = tk.select(explode(col("t")).as("w")).groupBy("w").agg(count(lit(1)).as("c"))

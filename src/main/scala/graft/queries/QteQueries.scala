@@ -42,10 +42,10 @@ object QteQueries {
           Window.partitionBy(pmod(length(col("arm")), lit(1))).orderBy("arm")
             .rowsBetween(Window.unboundedPreceding, -1)),
         lit(0L)))
-    // checkpointTracked (round 12): dec is ≤ 2·10 rows but feeds BOTH the
+    // Materialize.checkpoint (round 12): dec is ≤ 2·10 rows but feeds BOTH the
     // a-side and b-side of the final self-join — uncached, each side
     // re-ran the whole global-index + decile-aggregate chain
-    val dec = graft.ops.Dedup.checkpointTracked(idxd.join(broadcast(armOff), "arm")
+    val dec = graft.ops.Materialize.checkpoint(idxd.join(broadcast(armOff), "arm")
       .withColumn("decile", expr("((__gidx - __start - 1) * 10) div __n"))
       .groupBy("arm", "decile")
       .agg(count(lit(1)).as("n"), sum("value_c").as("sum_c"))

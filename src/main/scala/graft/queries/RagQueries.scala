@@ -73,7 +73,7 @@ object RagQueries {
     // arrays, the pairwise sim map AND the final rank join — without the
     // cache all four consumers re-run BOTH retrieval arms (round-7: the
     // pinned bm25 core stopped exchange reuse from deduping the copies)
-    val fused = graft.ops.Dedup.checkpointTracked(bm.join(ann, Seq("doc_id"), "full")
+    val fused = graft.ops.Materialize.checkpoint(bm.join(ann, Seq("doc_id"), "full")
       .withColumn("rrf_x1e6",
         coalesce(expr("1000000 div (60 + bm25_rank)"), lit(0L)) +
           coalesce(expr("1000000 div (60 + ann_rank)"), lit(0L)))

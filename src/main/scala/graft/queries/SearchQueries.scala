@@ -62,9 +62,8 @@ object SearchQueries {
     * instead of twice per query (round-7; Bench prewarms and
     * attributes it like the other cores). At corpus scale this is a
     * staged table next to the shingle core. */
-  private val bm25DocsMemo = new graft.ops.PinnedCoreMemo[String]
   private[graft] def bm25Docs(spark: SparkSession, dir: String): DataFrame =
-    bm25DocsMemo.getOrBuild(spark, dir) {
+    graft.ops.Materialize.pinned(spark, ("bm25_docs", dir)) {
       // spread: the token pass must not run single-task on an
       // under-split local file (no-op with >= cores splits)
       graft.ops.Dedup.spread(Tables.documents(spark, dir))
@@ -79,8 +78,6 @@ object SearchQueries {
       .groupBy("doc_id", "dl", "term")
       .agg(count(lit(1)).as("tf"))
 
-  private val bm25ScoredMemo = new graft.ops.PinnedCoreMemo[String]
-
   /** Per-doc BM25 score `(doc_id, score, n_terms_hit)` over the probe
     * terms — q142's scoring chain, shared with q181's fusion, q191's
     * rerank pool and q230's feedback loop. Session-pinned (round-8):
@@ -88,7 +85,7 @@ object SearchQueries {
     * the scored table is |matching docs| rows, the canonical staged
     * artifact next to [[bm25Docs]]; prewarmed as core `bm25_scored`. */
   private[graft] def bm25Scored(spark: SparkSession, dir: String): DataFrame =
-    bm25ScoredMemo.getOrBuild(spark, dir) { bm25ScoredBuild(spark, dir) }
+    graft.ops.Materialize.pinned(spark, ("bm25_scored", dir))(bm25ScoredBuild(spark, dir))
 
   private def bm25ScoredBuild(spark: SparkSession, dir: String): DataFrame = {
     val docs = bm25Docs(spark, dir)

@@ -37,7 +37,7 @@ object SemanticSweepQueries {
       .select(col("query_id"), col("neighbor_id"), col("dot"))
     val mx = knn.agg(max("dot").as("mx"))
     val arr = SemTenths.map(t => s"${t}L").mkString("array(", ", ", ")")
-    val tagged = Dedup.checkpointTracked(knn.crossJoin(broadcast(mx))
+    val tagged = graft.ops.Materialize.checkpoint(knn.crossJoin(broadcast(mx))
       .select(explode(expr(s"filter($arr, t -> dot >= (t * mx) div 10)")).as("k10"),
         col("query_id").as("id_a"), col("neighbor_id").as("id_b")))
     val sizes = Graph.connectedComponentsBy(tagged, "k10")

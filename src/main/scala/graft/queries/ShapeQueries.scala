@@ -47,7 +47,7 @@ object ShapeQueries {
     val docs = Tables.documents(spark, dir)
     // tracked: heads feeds the key build AND both attribute sides of
     // the scored join — one tokenize pass, not three
-    val heads = graft.ops.Dedup.checkpointTracked(graft.ops.Dedup.spread(docs)
+    val heads = graft.ops.Materialize.checkpoint(graft.ops.Dedup.spread(docs)
       .select(col("doc_id"), col("lang"), col("source"),
         wsTokens(normalizeText(col("text"))).as("t"))
       .filter(size(col("t")) >= 1)

@@ -182,7 +182,7 @@ object ShardQueries {
     * sizes. */
   def q269_chain_dilution(spark: SparkSession, dir: String): DataFrame = {
     import DataPrepQueries.{ShingleN, JaccardMaxDf}
-    val pairs = Dedup.checkpointTracked(
+    val pairs = graft.ops.Materialize.cache(
       Dedup.jaccardPairsPinned(spark, dir, ShingleN, DiluteTauX10k, JaccardMaxDf)
         .select("id_a", "id_b"))
     val comp = Graph.connectedComponents(pairs)
@@ -216,8 +216,8 @@ object ShardQueries {
     * DECIMAL(38,0) keeps n·(n−1)/2 exact past the BIGINT bound. */
   def q270_blocking_audit(spark: SparkSession, dir: String): DataFrame = {
     import DataPrepQueries.{ShingleN, JaccardMaxDf}
-    val cand = Dedup.checkpointTracked(LinkageQueries.blockingCandidates(spark, dir))
-    val truth = Dedup.checkpointTracked(
+    val cand = graft.ops.Materialize.checkpoint(LinkageQueries.blockingCandidates(spark, dir))
+    val truth = graft.ops.Materialize.checkpoint(
       Dedup.jaccardPairsPinned(spark, dir, ShingleN,
         LinkageQueries.LinkTauX10k, JaccardMaxDf).select("id_a", "id_b"))
     val nDocs = Tables.documents(spark, dir).agg(count(lit(1)).as("n"))

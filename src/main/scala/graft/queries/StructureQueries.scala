@@ -130,7 +130,7 @@ object StructureQueries {
         .select(col("nbr").as("node")).distinct()
         .join(visited.select("node"), Seq("node"), "left_anti")
         .withColumn("hop", lit(h.toLong))
-      visited = visited.unionByName(next).localCheckpoint()
+      visited = graft.ops.Materialize.checkpoint(visited.unionByName(next))
       frontier = next.select("node")
     }
     visited.groupBy("hop")

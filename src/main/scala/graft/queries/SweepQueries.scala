@@ -126,7 +126,7 @@ object SweepQueries {
     // both engines compute the identical hash, so the comparison stays
     // exact (a collision would alter both sides identically; odds
     // ≈ pairs·2⁻⁶⁰, documented). Measured 2.0 s → ~1.2 s at sf0.1.
-    val toks = graft.ops.Dedup.cacheTracked(
+    val toks = graft.ops.Materialize.cache(
       graft.ops.Dedup.spread(Tables.documents(spark, dir))
         .select(col("doc_id"), wsTokens(normalizeText(col("text"))).as("t")))
     // round-8: the non-pinned arms (n ≠ ShingleN) fuse into ONE tagged
@@ -149,7 +149,7 @@ object SweepQueries {
         conv(substring(md5(col("shingle")), 1, 15), 16, 10).cast("long").as("g"))
     // the keyed table feeds the eval-distinct AND the train join —
     // cache the narrow (n, id, 8-byte key) form, not the gram text
-    val keyed = graft.ops.Dedup.cacheTracked(fusedKeyed.unionByName(pinnedKeyed))
+    val keyed = graft.ops.Materialize.cache(fusedKeyed.unionByName(pinnedKeyed))
     val tagged = keyed.withColumn("is_eval",
       pmod(col("doc_id"), lit(CurationQueries.EvalMod)) === 0L)
     val evalGrams = tagged.filter(col("is_eval")).select("n", "g").distinct()

@@ -119,13 +119,12 @@ object TrainPrepQueries {
 
   /** q97's scoring chain (tokened docs only): hash tokens to weight
     * buckets, broadcast-join the frozen weights, one per-doc regroup. */
-  /** Session-pinned (PinnedCoreMemo): nine board queries across seven
+  /** Session-pinned ([[graft.ops.Materialize.pinned]]): nine board queries across seven
     * modules (q97/q110/q122/q141/q183/q203-q205/q209/q216) read the
     * frozen classifier's per-doc scores — one token-hash pass per
     * session instead of one per consumer. One row per doc. */
-  private val clsMemo = new graft.ops.PinnedCoreMemo[String]
   private[graft] def classifierScores(spark: SparkSession, dir: String): DataFrame =
-    clsMemo.getOrBuild(spark, dir) {
+    graft.ops.Materialize.pinned(spark, ("classifier_scores", dir)) {
       val buckets = Tables.documents(spark, dir)
         .select(col("doc_id"), explode(wsTokens(normalizeText(col("text")))).as("token"))
         .select(col("doc_id"),
@@ -191,9 +190,8 @@ object TrainPrepQueries {
     * pipeline materializes once per vocabulary refresh, not something
     * each report re-trains. Prewarmed + attributed by
     * [[graft.PinnedCores]] as `bpe_segmentations`. */
-  private val bpeSegPinned = new graft.ops.PinnedCoreMemo[String]
   private[graft] def bpeSegmentationsPinned(spark: SparkSession, dir: String): DataFrame =
-    bpeSegPinned.getOrBuild(spark, dir) {
+    graft.ops.Materialize.pinned(spark, ("bpe_segmentations", dir)) {
       val vocab = Tables.documents(spark, dir)
         .select(explode(wsTokens(normalizeText(col("text")))).as("word"))
         .groupBy("word").agg(count(lit(1)).as("n"))

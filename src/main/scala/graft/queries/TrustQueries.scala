@@ -108,7 +108,7 @@ object TrustQueries {
       .groupBy("source", "token").agg(count(lit(1)).as("c"))
     val tot = cnt.groupBy("source").agg(sum("c").as("t"))
     // self-joined below — cache or the token explode executes twice
-    val rates = graft.ops.Dedup.checkpointTracked(
+    val rates = graft.ops.Materialize.checkpoint(
       cnt.join(broadcast(tot), "source")
         .select(col("source"), col("token"), expr("(1000000 * c) div t").as("r")))
     val rsum = rates.groupBy("source").agg(sum("r").as("rtot"))

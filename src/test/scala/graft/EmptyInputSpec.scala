@@ -24,7 +24,7 @@ class EmptyInputSpec extends SparkSpec {
     test(s"$name runs on empty inputs") {
       val n = q(spark, emptyDir).count()
       assert(n >= 0)
-      graft.ops.Dedup.unpersistIntermediates(spark)
+      graft.ops.Materialize.releaseQuery(spark)
     }
   }
 }

@@ -622,7 +622,7 @@ class PlanSpec extends SparkSpec {
     val plan = executed(graft.queries.RagQueries.q199_rag_context(spark, sfDir))
     val nodes = collectAll(plan)
     // the fused pool (both retrieval arms + the RRF cut, ≤ RagCand rows)
-    // is checkpointTracked (round 12) — a LogicalRDD leaf here,
+    // is a Materialize.checkpoint (round 12) — a LogicalRDD leaf here,
     // materialized ONCE instead of once per consuming stage. The arm
     // shape itself (probe-filtered / broadcast-scored corpus TakeOrdered)
     // is pinned by construction (ranked() = orderBy.limit ⇒ TakeOrdered)
@@ -708,7 +708,7 @@ class PlanSpec extends SparkSpec {
     val plan = executed(
       graft.queries.GraphQualityQueries.q291_bipartite_hits(spark, sfDir))
     val nodes = collectAll(plan)
-    // edges and h1 are checkpointTracked (round 12): the fact join runs
+    // edges and h1 are Materialize.checkpoints (round 12): the fact join runs
     // exactly once at materialization and a1/h1-max/a2 stream the blocks
     // (LogicalRDD leaves) instead of re-executing a persisted subtree
     // per consuming stage
@@ -724,7 +724,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("q152 market share: dims broadcast, the fact side never sort-merges") {
-    // byNation is checkpointTracked (round 12): the star join (where the
+    // byNation is a Materialize.checkpoint (round 12): the star join (where the
     // dims-broadcast invariant lives) executes inside the checkpointed
     // subtree, so pin it on the star frame itself, and pin the query's
     // own plan on the leaf + the share join staying broadcast.

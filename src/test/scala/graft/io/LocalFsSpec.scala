@@ -161,4 +161,23 @@ class LocalFsSpec extends SparkSpec {
       try intercept[ChecksumException](bad.readAllBytes()) finally bad.close()
     }
   }
+
+  test("a flipped byte fails a plain FileContext.open(path), the call the streaming checkpoint makes") {
+    // FileContextBasedCheckpointFileManager.open reads offset, commit and
+    // state-store files through open(path); stock LocalFs resolves it to
+    // FilterFs.open(path), which skips the checksum
+    val t = tree()
+    val fc = FileContext.getFileContext(Local, sessionConf("022"))
+    assert(fc.getDefaultFileSystem.isInstanceOf[InProcessLocalFs])
+    val p = t.resolve("offsets-0")
+    val bytes = Array.tabulate[Byte](5000)(i => (i * 17).toByte)
+    val out = fc.create(new Path(p.toUri), java.util.EnumSet.of(CreateFlag.CREATE))
+    out.write(bytes); out.close()
+    val in = fc.open(new Path(p.toUri))
+    try assert(in.readAllBytes().toSeq == bytes.toSeq) finally in.close()
+    val flipped = Files.readAllBytes(p); flipped(2345) = (flipped(2345) ^ 1).toByte
+    Files.write(p, flipped)
+    val bad = fc.open(new Path(p.toUri))
+    try intercept[ChecksumException](bad.readAllBytes()) finally bad.close()
+  }
 }

@@ -32,7 +32,7 @@ class CurationSpec extends SparkSpec {
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     // Jaccard: |A∩B|=2, |A∪B|=8 → 2500 — far below the same threshold
     assert(jacc == Set((3L, 4L)))
-    Dedup.unpersistIntermediates(spark)
+    Materialize.releaseQuery(spark)
   }
 
   test("exactNgramOverlap: eval slice screened out, counts and flags exact") {
@@ -44,7 +44,7 @@ class CurationSpec extends SparkSpec {
     // doc 1: 8 distinct 3-grams, shares doc 2's 2 ("gamma delta epsilon",
     // "delta epsilon zeta"); docs 3/4: 4 each, none shared; doc 2 absent
     assert(got == Seq((1L, 8L, 2L, 1), (3L, 4L, 0L, 0), (4L, 4L, 0L, 0)))
-    Dedup.unpersistIntermediates(spark)
+    Materialize.releaseQuery(spark)
   }
 
   test("boilerplateShare counts n-grams at or above the distinct-doc frequency floor") {
@@ -57,7 +57,7 @@ class CurationSpec extends SparkSpec {
     assert(got == Seq(
       (1L, 8L, 0L, 0L), (2L, 2L, 0L, 0L),
       (3L, 4L, 4L, 10000L), (4L, 4L, 4L, 10000L), (5L, 4L, 4L, 10000L)))
-    Dedup.unpersistIntermediates(spark)
+    Materialize.releaseQuery(spark)
   }
 
   test("topKPerGroup == the row_number window form, ties broken (ord DESC, id ASC)") {
@@ -94,7 +94,7 @@ class CurationSpec extends SparkSpec {
         .toDF("doc_id", "text")
       val got = Dedup.containmentPairs(d, n = 2, minContainX10k = 5000L)
         .collect().map(r => (r.getLong(0), r.getLong(1)) -> r.getLong(5)).toMap
-      Dedup.unpersistIntermediates(spark)
+      Materialize.releaseQuery(spark)
       val expected = (for {
         a <- texts.indices; b <- texts.indices if a < b
         sa = refShingles(texts(a), 2); sb = refShingles(texts(b), 2)
@@ -119,7 +119,7 @@ class CurationSpec extends SparkSpec {
         .toDF("doc_id", "text", "is_eval")
       val got = Dedup.exactNgramOverlap(d, "is_eval", n = 2)
         .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
-      Dedup.unpersistIntermediates(spark)
+      Materialize.releaseQuery(spark)
       val evalGrams = texts.indices.filter(_ % 3 == 0)
         .flatMap(i => refShingles(texts(i), 2)).toSet
       val expected = (for {

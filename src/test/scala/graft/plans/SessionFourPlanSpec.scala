@@ -41,7 +41,7 @@ class SessionFourPlanSpec extends SparkSpec {
   }
 
   test("q367: no corpus rows under a single-task window") {
-    // q367's dec frame is checkpointTracked (round 12), so its decile
+    // q367's dec frame is a Materialize.checkpoint (round 12), so its decile
     // windows live inside the checkpointed subtree — pin the SAME
     // invariant on the machinery the query runs (globalIndex over the
     // q367 ordering), and assert the query's own plan streams the

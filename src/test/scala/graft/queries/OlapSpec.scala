@@ -42,7 +42,7 @@ class OlapSpec extends SparkSpec {
       executedPlan(OlapQueries.q81_edit_rerank(spark, sfDir)))
     assert(!plans.exists(_.isInstanceOf[BroadcastNestedLoopJoinExec]),
       "edit distance must run on LSH candidates only")
-    graft.ops.Dedup.unpersistIntermediates(spark)
+    graft.ops.Materialize.releaseQuery(spark)
   }
 
   test("q79 sliding windows: every event lands in exactly 2 windows") {

@@ -180,6 +180,35 @@ class CdcStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("a restart over a corrupted offset log fails instead of resuming") {
+    import spark.implicits._
+    import java.nio.file.{Files, Paths}
+    val in = Files.createTempDirectory("graft-cdc-in").toString
+    val ck = Files.createTempDirectory("graft-cdc-ck").toString
+    EventGen.generate(nTx = 4, seed = 61L).toDS().write.mode("overwrite").parquet(in)
+    def run(): Boolean =
+      CdcStream.viewUpdates(spark.readStream
+          .schema(org.apache.spark.sql.Encoders.product[CdcEvent].schema).parquet(in).as[CdcEvent])
+        .writeStream.format("noop").outputMode("update")
+        .option("checkpointLocation", ck)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .start().awaitTermination(120000)
+    assert(run())
+    // one digit of the latest batch's timestamp, its low bit flipped: the
+    // entry still parses, so only the checksum can tell
+    val offsets = Paths.get(ck, "offsets")
+    val latest = offsets.resolve(offsets.toFile.list().filter(_.forall(_.isDigit)).maxBy(_.toLong))
+    val bytes = Files.readAllBytes(latest)
+    val key = "\"batchTimestampMs\":"
+    val at = new String(bytes, "UTF-8").indexOf(key) + key.length + 3
+    assert(at > key.length + 2 && Character.isDigit(bytes(at).toChar))
+    bytes(at) = (bytes(at) ^ 1).toByte
+    Files.write(latest, bytes)
+    val e = intercept[Exception](run())
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(_.isInstanceOf[org.apache.hadoop.fs.ChecksumException]), e.toString)
+  }
+
   test("foreachBatch parquet merge across micro-batches equals canonical replay") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-view").toString
