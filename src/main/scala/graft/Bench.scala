@@ -416,23 +416,21 @@ object Bench {
     val results = r.reps.map { case (name, times) =>
       name -> ((if (times.exists(_ >= 0)) times.filter(_ >= 0).min else -1.0), times.count(_ < 0))
     }
-    val qs = results.map { case (k, (v, _)) => "\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val failedReps = results.collect { case (k, (_, f)) if f > 0 => "\"" + k + "\":" + f }
-      .mkString("{", ",", "}")
+    // a JSON object of the first `n` (key, rendered value) pairs
+    def jsonObject(kv: Seq[(String, String)], n: Int = Int.MaxValue): String =
+      kv.take(n).map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+    val qs = jsonObject(results.map { case (k, (v, _)) => k -> v.toString })
+    val failed = results.collect { case (k, (_, f)) if f > 0 => k -> f.toString }
+    val failedReps = jsonObject(failed)
     // headline total stays comparable with rounds ≤6 (where core builds
     // hid inside first-consumer queries): per-query mins + per-core mins
     val coresTotal = r.cores.map(_._2).sum
-    val coresJson = r.cores.map { case (k, v) => "\"" + k + "\":" + f"$v%.3f" }
-      .mkString("{", ",", "}")
+    val coresJson = jsonObject(r.cores.map { case (k, v) => k -> f"$v%.3f" })
     val total = results.map(_._2._1).filter(_ >= 0).sum + coresTotal
-    val diagJson = r.diag.map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
-      .mkString("{", ",", "}")
-    val streamRepsJson = r.streamReps.map { case (k, v) =>
-      "\"" + k + "\":" + v.mkString("[", ",", "]") }.mkString("{", ",", "}")
-    val streamStealJson = r.streamSteal.map { case (k, v) =>
-      "\"" + k + "\":" + v.map(p => f"$p%.1f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
+    val diagJson = jsonObject(r.diag.map { case (k, v) => k -> ("\"" + v + "\"") })
+    val streamRepsJson = jsonObject(r.streamReps.map { case (k, v) => k -> v.mkString("[", ",", "]") })
+    val steal = r.streamSteal.map { case (k, v) => k -> v.map(p => f"$p%.1f").mkString("[", ",", "]") }
+    val streamStealJson = jsonObject(steal)
     // each configuration's rate is the best of its reps
     val rate = r.streamReps.map { case (k, v) => k -> v.max }.toMap.withDefaultValue(-1L)
     val streamRates =
@@ -457,8 +455,8 @@ object Bench {
       s""""duck_pairing":$duckJson"""
     // the ten slowest queries inline in the COMPACT line, so even a
     // tail-truncated capture still attributes where the time went
-    def slowest(n: Int): String = results.sortBy(-_._2._1).take(n)
-      .map { case (k, (v, _)) => "\"" + k + "\":" + f"$v%.2f" }.mkString("{", ",", "}")
+    def slowest(n: Int): String =
+      jsonObject(results.sortBy(-_._2._1).map { case (k, (v, _)) => k -> f"$v%.2f" }, n)
     // per-query rep spreads (round-9 VERDICT #5, widened in round 11 per
     // round-10 VERDICT #2): the 20 largest spark-time queries PLUS every
     // query whose min exceeds 1.5x its DuckDB pairing — over-2× verdicts
@@ -472,9 +470,8 @@ object Bench {
         if v >= 0 && duckTimes.get(k).exists(d => d > 0 && v > 1.5 * d) => k }
     ).distinct
     val byName = r.reps.toMap
-    val repsDetail = repsDetailNames.map { k =>
-      "\"" + k + "\":" + byName(k).map(t => f"$t%.2f").mkString("[", ",", "]")
-    }.mkString("{", ",", "}")
+    val repsDetail = jsonObject(
+      repsDetailNames.map(k => k -> byName(k).map(t => f"$t%.2f").mkString("[", ",", "]")))
     val fullLine = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,""" +
       s""""failed_reps":$failedReps,"reps_detail":$repsDetail,$streamJson,""" +
       s""""diag":$diagJson,"sf":"${r.sfDir}"}"""
@@ -482,26 +479,29 @@ object Bench {
     // 2000 bytes (measured from BENCH_r07.json, whose parsed:null was this
     // line outgrowing the window once duck_pairing/cores/diag moved in) —
     // everything verbose lives in the full line / BENCH_LATEST.json, and a
-    // hard length guard trims the slowest map before ever exceeding 1500.
+    // hard length guard caps every map of the line (slowest, failed_reps,
+    // stream_steal_pct, diag) at 10, then 4, then 0 entries until it fits
+    // in 1500 bytes; the last rung is scalars only. `failed_queries`
+    // counts every query with a failed rep, so a capped failed_reps map
+    // (the queries with the most failed reps) still reports the total.
     // gc/jit/heap per section INSIDE the compact line (round-8 VERDICT
     // #5: cross-VM streaming variance must be attributable from the
     // tail capture alone) — the scalar triple only, not the full
-    // code-cache breakdown, to stay inside the 1.5 KB guard
-    val diagCompact = r.diag.map { case (k, v) => "\"" + k + "\":\"" + v.compact + "\"" }
-      .mkString("{", ",", "}")
+    // code-cache breakdown
+    val diagCompact = r.diag.map { case (k, v) => k -> ("\"" + v.compact + "\"") }
+    val mostFailed = failed.sortBy(-_._2.toInt)
     // sf1 scalar summary for the compact line (full table in the full line)
     val sf1Compact = r.sf1.fold("null")(sf1Summary)
-    def compactWith(slow: String): String =
+    def compactWith(n: Int): String =
       s"""{"metric":"total","value":${f"$total%.2f"},"unit":"sec",""" +
       s""""n_queries":${r.reps.size},"sf1":$sf1Compact,$streamRates""" +
-      s""""stream_steal_pct":$streamStealJson,""" +
+      s""""stream_steal_pct":${jsonObject(steal, n)},""" +
       s""""cores_total_s":${f"$coresTotal%.2f"},"duck_pairing":$duckCompact,""" +
-      s""""slowest":$slow,"failed_reps":$failedReps,"diag":$diagCompact,""" +
+      s""""slowest":${slowest(n)},"failed_queries":${failed.size},""" +
+      s""""failed_reps":${jsonObject(mostFailed, n)},"diag":${jsonObject(diagCompact, n)},""" +
       s""""queries_detail":"BENCH_LATEST.json","sf":"${r.sfDir}"}"""
-    val compactLine = {
-      val c = compactWith(slowest(10))
-      if (c.length <= 1500) c else compactWith(slowest(4))
-    }
+    val compactLine = Seq(10, 4).map(compactWith)
+      .find(_.getBytes("UTF-8").length <= 1500).getOrElse(compactWith(0))
     (fullLine, compactLine)
   }
 }

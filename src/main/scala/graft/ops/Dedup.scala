@@ -218,18 +218,12 @@ object Dedup {
     // (one parquet file locally) computes every doc's sorted shingle set
     // on one task before the first shuffle (see spread())
     val sh = Materialize.cache(shinglePlan(docs, n, idCol, textCol))
-    // (inter, sizes) are the expensive, query-independent core shared by
-    // the Jaccard/containment/near-dup-flow family — pin them for the
-    // session so a later query with the same (input, n, maxDf) reuses the
-    // materialized pair tables instead of re-running the inverted-index
-    // self-join (the single most expensive subtree on the bench board)
-    (pinnedPlan(interFrom(sh, maxDf)), pinnedPlan(sizesFrom(sh)))
+    // (inter, sizes) are the expensive core shared by the Jaccard/
+    // containment/near-dup-flow family; over a directory the session-pinned
+    // form ([[pinnedIntersections]]) keeps them across queries, over an
+    // arbitrary frame they are cached for the query
+    (Materialize.cache(interFrom(sh, maxDf)), Materialize.cache(sizesFrom(sh)))
   }
-
-  /** `df` pinned for the session under its canonical plan, the key
-    * Spark's CacheManager matches cached plans on. */
-  private def pinnedPlan(df: DataFrame): DataFrame =
-    Materialize.pinned(df.sparkSession, df.queryExecution.analyzed.canonicalized)(df)
 
   private def sizesFrom(sh: DataFrame): DataFrame =
     sh.groupBy("id").agg(count(lit(1)).as("set_size"))

@@ -14,7 +14,11 @@ import org.apache.spark.storage.StorageLevel
   * reads in several plan branches. The returned lazy plan references the
   * materialized frame, so the operator that made it can never release it;
   * [[scoped]] does, around each query Verify, Bench and Dev run, so
-  * storage does not accumulate across queries (ADVICE r1).
+  * storage does not accumulate across queries (ADVICE r1). The registry
+  * holds every frame until its scope ends, so EVERY caller needs a scope,
+  * streaming ones included: a foreachBatch body runs in
+  * [[scoped]] per batch (ComponentStream), or the stream keeps each
+  * batch's blocks for as long as it runs.
   *  - [[cache]] persists lazily at MEMORY_AND_DISK: under pressure blocks
   *    spill instead of evicting and recomputing the whole subtree. Its
   *    release is harmless: a later action recomputes.

@@ -42,7 +42,7 @@ object CanonQueries {
       .select("id_a", "id_b")
     val comp = Graph.connectedComponents(pairs)
       .withColumnRenamed("id", "doc_id")
-    val mem = graft.ops.Materialize.cache(Tables.documents(spark, dir)
+    val mem = graft.ops.Materialize.checkpoint(Tables.documents(spark, dir)
       .select(col("doc_id"), col("lang"), col("source"),
         col("n_chars").cast("long").as("n_chars"))
       .join(comp, "doc_id"))

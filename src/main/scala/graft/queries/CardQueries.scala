@@ -150,7 +150,7 @@ object CardQueries {
     * second aggregate needed to find the canonical). */
   def q280_effective_tokens(spark: SparkSession, dir: String): DataFrame = {
     import DataPrepQueries.{ShingleN, JaccardMinX10k, JaccardMaxDf}
-    val base = graft.ops.Materialize.cache(Dedup.spread(Tables.documents(spark, dir))
+    val base = graft.ops.Materialize.checkpoint(Dedup.spread(Tables.documents(spark, dir))
       .select(col("doc_id"), col("source"), fingerprint(col("text")).as("fp"),
         size(wsTokens(normalizeText(col("text")))).cast("long").as("ntok")))
     val exKept = base

@@ -41,9 +41,13 @@ object ComponentStream {
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         GenState.advance(statePath, batch, batchId) { dir =>
           val spark = batch.sparkSession
-          val next = graft.ops.Graph
-            .incrementalComponents(assignment(spark, statePath), batch, srcCol, dstCol)
-          next.write.mode("overwrite").parquet(dir)
+          // the fold's checkpoints are the batch's query scope: freed once
+          // the generation is written, not held for the life of the stream
+          graft.ops.Materialize.scoped(spark) {
+            val next = graft.ops.Graph
+              .incrementalComponents(assignment(spark, statePath), batch, srcCol, dstCol)
+            next.write.mode("overwrite").parquet(dir)
+          }
         }
       }
       .start()

@@ -50,6 +50,24 @@ class ComponentStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("each batch frees its checkpoints: persisted RDDs do not grow over batches") {
+    implicit val ctx = spark.sqlContext
+    val statePath = java.nio.file.Files.createTempDirectory("graft-comp-state").toString
+    val ckpt = java.nio.file.Files.createTempDirectory("graft-comp-ckpt").toString
+    val ms = MemoryStream[(Long, Long)]
+    val q = ComponentStream.maintain(ms.toDF().toDF("id_a", "id_b"), statePath, ckpt)
+    def persisted: Int = spark.sparkContext.getPersistentRDDs.size
+    try {
+      ms.addData(Seq((1L, 2L))); q.processAllAvailable()
+      val after1 = persisted
+      (0 until 4).foreach { i =>
+        ms.addData(Seq((10L * i + 2, 10L * i + 12), (10L * i + 30, 10L * i + 31)))
+        q.processAllAvailable()
+        assert(persisted <= after1, s"batch ${i + 2}: $persisted persisted RDDs, $after1 after batch 1")
+      }
+    } finally q.stop()
+  }
+
   test("an exact batch re-delivery is skipped (batchId guard) and a stale pointer survives a crash window") {
     val (statePath, assign) = run(Seq(Seq((1L, 2L)), Seq((2L, 3L))))
     // simulate a re-delivered batchId by re-running the foreachBatch body's
