@@ -35,8 +35,8 @@ import graft.io.LocalFs
   * is already running when the builder runs, so the heap comes from the
   * launching JVM's options (`SPARK_DRIVER_MEM` in build.sbt).
   *
-  * [[tune]]'s tunings change PLANS, never results — each is an
-  * optimizer/AQE knob with a measured rationale:
+  * [[tune]]'s tunings change PLANS and how their code is compiled, never
+  * results — each has a measured rationale:
   *
   *  - `InferFiltersFromGenerate` excluded: the rule copies a
   *    generator's input into a `size(...) > 0` filter, and predicate
@@ -59,6 +59,18 @@ import graft.io.LocalFs
   *    parallelism; at cluster scale partitions dwarf both floors, so
   *    the knob is inert there.
   *
+  *  - `spark.sql.artifact.isolation.enabled = false`: every query of the
+  *    session shares one cache of compiled generated classes. Spark keys
+  *    that cache by (context class loader, source), and with isolation on
+  *    each streaming query's jobs run under a class loader of their own,
+  *    so every new query compiled again every class it used, however
+  *    identical the source. The setting only lets sessions see each
+  *    other's added jars and files, and the engine adds none
+  *    (`addArtifact` appears nowhere). `CdcCodegenReuseSpec` counts Janino
+  *    compilations: a second `CdcStream.viewUpdates` query over the same
+  *    four batches from a fresh checkpoint compiled 22 classes before,
+  *    and 0 with this and `CdcStream`'s lambda-free state and column key.
+  *
   * [[tune]] also applies [[LocalFiles]]: `spark.hadoop.fs.file.impl` and
   * `spark.hadoop.fs.AbstractFileSystem.file.impl` name the in-process
   * local filesystem of [[graft.io.LocalFs]]. Without the native-hadoop
@@ -75,10 +87,11 @@ object Sessions {
   val ExcludedOptimizerRules: String =
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 
-  /** The plan tunings [[tune]] applies. */
+  /** The plan and codegen tunings [[tune]] applies. */
   val Tunings: Seq[(String, String)] = Seq(
     "spark.sql.optimizer.excludedRules" -> ExcludedOptimizerRules,
-    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "65536")
+    "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "65536",
+    "spark.sql.artifact.isolation.enabled" -> "false")
 
   /** The Hadoop filesystem settings [[tune]] applies. */
   val LocalFiles: Seq[(String, String)] =

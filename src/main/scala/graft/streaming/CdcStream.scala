@@ -11,7 +11,7 @@ import graft.cdc.{CdcEvent, ReferenceFold, TransactionView}
   *
   *  - source/offsets: `readStream` + `checkpointLocation` subsume the Redis
   *    resume token (O2/O17, `RedisResumePolicyService.kt:37-72`);
-  *  - dedup/locking: the hash shuffle of `groupByKey(transactionId)` gives
+  *  - dedup/locking: the hash shuffle on `transactionId` gives
   *    per-key serial execution, so the Redis `SET NX` lock (O7,
   *    `CdcLockService.kt:40-50`) reduces to per-key duplicate-id tracking
   *    in state;
@@ -19,20 +19,64 @@ import graft.cdc.{CdcEvent, ReferenceFold, TransactionView}
   *    the batch fold uses — applied per event in arrival order via
   *    `flatMapGroupsWithState` (O10–O13).
   *
-  * Scale notes: state is one small view row + the seen-event-id set per
-  * live transaction. The id set is NOT pruned within a transaction's
-  * lifetime — it grows one entry per distinct event of that transaction
-  * and is only reclaimed when the state row TTLs out; that is bounded in
-  * practice because transaction lifecycles are short (tens of events over
-  * days, per the reference's domain), not by any windowing here. State is
-  * evicted via event-time timeout (mirrors the reference's 10-min lock
-  * TTL / 3-day resume-window envelope, BASELINE.md).
+  * Scale notes: state is one small view row + the seen-event-id list per
+  * live transaction, kept as one length-prefixed string ([[KeyState]]).
+  * The id list is NOT pruned within a transaction's lifetime — it grows
+  * one entry per distinct event of that transaction and is only reclaimed
+  * when the state row TTLs out; that is bounded in practice because
+  * transaction lifecycles are short (tens of events over days, per the
+  * reference's domain), not by any windowing here. State is evicted via
+  * event-time timeout (mirrors the reference's 10-min lock TTL / 3-day
+  * resume-window envelope, BASELINE.md).
+  *
+  * Once a JVM has run a query's first batches, neither later batches nor
+  * later queries compile generated code, except one late-event filter per
+  * new watermark value (Spark writes the watermark into it as a literal;
+  * one per event-time hour here). The state holds no collection: a
+  * collection field is deserialized through `MapObjects`, whose lambda
+  * variable takes a new global id each time Spark re-resolves the state
+  * encoder, so its ~40k-character deserializer was recompiled every
+  * batch. The stream is keyed by its `transactionId` column, not by a key
+  * function, so no `AppendColumns` step deserializes each event to
+  * serialize its key. `CdcCodegenReuseSpec` pins both, together with the
+  * session's shared codegen cache (`spark.sql.artifact.isolation.enabled`,
+  * see [[graft.Sessions]]).
   */
 object CdcStream {
 
-  /** Per-key state: the materialized view + recently seen event ids
-    * (duplicate-delivery guard). */
-  case class KeyState(view: TransactionView, seenIds: Set[String])
+  /** Per-key state: the materialized view + the ids of the events already
+    * applied (duplicate-delivery guard), as one string written by
+    * [[encodeIds]]: each id as its length in chars, a `:`, then the id.
+    * A string, not a `Set[String]`, because the encoder of a collection
+    * field generates a new deserializer source on every batch (see the
+    * scale notes above).
+    *
+    * Upgrade rule: a checkpoint written before this encoding (seenIds as
+    * an array of strings, keyed by a `value` column) is not resumable.
+    * Spark's state-schema check refuses it at the first batch after the
+    * restart, so no query resumes with the seen ids dropped; restart such
+    * a stream from a fresh checkpoint and replay its source. */
+  case class KeyState(view: TransactionView, seenIds: String)
+
+  /** The [[KeyState.seenIds]] string of a set of ids. */
+  private[streaming] def encodeIds(ids: Iterable[String]): String = {
+    val sb = new java.lang.StringBuilder
+    ids.foreach(id => sb.append(id.length).append(':').append(id))
+    sb.toString
+  }
+
+  /** The ids of a [[KeyState.seenIds]] string. */
+  private[streaming] def decodeIds(encoded: String): Set[String] = {
+    val ids = Set.newBuilder[String]
+    var at = 0
+    while (at < encoded.length) {
+      val colon = encoded.indexOf(':', at)
+      val end = colon + 1 + Integer.parseInt(encoded, at, colon, 10)
+      ids += encoded.substring(colon + 1, end)
+      at = end
+    }
+    ids.result()
+  }
 
   /** State eviction horizon past the event-time watermark (mirrors the
     * reference's 3-day resume-token TTL envelope, BASELINE.md). Event-time
@@ -125,11 +169,11 @@ object CdcStream {
       return Iterator.empty
     }
     val initial = state.getOption
-    val seen = initial.map(_.seenIds).getOrElse(Set.empty[String])
+    val seen = initial.map(s => decodeIds(s.seenIds)).getOrElse(Set.empty[String])
     val (view, seenAfter) = ladder(initial.map(_.view), seen, events, metrics)
     view match {
       case Some(v) if seenAfter.size > seen.size =>
-        state.update(KeyState(v, seenAfter))
+        state.update(KeyState(v, encodeIds(seenAfter)))
         // evict when the watermark passes lastProcessedEventAt + TTL
         state.setTimeoutTimestamp(
           math.max(v.lastProcessedEventAt.getOrElse(0L) + StateTtlMs,
@@ -151,8 +195,9 @@ object CdcStream {
         timestamp_millis(
           col("tsMs") - pmod(col("tsMs"), lit(WatermarkQuantumMs)) + lit(WatermarkQuantumMs)))
       .withWatermark("eventTime", WatermarkDelay)
-      .as[CdcEvent]
-      .groupByKey(_.transactionId)
+      // keyed by the column: a key function would add an AppendColumns
+      // step that deserializes every event just to serialize its key
+      .groupBy(col("transactionId")).as[String, CdcEvent]
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(
         updateKeyInstrumented(metrics))
   }

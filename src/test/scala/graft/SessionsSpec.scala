@@ -11,6 +11,7 @@ class SessionsSpec extends SparkSpec {
     "spark.sql.optimizer.excludedRules" ->
       "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate",
     "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "65536",
+    "spark.sql.artifact.isolation.enabled" -> "false",
     "spark.hadoop.fs.file.impl" -> "graft.io.InProcessLocalFileSystem",
     "spark.hadoop.fs.AbstractFileSystem.file.impl" -> "graft.io.InProcessLocalFs",
     "spark.sql.shuffle.partitions" -> cpus.toString,
@@ -40,6 +41,12 @@ class SessionsSpec extends SparkSpec {
     Sessions.conf(4).filterNot(_._1 == "spark.master").foreach { case (k, v) =>
       assert(spark.conf.get(k) == v, k)
     }
+  }
+
+  test("the test session shares one codegen cache across its streaming queries") {
+    // with artifact isolation on, each query's jobs run under their own
+    // class loader, which keys Spark's codegen cache apart per query
+    assert(spark.conf.get("spark.sql.artifact.isolation.enabled") == "false")
   }
 
   test("the test session's local FileSystem and FileContext are the in-process ones") {

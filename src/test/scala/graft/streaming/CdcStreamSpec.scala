@@ -209,6 +209,104 @@ class CdcStreamSpec extends SparkSpec {
       .exists(_.isInstanceOf[org.apache.hadoop.fs.ChecksumException]), e.toString)
   }
 
+  test("the seen-id encoding round-trips any set of ids (ScalaCheck)") {
+    import org.scalacheck.{Arbitrary, Gen, Test => SCTest}
+    import org.scalacheck.Prop.forAll
+    val id = Gen.oneOf(
+      Gen.const(""), Gen.const(":"), Gen.numStr, Arbitrary.arbitrary[String],
+      Gen.listOf(Gen.oneOf(Gen.numChar, Gen.const(':'), Gen.alphaChar)).map(_.mkString),
+      Gen.listOf(Gen.oneOf('é', '漢', '\u0000', ':', '1')).map(_.mkString),
+      Gen.oneOf("12:", "3:abc", "0:", "tx-1:e2", "\uD83D\uDE00:9"))
+    val prop = forAll(Gen.containerOf[Set, String](id)) { ids =>
+      CdcStream.decodeIds(CdcStream.encodeIds(ids)) == ids
+    }
+    val r = SCTest.check(SCTest.Parameters.default.withMinSuccessfulTests(500), prop)
+    assert(r.passed, r.status.toString)
+  }
+
+  test("an id holding the encoding's delimiter, redelivered in a later batch, is DupDropped") {
+    import spark.implicits._
+    implicit val ctx = spark.sqlContext
+    val acc = MergeMetrics.register(spark, "cdc-delimiter-dup")
+    val t = "tx:2:"
+    def ev(id: String, code: String, ts: Long, mut: CdcEvent => CdcEvent = identity) =
+      mut(CdcEvent(id, t, code, java.time.Instant.ofEpochMilli(ts).toString, ts))
+    val activated = ev("0:", EventCodes.Activated, 1000)
+    val auth = ev("12:34:5", EventCodes.AuthRequested, 2000, _.copy(pspId = Some("psp-1")))
+    val closed = ev("é:1", EventCodes.Closed, 5000,
+      _.copy(wasCanceledByUser = Some(false), responseOutcome = Some("OK")))
+    val ms = MemoryStream[CdcEvent]
+    val emitted = scala.collection.mutable.ArrayBuffer.empty[(Long, TransactionView)]
+    val q = CdcStream.viewUpdates(ms.toDS(), Some(acc)).writeStream
+      .outputMode("update")
+      .foreachBatch { (b: org.apache.spark.sql.Dataset[TransactionView], id: Long) =>
+        emitted.synchronized { emitted ++= b.collect().map(id -> _) }
+        ()
+      }
+      .start()
+    def dups(): Long = MergeMetrics.totalOf(acc.value, MergeMetrics.DupDropped)
+    try {
+      ms.addData(Seq(activated, auth))
+      q.processAllAvailable()
+      assert(dups() == 0)
+      ms.addData(Seq(auth))
+      q.processAllAvailable()
+      assert(dups() == 1, acc.value.toString)
+      ms.addData(Seq(activated, closed))
+      q.processAllAvailable()
+      assert(dups() == 2, acc.value.toString)
+      val views = emitted.synchronized(emitted.sortBy(_._1).map(_._2).toSeq)
+      assert(views.size == 2, "a batch of duplicates alone must emit nothing")
+      assert(views.last == canonical(Seq(activated, auth, closed))(t))
+    } finally q.stop()
+  }
+
+  test("a restart over state written as KeyState(view, Set[String]) fails the state-schema check") {
+    import spark.implicits._
+    import java.nio.file.Files
+    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+    val in = Files.createTempDirectory("graft-cdc-upgrade-in").toString
+    val ck = Files.createTempDirectory("graft-cdc-upgrade-ck").toString
+    val events = EventGen.generate(nTx = 4, seed = 63L)
+    val (first, later) = events.splitAt(events.size / 2)
+    first.toDS().write.parquet(in + "/part=0")
+    def source = spark.readStream.schema(org.apache.spark.sql.Encoders.product[CdcEvent].schema)
+      .option("basePath", in).parquet(in + "/part=*").as[CdcEvent]
+    def drain(views: org.apache.spark.sql.Dataset[TransactionView]): Boolean =
+      views.writeStream.format("noop").outputMode("update")
+        .option("checkpointLocation", ck)
+        .trigger(Trigger.AvailableNow())
+        .start().awaitTermination(120000)
+    // the stateful step as written before the seen ids became a string:
+    // keyed by a function, state KeyState(view, Set[String])
+    val legacy = CdcStream.preFilter(source)
+      .withColumn("eventTime", org.apache.spark.sql.functions.timestamp_millis($"tsMs"))
+      .withWatermark("eventTime", CdcStream.WatermarkDelay)
+      .as[CdcEvent]
+      .groupByKey(_.transactionId)
+      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
+        (_: String, evs: Iterator[CdcEvent], state: GroupState[CdcStreamSpec.LegacyKeyState]) =>
+          val prior = state.getOption
+          val fresh = evs.toSeq.sortBy(e => (e.tsMs, e.id))
+            .filterNot(e => prior.exists(_.seenIds(e.id)))
+          val view = fresh.foldLeft(prior.map(_.view))((v, e) => Some(ReferenceFold.processOne(v, e)))
+          view.foreach { v =>
+            state.update(CdcStreamSpec.LegacyKeyState(v,
+              prior.map(_.seenIds).getOrElse(Set.empty[String]) ++ fresh.map(_.id)))
+            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + CdcStream.StateTtlMs)
+          }
+          view.iterator
+      }
+    assert(drain(legacy))
+    later.toDS().write.parquet(in + "/part=1")
+    val e = intercept[Exception](drain(CdcStream.viewUpdates(source)))
+    val conditions = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null).collect {
+      case t: org.apache.spark.SparkThrowable if t.getCondition != null => t.getCondition
+    }.toSeq
+    assert(conditions.exists(c => c.startsWith("STATE_STORE_") && c.endsWith("_SCHEMA_NOT_COMPATIBLE")),
+      s"$conditions: $e")
+  }
+
   test("foreachBatch parquet merge across micro-batches equals canonical replay") {
     import spark.implicits._
     val dir = java.nio.file.Files.createTempDirectory("graft-view").toString
@@ -352,4 +450,10 @@ class CdcStreamSpec extends SparkSpec {
       changelog = true)
     assert(evals.value == b0.size + b1.size)
   }
+}
+
+object CdcStreamSpec {
+  /** The per-key state shape `CdcStream.viewUpdates` wrote before its seen
+    * ids were encoded into one string. */
+  case class LegacyKeyState(view: TransactionView, seenIds: Set[String])
 }
