@@ -1,6 +1,6 @@
 package graft.cdc
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoder, Encoders}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, Encoders}
 import org.apache.spark.sql.functions._
 
 /** O6 — typed decode of a serialized change-stream envelope with
@@ -28,16 +28,7 @@ object CdcDecode {
         col("e.id").isNotNull && col("e.transactionId").isNotNull &&
         col("e.eventCode").isNotNull && col("e.tsMs").isNotNull)
       .select(col("e.*"))
-      // from_json does NOT apply case-class defaults: fill the model's
-      // declared defaults for omitted optional envelope fields, else a
-      // missing operationType would silently fail the downstream
-      // insert/update/replace filter
-      .withColumn("operationType", coalesce(col("operationType"), lit("insert")))
-      // creationDate is derivable from tsMs when the writer omitted it
-      .withColumn("creationDate",
-        coalesce(col("creationDate"),
-          date_format(timestamp_millis(col("tsMs")), "yyyy-MM-dd'T'HH:mm:ss.SSSX")))
-    parsed.as[CdcEvent](eventEncoder)
+    withDefaults(parsed, InsertByDefault).as[CdcEvent](eventEncoder)
   }
 
   /** Serialize typed events to the JSON wire form (round-trip partner of
@@ -109,13 +100,9 @@ object CdcDecode {
         col("p.payload.op").as("__op"), col("p.payload.ts_ms").as("__envTs"))
       .withColumn("tsMs", coalesce(col("tsMs"), col("__envTs")))
       .filter(col("tsMs").isNotNull)
-      .withColumn("operationType",
-        when(col("__op") === "u", lit("update")).otherwise(lit("insert")))
-      .withColumn("creationDate",
-        coalesce(col("creationDate"),
-          date_format(timestamp_millis(col("tsMs")), "yyyy-MM-dd'T'HH:mm:ss.SSSX")))
+    withDefaults(parsed, when(col("__op") === "u", lit("update")).otherwise(lit("insert")))
       .drop("__op", "__envTs")
-    parsed.as[CdcEvent](eventEncoder)
+      .as[CdcEvent](eventEncoder)
   }
 
   /** O1 — decode a MongoDB change-stream envelope, the reference's OWN wire
@@ -167,13 +154,9 @@ object CdcDecode {
         col("eventCode").isNotNull)
       .withColumn("tsMs", coalesce(col("tsMs"), col("__ct") * lit(1000L)))
       .filter(col("tsMs").isNotNull)
-      .withColumn("operationType",
-        when(col("__op") === "insert", lit("insert")).otherwise(lit("update")))
-      .withColumn("creationDate",
-        coalesce(col("creationDate"),
-          date_format(timestamp_millis(col("tsMs")), "yyyy-MM-dd'T'HH:mm:ss.SSSX")))
+    withDefaults(parsed, when(col("__op") === "insert", lit("insert")).otherwise(lit("update")))
       .drop("__op", "__ct")
-    parsed.as[CdcEvent](eventEncoder)
+      .as[CdcEvent](eventEncoder)
   }
 
   /** [[fromKafkaEnvelope]] plus the broker-side lineage columns. */
@@ -183,15 +166,27 @@ object CdcDecode {
       .filter(col("e").isNotNull &&
         col("e.id").isNotNull && col("e.transactionId").isNotNull &&
         col("e.eventCode").isNotNull && col("e.tsMs").isNotNull)
-    parsed.select(
+    withDefaults(parsed.select(
       col("e.*"),
       col("topic").as("_topic"),
       col("partition").as("_partition"),
       col("offset").as("_offset"),
-      (col("timestamp").cast("double") * 1000).cast("long").as("_ingestTsMs"))
-      .withColumn("operationType", coalesce(col("operationType"), lit("insert")))
+      (col("timestamp").cast("double") * 1000).cast("long").as("_ingestTsMs")),
+      InsertByDefault)
+  }
+
+  /** The model's `operationType` default: from_json does NOT apply
+    * case-class defaults, and a missing operationType would silently fail
+    * the downstream insert/update/replace filter. */
+  private val InsertByDefault = coalesce(col("operationType"), lit("insert"))
+
+  /** The envelope defaults every decoder ends with: `operationType` as the
+    * decoder maps it, and `creationDate` derived from `tsMs` when the
+    * writer omitted it. */
+  private def withDefaults(parsed: DataFrame, operationType: Column): DataFrame =
+    parsed
+      .withColumn("operationType", operationType)
       .withColumn("creationDate",
         coalesce(col("creationDate"),
           date_format(timestamp_millis(col("tsMs")), "yyyy-MM-dd'T'HH:mm:ss.SSSX")))
-  }
 }

@@ -122,8 +122,9 @@ object ViewReplay {
 
   /** Replay a CdcEvent-shaped DataFrame into one view row per transaction.
     *
-    * Pipeline = O3 op-filter → O5 ttl anti-filter → O7 dedup → O8/O9
-    * dispatch (the field rules) → O10–O13 merge (arg-max aggregation).
+    * Pipeline = [[Admission.rule]] (O3 op-filter → O5 ttl anti-filter →
+    * unknown codes skipped) → O7 dedup → O8/O9 dispatch (the field rules)
+    * → O10–O13 merge (arg-max aggregation).
     */
   def replay(events: DataFrame): DataFrame = {
     // One data shuffle: repartition on the key up front; the dedup window
@@ -132,15 +133,7 @@ object ViewReplay {
     // within its transaction, so per-key dedup == global dropDuplicates.
     val dedupW = Window.partitionBy(col("transactionId"), col("id")).orderBy(col("tsMs"))
     val filtered = events
-      .filter(col("operationType").isin("insert", "update", "replace"))
-      .filter(col("ttl").isNull)
-      // unknown event types are SKIPPED (the reference raises a
-      // non-retriable CdcEventTypeException and the stream-level handler
-      // drops the event and lives on — `TransactionViewUpsertService.kt:
-      // 292-299`, `EcommerceTransactionsLogEventsStream.kt:202-206`);
-      // without this filter an unknown code would still write the
-      // watermark and emit a phantom all-null view row
-      .filter(ec.isin(EventCodes.all: _*))
+      .filter(Admission.rule)
       .repartition(col("transactionId"))
       .withColumn("__dn", row_number().over(dedupW))
       .filter(col("__dn") === 1)

@@ -1,5 +1,8 @@
 package graft.cdc
 
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.col
+
 /** Typed CDC domain model, re-expressed from the reference's event surface
   * (reference reads catalogued in SURVEY.md §1.3; fixtures in FIXTURES.md §2).
   * Events are modeled FLAT (one nullable column per payload field the
@@ -119,6 +122,28 @@ object EventCodes {
     ClosureSynthetic, ClosureError, ClosureRetried, ClosureFailed, Expired,
     UserCanceled, UserReceiptRequested, UserReceiptAdded, UserReceiptAddError,
     UserReceiptAddRetried, RefundRequested, RefundError, Refunded, RefundRetried)
+}
+
+/** Which events reach the merge ladder: the one admission rule of the
+  * stateful stream, its foreachBatch twin and the batch replay. */
+object Admission {
+
+  /** O3 op filter (insert/update/replace) → O5 ttl anti-filter (a `ttl`
+    * document is the data-migration touch, not a new event) → unknown
+    * event codes skipped (the reference raises a non-retriable
+    * CdcEventTypeException and the stream-level handler drops the event
+    * and lives on, `TransactionViewUpsertService.kt:292-299`,
+    * `EcommerceTransactionsLogEventsStream.kt:202-206`; kept, an unknown
+    * code would kill the stateful query in [[ReferenceFold.processOne]]
+    * and emit a phantom all-null view row in the replay). O6 decode errors
+    * are dropped upstream (PERMISSIVE parse). A Column predicate, not a
+    * typed lambda: Catalyst evaluates it on the decoded columns, so
+    * dropped rows are never deserialized; a null in any tested field
+    * drops the row. */
+  val rule: Column =
+    col("operationType").isin("insert", "update", "replace") &&
+      col("ttl").isNull &&
+      col("eventCode").isin(EventCodes.all: _*)
 }
 
 /** `TransactionStatusDto` values observed at the reference's set-sites

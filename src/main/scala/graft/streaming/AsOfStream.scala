@@ -23,8 +23,14 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * collapses everything at-or-below the watermark to ONE row — the best
   * already-final match candidate (any future left has lts > watermark, so
   * among rights with rts <= watermark only the latest can ever win). An
-  * idle key's leftovers are evicted by the same event-time TTL as
-  * [[CdcStream]], via the timeout that otherwise flushes matured lefts.
+  * idle key's leftovers are evicted after the same [[KeyedFold.StateTtlMs]],
+  * via the timeout that otherwise flushes matured lefts.
+  *
+  * Wired by hand, not through [[KeyedFold]]: its timer fires when a
+  * pending left matures (the strict `lts < watermark` test), not at a
+  * TTL past the key's last event, and that test needs the raw-millisecond
+  * watermark. On [[KeyedFold]]'s hour-quantized one a left would have to
+  * wait for the end of its event-time hour, which delays every match.
   */
 object AsOfStream {
 
@@ -33,8 +39,8 @@ object AsOfStream {
   case class AsOfMatch(key: Long, ts_ms: Long, id: Long,
       match_ts: Option[Long], match_id: Option[Long], match_value: Option[Long])
 
-  val StateTtlMs: Long = CdcStream.StateTtlMs
-  val WatermarkDelay: String = CdcStream.WatermarkDelay
+  val StateTtlMs: Long = KeyedFold.StateTtlMs
+  val WatermarkDelay: String = KeyedFold.WatermarkDelay
 
   /** Latest right at-or-before `lts`: max (rts, tie) among rts <= lts —
     * the same contract as AsOfJoinExec's merge walk. */
@@ -77,7 +83,7 @@ object AsOfStream {
     val ttlExpired = next.lefts.isEmpty && watermark >= maxSeen + StateTtlMs
     if ((next.lefts.isEmpty && next.rights.isEmpty) || ttlExpired) {
       // fully drained, or only a final right candidate older than the TTL
-      // horizon is left — evict (the CdcStream TTL contract)
+      // horizon is left — evict (the KeyedFold TTL contract)
       state.remove()
     } else {
       state.update(next)

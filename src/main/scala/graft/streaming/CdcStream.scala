@@ -1,9 +1,8 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, pmod, timestamp_millis}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
-import graft.cdc.{CdcEvent, ReferenceFold, TransactionView}
+import org.apache.spark.sql.streaming.OutputMode
+import graft.cdc.{Admission, CdcEvent, ReferenceFold, TransactionView}
 
 /** Structured-Streaming form of the CDC pipeline — the streaming twin of
   * [[graft.cdc.ViewReplay]], replacing the reference's hand-rolled
@@ -17,7 +16,7 @@ import graft.cdc.{CdcEvent, ReferenceFold, TransactionView}
   *    in state;
   *  - merge ladder: [[ReferenceFold.processOne]] — the SAME pure function
   *    the batch fold uses — applied per event in arrival order via
-  *    `flatMapGroupsWithState` (O10–O13).
+  *    [[KeyedFold]] (O10–O13).
   *
   * Scale notes: state is one small view row + the seen-event-id list per
   * live transaction, kept as one length-prefixed string ([[KeyState]]).
@@ -25,9 +24,9 @@ import graft.cdc.{CdcEvent, ReferenceFold, TransactionView}
   * one entry per distinct event of that transaction and is only reclaimed
   * when the state row TTLs out; that is bounded in practice because
   * transaction lifecycles are short (tens of events over days, per the
-  * reference's domain), not by any windowing here. State is evicted via
-  * event-time timeout (mirrors the reference's 10-min lock TTL / 3-day
-  * resume-window envelope, BASELINE.md).
+  * reference's domain), not by any windowing here. State is evicted by
+  * [[KeyedFold]]'s event-time TTL (mirrors the reference's 10-min lock
+  * TTL / 3-day resume-window envelope, BASELINE.md).
   *
   * Once a JVM has run a query's first batches, neither later batches nor
   * later queries compile generated code, except one late-event filter per
@@ -36,9 +35,9 @@ import graft.cdc.{CdcEvent, ReferenceFold, TransactionView}
   * collection field is deserialized through `MapObjects`, whose lambda
   * variable takes a new global id each time Spark re-resolves the state
   * encoder, so its ~40k-character deserializer was recompiled every
-  * batch. The stream is keyed by its `transactionId` column, not by a key
-  * function, so no `AppendColumns` step deserializes each event to
-  * serialize its key. `CdcCodegenReuseSpec` pins both, together with the
+  * batch. [[KeyedFold]] keys the stream by its `transactionId` column, so
+  * no `AppendColumns` step deserializes each event to serialize its key.
+  * `CdcCodegenReuseSpec` pins both, together with the
   * session's shared codegen cache (`spark.sql.artifact.isolation.enabled`,
   * see [[graft.Sessions]]).
   */
@@ -78,58 +77,11 @@ object CdcStream {
     ids.result()
   }
 
-  /** State eviction horizon past the event-time watermark (mirrors the
-    * reference's 3-day resume-token TTL envelope, BASELINE.md). Event-time
-    * timeout (not processing-time) is deliberate: with processing-time
-    * timeouts Spark schedules continuous empty micro-batches to re-check
-    * timers — a busy-loop on an idle stream; event-time timers only fire
-    * when the watermark advances, i.e. when data actually flows.
-    *
-    * The watermark moves in whole-hour steps ([[WatermarkQuantumMs]]), so
-    * a key is evicted within one event-time hour of when a
-    * raw-millisecond watermark would have evicted it. */
-  val StateTtlMs: Long = 3L * 24 * 3600 * 1000
-
-  /** Allowed out-of-orderness for the watermark. Deliberately WIDE: the
-    * watermark's only job here is to drive state-TTL timers — it must NOT
-    * drop late events, because the reference's ladder accepts arbitrarily
-    * late enrichment updates (`TransactionViewUpsertService.kt:201-211`).
-    * 30 days comfortably covers the reference's 3-day replay envelope;
-    * anything later is dropped, which matches "the resume token TTL'd
-    * out" in the reference's ops model. */
-  val WatermarkDelay: String = "30 days"
-
-  /** Event time is quantized to this step before it feeds the watermark:
-    * each event counts at the end of its hour (`tsMs` floored to the hour,
-    * plus one hour). With `EventTimeTimeout`, every watermark advance
-    * makes Spark run an extra no-data micro-batch that sweeps all state
-    * for timeouts and commits every state partition; a raw-millisecond
-    * watermark advances after nearly every data batch. The watermark only
-    * drives the 3-day TTL, so an hour of resolution costs nothing.
-    * Quantizing is monotone and commutes with subtracting
-    * [[WatermarkDelay]] (a whole number of hours): an event is dropped
-    * only if its hour starts a full delay or more before the newest
-    * event's hour, so nothing under 30 days minus one hour late is
-    * dropped, and a key is evicted at most one hour of event time early.
-    * The end of the hour, not its start, keeps events of the epoch's
-    * first hour above Spark's initial watermark of 0 (rows at or below
-    * the watermark are dropped). Computed on epoch ms, not `date_trunc`,
-    * so it does not depend on the session time zone or DST. */
-  val WatermarkQuantumMs: Long = 3600L * 1000
-
-  /** O3 op-filter → O5 ttl anti-filter applied before keying; O6 decode
-    * errors are expected to be dropped upstream (PERMISSIVE parse). */
+  /** Admits the events the ladder folds: [[graft.cdc.Admission.rule]]
+    * (op filter, ttl anti-filter, unknown codes skipped), applied before
+    * keying. */
   def preFilter(events: Dataset[CdcEvent]): Dataset[CdcEvent] =
-    // Column predicates, not typed lambdas: Catalyst evaluates them on the
-    // decoded columns, so dropped rows are never deserialized. A null in
-    // any tested field drops the row, as the lambdas did.
-    events
-      .filter(col("operationType").isin("insert", "update", "replace"))
-      .filter(col("ttl").isNull)
-      // unknown event types are skipped, mirroring the reference's
-      // non-retriable-error-then-drop path (ReferenceFold.processOne
-      // would throw, killing the query)
-      .filter(col("eventCode").isin(graft.cdc.EventCodes.all: _*))
+    events.filter(Admission.rule)
 
   /** One ladder step, shared by the stateful and the foreachBatch path: a
     * key's batch events fold onto `view` in (tsMs, id) order through
@@ -156,50 +108,33 @@ object CdcStream {
       }
     }
 
-  /** The per-key stateful merge. Emits the updated view once per key per
-    * micro-batch (update-mode semantics), with optional O14/span-parity
+  /** The per-key stateful merge, one [[KeyedFold]] step: folds the key's
+    * batch events onto its state and emits the updated view once per key
+    * per micro-batch (update-mode semantics), with optional O14/span-parity
     * counters (task-side accumulator adds; `observe()` can't see inside
-    * the state function). */
-  def updateKeyInstrumented(metrics: Option[OutcomeCountsAccumulator])(
+    * the state function). A batch that applies no new event leaves the
+    * state and its timer alone. */
+  private def updateKey(metrics: Option[OutcomeCountsAccumulator])(
       txId: String,
       events: Iterator[CdcEvent],
-      state: GroupState[KeyState]): Iterator[TransactionView] = {
-    if (state.hasTimedOut) {
-      state.remove()
-      return Iterator.empty
-    }
-    val initial = state.getOption
-    val seen = initial.map(s => decodeIds(s.seenIds)).getOrElse(Set.empty[String])
-    val (view, seenAfter) = ladder(initial.map(_.view), seen, events, metrics)
+      state: Option[KeyState]): (Option[(KeyState, Long)], Iterator[TransactionView]) = {
+    val seen = state.map(s => decodeIds(s.seenIds)).getOrElse(Set.empty[String])
+    val (view, seenAfter) = ladder(state.map(_.view), seen, events, metrics)
     view match {
       case Some(v) if seenAfter.size > seen.size =>
-        state.update(KeyState(v, encodeIds(seenAfter)))
-        // evict when the watermark passes lastProcessedEventAt + TTL
-        state.setTimeoutTimestamp(
-          math.max(v.lastProcessedEventAt.getOrElse(0L) + StateTtlMs,
-            state.getCurrentWatermarkMs() + 1))
-        Iterator.single(v)
-      case _ => Iterator.empty
+        (Some(KeyState(v, encodeIds(seenAfter)) -> v.lastProcessedEventAt.getOrElse(0L)),
+          Iterator.single(v))
+      case _ => (None, Iterator.empty)
     }
   }
 
-  /** Wire a streaming Dataset of events into a stream of view updates.
-    * The watermark on the hour-quantized event-time column drives both
-    * late-data accounting and state-TTL timers. */
+  /** Wire a streaming Dataset of events into a stream of view updates,
+    * keyed by `transactionId` through [[KeyedFold]] on `tsMs`. */
   def viewUpdates(
       events: Dataset[CdcEvent],
       metrics: Option[OutcomeCountsAccumulator] = None): Dataset[TransactionView] = {
     import events.sparkSession.implicits._
-    preFilter(events)
-      .withColumn("eventTime",
-        timestamp_millis(
-          col("tsMs") - pmod(col("tsMs"), lit(WatermarkQuantumMs)) + lit(WatermarkQuantumMs)))
-      .withWatermark("eventTime", WatermarkDelay)
-      // keyed by the column: a key function would add an AppendColumns
-      // step that deserializes every event just to serialize its key
-      .groupBy(col("transactionId")).as[String, CdcEvent]
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(
-        updateKeyInstrumented(metrics))
+    KeyedFold(preFilter(events), "transactionId", "tsMs", OutputMode.Update)(updateKey(metrics))
   }
 
   /** One row of the view's OWN change feed (see `changelog` below): the

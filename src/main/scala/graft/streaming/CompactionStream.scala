@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming changelog compaction — the continuous form of
   * [[graft.queries.FlowQueries.q130_changelog_compaction]]: per user,
@@ -16,9 +16,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * incoming event at or before that point is dropped before compacting —
   * at-least-once redelivery is idempotent and a stale event can never
   * re-open a change edge. Within a batch events sort by
-  * (ts_ms, event_id). State is TTL-evicted
-  * on the watermark; a user returning after eviction restarts the change
-  * sequence (documented trade — the alternative is unbounded state).
+  * (ts_ms, event_id). State is TTL-evicted by [[KeyedFold]]; a user
+  * returning after eviction restarts the change sequence (documented
+  * trade — the alternative is unbounded state).
   * CompactionStreamSpec pins stream == batch q130 over batches split
   * mid-user. */
 object CompactionStream {
@@ -28,20 +28,15 @@ object CompactionStream {
   case class Change(user_id: Long, ts_ms: Long, event_id: Long,
       event_type: String, change_seq: Long)
 
-  val StateTtlMs: Long = CdcStream.StateTtlMs
-  val WatermarkDelay: String = CdcStream.WatermarkDelay
-
-  def updateUser(
+  private def updateUser(
       userId: Long,
       events: Iterator[Ev],
-      state: GroupState[Last]): Iterator[Change] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    val prev = state.getOption
+      prev: Option[Last]): (Option[(Last, Long)], Iterator[Change]) = {
     val incoming = events.toSeq
       .filter(e => prev.forall(p =>
         e.ts_ms > p.ts_ms || (e.ts_ms == p.ts_ms && e.event_id > p.event_id)))
       .sortBy(e => (e.ts_ms, e.event_id))
-    if (incoming.isEmpty) return Iterator.empty
+    if (incoming.isEmpty) return (None, Iterator.empty)
     var last = prev.map(_.event_type).orNull
     var seq = prev.map(_.changes).getOrElse(0L)
     val out = scala.collection.mutable.ArrayBuffer.empty[Change]
@@ -53,10 +48,7 @@ object CompactionStream {
       }
     }
     val seen = incoming.last
-    state.update(Last(seen.ts_ms, seen.event_id, last, seq))
-    state.setTimeoutTimestamp(math.max(
-      incoming.last.ts_ms + StateTtlMs, state.getCurrentWatermarkMs() + 1))
-    out.iterator
+    (Some(Last(seen.ts_ms, seen.event_id, last, seq) -> seen.ts_ms), out.iterator)
   }
 
   /** `events` needs (user_id, ts_ms, event_id, event_type). Returns the
@@ -64,13 +56,8 @@ object CompactionStream {
   def changes(events: DataFrame): Dataset[Change] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .select(col("user_id"), col("ts_ms"), col("event_id"), col("event_type"))
-      .withColumn("eventTime", timestamp_millis(col("ts_ms")))
-      .withWatermark("eventTime", WatermarkDelay)
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout())(updateUser)
+    KeyedFold(
+      events.select(col("user_id"), col("ts_ms"), col("event_id"), col("event_type")),
+      "user_id", "ts_ms", OutputMode.Append)(updateUser)
   }
 }

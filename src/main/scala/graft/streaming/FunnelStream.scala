@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming conversion funnel — the continuous form of
   * [[graft.ops.Relational.funnel]]: per user, the first time each stage
@@ -19,7 +19,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * it changes), and recomputes the funnel chain per batch: c_0 = min
   * stage-0 key; c_i = min stage-i key strictly after c_(i-1). Within one
   * user the chain walk is O(total buffered events); state is bounded by
-  * the event-time TTL eviction, the same horizon as [[CdcStream]].
+  * [[KeyedFold]]'s event-time TTL.
   *
   * Ordering contract — identical to the batch twin: events are ordered by
   * the (ts, event_id) pair, and stage i qualifies only when it sorts
@@ -33,9 +33,6 @@ object FunnelStream {
   case class FunnelEvent(user_id: Long, ts_ms: Long, event_id: Long, stage: Int)
   case class FunnelBuf(stageTs: Seq[Seq[(Long, Long)]])
   case class FunnelRow(user_id: Long, reach_ms: Seq[Option[Long]])
-
-  val StateTtlMs: Long = CdcStream.StateTtlMs
-  val WatermarkDelay: String = CdcStream.WatermarkDelay
 
   private val keyOrd = implicitly[Ordering[(Long, Long)]]
 
@@ -56,26 +53,22 @@ object FunnelStream {
     chain.map(_.map(_._1))
   }
 
-  def updateUser(nStages: Int)(
+  private def updateUser(nStages: Int)(
       userId: Long,
       events: Iterator[FunnelEvent],
-      state: GroupState[FunnelBuf]): Iterator[FunnelRow] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    val prev = state.getOption.map(_.stageTs)
+      state: Option[FunnelBuf]): (Option[(FunnelBuf, Long)], Iterator[FunnelRow]) = {
+    val prev = state.map(_.stageTs)
       .getOrElse(Seq.fill(nStages)(Seq.empty[(Long, Long)]))
     val incoming = events.toSeq.filter(e => e.stage >= 0 && e.stage < nStages)
-    if (incoming.isEmpty) return Iterator.empty
+    if (incoming.isEmpty) return (None, Iterator.empty)
     val merged = prev.zipWithIndex.map { case (keys, i) =>
       val add = incoming.filter(_.stage == i).map(e => (e.ts_ms, e.event_id))
       val all = (keys ++ add).distinct.sorted
       // stage 0 only ever needs its min; later stages keep the buffer
       if (i == 0) all.take(1) else all
     }
-    state.update(FunnelBuf(merged))
-    state.setTimeoutTimestamp(math.max(
-      incoming.map(_.ts_ms).max + StateTtlMs,
-      state.getCurrentWatermarkMs() + 1))
-    Iterator.single(FunnelRow(userId, funnelOf(merged)))
+    (Some(FunnelBuf(merged) -> incoming.map(_.ts_ms).max),
+      Iterator.single(FunnelRow(userId, funnelOf(merged))))
   }
 
   /** Wire a stream of (user_id, ts_ms, event_id, event_type) into per-user
@@ -90,20 +83,12 @@ object FunnelStream {
     val idxCol = stages.foldLeft(lit(-1)) { case (acc, s) =>
       when(col("event_type") === s, lit(stageIdx(s))).otherwise(acc)
     }
-    events
+    val narrowed = events
       .withColumn("stage", idxCol)
       .filter(col("stage") >= 0)
       .select(col("user_id").cast("long").as("user_id"),
         col("ts_ms").cast("long").as("ts_ms"),
         col("event_id").cast("long").as("event_id"), col("stage"))
-      // watermark column must survive to the stateful operator (a later
-      // projection would strip the event-time tag), so tag after the
-      // narrowing select; .as[] keeps extra columns
-      .withColumn("eventTime", timestamp_millis(col("ts_ms")))
-      .withWatermark("eventTime", WatermarkDelay)
-      .as[FunnelEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(
-        updateUser(stages.size))
+    KeyedFold(narrowed, "user_id", "ts_ms", OutputMode.Update)(updateUser(stages.size))
   }
 }

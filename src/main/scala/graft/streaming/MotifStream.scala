@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Continuous temporal-motif counting — the streaming form of
   * [[graft.queries.MotifQueries.q292_temporal_motifs]] (X331): as each
@@ -13,8 +13,8 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * processing an event at time t, everything older than t − span is
   * evicted — no future event can close a chain through it (a future
   * c has ts ≥ t, so its chains need a.ts ≥ t − span). State is
-  * therefore O(activity-per-span), not O(history); the TTL evicts idle
-  * users entirely, like [[CdcStream]].
+  * therefore O(activity-per-span), not O(history); [[KeyedFold]]'s TTL
+  * evicts idle users entirely.
   *
   * At-least-once delivery is idempotent by the [[TransitionStream]]
   * discipline: an incoming event at or before the remembered last
@@ -34,23 +34,20 @@ object MotifStream {
       a_id: Long, b_id: Long, c_id: Long, c_ts_ms: Long)
 
   val SpanMs: Long = graft.queries.MotifQueries.MotifSpanMs
-  val StateTtlMs: Long = CdcStream.StateTtlMs
-  val WatermarkDelay: String = CdcStream.WatermarkDelay
 
   private def ordered(a: Ev, b: Ev): Boolean =
     a.ts_ms < b.ts_ms || (a.ts_ms == b.ts_ms && a.event_id < b.event_id)
 
-  def updateUser(
+  private def updateUser(
       userId: Long,
       events: Iterator[Ev],
-      state: GroupState[Buf]): Iterator[Motif] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    var buf = state.getOption.map(_.evs).getOrElse(Nil)
+      state: Option[Buf]): (Option[(Buf, Long)], Iterator[Motif]) = {
+    var buf = state.map(_.evs).getOrElse(Nil)
     val last = buf.lastOption
     val incoming = events.toSeq
       .filter(e => last.forall(p => ordered(p, e)))
       .sortBy(e => (e.ts_ms, e.event_id))
-    if (incoming.isEmpty) return Iterator.empty
+    if (incoming.isEmpty) return (None, Iterator.empty)
     val out = scala.collection.mutable.ArrayBuffer.empty[Motif]
     incoming.foreach { c =>
       // chains closed by c: ordered pairs (a, b) in the live buffer with
@@ -63,11 +60,7 @@ object MotifStream {
         a.event_id, b.event_id, c.event_id, c.ts_ms)
       buf = (buf :+ c).filter(e => c.ts_ms - e.ts_ms <= SpanMs)
     }
-    state.update(Buf(buf))
-    val lastTs = buf.last.ts_ms
-    state.setTimeoutTimestamp(math.max(
-      lastTs + StateTtlMs, state.getCurrentWatermarkMs() + 1))
-    out.iterator
+    (Some(Buf(buf) -> buf.last.ts_ms), out.iterator)
   }
 
   /** `events` needs (user_id, ts_ms, event_id, event_type). Returns the
@@ -75,13 +68,8 @@ object MotifStream {
   def motifs(events: DataFrame): Dataset[Motif] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .select(col("user_id"), col("ts_ms"), col("event_id"), col("event_type"))
-      .withColumn("eventTime", timestamp_millis(col("ts_ms")))
-      .withWatermark("eventTime", WatermarkDelay)
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout())(updateUser)
+    KeyedFold(
+      events.select(col("user_id"), col("ts_ms"), col("event_id"), col("event_type")),
+      "user_id", "ts_ms", OutputMode.Append)(updateUser)
   }
 }

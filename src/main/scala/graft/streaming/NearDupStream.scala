@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 import graft.ops.Dedup
 
 /** Streaming near-duplicate screen — the continuous form of the q53
@@ -15,8 +15,8 @@ import graft.ops.Dedup
   * pure scalar: the fused [[graft.expressions.MinHashSig]] turns
   * doc → band keys into a projection (no per-doc aggregation), so the ONLY
   * stateful step is first-claimant tracking per band key —
-  * `flatMapGroupsWithState` keyed by the band key, state = the claiming
-  * doc, evicted by event-time TTL (the same state/recall horizon trade as
+  * a [[KeyedFold]] keyed by the band key, state = the claiming doc,
+  * evicted by its event-time TTL (the same state/recall horizon trade as
   * the streaming exact dedup, [[Dedup.exactStreaming]]).
   *
   * All band rows of one document are produced in the SAME micro-batch (they
@@ -35,27 +35,19 @@ object NearDupStream {
   case class BandVerdict(doc_id: Long, band_key: String, known: Boolean, ts_ms: Long)
   case class ClaimState(doc_id: Long, ts_ms: Long)
 
-  val StateTtlMs: Long = CdcStream.StateTtlMs
-  val WatermarkDelay: String = CdcStream.WatermarkDelay
-
-  def updateKey(
+  private def updateKey(
       bandKey: String,
       events: Iterator[BandEvent],
-      state: GroupState[ClaimState]): Iterator[BandVerdict] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
+      state: Option[ClaimState]): (Option[(ClaimState, Long)], Iterator[BandVerdict]) = {
     val incoming = events.toSeq.sortBy(e => (e.ts_ms, e.doc_id))
-    if (incoming.isEmpty) return Iterator.empty
-    var claimed = state.getOption
+    if (incoming.isEmpty) return (None, Iterator.empty)
+    var claimed = state
     val out = incoming.map { e =>
       val known = claimed.isDefined
       if (claimed.isEmpty) claimed = Some(ClaimState(e.doc_id, e.ts_ms))
       BandVerdict(e.doc_id, bandKey, known, e.ts_ms)
     }
-    state.update(claimed.get)
-    state.setTimeoutTimestamp(math.max(
-      incoming.map(_.ts_ms).max + StateTtlMs,
-      state.getCurrentWatermarkMs() + 1))
-    out.iterator
+    (Some(claimed.get -> incoming.map(_.ts_ms).max), out.iterator)
   }
 
   /** Wire a document stream `(doc_id, ts_ms, text)` into per-band verdicts.
@@ -74,17 +66,12 @@ object NearDupStream {
       struct(col("doc_id").cast("long").as("doc_id"),
         col("ts_ms").cast("long").as("ts_ms")).as("__docid"),
       col("text"))
-    Dedup.minhashBands(packed, n, bands, rowsPerBand, idCol = "__docid")
+    val bandRows = Dedup.minhashBands(packed, n, bands, rowsPerBand, idCol = "__docid")
       .select(
         concat_ws("|", col("band"), col("band_key")).as("band_key"),
         col("id.doc_id").as("doc_id"),
         col("id.ts_ms").as("ts_ms"))
-      .withColumn("eventTime", timestamp_millis(col("ts_ms")))
-      .withWatermark("eventTime", WatermarkDelay)
-      .as[BandEvent]
-      .groupByKey(_.band_key)
-      .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout)(
-        updateKey)
+    KeyedFold(bandRows, "band_key", "ts_ms", OutputMode.Update)(updateKey)
   }
 
   /** Per-document verdicts from one micro-batch of band verdicts: near-dup

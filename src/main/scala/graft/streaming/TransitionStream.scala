@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.OutputMode
 
 /** Streaming Markov transition counting — the continuous form of
   * [[graft.queries.PatternQueries.q118_transition_matrix]]: per user, the
@@ -13,7 +13,7 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   * Within a batch, a user's events are ordered by the (ts_ms, event_id)
   * pair — the batch twin's window order. Across batches the state keeps
   * only that last (ts_ms, event_id, event_type) triple per user (O(1)
-  * state per user, TTL-evicted on the watermark like [[CdcStream]]); a
+  * state per user, TTL-evicted by [[KeyedFold]]); a
   * redelivered or stale event — (ts_ms, event_id) at or before the
   * remembered last triple — is DROPPED before chaining, so at-least-once
   * delivery (the repo's own CDC model, q04) is idempotent here too: a
@@ -33,29 +33,21 @@ object TransitionStream {
   case class Transition(user_id: Long, from_type: String, to_type: String,
       ts_ms: Long, event_id: Long)
 
-  val StateTtlMs: Long = CdcStream.StateTtlMs
-  val WatermarkDelay: String = CdcStream.WatermarkDelay
-
-  def updateUser(
+  private def updateUser(
       userId: Long,
       events: Iterator[Ev],
-      state: GroupState[LastEv]): Iterator[Transition] = {
-    if (state.hasTimedOut) { state.remove(); return Iterator.empty }
-    val prev = state.getOption
+      prev: Option[LastEv]): (Option[(LastEv, Long)], Iterator[Transition]) = {
     val incoming = events.toSeq
       .filter(e => prev.forall(p =>
         e.ts_ms > p.ts_ms || (e.ts_ms == p.ts_ms && e.event_id > p.event_id)))
       .sortBy(e => (e.ts_ms, e.event_id))
-    if (incoming.isEmpty) return Iterator.empty
+    if (incoming.isEmpty) return (None, Iterator.empty)
     val chain = prev.map(p => Ev(userId, p.ts_ms, p.event_id, p.event_type)).toSeq ++ incoming
     val out = chain.zip(chain.tail).map { case (a, b) =>
       Transition(userId, a.event_type, b.event_type, b.ts_ms, b.event_id)
     }
     val last = chain.last
-    state.update(LastEv(last.ts_ms, last.event_id, last.event_type))
-    state.setTimeoutTimestamp(math.max(
-      last.ts_ms + StateTtlMs, state.getCurrentWatermarkMs() + 1))
-    out.iterator
+    (Some(LastEv(last.ts_ms, last.event_id, last.event_type) -> last.ts_ms), out.iterator)
   }
 
   /** `events` needs (user_id, ts_ms, event_id, event_type). Returns the
@@ -63,13 +55,8 @@ object TransitionStream {
   def transitions(events: DataFrame): Dataset[Transition] = {
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .select(col("user_id"), col("ts_ms"), col("event_id"), col("event_type"))
-      .withColumn("eventTime", timestamp_millis(col("ts_ms")))
-      .withWatermark("eventTime", WatermarkDelay)
-      .as[Ev]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Append(),
-        GroupStateTimeout.EventTimeTimeout())(updateUser)
+    KeyedFold(
+      events.select(col("user_id"), col("ts_ms"), col("event_id"), col("event_type")),
+      "user_id", "ts_ms", OutputMode.Append)(updateUser)
   }
 }

@@ -122,37 +122,6 @@ class CdcStreamSpec extends SparkSpec {
     }
   }
 
-  test("a 4-batch drain within one event-time hour runs at most one empty micro-batch") {
-    import spark.implicits._
-    implicit val ctx = spark.sqlContext
-    // EventGen lifecycles all fall inside one event-time hour, so the
-    // hour-quantized watermark moves once (from unset) and no later batch
-    // makes Spark schedule a no-data batch to sweep for timeouts
-    val events = EventGen.generate(nTx = 40, seed = 91L)
-    val hours = events.map(e => e.tsMs / CdcStream.WatermarkQuantumMs).distinct
-    assert(hours.size == 1, s"precondition: events span hours $hours")
-    val ms = MemoryStream[CdcEvent]
-    val q = CdcStream.viewUpdates(ms.toDS()).writeStream
-      .format("memory").queryName("views_hour").outputMode("update")
-      .option("checkpointLocation",
-        java.nio.file.Files.createTempDirectory("graft-hour-ckpt").toString)
-      .start()
-    try {
-      events.grouped(math.ceil(events.size / 4.0).toInt).foreach { b =>
-        ms.addData(b); q.processAllAvailable()
-      }
-      // executed batches only: an idle trigger also reports progress, but
-      // runs no addBatch
-      val ran = q.recentProgress.filter(_.durationMs.containsKey("addBatch"))
-        .groupBy(_.batchId).values.map(_.head).toSeq
-      assert(ran.count(_.numInputRows > 0) == 4)
-      assert(ran.count(_.numInputRows == 0) <= 1,
-        s"empty batches: ${ran.filter(_.numInputRows == 0).map(_.batchId).sorted}")
-      val keys = spark.table("views_hour").select("transactionId").as[String].collect().toSet
-      assert(keys == canonical(events).keySet)
-    } finally q.stop()
-  }
-
   test("an event 29 days behind the newest is applied; one 31 days behind is dropped") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
@@ -281,7 +250,7 @@ class CdcStreamSpec extends SparkSpec {
     // keyed by a function, state KeyState(view, Set[String])
     val legacy = CdcStream.preFilter(source)
       .withColumn("eventTime", org.apache.spark.sql.functions.timestamp_millis($"tsMs"))
-      .withWatermark("eventTime", CdcStream.WatermarkDelay)
+      .withWatermark("eventTime", KeyedFold.WatermarkDelay)
       .as[CdcEvent]
       .groupByKey(_.transactionId)
       .flatMapGroupsWithState(OutputMode.Update, GroupStateTimeout.EventTimeTimeout) {
@@ -293,7 +262,7 @@ class CdcStreamSpec extends SparkSpec {
           view.foreach { v =>
             state.update(CdcStreamSpec.LegacyKeyState(v,
               prior.map(_.seenIds).getOrElse(Set.empty[String]) ++ fresh.map(_.id)))
-            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + CdcStream.StateTtlMs)
+            state.setTimeoutTimestamp(state.getCurrentWatermarkMs() + KeyedFold.StateTtlMs)
           }
           view.iterator
       }

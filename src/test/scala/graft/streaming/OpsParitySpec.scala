@@ -105,6 +105,9 @@ class OpsParitySpec extends SparkSpec {
   test("liveness probe serves StreamHealth over HTTP: 200 UP, 503 DOWN") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
+    // awaitAnyTermination below waits for this test's query: forget the
+    // queries earlier suites of this session stopped or failed on purpose
+    spark.streams.resetTerminated()
     val health = new StreamHealth(inactivityTimeoutMs = 3600L * 1000)
     spark.streams.addListener(health)
     val srv = new LivenessServer(health, port = 0)
@@ -138,6 +141,9 @@ class OpsParitySpec extends SparkSpec {
   test("liveness listener: active+fresh CORRECT, terminated or stale BROKEN (O18); observe metrics (O19)") {
     import spark.implicits._
     implicit val ctx = spark.sqlContext
+    // awaitAnyTermination below waits for this test's query: forget the
+    // queries earlier suites of this session stopped or failed on purpose
+    spark.streams.resetTerminated()
     val health = new StreamHealth(inactivityTimeoutMs = 3600L * 1000)
     spark.streams.addListener(health)
     try {

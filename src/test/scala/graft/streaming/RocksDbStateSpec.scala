@@ -54,7 +54,7 @@ class RocksDbStateSpec extends SparkSpec {
   test("state TTL: a key is evicted once the watermark passes lastProcessedEventAt + StateTtlMs") {
     implicit val ctx = spark.sqlContext
     withRocksDb {
-      val hour = CdcStream.WatermarkQuantumMs
+      val hour = KeyedFold.WatermarkQuantumMs
       val delay = 30L * 24 * hour
       val t0 = 1700000000000L
       def activated(tx: String, ts: Long) =
@@ -73,12 +73,12 @@ class RocksDbStateSpec extends SparkSpec {
         q.processAllAvailable()
         assert(stateKeys() == Set("tx-a"))
         // the watermark lands two hours short of tx-a's expiry: kept
-        ms.addData(Seq(activated("tx-c", t0 + delay + CdcStream.StateTtlMs - 2 * hour)))
+        ms.addData(Seq(activated("tx-c", t0 + delay + KeyedFold.StateTtlMs - 2 * hour)))
         q.processAllAvailable()
         assert(stateKeys() == Set("tx-a", "tx-c"))
         // the watermark passes tx-a's expiry by more than one quantum:
         // the no-data batch that follows sweeps it out
-        ms.addData(Seq(activated("tx-b", t0 + delay + CdcStream.StateTtlMs + 2 * hour)))
+        ms.addData(Seq(activated("tx-b", t0 + delay + KeyedFold.StateTtlMs + 2 * hour)))
         q.processAllAvailable()
         assert(stateKeys() == Set("tx-b", "tx-c"))
       } finally q.stop()
