@@ -17,7 +17,8 @@ import org.apache.spark.storage.StorageLevel
   * storage does not accumulate across queries (ADVICE r1). The registry
   * holds every frame until its scope ends, so EVERY caller needs a scope,
   * streaming ones included: a foreachBatch body runs in
-  * [[scoped]] per batch (ComponentStream), or the stream keeps each
+  * [[scoped]] per batch (every snapshot maintainer's, through
+  * `ViewStore.maintainSnapshot`), or the stream keeps each
   * batch's blocks for as long as it runs.
   *  - [[cache]] persists lazily at MEMORY_AND_DISK: under pressure blocks
   *    spill instead of evicting and recomputing the whole subtree. Its

@@ -10,8 +10,8 @@ import org.apache.spark.sql.functions._
   * + one open per file). [[plan]] bin-packs the directory's files into
   * target-sized groups IN NAME ORDER (deterministic, no re-sort of
   * data); [[compact]] rewrites each group as one file into a fresh
-  * directory (non-destructive — the caller flips a pointer, the
-  * ViewStore/GenState discipline).
+  * directory (non-destructive — the caller flips a manifest, the
+  * ViewStore discipline).
   *
   * Scale notes: the PLAN works on file METADATA (one row per file —
   * bounded the way every table-format manifest is); the REWRITE reads

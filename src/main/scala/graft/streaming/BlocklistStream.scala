@@ -12,14 +12,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * flagged docs) fold by ADDITION into the persisted state — the
   * compliance dashboard's counters over everything ingested.
   *
-  * Committed through [[GenState]]: addition is NOT idempotent, so its
-  * batchId guard is load-bearing (spec-pinned).
+  * Committed through [[ViewStore.maintainSnapshot]]: addition is NOT
+  * idempotent, so its batchId guard is load-bearing (spec-pinned).
   */
 object BlocklistStream {
 
   /** Running totals (empty, correctly-shaped frame if none). */
   def snapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.read(spark, statePath) {
+    ViewStore.readSnapshot(spark, statePath).getOrElse {
       import spark.implicits._
       Seq.empty[(String, Long, Long, Long, Long)]
         .toDF("category", "n_docs_hit", "n_term_hits", "n_phrase_hits", "n_flagged")
@@ -38,24 +38,16 @@ object BlocklistStream {
 
   /** Maintain the running screen totals from a STREAMING (doc_id, text)
     * frame. */
-  def maintain(docs: DataFrame, statePath: String, checkpoint: String): StreamingQuery = {
-    require(docs.isStreaming, "maintain expects a streaming DataFrame")
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        GenState.advance(statePath, batch, batchId) { dir =>
-          val spark = batch.sparkSession
-          val next = snapshot(spark, statePath)
-            .unionByName(screenDelta(batch))
-            .groupBy("category")
-            .agg(sum("n_docs_hit").as("n_docs_hit"),
-              sum("n_term_hits").as("n_term_hits"),
-              sum("n_phrase_hits").as("n_phrase_hits"),
-              sum("n_flagged").as("n_flagged"))
-          next.write.mode("overwrite").parquet(dir)
-        }
-      }
-      .start()
-  }
+  def maintain(docs: DataFrame, statePath: String, checkpoint: String): StreamingQuery =
+    ViewStore.maintainSnapshot(docs, statePath, checkpoint) { batch =>
+      val spark = batch.sparkSession
+      val next = snapshot(spark, statePath)
+        .unionByName(screenDelta(batch))
+        .groupBy("category")
+        .agg(sum("n_docs_hit").as("n_docs_hit"),
+          sum("n_term_hits").as("n_term_hits"),
+          sum("n_phrase_hits").as("n_phrase_hits"),
+          sum("n_flagged").as("n_flagged"))
+      Map(ViewStore.Snapshot -> next)
+    }
 }

@@ -18,8 +18,9 @@ import graft.functions.TextFunctions._
   * touching raw eval text: the bitset is the only state, 64 Ki rows at
   * most, regardless of how much eval material has ever streamed in.
   *
-  * Committed through [[GenState]]; its batchId guard only saves the
-  * rewrite of an exact replay, since the merge itself is idempotent.
+  * Committed through [[ViewStore.maintainSnapshot]]; its batchId guard only
+  * saves the rewrite of an exact replay, since the merge itself is
+  * idempotent.
   */
 object BloomScreenStream {
 
@@ -27,7 +28,7 @@ object BloomScreenStream {
 
   /** Current set-bit table (single `bit` column; empty if none). */
   def bitsSnapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.read(spark, statePath) {
+    ViewStore.readSnapshot(spark, statePath).getOrElse {
       import spark.implicits._
       Seq.empty[Long].toDF("bit")
     }
@@ -43,23 +44,15 @@ object BloomScreenStream {
 
   /** Maintain the eval bitset from a STREAMING (doc_id, text) frame. */
   def maintain(evalDocs: DataFrame, statePath: String, checkpoint: String,
-      n: Int = 3): StreamingQuery = {
-    require(evalDocs.isStreaming, "maintain expects a streaming DataFrame")
-    evalDocs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        GenState.advance(statePath, batch, batchId) { dir =>
-          val spark = batch.sparkSession
-          val gb = gramBits(batch, n)
-          val delta = gb.select(col("h1").as("bit"))
-            .union(gb.select(col("h2").as("bit")))
-          val next = bitsSnapshot(spark, statePath).unionByName(delta).distinct()
-          next.write.mode("overwrite").parquet(dir)
-        }
-      }
-      .start()
-  }
+      n: Int = 3): StreamingQuery =
+    ViewStore.maintainSnapshot(evalDocs, statePath, checkpoint) { batch =>
+      val spark = batch.sparkSession
+      val gb = gramBits(batch, n)
+      val delta = gb.select(col("h1").as("bit"))
+        .union(gb.select(col("h2").as("bit")))
+      val next = bitsSnapshot(spark, statePath).unionByName(delta).distinct()
+      Map(ViewStore.Snapshot -> next)
+    }
 
   /** Screen a batch (doc_id, text) training frame against the current
     * bitset: per doc, distinct grams and Bloom-candidate count (both

@@ -22,21 +22,22 @@ import org.apache.spark.sql.streaming.StreamingQuery
   *    ingested (spec-pinned, batch-split-invariant).
   *
   * State = edges (bounded by users × item vocabulary) + pair counts
-  * (bounded by item vocabulary²), committed through [[GenState]] —
-  * pair addition is not idempotent, so its batchId guard is load-bearing.
+  * (bounded by item vocabulary²), committed through
+  * [[ViewStore.maintainSnapshot]] — pair addition is not idempotent, so its
+  * batchId guard is load-bearing.
   */
 object CoEngageStream {
 
   /** Standing (user_id, item) edge set (empty frame if none yet). */
   def edgesSnapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.read(spark, statePath, "edges") {
+    ViewStore.readSnapshot(spark, statePath, "edges").getOrElse {
       import spark.implicits._
       Seq.empty[(Long, Long)].toDF("user_id", "item")
     }
 
   /** Standing (item_a, item_b, co) pair counts (item_a < item_b). */
   def coSnapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.read(spark, statePath, "co") {
+    ViewStore.readSnapshot(spark, statePath, "co").getOrElse {
       import spark.implicits._
       Seq.empty[(Long, Long, Long)].toDF("item_a", "item_b", "co")
     }
@@ -46,38 +47,29 @@ object CoEngageStream {
   def maintain(
       events: DataFrame,
       statePath: String,
-      checkpoint: String): StreamingQuery = {
-    require(events.isStreaming, "maintain expects a streaming DataFrame")
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        GenState.advance(statePath, batch, batchId) { dir =>
-          val spark = batch.sparkSession
-          val seen = edgesSnapshot(spark, statePath)
-          val fresh = batch.select(col("user_id").cast("long"),
-              col("item").cast("long")).distinct()
-            .join(seen, Seq("user_id", "item"), "left_anti")
-          // new × old (the user's standing items) + new × new (a < b)
-          val nxo = fresh.as("n")
-            .join(seen.as("o"), col("n.user_id") === col("o.user_id"))
-            .select(least(col("n.item"), col("o.item")).as("item_a"),
-              greatest(col("n.item"), col("o.item")).as("item_b"))
-          val nxn = fresh.as("a")
-            .join(fresh.as("b"),
-              col("a.user_id") === col("b.user_id") && col("a.item") < col("b.item"))
-            .select(col("a.item").as("item_a"), col("b.item").as("item_b"))
-          val delta = nxo.union(nxn)
-            .groupBy("item_a", "item_b").agg(count(lit(1)).as("co"))
-          val nextCo = coSnapshot(spark, statePath)
-            .unionByName(delta)
-            .groupBy("item_a", "item_b").agg(sum("co").as("co"))
-          seen.unionByName(fresh).write.mode("overwrite").parquet(s"$dir/edges")
-          nextCo.write.mode("overwrite").parquet(s"$dir/co")
-        }
-      }
-      .start()
-  }
+      checkpoint: String): StreamingQuery =
+    ViewStore.maintainSnapshot(events, statePath, checkpoint) { batch =>
+      val spark = batch.sparkSession
+      val seen = edgesSnapshot(spark, statePath)
+      val fresh = batch.select(col("user_id").cast("long"),
+          col("item").cast("long")).distinct()
+        .join(seen, Seq("user_id", "item"), "left_anti")
+      // new × old (the user's standing items) + new × new (a < b)
+      val nxo = fresh.as("n")
+        .join(seen.as("o"), col("n.user_id") === col("o.user_id"))
+        .select(least(col("n.item"), col("o.item")).as("item_a"),
+          greatest(col("n.item"), col("o.item")).as("item_b"))
+      val nxn = fresh.as("a")
+        .join(fresh.as("b"),
+          col("a.user_id") === col("b.user_id") && col("a.item") < col("b.item"))
+        .select(col("a.item").as("item_a"), col("b.item").as("item_b"))
+      val delta = nxo.union(nxn)
+        .groupBy("item_a", "item_b").agg(count(lit(1)).as("co"))
+      val nextCo = coSnapshot(spark, statePath)
+        .unionByName(delta)
+        .groupBy("item_a", "item_b").agg(sum("co").as("co"))
+      Map("edges" -> seen.unionByName(fresh), "co" -> nextCo)
+    }
 
   /** Serve q242's scoring from the standing state: integer squared-
     * cosine lift `co²×10⁶ div (n_a·n_b)` over distinct-user counts,

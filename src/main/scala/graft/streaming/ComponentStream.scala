@@ -10,18 +10,18 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * O(arriving edges) plus ONE relabel pass over the assignment, never a
   * recompute over the standing edge set (q33's batch form).
   *
-  * Committed through [[GenState]]. At-least-once safety: foreachBatch
-  * can re-deliver a batch after its generation committed. Re-folding
-  * already-reflected edges collapses them to self-loops inside
+  * Committed through [[ViewStore.maintainSnapshot]]. At-least-once safety:
+  * foreachBatch can re-deliver a batch after its generation committed.
+  * Re-folding already-reflected edges collapses them to self-loops inside
   * `incrementalComponents` (a no-op), so replay converges to the same
-  * assignment; GenState's batchId guard also skips an exact re-delivery
-  * without reading the edges at all.
+  * assignment; its batchId guard also skips an exact re-delivery without
+  * reading the edges at all.
   */
 object ComponentStream {
 
   /** Read the current assignment snapshot (empty frame if none yet). */
   def assignment(spark: SparkSession, statePath: String): DataFrame =
-    GenState.read(spark, statePath) {
+    ViewStore.readSnapshot(spark, statePath).getOrElse {
       import spark.implicits._
       Seq.empty[(Long, Long)].toDF("id", "component_id")
     }
@@ -33,23 +33,11 @@ object ComponentStream {
       statePath: String,
       checkpoint: String,
       srcCol: String = "id_a",
-      dstCol: String = "id_b"): StreamingQuery = {
-    require(edges.isStreaming, "maintain expects a streaming DataFrame")
-    edges.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        GenState.advance(statePath, batch, batchId) { dir =>
-          val spark = batch.sparkSession
-          // the fold's checkpoints are the batch's query scope: freed once
-          // the generation is written, not held for the life of the stream
-          graft.ops.Materialize.scoped(spark) {
-            val next = graft.ops.Graph
-              .incrementalComponents(assignment(spark, statePath), batch, srcCol, dstCol)
-            next.write.mode("overwrite").parquet(dir)
-          }
-        }
-      }
-      .start()
-  }
+      dstCol: String = "id_b"): StreamingQuery =
+    // the fold's checkpoints are the batch's query scope: freed once the
+    // generation is written, not held for the life of the stream
+    ViewStore.maintainSnapshot(edges, statePath, checkpoint) { batch =>
+      Map(ViewStore.Snapshot -> graft.ops.Graph.incrementalComponents(
+        assignment(batch.sparkSession, statePath), batch, srcCol, dstCol))
+    }
 }

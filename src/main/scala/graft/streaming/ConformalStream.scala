@@ -20,15 +20,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * this alarm keeps its guarantee; one that doesn't is silently
   * shipping an invalid one.
   *
-  * Committed through [[GenState]]: addition is NOT idempotent, so its
-  * batchId guard is load-bearing, and the merge is commutative ⇒ counts
-  * are invariant to how the stream was batched (spec-pinned).
+  * Committed through [[ViewStore.maintainSnapshot]]: addition is NOT
+  * idempotent, so its batchId guard is load-bearing, and the merge is
+  * commutative ⇒ counts are invariant to how the stream was batched
+  * (spec-pinned).
   */
 object ConformalStream {
 
   /** Current (source, n_seen, n_covered) counts — empty if none. */
   def snapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.read(spark, statePath) {
+    ViewStore.readSnapshot(spark, statePath).getOrElse {
       import spark.implicits._
       Seq.empty[(String, Long, Long)].toDF("source", "n_seen", "n_covered")
     }
@@ -47,23 +48,15 @@ object ConformalStream {
     * with (`source`, `score`) columns, against the frozen `thrScore`. */
   def maintain(
       scored: DataFrame, thrScore: Long,
-      statePath: String, checkpoint: String): StreamingQuery = {
-    require(scored.isStreaming, "maintain expects a streaming DataFrame")
-    scored.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        GenState.advance(statePath, batch, batchId) { dir =>
-          val spark = batch.sparkSession
-          val next = snapshot(spark, statePath)
-            .unionByName(coverageDelta(batch, thrScore))
-            .groupBy("source")
-            .agg(sum("n_seen").as("n_seen"), sum("n_covered").as("n_covered"))
-          next.write.mode("overwrite").parquet(dir)
-        }
-      }
-      .start()
-  }
+      statePath: String, checkpoint: String): StreamingQuery =
+    ViewStore.maintainSnapshot(scored, statePath, checkpoint) { batch =>
+      val spark = batch.sparkSession
+      val next = snapshot(spark, statePath)
+        .unionByName(coverageDelta(batch, thrScore))
+        .groupBy("source")
+        .agg(sum("n_seen").as("n_seen"), sum("n_covered").as("n_covered"))
+      Map(ViewStore.Snapshot -> next)
+    }
 
   /** Per-source empirical coverage ×10⁴ and the drift alarm: covered
     * share below `targetX10k − slackX10k` with at least `minSeen`

@@ -13,7 +13,7 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * canonical thing to watch continuously: by the time a batch audit
   * runs, the poisoned rows have already joined.
   *
-  * Committed through [[GenState]]; counts are additive (NOT
+  * Committed through [[ViewStore.maintainSnapshot]]; counts are additive (NOT
   * idempotent), so its batchId guard is load-bearing, while the MIN
   * component would be idempotent on its own — the guard protects the
   * pair.
@@ -22,7 +22,7 @@ object ContractStream {
 
   /** Current per-group (n_lines, n_violations, min_lag) state. */
   def snapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.read(spark, statePath) {
+    ViewStore.readSnapshot(spark, statePath).getOrElse {
       import spark.implicits._
       Seq.empty[(String, Long, Long, Long)]
         .toDF("g", "n_lines", "n_violations", "min_lag_days")
@@ -41,26 +41,18 @@ object ContractStream {
   def maintain(
       rows: DataFrame,
       statePath: String,
-      checkpoint: String): StreamingQuery = {
-    require(rows.isStreaming, "maintain expects a streaming DataFrame")
-    rows.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        GenState.advance(statePath, batch, batchId) { dir =>
-          val spark = batch.sparkSession
-          val delta = batch.groupBy("g")
-            .agg(count(lit(1)).as("n_lines"),
-              sum(when(col("lag_days") < 0, 1L).otherwise(0L)).as("n_violations"),
-              min("lag_days").as("min_lag_days"))
-          val next = snapshot(spark, statePath).unionByName(delta)
-            .groupBy("g")
-            .agg(sum("n_lines").as("n_lines"),
-              sum("n_violations").as("n_violations"),
-              min("min_lag_days").as("min_lag_days"))
-          next.write.mode("overwrite").parquet(dir)
-        }
-      }
-      .start()
-  }
+      checkpoint: String): StreamingQuery =
+    ViewStore.maintainSnapshot(rows, statePath, checkpoint) { batch =>
+      val spark = batch.sparkSession
+      val delta = batch.groupBy("g")
+        .agg(count(lit(1)).as("n_lines"),
+          sum(when(col("lag_days") < 0, 1L).otherwise(0L)).as("n_violations"),
+          min("lag_days").as("min_lag_days"))
+      val next = snapshot(spark, statePath).unionByName(delta)
+        .groupBy("g")
+        .agg(sum("n_lines").as("n_lines"),
+          sum("n_violations").as("n_violations"),
+          min("min_lag_days").as("min_lag_days"))
+      Map(ViewStore.Snapshot -> next)
+    }
 }

@@ -14,14 +14,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * cutoff-relative features from THIS table's semantics at corpus
   * scale.
   *
-  * Committed through [[GenState]]: sum-folding is NOT idempotent, so
-  * its batchId guard is load-bearing (spec-pinned).
+  * Committed through [[ViewStore.maintainSnapshot]]: sum-folding is NOT
+  * idempotent, so its batchId guard is load-bearing (spec-pinned).
   */
 object FeatureStoreStream {
 
   /** Current per-user counters (empty, correctly-shaped if none). */
   def snapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.read(spark, statePath) {
+    ViewStore.readSnapshot(spark, statePath).getOrElse {
       import spark.implicits._
       Seq.empty[(Long, Long, Long, Long)]
         .toDF("user_id", "n_events", "first_day", "last_day")
@@ -45,18 +45,10 @@ object FeatureStoreStream {
         max("last_day").as("last_day"))
 
   /** Maintain the counters from a STREAMING (user_id, day) frame. */
-  def maintain(ev: DataFrame, statePath: String, checkpoint: String): StreamingQuery = {
-    require(ev.isStreaming, "maintain expects a streaming DataFrame")
-    ev.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        GenState.advance(statePath, batch, batchId) { dir =>
-          val spark = batch.sparkSession
-          val next = merge(snapshot(spark, statePath), delta(batch))
-          next.write.mode("overwrite").parquet(dir)
-        }
-      }
-      .start()
-  }
+  def maintain(ev: DataFrame, statePath: String, checkpoint: String): StreamingQuery =
+    ViewStore.maintainSnapshot(ev, statePath, checkpoint) { batch =>
+      val spark = batch.sparkSession
+      val next = merge(snapshot(spark, statePath), delta(batch))
+      Map(ViewStore.Snapshot -> next)
+    }
 }

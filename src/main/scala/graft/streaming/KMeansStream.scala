@@ -24,14 +24,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * pins determinism and assignment-consistency, not split
   * invariance).
   *
-  * Committed through [[GenState]]; addition is not idempotent, so its
-  * batchId guard is load-bearing.
+  * Committed through [[ViewStore.maintainSnapshot]]; addition is not
+  * idempotent, so its batchId guard is load-bearing.
   */
 object KMeansStream {
 
   /** Current accumulators `(cluster, pos, s, n)` — empty if none. */
   def accSnapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.read(spark, statePath) {
+    ViewStore.readSnapshot(spark, statePath).getOrElse {
       import spark.implicits._
       Seq.empty[(Long, Int, Long, Long)].toDF("cluster", "pos", "s", "n")
     }
@@ -71,25 +71,17 @@ object KMeansStream {
 
   /** Maintain centroids from a STREAMING (vec_id, embedding) frame. */
   def maintain(vecs: DataFrame, statePath: String, checkpoint: String,
-      k: Int): StreamingQuery = {
-    require(vecs.isStreaming, "maintain expects a streaming DataFrame")
-    vecs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        GenState.advance(statePath, batch, batchId) { dir =>
-          val spark = batch.sparkSession
-          val haveState = GenState.currentGen(statePath).isDefined
-          val cents =
-            if (haveState) centroids(spark, statePath)
-            else graft.ops.KMeans.lloydCentroids(batch, k, rounds = 1)
-          val next = accSnapshot(spark, statePath)
-            .unionByName(assignDelta(batch, cents))
-            .groupBy("cluster", "pos")
-            .agg(sum("s").as("s"), sum("n").as("n"))
-          next.write.mode("overwrite").parquet(dir)
-        }
-      }
-      .start()
-  }
+      k: Int): StreamingQuery =
+    ViewStore.maintainSnapshot(vecs, statePath, checkpoint) { batch =>
+      val spark = batch.sparkSession
+      val haveState = ViewStore.readSnapshot(spark, statePath).isDefined
+      val cents =
+        if (haveState) centroids(spark, statePath)
+        else graft.ops.KMeans.lloydCentroids(batch, k, rounds = 1)
+      val next = accSnapshot(spark, statePath)
+        .unionByName(assignDelta(batch, cents))
+        .groupBy("cluster", "pos")
+        .agg(sum("s").as("s"), sum("n").as("n"))
+      Map(ViewStore.Snapshot -> next)
+    }
 }

@@ -9,15 +9,16 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * union → re-bottom-k — bottom-k sketches are MERGEABLE and the merge
   * is IDEMPOTENT (re-delivering the same hashes cannot change a set
   * minimum), so unlike [[SprtStream]]'s additive fold the batchId guard
-  * of [[GenState]], which commits it, only saves the rewrite of an exact
-  * replay. State is ≤ k rows per group at any corpus size, and any
-  * moment's snapshot yields the exact q371 estimator (k−1)·2⁶⁰ div h₍ₖ₎.
+  * of [[ViewStore.maintainSnapshot]], which commits it, only saves the
+  * rewrite of an exact replay. State is ≤ k rows per group at any corpus
+  * size, and any moment's snapshot yields the exact q371 estimator
+  * (k−1)·2⁶⁰ div h₍ₖ₎.
   */
 object KmvStream {
 
   /** Current (group, h) bottom-k state (empty frame if none). */
   def snapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.read(spark, statePath) {
+    ViewStore.readSnapshot(spark, statePath).getOrElse {
       import spark.implicits._
       Seq.empty[(String, Long)].toDF("g", "h")
     }
@@ -51,19 +52,11 @@ object KmvStream {
       hashes: DataFrame,
       statePath: String,
       checkpoint: String,
-      k: Int): StreamingQuery = {
-    require(hashes.isStreaming, "maintain expects a streaming DataFrame")
-    hashes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        GenState.advance(statePath, batch, batchId) { dir =>
-          val spark = batch.sparkSession
-          val next = bottomK(
-            snapshot(spark, statePath).unionByName(batch.select("g", "h")), k)
-          next.write.mode("overwrite").parquet(dir)
-        }
-      }
-      .start()
-  }
+      k: Int): StreamingQuery =
+    ViewStore.maintainSnapshot(hashes, statePath, checkpoint) { batch =>
+      val spark = batch.sparkSession
+      val next = bottomK(
+        snapshot(spark, statePath).unionByName(batch.select("g", "h")), k)
+      Map(ViewStore.Snapshot -> next)
+    }
 }

@@ -18,15 +18,15 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * batch.
   *
   * State = the current histogram (bounded by |sources| × |length
-  * domain|), committed through [[GenState]], whose batchId guard is
-  * load-bearing (cell addition is not idempotent). The spec pins stream
-  * ≡ batch under uneven splits and the redelivery guard.
+  * domain|), committed through [[ViewStore.maintainSnapshot]], whose
+  * batchId guard is load-bearing (cell addition is not idempotent). The
+  * spec pins stream ≡ batch under uneven splits and the redelivery guard.
   */
 object KsDriftStream {
 
   /** Standing (source, n_chars, cnt) histogram (empty if none yet). */
   def histSnapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.read(spark, statePath) {
+    ViewStore.readSnapshot(spark, statePath).getOrElse {
       import spark.implicits._
       Seq.empty[(String, Long, Long)].toDF("source", "n_chars", "cnt")
     }
@@ -36,25 +36,17 @@ object KsDriftStream {
   def maintain(
       docs: DataFrame,
       statePath: String,
-      checkpoint: String): StreamingQuery = {
-    require(docs.isStreaming, "maintain expects a streaming DataFrame")
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        GenState.advance(statePath, batch, batchId) { dir =>
-          val spark = batch.sparkSession
-          val delta = batch
-            .select(col("source"), col("n_chars").cast("long"))
-            .groupBy("source", "n_chars").agg(count(lit(1)).as("cnt"))
-          val next = histSnapshot(spark, statePath)
-            .unionByName(delta)
-            .groupBy("source", "n_chars").agg(sum("cnt").as("cnt"))
-          next.write.mode("overwrite").parquet(dir)
-        }
-      }
-      .start()
-  }
+      checkpoint: String): StreamingQuery =
+    ViewStore.maintainSnapshot(docs, statePath, checkpoint) { batch =>
+      val spark = batch.sparkSession
+      val delta = batch
+        .select(col("source"), col("n_chars").cast("long"))
+        .groupBy("source", "n_chars").agg(count(lit(1)).as("cnt"))
+      val next = histSnapshot(spark, statePath)
+        .unionByName(delta)
+        .groupBy("source", "n_chars").agg(sum("cnt").as("cnt"))
+      Map(ViewStore.Snapshot -> next)
+    }
 
   /** Exact two-sample KS of the standing histogram against a frozen
     * reference histogram `(source, n_chars, cnt)`: per source,

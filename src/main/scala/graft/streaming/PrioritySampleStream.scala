@@ -13,13 +13,13 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * everything seen so far — order of arrival, batch splits, and replays
   * cannot change it (re-delivered ids dedup by id before the take).
   *
-  * Committed through [[GenState]].
+  * Committed through [[ViewStore.maintainSnapshot]].
   */
 object PrioritySampleStream {
 
   /** Current sample snapshot `(id, weight, priority)` (empty if none). */
   def current(spark: SparkSession, statePath: String): DataFrame =
-    GenState.read(spark, statePath) {
+    ViewStore.readSnapshot(spark, statePath).getOrElse {
       import spark.implicits._
       Seq.empty[(Long, Long, Long)].toDF("id", "weight", "priority")
     }
@@ -47,24 +47,16 @@ object PrioritySampleStream {
       statePath: String,
       checkpoint: String,
       idCol: String = "doc_id",
-      weightCol: String = "weight"): StreamingQuery = {
-    require(docs.isStreaming, "sample expects a streaming DataFrame")
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        GenState.advance(statePath, batch, batchId) { dir =>
-          val spark = batch.sparkSession
-          val scored = batch
-            .select(col(idCol).cast("long").as("id"),
-              col(weightCol).cast("long").as("weight"))
-            .withColumn("priority", priorityExpr(seed, "id", "weight"))
-          val next = current(spark, statePath).unionByName(scored)
-            .groupBy("id").agg(max("weight").as("weight"), max("priority").as("priority"))
-            .orderBy(col("priority").desc, col("id")).limit(k)
-          next.write.mode("overwrite").parquet(dir)
-        }
-      }
-      .start()
-  }
+      weightCol: String = "weight"): StreamingQuery =
+    ViewStore.maintainSnapshot(docs, statePath, checkpoint) { batch =>
+      val spark = batch.sparkSession
+      val scored = batch
+        .select(col(idCol).cast("long").as("id"),
+          col(weightCol).cast("long").as("weight"))
+        .withColumn("priority", priorityExpr(seed, "id", "weight"))
+      val next = current(spark, statePath).unionByName(scored)
+        .groupBy("id").agg(max("weight").as("weight"), max("priority").as("priority"))
+        .orderBy(col("priority").desc, col("id")).limit(k)
+      Map(ViewStore.Snapshot -> next)
+    }
 }

@@ -16,9 +16,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * throughput metrics: accuracy sliding off means the upstream corpus
   * moved, not that Spark broke.
   *
-  * Committed through [[GenState]]: addition is NOT idempotent, so its
-  * batchId guard is load-bearing, and the merge is commutative ⇒ counts
-  * are invariant to how the stream was batched (spec-pinned).
+  * Committed through [[ViewStore.maintainSnapshot]]: addition is NOT
+  * idempotent, so its batchId guard is load-bearing, and the merge is
+  * commutative ⇒ counts are invariant to how the stream was batched
+  * (spec-pinned).
   */
 object QualityMonitorStream {
 
@@ -27,7 +28,7 @@ object QualityMonitorStream {
     * explicit cast), so the state schema is identical whether or not
     * the first batch was empty and for any incoming label type. */
   def snapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.read(spark, statePath) {
+    ViewStore.readSnapshot(spark, statePath).getOrElse {
       import spark.implicits._
       Seq.empty[(String, Long, Long, Long)].toDF("label", "n_true", "tp", "n_pred")
     }
@@ -53,24 +54,16 @@ object QualityMonitorStream {
 
   /** Maintain the running confusion counts from a STREAMING frame with
     * (`true_label`, `pred_label`) columns. */
-  def maintain(pairs: DataFrame, statePath: String, checkpoint: String): StreamingQuery = {
-    require(pairs.isStreaming, "maintain expects a streaming DataFrame")
-    pairs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        GenState.advance(statePath, batch, batchId) { dir =>
-          val spark = batch.sparkSession
-          val next = snapshot(spark, statePath)
-            .unionByName(confusionDelta(batch))
-            .groupBy("label")
-            .agg(sum("n_true").as("n_true"), sum("tp").as("tp"),
-              sum("n_pred").as("n_pred"))
-          next.write.mode("overwrite").parquet(dir)
-        }
-      }
-      .start()
-  }
+  def maintain(pairs: DataFrame, statePath: String, checkpoint: String): StreamingQuery =
+    ViewStore.maintainSnapshot(pairs, statePath, checkpoint) { batch =>
+      val spark = batch.sparkSession
+      val next = snapshot(spark, statePath)
+        .unionByName(confusionDelta(batch))
+        .groupBy("label")
+        .agg(sum("n_true").as("n_true"), sum("tp").as("tp"),
+          sum("n_pred").as("n_pred"))
+      Map(ViewStore.Snapshot -> next)
+    }
 
   /** Per-class P/R/F1 ×10⁴ (q184's integer arithmetic) of everything
     * scored so far, from the snapshot alone. */

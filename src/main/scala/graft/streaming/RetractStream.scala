@@ -22,14 +22,14 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * commutative, so any batch split of the same change set folds to the
   * same totals (spec-pinned).
   *
-  * Committed through [[GenState]]: addition is not idempotent, so its
-  * batchId guard is load-bearing.
+  * Committed through [[ViewStore.maintainSnapshot]]: addition is not
+  * idempotent, so its batchId guard is load-bearing.
   */
 object RetractStream {
 
   /** Current per-key net counts (empty, correctly-shaped if none). */
   def totals(spark: SparkSession, statePath: String): DataFrame =
-    GenState.read(spark, statePath) {
+    ViewStore.readSnapshot(spark, statePath).getOrElse {
       import spark.implicits._
       Seq.empty[(String, Long)].toDF("k", "net")
     }
@@ -41,24 +41,16 @@ object RetractStream {
       statePath: String,
       checkpoint: String,
       opCol: String = "op",
-      keyCol: String = "k"): StreamingQuery = {
-    require(changes.isStreaming, "maintain expects a streaming DataFrame")
-    changes.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        GenState.advance(statePath, batch, batchId) { dir =>
-          val spark = batch.sparkSession
-          val delta = batch
-            .filter(col(opCol).isin("c", "d"))
-            .groupBy(col(keyCol).cast("string").as("k"))
-            .agg(sum(when(col(opCol) === "c", 1L).otherwise(-1L)).as("net"))
-          val next = totals(spark, statePath).unionByName(delta)
-            .groupBy("k").agg(sum("net").cast("long").as("net"))
-            .filter(col("net") =!= 0L)
-          next.write.mode("overwrite").parquet(dir)
-        }
-      }
-      .start()
-  }
+      keyCol: String = "k"): StreamingQuery =
+    ViewStore.maintainSnapshot(changes, statePath, checkpoint) { batch =>
+      val spark = batch.sparkSession
+      val delta = batch
+        .filter(col(opCol).isin("c", "d"))
+        .groupBy(col(keyCol).cast("string").as("k"))
+        .agg(sum(when(col(opCol) === "c", 1L).otherwise(-1L)).as("net"))
+      val next = totals(spark, statePath).unionByName(delta)
+        .groupBy("k").agg(sum("net").cast("long").as("net"))
+        .filter(col("net") =!= 0L)
+      Map(ViewStore.Snapshot -> next)
+    }
 }

@@ -18,9 +18,9 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * Re-delivery: HLL insertion is SET-like (re-adding a seen user is a
   * no-op), so duplicated events across batches cannot inflate the
   * estimate — union-idempotence makes the store safe under at-least-once
-  * delivery by construction. The batchId guard of [[GenState]], which
-  * commits it, still skips exact replays so crash-looping on one batch
-  * does no wasted writes.
+  * delivery by construction. The batchId guard of
+  * [[ViewStore.maintainSnapshot]], which commits it, still skips exact
+  * replays so crash-looping on one batch does no wasted writes.
   *
   * Reference scale framing: the CDC consumer's per-day activity tiles
   * (`EcommerceTransactionsLogEventsStream.kt`-fed views) at 100 TB —
@@ -30,7 +30,7 @@ object RollingDistinctStream {
 
   /** Current (day, sk) snapshot — empty, correctly-shaped if none. */
   def snapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.read(spark, statePath) {
+    ViewStore.readSnapshot(spark, statePath).getOrElse {
       import org.apache.spark.sql.types._
       spark.createDataFrame(
         spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -39,26 +39,18 @@ object RollingDistinctStream {
 
   /** Maintain the daily sketch table from a STREAMING frame with
     * (`user_id`, `ts_ms`) columns. */
-  def maintain(events: DataFrame, statePath: String, checkpoint: String): StreamingQuery = {
-    require(events.isStreaming, "maintain expects a streaming DataFrame")
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        GenState.advance(statePath, batch, batchId) { dir =>
-          val spark = batch.sparkSession
-          val delta = batch
-            .select(expr("ts_ms div 86400000").as("day"), col("user_id"))
-            .groupBy("day")
-            .agg(expr("hll_sketch_agg(user_id)").as("sk"))
-          val next = snapshot(spark, statePath).unionByName(delta)
-            .groupBy("day")
-            .agg(expr("hll_union_agg(sk)").as("sk"))
-          next.write.mode("overwrite").parquet(dir)
-        }
-      }
-      .start()
-  }
+  def maintain(events: DataFrame, statePath: String, checkpoint: String): StreamingQuery =
+    ViewStore.maintainSnapshot(events, statePath, checkpoint) { batch =>
+      val spark = batch.sparkSession
+      val delta = batch
+        .select(expr("ts_ms div 86400000").as("day"), col("user_id"))
+        .groupBy("day")
+        .agg(expr("hll_sketch_agg(user_id)").as("sk"))
+      val next = snapshot(spark, statePath).unionByName(delta)
+        .groupBy("day")
+        .agg(expr("hll_union_agg(sk)").as("sk"))
+      Map(ViewStore.Snapshot -> next)
+    }
 
   /** The tile: per observed day, the estimated distinct users in the
     * trailing `windowDays` ending that day — ≤ `windowDays` sketch

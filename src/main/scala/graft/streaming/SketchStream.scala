@@ -12,14 +12,14 @@ import graft.ops.CountMin
   * history. Any moment's snapshot answers frequency estimates over
   * EVERYTHING ingested so far ([[CountMin.estimate]]).
   *
-  * Committed through [[GenState]]: cell addition is NOT idempotent, so
-  * its batchId guard is load-bearing (the spec pins it).
+  * Committed through [[ViewStore.maintainSnapshot]]: cell addition is NOT
+  * idempotent, so its batchId guard is load-bearing (the spec pins it).
   */
 object SketchStream {
 
   /** Current sketch snapshot (empty, correctly-shaped frame if none). */
   def cellsSnapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.read(spark, statePath) {
+    ViewStore.readSnapshot(spark, statePath).getOrElse {
       import spark.implicits._
       Seq.empty[(Int, Long, Long)].toDF("r", "bucket", "cell")
     }
@@ -32,20 +32,12 @@ object SketchStream {
       checkpoint: String,
       tokenCol: String = "token",
       depth: Int = CountMin.DefaultDepth,
-      width: Long = CountMin.DefaultWidth): StreamingQuery = {
-    require(toks.isStreaming, "maintain expects a streaming DataFrame")
-    toks.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        GenState.advance(statePath, batch, batchId) { dir =>
-          val spark = batch.sparkSession
-          val next = CountMin.merge(
-            cellsSnapshot(spark, statePath),
-            CountMin.cells(batch, tokenCol, depth, width))
-          next.write.mode("overwrite").parquet(dir)
-        }
-      }
-      .start()
-  }
+      width: Long = CountMin.DefaultWidth): StreamingQuery =
+    ViewStore.maintainSnapshot(toks, statePath, checkpoint) { batch =>
+      val spark = batch.sparkSession
+      val next = CountMin.merge(
+        cellsSnapshot(spark, statePath),
+        CountMin.cells(batch, tokenCol, depth, width))
+      Map(ViewStore.Snapshot -> next)
+    }
 }

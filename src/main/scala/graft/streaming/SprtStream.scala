@@ -15,14 +15,14 @@ import graft.queries.IsotonicQueries
   * crossed, so the stream form is the production shape and the batch
   * form is its audit.
   *
-  * Committed through [[GenState]]: per-day addition is NOT idempotent,
-  * so its batchId guard is load-bearing (spec-pinned).
+  * Committed through [[ViewStore.maintainSnapshot]]: per-day addition is
+  * NOT idempotent, so its batchId guard is load-bearing (spec-pinned).
   */
 object SprtStream {
 
   /** Current per-day (n_trials, n_succ) state (empty frame if none). */
   def daysSnapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.read(spark, statePath) {
+    ViewStore.readSnapshot(spark, statePath).getOrElse {
       import spark.implicits._
       Seq.empty[(Long, Long, Long)].toDF("day", "n_trials", "n_succ")
     }
@@ -50,23 +50,15 @@ object SprtStream {
   def maintain(
       events: DataFrame,
       statePath: String,
-      checkpoint: String): StreamingQuery = {
-    require(events.isStreaming, "maintain expects a streaming DataFrame")
-    events.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        GenState.advance(statePath, batch, batchId) { dir =>
-          val spark = batch.sparkSession
-          val delta = batch.groupBy("day")
-            .agg(count(lit(1)).as("n_trials"), sum("is_succ").as("n_succ"))
-          val next = daysSnapshot(spark, statePath)
-            .unionByName(delta)
-            .groupBy("day")
-            .agg(sum("n_trials").as("n_trials"), sum("n_succ").as("n_succ"))
-          next.write.mode("overwrite").parquet(dir)
-        }
-      }
-      .start()
-  }
+      checkpoint: String): StreamingQuery =
+    ViewStore.maintainSnapshot(events, statePath, checkpoint) { batch =>
+      val spark = batch.sparkSession
+      val delta = batch.groupBy("day")
+        .agg(count(lit(1)).as("n_trials"), sum("is_succ").as("n_succ"))
+      val next = daysSnapshot(spark, statePath)
+        .unionByName(delta)
+        .groupBy("day")
+        .agg(sum("n_trials").as("n_trials"), sum("n_succ").as("n_succ"))
+      Map(ViewStore.Snapshot -> next)
+    }
 }

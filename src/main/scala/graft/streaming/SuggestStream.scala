@@ -15,39 +15,31 @@ import graft.functions.TextFunctions._
   * every search box reads is thus never rebuilt from the corpus: state
   * is |vocab| rows regardless of how many documents streamed through.
   *
-  * Committed through [[GenState]]. Addition is NOT idempotent ⇒ its
-  * batchId guard is load-bearing; the merge is commutative ⇒ counts
-  * are invariant to batching (spec-pinned, the X207 contract).
+  * Committed through [[ViewStore.maintainSnapshot]]. Addition is NOT
+  * idempotent ⇒ its batchId guard is load-bearing; the merge is commutative
+  * ⇒ counts are invariant to batching (spec-pinned, the X207 contract).
   */
 object SuggestStream {
 
   /** Current (token, freq) vocabulary — empty if none. */
   def snapshot(spark: SparkSession, statePath: String): DataFrame =
-    GenState.read(spark, statePath) {
+    ViewStore.readSnapshot(spark, statePath).getOrElse {
       import spark.implicits._
       Seq.empty[(String, Long)].toDF("token", "freq")
     }
 
   /** Maintain the vocabulary from a STREAMING frame with a `text`
     * column. */
-  def maintain(docs: DataFrame, statePath: String, checkpoint: String): StreamingQuery = {
-    require(docs.isStreaming, "maintain expects a streaming DataFrame")
-    docs.writeStream
-      .outputMode("append")
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        GenState.advance(statePath, batch, batchId) { dir =>
-          val spark = batch.sparkSession
-          val delta = batch
-            .select(explode(wsTokens(normalizeText(col("text")))).as("token"))
-            .groupBy("token").agg(count(lit(1)).as("freq"))
-          val next = snapshot(spark, statePath).unionByName(delta)
-            .groupBy("token").agg(sum("freq").as("freq"))
-          next.write.mode("overwrite").parquet(dir)
-        }
-      }
-      .start()
-  }
+  def maintain(docs: DataFrame, statePath: String, checkpoint: String): StreamingQuery =
+    ViewStore.maintainSnapshot(docs, statePath, checkpoint) { batch =>
+      val spark = batch.sparkSession
+      val delta = batch
+        .select(explode(wsTokens(normalizeText(col("text")))).as("token"))
+        .groupBy("token").agg(count(lit(1)).as("freq"))
+      val next = snapshot(spark, statePath).unionByName(delta)
+        .groupBy("token").agg(sum("freq").as("freq"))
+      Map(ViewStore.Snapshot -> next)
+    }
 
   /** The q201 suggest table (top `k` completions per prefix of length
     * 1..`maxPrefix`) derived from the current snapshot. */

@@ -14,12 +14,18 @@ import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, Pa
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types.StructType
+
+import graft.ops.Materialize
 
 /** Hash-bucketed, manifest-pointed parquet view store — the plain-parquet
   * stand-in for a transactional MERGE INTO sink (no Delta/Iceberg jar is
-  * guaranteed on the classpath, SURVEY.md §7). Fixes the three round-1
-  * sink findings at once (VERDICT #6, ADVICE #1/#2):
+  * guaranteed on the classpath, SURVEY.md §7) — and the one owner of
+  * generation dirs, manifests, the batchId replay guard, the flip and GC
+  * for every streaming store, keyed views and snapshot maintainers alike.
+  * Fixes the three round-1 sink findings at once (VERDICT #6, ADVICE
+  * #1/#2):
   *
   *  - '''Partitioned rewrite''': rows hash into `NumBuckets` buckets by
   *    key; a micro-batch rewrites ONLY the buckets its keys fall into.
@@ -28,8 +34,10 @@ import org.apache.spark.sql.types.StructType
   *    table-format MERGE INTO would take).
   *  - '''Atomic swap, no zero-copy window''': data files are immutable
   *    generation dirs (`gen-<batchId>/__bucket=N`); the live state is a
-  *    tiny `MANIFEST-<seq>` pointer file mapping bucket → dir, written to
-  *    a temp name and renamed in. Readers resolve the highest manifest;
+  *    tiny `MANIFEST-<seq>` pointer file mapping entry → dir, written to
+  *    a temp name and renamed in. A keyed view's entries are its buckets;
+  *    a snapshot's are its parts (`gen-<batchId>/<part>`, each one table
+  *    rewritten whole per batch). Readers resolve the highest manifest;
   *    at every instant at least one complete manifest + its dirs exist.
   *  - '''Replay idempotence''': the manifest records the last applied
   *    foreachBatch batchId; re-delivery of a committed batch (failure
@@ -38,9 +46,12 @@ import org.apache.spark.sql.types.StructType
   *    double-merged. [[mergeKeyed]] is the one foreachBatch commit
   *    protocol every keyed view (CdcStream, AggViewStream, EventsView,
   *    CurationStream) runs: replay check, touched-bucket read, the
-  *    caller's combine, generation write and flip.
+  *    caller's combine, generation write and flip. [[maintainSnapshot]]
+  *    runs the same protocol for the snapshot maintainers (SketchStream,
+  *    ComponentStream, CoEngageStream, ...) with the caller's step in
+  *    place of the combine; [[readSnapshot]] reads their parts back.
   *  - '''The manifest is the file index''': a read never asks Spark to
-  *    discover the view. The manifest names the live bucket dirs; a read
+  *    discover the view. The manifest names the live dirs; a read
   *    lists only those, on the driver, takes the schema from one file's
   *    footer and hands Spark the files as a [[FileIndex]]. Building a
   *    read runs no Spark job (no parallel listing, no schema inference)
@@ -61,8 +72,8 @@ object ViewStore {
 
   /** Deterministic bucket of a key: stable across engines, sessions and
     * retries (xxhash64 is a fixed algorithm, not a session-seeded hash). */
-  def bucketOf(key: Column, numBuckets: Int = NumBuckets): Column =
-    pmod(xxhash64(key), lit(numBuckets.toLong))
+  def bucketOf(key: Column): Column =
+    pmod(xxhash64(key), lit(NumBuckets.toLong))
 
   /** The partition column a generation is written with; a read lists the
     * leaf dirs, so rows come back without it. */
@@ -82,8 +93,15 @@ object ViewStore {
   }
 
   /** The live pointer state: manifest sequence number, last applied
-    * foreachBatch id, bucket → dir (relative to the view root). */
-  case class Manifest(seq: Long, lastBatchId: Long, buckets: Map[Int, String])
+    * foreachBatch id, entry → dir (relative to the store root). A keyed
+    * view's entries are its bucket numbers, a snapshot's its part names. */
+  case class Manifest(seq: Long, lastBatchId: Long, entries: Map[String, String]) {
+    /** A keyed view's entries by bucket number. */
+    def buckets: Map[Int, String] = entries.map { case (b, rel) => b.toInt -> rel }
+  }
+
+  /** The part of a snapshot maintainer that keeps one table. */
+  val Snapshot = "snapshot"
 
   private def fs(spark: SparkSession, path: String): FileSystem =
     FileSystem.get(new URI(path), spark.sparkContext.hadoopConfiguration)
@@ -96,11 +114,22 @@ object ViewStore {
     * plain-parquet form of table-format snapshot retention. */
   val RetainManifests = 3
 
+  /** The pointer file of the snapshot format that kept no manifest
+    * (`<batchId>:<gen>`). Nothing reads it any more. */
+  private val LegacyPointer = "_CURRENT"
+
+  /** The store's manifests, oldest first. A store that holds only a
+    * [[LegacyPointer]] is refused: read as empty, it would drop its
+    * history while the stream's checkpoint resumes past it. */
   private def manifestSeqs(f: FileSystem, root: Path): Seq[(Long, String)] = {
     if (!f.exists(root)) return Seq.empty
-    f.listStatus(root).map(_.getPath.getName).collect {
-      case n @ ManifestRe(seq) => (seq.toLong, n)
-    }.toSeq.sortBy(_._1)
+    val names = f.listStatus(root).map(_.getPath.getName)
+    val seqs = names.collect { case n @ ManifestRe(seq) => (seq.toLong, n) }.toSeq.sortBy(_._1)
+    if (seqs.isEmpty && names.contains(LegacyPointer))
+      throw new IllegalStateException(
+        s"$root holds snapshot state in the `$LegacyPointer` pointer format, which is no " +
+          "longer read: restart the stream from a fresh state path and a fresh checkpoint")
+    seqs
   }
 
   private def parseManifest(f: FileSystem, root: Path, seq: Long, name: String): Manifest = {
@@ -108,11 +137,11 @@ object ViewStore {
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
     val lines = text.split("\n").filter(_.nonEmpty)
     val batchId = lines.head.stripPrefix("batchId=").toLong
-    val buckets = lines.tail.map { l =>
-      val Array(b, rel) = l.split("=", 2)
-      b.toInt -> rel
+    val entries = lines.tail.map { l =>
+      val Array(e, rel) = l.split("=", 2)
+      e -> rel
     }.toMap
-    Manifest(seq, batchId, buckets)
+    Manifest(seq, batchId, entries)
   }
 
   def readManifest(spark: SparkSession, viewPath: String): Option[Manifest] = {
@@ -163,7 +192,7 @@ object ViewStore {
     val f = fs(spark, viewPath)
     val root = new Path(viewPath)
     manifestSeqs(f, root).find(_._1 == seq).flatMap { case (s, name) =>
-      relation(spark, viewPath, parseManifest(f, root, s, name).buckets.values)
+      relation(spark, viewPath, parseManifest(f, root, s, name).entries.values)
     }
   }
 
@@ -172,7 +201,7 @@ object ViewStore {
 
   /** The whole view (all live buckets), or None if never written. */
   def read(spark: SparkSession, viewPath: String): Option[DataFrame] =
-    readManifest(spark, viewPath).flatMap(m => relation(spark, viewPath, m.buckets.values))
+    readManifest(spark, viewPath).flatMap(m => relation(spark, viewPath, m.entries.values))
 
   /** Only the named buckets' current rows (None if none of them exist). */
   private[streaming] def readBuckets(
@@ -181,7 +210,7 @@ object ViewStore {
 
   private def bucketsOf(
       spark: SparkSession, viewPath: String, m: Manifest, touched: Seq[Int]): Option[DataFrame] =
-    relation(spark, viewPath, touched.flatMap(m.buckets.get))
+    relation(spark, viewPath, touched.flatMap(b => m.entries.get(b.toString)))
 
   /** The parquet files of the bucket dirs `rels` as a DataFrame, or None
     * if they hold no file. The dirs are listed here, on the driver, and
@@ -254,45 +283,92 @@ object ViewStore {
     incoming.persist()
     try {
       val touched = touchedBuckets(incoming, keyCol)
-      publish(spark, viewPath, writeGen(spark, viewPath, prior, s"gen-$batchId", touched, batchId) {
-        bucketed(combine(prior.flatMap(bucketsOf(spark, viewPath, _, touched))), keyCol)
-      })
+      publish(spark, viewPath,
+        writeGen(spark, viewPath, prior, s"gen-$batchId", touched.map(_.toString), batchId) {
+          writeBuckets(bucketed(combine(prior.flatMap(bucketsOf(spark, viewPath, _, touched))), keyCol), _)
+        })
     } finally incoming.unpersist()
   }
 
-  /** Land `merged` (carrying a `__bucket` column covering exactly the
-    * `touched` buckets) as generation `gen-<batchId>` and flip the
-    * manifest to it. */
-  private[streaming] def commit(
-      spark: SparkSession,
-      viewPath: String,
-      merged: DataFrame,
-      touched: Seq[Int],
-      batchId: Long): Unit =
-    publish(spark, viewPath,
-      writeGen(spark, viewPath, readManifest(spark, viewPath), s"gen-$batchId", touched, batchId)(merged))
+  /** A snapshot maintainer: the stream of `input`, each batch of which
+    * commits the maintainer's next snapshot under `statePath`:
+    *
+    *  1. a batchId the manifest already records is skipped, so a fold
+    *     that is not idempotent (addition) never applies a batch twice;
+    *  1. `step` maps the batch to the next snapshot's parts (part name →
+    *     rows; a single table is the one part [[Snapshot]]), reading the
+    *     current ones with [[readSnapshot]];
+    *  1. the parts land as generation `gen-<batchId>` and the manifest
+    *     flips to all of them at once, recording `batchId`.
+    *
+    * An empty batch calls no `step` and writes no generation; it only
+    * records its batchId, as in [[mergeKeyed]]. Each batch runs in its
+    * own [[graft.ops.Materialize.scoped]] query scope, so what a step
+    * materializes lives until its parts are written and no longer. A
+    * throw anywhere fails the batch with the manifest unchanged; the
+    * checkpoint retries it. */
+  def maintainSnapshot(input: DataFrame, statePath: String, checkpoint: String)(
+      step: DataFrame => Map[String, DataFrame]): StreamingQuery = {
+    require(input.isStreaming, "a snapshot maintainer expects a streaming DataFrame")
+    input.writeStream
+      .outputMode("append")
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        Materialize.scoped(batch.sparkSession)(commitSnapshot(statePath, batch, batchId)(step))
+      }
+      .start()
+  }
 
-  /** Write `rows` (carrying `__bucket`, evaluated only if `touched` is
-    * not empty) as generation dir `genRel` and return the manifest that
-    * publishes it over `base`, by the one bucket-map rule of every
-    * writer: a touched bucket maps to the dir it was written to, or leaves
-    * the map if it got no rows; every other bucket keeps its dir.
-    * Crash-safe: until the manifest is published the old state is fully
-    * live, and a retry overwrites the half-written generation dir. */
+  /** One batch of [[maintainSnapshot]]: replay check, `step`, generation
+    * write and flip. */
+  private[streaming] def commitSnapshot(statePath: String, batch: DataFrame, batchId: Long)(
+      step: DataFrame => Map[String, DataFrame]): Unit = {
+    val spark = batch.sparkSession
+    val prior = readManifest(spark, statePath)
+    if (prior.exists(_.lastBatchId >= batchId)) return
+    val parts = if (batch.isEmpty) Map.empty[String, DataFrame] else step(batch)
+    publish(spark, statePath,
+      writeGen(spark, statePath, prior, s"gen-$batchId", parts.keys.toSeq, batchId) { dir =>
+        parts.foreach { case (part, rows) => rows.write.mode("overwrite").parquet(s"$dir/$part") }
+      })
+  }
+
+  /** A snapshot maintainer's current `part`, or None before its first
+    * generation. */
+  def readSnapshot(spark: SparkSession, statePath: String, part: String = Snapshot): Option[DataFrame] =
+    readManifest(spark, statePath).flatMap(_.entries.get(part))
+      .flatMap(rel => relation(spark, statePath, Seq(rel)))
+
+  /** Write `rows` (carrying `__bucket`) under `dir`, one leaf dir per
+    * bucket. */
+  private def writeBuckets(rows: DataFrame, dir: String): Unit =
+    rows.write.mode("overwrite").partitionBy(BucketCol).parquet(dir)
+
+  /** A generation's child dir as a manifest entry: `__bucket=N` holds
+    * bucket N, any other dir the part it is named after. */
+  private def entryOf(dir: String): String = dir.stripPrefix(s"$BucketCol=")
+
+  /** Fill generation dir `genRel` with `write` (given its path; not run
+    * if `touched` is empty) and return the manifest that publishes it
+    * over `base`, by the one entry-map rule of every writer: a touched
+    * entry maps to the child dir it was written to, or leaves the map if
+    * it got none; every other entry keeps its dir. Crash-safe: until the
+    * manifest is published the old state is fully live, and a retry
+    * overwrites the half-written generation. */
   private def writeGen(
       spark: SparkSession, viewPath: String, base: Option[Manifest],
-      genRel: String, touched: Seq[Int], lastBatchId: Long)(rows: => DataFrame): Manifest = {
+      genRel: String, touched: Seq[String], lastBatchId: Long)(write: String => Unit): Manifest = {
     val f = fs(spark, viewPath)
     val root = new Path(viewPath)
     f.mkdirs(root)
-    if (touched.nonEmpty)
-      rows.write.mode("overwrite").partitionBy(BucketCol).parquet(s"$viewPath/$genRel")
-    val written = touched.flatMap { b =>
-      val rel = s"$genRel/$BucketCol=$b"
-      if (f.exists(new Path(root, rel))) Some(b -> rel) else None
+    val written = if (touched.isEmpty) Nil else {
+      write(s"$viewPath/$genRel")
+      val want = touched.toSet
+      f.listStatus(new Path(root, genRel)).toSeq.filter(_.isDirectory).map(_.getPath.getName)
+        .collect { case dir if want(entryOf(dir)) => entryOf(dir) -> s"$genRel/$dir" }
     }
     Manifest(base.map(_.seq + 1).getOrElse(0L), lastBatchId,
-      base.map(_.buckets).getOrElse(Map.empty[Int, String]) -- touched ++ written)
+      base.map(_.entries).getOrElse(Map.empty[String, String]) -- touched ++ written)
   }
 
   private def publish(spark: SparkSession, viewPath: String, m: Manifest): Unit = {
@@ -312,11 +388,11 @@ object ViewStore {
     * not recoverable from the leaf-dir reads). The compacted manifest
     * keeps `lastBatchId`, so replay idempotence is unaffected. */
   def compact(spark: SparkSession, viewPath: String, keyCol: String): Unit =
-    readManifest(spark, viewPath).filter(_.buckets.nonEmpty).foreach { m =>
+    readManifest(spark, viewPath).filter(_.entries.nonEmpty).foreach { m =>
       val next = writeGen(spark, viewPath, Some(m), f"compact-${m.seq + 1}%020d",
-          m.buckets.keys.toSeq.sorted, m.lastBatchId) {
-        bucketed(relation(spark, viewPath, m.buckets.values).get, keyCol)
-          .repartition(m.buckets.size, col(BucketCol))
+          m.entries.keys.toSeq, m.lastBatchId) {
+        writeBuckets(bucketed(relation(spark, viewPath, m.entries.values).get, keyCol)
+          .repartition(m.entries.size, col(BucketCol)), _)
       }
       publish(spark, viewPath, next)
     }
@@ -355,7 +431,7 @@ object ViewStore {
       keys: Seq[Any]): Long = {
     val m = readManifest(spark, viewPath).getOrElse(return 0L)
     if (keys.isEmpty) return 0L
-    if (m.buckets.isEmpty) {
+    if (m.entries.isEmpty) {
       retireHistory(fs(spark, viewPath), new Path(viewPath)); return 0L
     }
     val f = fs(spark, viewPath)
@@ -374,7 +450,7 @@ object ViewStore {
     val probeRows = keys.map(k => org.apache.spark.sql.Row(k))
     import scala.jdk.CollectionConverters._
     val touched = touchedBuckets(spark.createDataFrame(probeRows.asJava, probeSchema), "__k")
-      .filter(m.buckets.contains)
+      .filter(b => m.entries.contains(b.toString))
     if (touched.isEmpty) { retireHistory(f, root); return 0L }
     val current = bucketsOf(spark, viewPath, m, touched)
       .getOrElse { retireHistory(f, root); return 0L }
@@ -389,7 +465,7 @@ object ViewStore {
     val removed = current.filter(isPurged).count()
     // a touched bucket the purge empties leaves the manifest
     val next = writeGen(spark, viewPath, Some(m), f"purge-${m.seq + 1}%020d",
-      touched, m.lastBatchId)(bucketed(current.filter(!isPurged), keyCol))
+      touched.map(_.toString), m.lastBatchId)(writeBuckets(bucketed(current.filter(!isPurged), keyCol), _))
     // history truncation FIRST: drop every snapshot older than the current
     // one before declaring the purge, so a crash can never leave purged
     // rows readable further back than the immediately-prior state
@@ -419,8 +495,9 @@ object ViewStore {
     * manifest either way: the body is fully written to the tmp name
     * first, and link/rename are both all-or-nothing. */
   private[streaming] def writeManifest(f: FileSystem, root: Path, m: Manifest): Unit = {
+    // bucket numbers in numeric order, part names in name order
     val body = (s"batchId=${m.lastBatchId}" +:
-      m.buckets.toSeq.sortBy(_._1).map { case (b, rel) => s"$b=$rel" })
+      m.entries.toSeq.sortBy { case (e, _) => (e.toIntOption, e) }.map { case (e, rel) => s"$e=$rel" })
       .mkString("", "\n", "\n")
     // per-writer tmp name: concurrent losers must not truncate the tmp
     // a racing writer is about to link/rename from
@@ -466,11 +543,13 @@ object ViewStore {
       f.delete(new Path(root, name), false)
     }
 
-  /** Drop manifests beyond the retention window, then every bucket dir no
-    * retained manifest references. Runs AFTER the new manifest is live, so
-    * a crash mid-GC only leaves harmless garbage, never a missing live
-    * file. Bucket dirs are `__bucket=N` under a generation parent — NOT
-    * generic "_" metadata like _SUCCESS, so they're matched explicitly. */
+  /** Drop manifests beyond the retention window, then, under each
+    * generation dir, every child dir no retained manifest references, and
+    * the generation dir itself once none of its child dirs is referenced:
+    * one rule for superseded buckets and parts, for orphans of a crash
+    * between write and flip, and for a crashed write's leftovers. Runs
+    * AFTER the new manifest is live, so a crash mid-GC only leaves
+    * harmless garbage, never a missing live file. */
   private def gc(f: FileSystem, root: Path): Unit = {
     // sweep orphaned manifest tmps: lose() deletes its own tmp, but a
     // writer that CRASHES between create(tmp) and the link/rename leaves
@@ -490,7 +569,7 @@ object ViewStore {
     val (expired, retained) = all.splitAt(math.max(all.size - RetainManifests, 0))
     expired.foreach { case (_, name) => f.delete(new Path(root, name), false) }
     val live: Set[String] = retained
-      .flatMap { case (seq, name) => parseManifest(f, root, seq, name).buckets.values }
+      .flatMap { case (seq, name) => parseManifest(f, root, seq, name).entries.values }
       .toSet
     f.listStatus(root)
       .filter { st =>
@@ -499,14 +578,10 @@ object ViewStore {
           (n.startsWith("gen-") || n.startsWith("compact-") || n.startsWith("purge-"))
       }
       .foreach { gen =>
-        f.listStatus(gen.getPath)
-          .filter(_.getPath.getName.startsWith(s"$BucketCol="))
-          .foreach { st =>
-            val rel = s"${gen.getPath.getName}/${st.getPath.getName}"
-            if (!live.contains(rel)) f.delete(st.getPath, true)
-          }
-        if (!f.listStatus(gen.getPath).exists(_.getPath.getName.startsWith(s"$BucketCol=")))
-          f.delete(gen.getPath, true)
+        val (kept, dead) = f.listStatus(gen.getPath).filter(_.isDirectory)
+          .partition(st => live.contains(s"${gen.getPath.getName}/${st.getPath.getName}"))
+        if (kept.isEmpty) f.delete(gen.getPath, true)
+        else dead.foreach(st => f.delete(st.getPath, true))
       }
   }
 }

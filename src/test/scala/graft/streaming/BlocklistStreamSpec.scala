@@ -59,6 +59,6 @@ class BlocklistStreamSpec extends SparkSpec {
     assert(before == after, "restart replay must not double-count")
     val gens = new java.io.File(state).listFiles()
       .count(f => f.isDirectory && f.getName.startsWith("gen-"))
-    assert(gens <= 1 + GenState.KeepPreviousGens, s"generations not swept: $gens")
+    assert(gens <= ViewStore.RetainManifests, s"generations not swept: $gens")
   }
 }

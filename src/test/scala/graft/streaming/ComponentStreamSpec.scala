@@ -5,7 +5,7 @@ import graft.SparkSpec
 
 /** The continuous component maintainer must converge, over edge batches
   * split arbitrarily, to the batch connected components of the full edge
-  * set, keep its snapshot pointer crash-safe, and skip exact batch
+  * set, keep its snapshot manifest crash-safe, and skip exact batch
   * re-deliveries. */
 class ComponentStreamSpec extends SparkSpec {
 
@@ -70,12 +70,13 @@ class ComponentStreamSpec extends SparkSpec {
 
   test("an exact batch re-delivery is skipped (batchId guard) and a stale pointer survives a crash window") {
     val (statePath, assign) = run(Seq(Seq((1L, 2L)), Seq((2L, 3L))))
-    // simulate a re-delivered batchId by re-running the foreachBatch body's
-    // guard condition: pointer already records batchId 1, so folding again
-    // must be skipped — assignment files untouched
-    val ptr = java.nio.file.Files.readString(
-      new java.io.File(statePath, "_CURRENT").toPath)
-    assert(ptr.startsWith("1:"), s"pointer records the last batchId, got $ptr")
+    // re-deliver batchId 1 through the foreachBatch body: the manifest
+    // already records batchId 1, so folding again must be skipped —
+    // assignment files untouched
+    val last = ViewStore.readManifest(spark, statePath).get.lastBatchId
+    assert(last == 1L, s"manifest records the last batchId, got $last")
+    ViewStore.commitSnapshot(statePath, Seq((2L, 3L)).toDF("id_a", "id_b"), 1L)(
+      _ => fail("a re-delivered batch reached the fold"))
     assert(assign == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
     // crash window: a half-written next generation without a pointer flip is
     // invisible — readers still see the committed snapshot

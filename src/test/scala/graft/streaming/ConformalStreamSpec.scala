@@ -58,10 +58,8 @@ class ConformalStreamSpec extends SparkSpec {
   test("batchId guard: re-delivered batch does not double-count") {
     val state = Files.createTempDirectory("graft-conf-state2").toString
     val delta = ConformalStream.coverageDelta(scored.toDF("source", "score"), 0L)
-    // simulate foreachBatch by writing gen-0 then attempting batchId 0 again
-    val gen = "gen-test-0"
-    delta.write.parquet(new java.io.File(state, gen).toString)
-    GenState.flip(state, 0L, gen)
+    // simulate foreachBatch by committing batch 0 then attempting batchId 0 again
+    ViewStore.commitSnapshot(state, delta, 0L)(b => Map(ViewStore.Snapshot -> b))
     val before = ConformalStream.snapshot(spark, state).collect().toSet
     // a second flip with the SAME batchId must be rejected by the guard
     // inside maintain; emulate by checking lastBatchId semantics via a

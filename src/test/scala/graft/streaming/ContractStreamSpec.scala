@@ -43,24 +43,17 @@ class ContractStreamSpec extends SparkSpec {
     val spark0 = spark
     import org.apache.spark.sql.functions._
     val batch = Seq(("1-URGENT", -1L), ("1-URGENT", 2L)).toDF("g", "lag_days")
-    def deliver(batchId: Long): Unit = {
-      val ptr = new java.io.File(state, "_CURRENT")
-      val last = if (ptr.exists())
-        java.nio.file.Files.readString(ptr.toPath).trim.split(':')(0).toLong else -1L
-      if (batchId > last) {
-        val delta = batch.groupBy("g")
+    def deliver(batchId: Long): Unit =
+      ViewStore.commitSnapshot(state, batch, batchId) { b =>
+        val delta = b.groupBy("g")
           .agg(count(lit(1)).as("n_lines"),
             sum(when(col("lag_days") < 0, 1L).otherwise(0L)).as("n_violations"),
             min("lag_days").as("min_lag_days"))
-        val next = ContractStream.snapshot(spark0, state).unionByName(delta)
+        Map(ViewStore.Snapshot -> ContractStream.snapshot(spark0, state).unionByName(delta)
           .groupBy("g")
           .agg(sum("n_lines").as("n_lines"), sum("n_violations").as("n_violations"),
-            min("min_lag_days").as("min_lag_days"))
-        val gen = s"gen-${System.currentTimeMillis()}-$batchId"
-        next.write.mode("overwrite").parquet(new java.io.File(state, gen).toString)
-        GenState.flip(state, batchId, gen)
+            min("min_lag_days").as("min_lag_days")))
       }
-    }
     deliver(0L); deliver(0L)
     val r = ContractStream.snapshot(spark0, state).collect().head
     assert(r.getAs[Long]("n_lines") == 2L && r.getAs[Long]("n_violations") == 1L,

@@ -53,6 +53,6 @@ class FeatureStoreStreamSpec extends SparkSpec {
     assert(before == after && before == events.size.toLong)
     val gens = new java.io.File(state).listFiles()
       .count(f => f.isDirectory && f.getName.startsWith("gen-"))
-    assert(gens <= 1 + GenState.KeepPreviousGens, s"generations not swept: $gens")
+    assert(gens <= ViewStore.RetainManifests, s"generations not swept: $gens")
   }
 }

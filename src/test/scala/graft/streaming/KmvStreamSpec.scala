@@ -47,13 +47,11 @@ class KmvStreamSpec extends SparkSpec {
     val state = Files.createTempDirectory("graft-kmv-idem").toString
     val spark0 = spark
     val batch = data.toDF("g", "h")
-    def deliver(batchId: Long): Unit = {
-      val next = KmvStream.bottomK(
-        KmvStream.snapshot(spark0, state).unionByName(batch), K)
-      val gen = s"gen-${System.currentTimeMillis()}-$batchId"
-      next.write.mode("overwrite").parquet(new java.io.File(state, gen).toString)
-      GenState.flip(state, batchId, gen)
-    }
+    def deliver(batchId: Long): Unit =
+      ViewStore.commitSnapshot(state, batch, batchId) { b =>
+        Map(ViewStore.Snapshot -> KmvStream.bottomK(
+          KmvStream.snapshot(spark0, state).unionByName(b), K))
+      }
     deliver(0L)
     val first = KmvStream.snapshot(spark0, state).orderBy("g", "h").collect().toSeq
     deliver(1L) // same content re-delivered under a NEW batch id

@@ -50,15 +50,16 @@ class SketchStreamSpec extends SparkSpec {
     val q = SketchStream.maintain(ms.toDS().toDF("token"), state, ckpt)
     try {
       // six batches: without the sweep the state path would hold six
-      // full snapshots; with it, current + KeepPreviousGens survive
+      // full snapshots; with it, the RetainManifests newest survive
       (1 to 6).foreach { i => ms.addData(Seq(s"tok$i", "common")); q.processAllAvailable() }
     } finally q.stop()
     val gens = new java.io.File(state).listFiles()
       .filter(f => f.isDirectory && f.getName.startsWith("gen-")).map(_.getName).sorted
-    assert(gens.length <= 1 + GenState.KeepPreviousGens,
+    assert(gens.length <= ViewStore.RetainManifests,
       s"expected bounded generations, got ${gens.mkString(",")}")
-    // the pointer's generation is among the survivors and still readable
-    val current = GenState.currentGen(state).get
+    // the manifest's generation is among the survivors and still readable
+    val current = ViewStore.readManifest(spark, state).get
+      .entries(ViewStore.Snapshot).takeWhile(_ != '/')
     assert(gens.contains(current))
     assert(SketchStream.cellsSnapshot(spark, state).count() > 0)
   }

@@ -56,18 +56,11 @@ class SprtStreamSpec extends SparkSpec {
     val batch = Seq((1L, 1L), (1L, 0L)).toDF("day", "is_succ")
       .groupBy("day").agg(count(lit(1)).as("n_trials"), sum("is_succ").as("n_succ"))
     // simulate foreachBatch body twice with the SAME batchId
-    def deliver(batchId: Long): Unit = {
-      val ptr = new java.io.File(state, "_CURRENT")
-      val last = if (ptr.exists())
-        java.nio.file.Files.readString(ptr.toPath).trim.split(':')(0).toLong else -1L
-      if (batchId > last) {
-        val next = SprtStream.daysSnapshot(spark0, state).unionByName(batch)
-          .groupBy("day").agg(sum("n_trials").as("n_trials"), sum("n_succ").as("n_succ"))
-        val gen = s"gen-${System.currentTimeMillis()}-$batchId"
-        next.write.mode("overwrite").parquet(new java.io.File(state, gen).toString)
-        GenState.flip(state, batchId, gen)
+    def deliver(batchId: Long): Unit =
+      ViewStore.commitSnapshot(state, batch, batchId) { b =>
+        Map(ViewStore.Snapshot -> SprtStream.daysSnapshot(spark0, state).unionByName(b)
+          .groupBy("day").agg(sum("n_trials").as("n_trials"), sum("n_succ").as("n_succ")))
       }
-    }
     deliver(0L); deliver(0L) // exact re-delivery
     val row = SprtStream.daysSnapshot(spark0, state).collect().head
     assert(row.getAs[Long]("n_trials") == 2L && row.getAs[Long]("n_succ") == 1L,

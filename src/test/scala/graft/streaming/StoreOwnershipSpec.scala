@@ -3,10 +3,10 @@ package graft.streaming
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Each foreachBatch commit protocol has one owner under `src/main`:
-  * [[GenState]] owns the `_CURRENT` pointer, its generation dirs and the
-  * flip; [[ViewStore]] owns the bucket layout and the manifest commit. A
-  * stream that hand-copies either protocol instead of calling its owner
-  * fails here. */
+  * [[ViewStore]] owns the bucket layout, the generation dirs, the
+  * manifests and the flip, for keyed views and snapshot maintainers
+  * alike. A stream that hand-copies the protocol instead of calling its
+  * owner fails here. */
 class StoreOwnershipSpec extends AnyFunSuite {
 
   private lazy val sources: Seq[(String, String)] = {
@@ -24,17 +24,24 @@ class StoreOwnershipSpec extends AnyFunSuite {
     sources.collect { case (name, text) if re.findFirstIn(text).isDefined => name }.sorted
   }
 
-  test("only GenState.scala names the pointer file or flips it") {
-    assert(filesMatching("""_CURRENT|\bflip\(""") == Seq("GenState.scala"))
+  test("only ViewStore.scala names a manifest or the pointer file") {
+    assert(filesMatching("""_CURRENT|MANIFEST-""") == Seq("ViewStore.scala"))
   }
 
-  test("only GenState.scala and ViewStore.scala build generation dir names") {
-    assert(filesMatching("\"gen-") == Seq("GenState.scala", "ViewStore.scala"))
+  test("only ViewStore.scala builds generation dir names") {
+    assert(filesMatching("\"gen-") == Seq("ViewStore.scala"))
+  }
+
+  test("only ViewStore.scala calls foreachBatch for a snapshot maintainer") {
+    // the two other callers keep no snapshot: CurationStream merges a keyed
+    // view through mergeKeyed, AnnIndexStream appends to an ANN index
+    assert(filesMatching("""\.foreachBatch\b""") ==
+      Seq("AnnIndexStream.scala", "CurationStream.scala", "ViewStore.scala"))
   }
 
   test("only ViewStore.scala names the bucket column or runs a step of its commit") {
     assert(filesMatching(
-      """__bucket|\bcommit\(|\b(readBuckets|alreadyApplied|touchedBuckets)\b""") ==
+      """__bucket|\bcommit\(|\b(readBuckets|alreadyApplied|touchedBuckets|commitSnapshot)\b""") ==
       Seq("ViewStore.scala"))
   }
 }

@@ -1,31 +1,36 @@
 package graft.streaming
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
 
 /** ViewStore snapshot retention, time travel, and compaction — the
-  * plain-parquet twin of a table format's snapshot/OPTIMIZE surface. */
+  * plain-parquet twin of a table format's snapshot/OPTIMIZE surface —
+  * and the snapshot maintainers' commit: its batch guard, its failure
+  * atomicity, named parts, and GC of the generations no retained
+  * manifest references (orphans of a crash between write and flip). */
 class ViewStoreSpec extends SparkSpec {
 
   import spark.implicits._
+  implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
   private def tmp() =
     java.nio.file.Files.createTempDirectory("graft-viewstore").toString
 
-  /** Commit (key, value) rows as one batch via the public commit API. */
-  private def commitBatch(path: String, batchId: Long, rows: Seq[(Long, Long)]): Unit = {
-    val df = rows.toDF("k", "v").withColumn("__bucket", ViewStore.bucketOf(col("k")))
-    val touched = df.select("__bucket").distinct().as[Long].collect().map(_.toInt)
-    ViewStore.commit(spark, path, df, touched.toSeq, batchId)
-  }
+  /** Commit (key, value) rows as one mergeKeyed batch whose combine
+    * replaces the touched buckets' rows with exactly these. */
+  private def commitBatch(path: String, batchId: Long, rows: Seq[(Long, Long)]): Unit =
+    replaceBuckets(path, batchId, rows.toDF("k", "v"))
+
+  private def replaceBuckets(path: String, batchId: Long, df: DataFrame): Unit =
+    ViewStore.mergeKeyed(spark, path, batchId, df, "k")(_ => df)
 
   /** Rows with nullable, non-nullable, string and timestamp columns. */
-  private def commitWide(path: String, batchId: Long, keys: Seq[Long]): Unit = {
-    val df = keys.map { k =>
+  private def commitWide(path: String, batchId: Long, keys: Seq[Long]): Unit =
+    replaceBuckets(path, batchId, keys.map { k =>
       (k, if (k % 3 == 0) None else Some(s"n$k"), new java.sql.Timestamp(1700000000000L + k))
-    }.toDF("k", "name", "ts").withColumn("__bucket", ViewStore.bucketOf(col("k")))
-    ViewStore.commit(spark, path, df, ViewStore.touchedBuckets(df, "k"), batchId)
-  }
+    }.toDF("k", "name", "ts"))
 
   /** `spark.read.parquet` over the dirs the live manifest names. */
   private def readParquet(path: String, buckets: Option[Seq[Int]] = None) = {
@@ -149,11 +154,7 @@ class ViewStoreSpec extends SparkSpec {
     // one batch spread over several write tasks → each bucket dir holds
     // SEVERAL parquet files (the accumulation compaction exists to fix)
     val rows = (0 until 60).map(i => ((i % 3).toLong, i.toLong))
-    val df = rows.toDF("k", "v")
-      .withColumn("__bucket", ViewStore.bucketOf(col("k")))
-      .repartition(5)
-    val touched = df.select("__bucket").distinct().as[Long].collect().map(_.toInt)
-    ViewStore.commit(spark, path, df, touched.toSeq, 0L)
+    replaceBuckets(path, 0L, rows.toDF("k", "v").repartition(5))
     val before = ViewStore.read(spark, path).get
       .select("k", "v").as[(Long, Long)].collect().toSet
     // files per bucket in the LIVE manifest's dirs only (older snapshots
@@ -263,7 +264,8 @@ class ViewStoreSpec extends SparkSpec {
       if (f.exists(new org.apache.hadoop.fs.Path(root, rel))) Some(b -> rel) else None
     }.toMap
     ViewStore.writeManifest(f, root,
-      ViewStore.Manifest(m.seq + 1, m.lastBatchId, (m.buckets -- touchedB) ++ rewritten))
+      ViewStore.Manifest(m.seq + 1, m.lastBatchId,
+        (m.entries -- touchedB.map(_.toString)) ++ rewritten.map { case (b, rel) => b.toString -> rel }))
     // ---- crash here: both manifests live ----
     assert(ViewStore.snapshots(spark, path).contains(m.seq),
       "crash state must still hold the pre-purge manifest")
@@ -299,10 +301,7 @@ class ViewStoreSpec extends SparkSpec {
     val sharer = spark.range(0, 100000)
       .filter(ViewStore.bucketOf(col("id")) === nullBucket.toLong)
       .as[Long].head()
-    val df = Seq((Option.empty[Long], 1L), (Some(sharer), 2L)).toDF("k", "v")
-      .withColumn("__bucket", ViewStore.bucketOf(col("k")))
-    val touched = df.select("__bucket").distinct().as[Long].collect().map(_.toInt)
-    ViewStore.commit(spark, path, df, touched.toSeq, 0L)
+    replaceBuckets(path, 0L, Seq((Option.empty[Long], 1L), (Some(sharer), 2L)).toDF("k", "v"))
     // purge the sharer: exactly one row removed, the null row must remain
     assert(ViewStore.purgeKeys(spark, path, "k", Seq(sharer)) == 1L)
     val left = ViewStore.read(spark, path).get.select("v").as[Long].collect().toSet
@@ -316,10 +315,7 @@ class ViewStoreSpec extends SparkSpec {
   test("purgeKeys: typed keys whose toString does not round-trip (binary) hit the right bucket") {
     val path = tmp()
     val k1 = Array[Byte](1, 2, 3)
-    val df = Seq((k1, 10L), (Array[Byte](9, 9), 20L)).toDF("k", "v")
-      .withColumn("__bucket", ViewStore.bucketOf(col("k")))
-    val touched = df.select("__bucket").distinct().as[Long].collect().map(_.toInt)
-    ViewStore.commit(spark, path, df, touched.toSeq, 0L)
+    replaceBuckets(path, 0L, Seq((k1, 10L), (Array[Byte](9, 9), 20L)).toDF("k", "v"))
     // Array[Byte].toString is "[B@<hash>" — a string-cast probe would miss
     // the bucket entirely and report 0 removed
     assert(ViewStore.purgeKeys(spark, path, "k", Seq(k1)) == 1L)
@@ -349,8 +345,17 @@ class ViewStoreSpec extends SparkSpec {
     // threads. 8 writers release on a latch and race the SAME seq; the
     // local-FS publish is link(2)-atomic, so exactly one must win, and a
     // reader polling throughout must always parse a complete manifest.
-    val path = tmp()
-    commitBatch(path, 0L, Seq((1L, 10L)))
+    // Run on a keyed view and on a snapshot maintainer's state path.
+    val view = tmp()
+    commitBatch(view, 0L, Seq((1L, 10L)))
+    val state = tmp()
+    commitSnapshot(state, 0L, Seq(1L).toDF("x"))
+    Seq(view, state).foreach(path => withClue(path)(raceFlips(path)))
+  }
+
+  /** Ten rounds of eight writers racing one seq on `path`'s manifest,
+    * with a reader parsing the live manifest throughout. */
+  private def raceFlips(path: String): Unit = {
     val f = org.apache.hadoop.fs.FileSystem.get(
       new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
     val root = new org.apache.hadoop.fs.Path(path)
@@ -360,7 +365,7 @@ class ViewStoreSpec extends SparkSpec {
       while (!stopReader.get()) {
         try {
           ViewStore.readManifest(spark, path).foreach { m =>
-            if (m.buckets.isEmpty && m.seq > 0L) tornReads.incrementAndGet()
+            if (m.entries.isEmpty && m.seq > 0L) tornReads.incrementAndGet()
           }
         } catch { case _: Throwable => tornReads.incrementAndGet() }
       }
@@ -511,5 +516,142 @@ class ViewStoreSpec extends SparkSpec {
     // the re-delivery applies
     mergeMax(path, 1L, Seq((1L, 11L)), calls)
     assert(kv(path) == Set((1L, 11L), (2L, 20L)))
+  }
+
+  /** One snapshot batch whose step makes `rows` the whole snapshot. */
+  private def commitSnapshot(state: String, batchId: Long, rows: DataFrame): Unit =
+    ViewStore.commitSnapshot(state, rows, batchId)(b => Map(ViewStore.Snapshot -> b))
+
+  /** A generation dir as a crashed write leaves it: written, never flipped to. */
+  private def orphan(state: String, rel: String): Unit = {
+    val d = new java.io.File(state, rel)
+    assert(d.mkdirs())
+    java.nio.file.Files.writeString(new java.io.File(d, "part-0.parquet").toPath, "x")
+  }
+
+  private def children(dir: java.io.File): Set[String] =
+    Option(dir.listFiles()).getOrElse(Array.empty[java.io.File])
+      .filter(_.isDirectory).map(_.getName).toSet
+
+  private def gens(state: String): Set[String] =
+    children(new java.io.File(state)).filter(_.startsWith("gen-"))
+
+  private def ints(df: DataFrame): Set[Long] = df.collect().map(_.getLong(0)).toSet
+
+  private def snapshotInts(state: String): Set[Long] =
+    ints(ViewStore.readSnapshot(spark, state).get)
+
+  test("snapshot: an orphan generation is swept, the previous snapshot kept") {
+    val state = tmp()
+    commitSnapshot(state, 0L, spark.range(1).toDF("x"))
+    commitSnapshot(state, 1L, spark.range(2).toDF("x"))
+    // crash window: a generation written, its flip never happened
+    orphan(state, s"gen-7/${ViewStore.Snapshot}")
+    commitSnapshot(state, 2L, spark.range(3).toDF("x"))
+    assert(!gens(state).contains("gen-7"),
+      s"orphan gen-7 (no manifest references it, no reader can hold it) must be swept; live=${gens(state)}")
+    // the flipped-from generation survives: a reader that resolved the
+    // manifest just before the flip may still scan it
+    assert(gens(state) == Set("gen-0", "gen-1", "gen-2"))
+    assert(ints(ViewStore.readAt(spark, state, 1L).get) == Set(0L, 1L))
+    commitSnapshot(state, 3L, spark.range(4).toDF("x"))
+    assert(gens(state) == Set("gen-1", "gen-2", "gen-3"),
+      s"a generation older than the RetainManifests window must be swept; live=${gens(state)}")
+    assert(snapshotInts(state) == (0L until 4L).toSet)
+  }
+
+  test("snapshot: the first commit sweeps orphans of a crashed first write") {
+    val state = tmp()
+    // a run that died before its first flip: another batch's generation,
+    // and a task's leftovers inside the one the re-delivery rewrites
+    orphan(state, s"gen-5/${ViewStore.Snapshot}")
+    orphan(state, "gen-0/_temporary/0")
+    commitSnapshot(state, 0L, spark.range(3).toDF("x"))
+    assert(gens(state) == Set("gen-0"), s"only the first committed generation may remain")
+    assert(children(new java.io.File(state, "gen-0")) == Set(ViewStore.Snapshot))
+    assert(snapshotInts(state) == Set(0L, 1L, 2L))
+  }
+
+  test("snapshot: a replayed or empty batch never calls the step") {
+    val state = tmp()
+    val batch = spark.range(3).toDF("x")
+    var calls = 0
+    def step(b: DataFrame): Map[String, DataFrame] = { calls += 1; Map(ViewStore.Snapshot -> b) }
+    ViewStore.commitSnapshot(state, batch, 0L)(step)
+    assert(calls == 1 && ViewStore.readManifest(spark, state).get.lastBatchId == 0L)
+    ViewStore.commitSnapshot(state, batch, 0L)(step) // exact re-delivery
+    ViewStore.commitSnapshot(state, batch.limit(0), 1L)(step) // empty batch
+    assert(calls == 1, "a replayed or empty batch reached the step")
+    // as in mergeKeyed, the empty batch records its batchId and writes no generation
+    assert(ViewStore.readManifest(spark, state).get.lastBatchId == 1L)
+    assert(gens(state) == Set("gen-0"), "an empty batch wrote a generation")
+    assert(snapshotInts(state) == Set(0L, 1L, 2L))
+  }
+
+  test("snapshot: a failed step leaves the manifest and snapshot unchanged") {
+    val state = tmp()
+    val batch = spark.range(3).toDF("x")
+    commitSnapshot(state, 0L, batch)
+    val before = ViewStore.readManifest(spark, state)
+    intercept[IllegalStateException] {
+      ViewStore.commitSnapshot(state, batch, 1L)(_ => throw new IllegalStateException("step died"))
+    }
+    assert(ViewStore.readManifest(spark, state) == before)
+    // rows that die mid-write: the generation is half-written, never flipped to
+    intercept[Exception] {
+      ViewStore.commitSnapshot(state, batch, 1L)(_ => Map(ViewStore.Snapshot ->
+        spark.range(10).toDF("x")
+          .withColumn("x", expr("CASE WHEN x < 9 THEN x ELSE CAST(raise_error('writer died') AS BIGINT) END"))))
+    }
+    assert(ViewStore.readManifest(spark, state) == before)
+    assert(snapshotInts(state) == Set(0L, 1L, 2L))
+    // the re-delivery of the failed batch applies
+    commitSnapshot(state, 1L, spark.range(5).toDF("x"))
+    assert(ViewStore.readManifest(spark, state).get.lastBatchId == 1L)
+    assert(snapshotInts(state) == (0L until 5L).toSet)
+  }
+
+  test("snapshot: none before the first commit, named parts read back after") {
+    val state = tmp()
+    assert(ViewStore.readSnapshot(spark, state).isEmpty)
+    val batch = spark.range(4).toDF("x")
+    ViewStore.commitSnapshot(state, batch, 0L)(b => Map("a" -> b, "b" -> b.filter("x < 2")))
+    assert(ints(ViewStore.readSnapshot(spark, state, "a").get) == Set(0L, 1L, 2L, 3L))
+    assert(ints(ViewStore.readSnapshot(spark, state, "b").get) == Set(0L, 1L))
+    assert(ViewStore.readSnapshot(spark, state).isEmpty, "no default part was written")
+  }
+
+  test("snapshot: a maintainer on a file: URI state path runs and serves its snapshot") {
+    val state = "file://" + tmp()
+    val ms = MemoryStream[String]
+    val q = SketchStream.maintain(ms.toDS().toDF("token"), state, tmp())
+    try {
+      ms.addData(Seq("a", "a", "b")); q.processAllAvailable()
+      ms.addData(Seq("a")); q.processAllAvailable()
+    } finally q.stop()
+    // every occurrence adds 1 to one cell per sketch row
+    assert(SketchStream.cellsSnapshot(spark, state).agg(sum("cell")).as[Long].head() ==
+      4L * graft.ops.CountMin.DefaultDepth)
+    assert(ViewStore.readManifest(spark, state).get.lastBatchId == 1L)
+  }
+
+  test("snapshot: a state path in the older _CURRENT pointer format is refused loudly") {
+    val state = tmp()
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(state, "_CURRENT"), "0:gen-1700000000000-0")
+    spark.range(3).toDF("r").write.parquet(s"$state/gen-1700000000000-0")
+    def refused(what: String)(body: => Any): Unit = withClue(what) {
+      val e = intercept[Exception](body)
+      val cause = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .collectFirst { case i: IllegalStateException => i }
+      assert(cause.exists(_.getMessage.contains("fresh state path and a fresh checkpoint")), e)
+    }
+    refused("first read")(SketchStream.cellsSnapshot(spark, state))
+    val ms = MemoryStream[String]
+    val q = SketchStream.maintain(ms.toDS().toDF("token"), state, tmp())
+    try {
+      ms.addData(Seq("a"))
+      refused("first batch")(q.processAllAvailable())
+    } finally q.stop()
+    assert(!new java.io.File(state, "gen-0").exists(), "a refused batch wrote a generation")
   }
 }
