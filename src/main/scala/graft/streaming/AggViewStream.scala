@@ -37,13 +37,14 @@ object AggViewStream {
   }
 
   /** foreachBatch body: fold the batch's partials into the stored view
-    * through [[ViewStore.mergeKeyed]]. */
+    * through [[ViewStore.mergeKeyed]], both sides grouped by the
+    * `user_id` column ([[ViewStore.groupedByKey]]). */
   def mergeBatch(spark: SparkSession, batch: DataFrame, viewPath: String, batchId: Long): Unit = {
     import spark.implicits._
-    val part = partials(batch)
-    ViewStore.mergeKeyed(spark, viewPath, batchId, part.toDF(), "user_id") { existing =>
-      existing.map(_.as[UserTotals]).getOrElse(spark.emptyDataset[UserTotals])
-        .groupByKey(_.user_id).cogroup(part.groupByKey(_.user_id)) { (k, olds, news) =>
+    ViewStore.mergeKeyed(spark, viewPath, batchId, partials(batch).toDF(), "user_id") { (existing, part) =>
+      ViewStore.groupedByKey(existing.getOrElse(spark.emptyDataset[UserTotals].toDF()), "user_id")
+        .as[Long, UserTotals]
+        .cogroup(ViewStore.groupedByKey(part, "user_id").as[Long, UserTotals]) { (k, olds, news) =>
           (olds ++ news).reduceOption { (a, b) =>
             UserTotals(k, a.n_events + b.n_events, a.purchase_c + b.purchase_c,
               math.max(a.last_ts_ms, b.last_ts_ms))

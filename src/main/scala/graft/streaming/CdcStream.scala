@@ -1,6 +1,8 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.streaming.OutputMode
 import graft.cdc.{Admission, CdcEvent, ReferenceFold, TransactionView}
 
@@ -159,8 +161,9 @@ object CdcStream {
     * None if no changelog was ever emitted. */
   def readChangelog(spark: SparkSession, viewPath: String): Option[Dataset[ViewChange]] = {
     import spark.implicits._
-    val dir = java.nio.file.Paths.get(viewPath, "_changelog")
-    if (!java.nio.file.Files.isDirectory(dir)) None
+    val dir = new Path(viewPath, "_changelog")
+    val fs = dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(dir) || !fs.getFileStatus(dir).isDirectory) None
     else Some(spark.read.parquet(s"$viewPath/_changelog/*").as[ViewChange])
   }
 
@@ -172,8 +175,12 @@ object CdcStream {
     * key's batch events onto its stored view row — exactly the ladder,
     * one shuffle, no driver-side state. Replayed batchIds are skipped
     * (the ladder itself is replay-idempotent, the skip just saves the
-    * I/O). `mergeKeyed` persists the pre-filtered batch for the call, so
-    * it is decoded once for both the touched-bucket scan and the cogroup.
+    * I/O). The cogroup builds on the batch `mergeKeyed` persists, so the
+    * pre-filtered events are decoded once for both the touched-bucket
+    * scan and the cogroup. Both sides are grouped by the `transactionId`
+    * column ([[ViewStore.groupedByKey]]) and the view and feed are
+    * projected out of [[MergedRow]] by column, so no per-task
+    * deserializer derives a key or unwraps a row.
     *
     * With `changelog`, the batch's change feed is written to
     * `_changelog/batch-<batchId>` inside the combine step, so before the
@@ -188,33 +195,33 @@ object CdcStream {
       metrics: Option[OutcomeCountsAccumulator] = None,
       changelog: Boolean = false): Unit = {
     import spark.implicits._
-    val filtered = preFilter(batch)
     // with changelog on, the cogroup feeds two actions (feed + view) —
     // persisted so the merge ladder and bucket reads run once, not twice
     var cached: Option[Dataset[MergedRow]] = None
-    try ViewStore.mergeKeyed(spark, viewPath, batchId, filtered.toDF(), "transactionId") { existing =>
-      val rows = existing.map(_.as[TransactionView]).getOrElse(spark.emptyDataset[TransactionView])
-        .groupByKey(_.transactionId)
-        .cogroup(filtered.groupByKey(_.transactionId)) { (_, views, events) =>
-          val v0 = views.toSeq.headOption
-          ladder(v0, Set.empty, events, metrics) match {
-            case (Some(after), applied) if applied.nonEmpty =>
-              Iterator.single(MergedRow(after, Some(ViewChange(
-                after.transactionId,
-                if (v0.isEmpty) "c" else "u",
-                v0.flatMap(_.status), after.status,
-                v0.flatMap(_.lastProcessedEventAt), after.lastProcessedEventAt,
-                batchId))))
-            case _ => v0.map(MergedRow(_, None)).iterator
+    try ViewStore.mergeKeyed(spark, viewPath, batchId, preFilter(batch).toDF(), "transactionId") {
+      (existing, admitted) =>
+        val rows = ViewStore.groupedByKey(existing.getOrElse(spark.emptyDataset[TransactionView].toDF()),
+            "transactionId").as[String, TransactionView]
+          .cogroup(ViewStore.groupedByKey(admitted, "transactionId").as[String, CdcEvent]) { (_, views, events) =>
+            val v0 = views.toSeq.headOption
+            ladder(v0, Set.empty, events, metrics) match {
+              case (Some(after), applied) if applied.nonEmpty =>
+                Iterator.single(MergedRow(after, Some(ViewChange(
+                  after.transactionId,
+                  if (v0.isEmpty) "c" else "u",
+                  v0.flatMap(_.status), after.status,
+                  v0.flatMap(_.lastProcessedEventAt), after.lastProcessedEventAt,
+                  batchId))))
+              case _ => v0.map(MergedRow(_, None)).iterator
+            }
           }
+        if (changelog) {
+          cached = Some(rows.persist())
+          // per-batch dir, overwrite mode: a re-delivery rewrites the same dir
+          rows.where(col("change").isNotNull).select("change.*").write.mode("overwrite")
+            .parquet(f"$viewPath/_changelog/batch-$batchId%020d")
         }
-      if (changelog) {
-        cached = Some(rows.persist())
-        // per-batch dir, overwrite mode: a re-delivery rewrites the same dir
-        rows.flatMap(_.change.toSeq).write.mode("overwrite")
-          .parquet(f"$viewPath/_changelog/batch-$batchId%020d")
-      }
-      rows.map(_.view).toDF()
+        rows.select("view.*")
     } finally cached.foreach(_.unpersist())
   }
 }

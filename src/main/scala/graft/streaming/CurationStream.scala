@@ -61,12 +61,12 @@ object CurationStream {
         // (insert-only by contract — doc ids are unique; keep-first
         // makes a replayed doc row idempotent)
         ViewStore.mergeKeyed(batch.sparkSession, ledgerPath, batchId, flags, "doc_id") {
-          case Some(cur) => cur.unionByName(flags)
+          case (Some(cur), incoming) => cur.unionByName(incoming)
             .withColumn("__rn", row_number().over(
               org.apache.spark.sql.expressions.Window
                 .partitionBy("doc_id").orderBy(col("ts_ms"), col("is_near_dup"))))
             .filter(col("__rn") === 1).drop("__rn")
-          case None => flags
+          case (None, incoming) => incoming
         }
       }
       .start()

@@ -1,5 +1,6 @@
 package graft.streaming
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -38,11 +39,7 @@ object DeadLetter {
   /** All quarantined payloads with their batch of origin. Empty frame
     * (correct schema) when nothing is quarantined yet. */
   def readQuarantine(spark: SparkSession, dir: String): DataFrame = {
-    val base = new java.io.File(dir)
-    val batches = Option(base.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("batch-"))
-      .map(f => f.getName.stripPrefix("batch-").toLong)
-      .sorted
+    val batches = batchDirs(spark, dir).map(_._1)
     if (batches.isEmpty) {
       import spark.implicits._
       Seq.empty[(String, String, Long)].toDF("raw", "err", "batch_id")
@@ -65,18 +62,24 @@ object DeadLetter {
     (recovered, stillBad)
   }
 
-  /** Retire batches ≤ `upToBatch` once their replay committed. */
+  /** Retire batches ≤ `upToBatch` once their replay committed, through
+    * the active session's Hadoop filesystem. */
   def purge(dir: String, upToBatch: Long): Unit = {
-    val base = new java.io.File(dir)
-    Option(base.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.startsWith("batch-") &&
-        f.getName.stripPrefix("batch-").toLong <= upToBatch)
-      .foreach { d =>
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).getOrElse(Array.empty).foreach(rm)
-          f.delete(); ()
-        }
-        rm(d)
-      }
+    val spark = SparkSession.active
+    val fs = new Path(dir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    batchDirs(spark, dir).filter(_._1 <= upToBatch).foreach { case (_, d) => fs.delete(d, true) }
+  }
+
+  /** The `batch-<id>` dirs under `dir` by id, in id order, listed through
+    * the session's Hadoop filesystem (so a `file:` URI or any other
+    * scheme resolves as the writes did). */
+  private def batchDirs(spark: SparkSession, dir: String): Seq[(Long, Path)] = {
+    val base = new Path(dir)
+    val fs = base.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (!fs.exists(base)) Seq.empty
+    else fs.listStatus(base).toSeq
+      .filter(st => st.isDirectory && st.getPath.getName.startsWith("batch-"))
+      .map(st => st.getPath.getName.stripPrefix("batch-").toLong -> st.getPath)
+      .sortBy(_._1)
   }
 }

@@ -75,8 +75,8 @@ object EventsView {
     * the stateful id-tracking path (CdcStream) or an idempotent upstream. */
   def mergeBatchIntoParquet(
       spark: SparkSession, batch: DataFrame, viewPath: String, batchId: Long): Unit = {
-    val incoming = partials(prepared(batch))
-    ViewStore.mergeKeyed(spark, viewPath, batchId, incoming, "user_id")(
-      _.fold(incoming)(merge(_, incoming)))
+    ViewStore.mergeKeyed(spark, viewPath, batchId, partials(prepared(batch)), "user_id") {
+      (existing, incoming) => existing.fold(incoming)(merge(_, incoming))
+    }
   }
 }

@@ -6,16 +6,18 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.parquet.hadoop.{Footer, ParquetFileReader}
 import org.apache.parquet.hadoop.util.HadoopInputFile
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, RelationalGroupedDataset, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualNullSafe, EqualTo, Expression, In,
+  InSet, Literal, Pmod, XxHash64}
+import org.apache.spark.sql.catalyst.util.CollationFactory
 import org.apache.spark.sql.execution.datasources.{FileIndex, HadoopFsRelation, PartitionDirectory}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.graftbridge.GraftSqlBridge
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.streaming.StreamingQuery
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types._
 
 import graft.ops.Materialize
 
@@ -92,10 +94,29 @@ object ViewStore {
       .collect().flatten.distinct.sorted.toSeq
   }
 
+  /** `rows` grouped by their `keyCol` column, one side of a cogroup of a
+    * batch with the stored rows [[mergeKeyed]] hands a combine. Grouping
+    * by the column, not by a typed key function, adds no per-row
+    * deserializer. The key is grouped on as a nullable copy: the stored
+    * side reads nullable, a batch's key may not be (a filter on it, as
+    * in [[graft.cdc.CdcDecode]], makes it non-nullable), and a cogroup
+    * needs one key type on both sides. */
+  private[streaming] def groupedByKey(rows: DataFrame, keyCol: String): RelationalGroupedDataset =
+    rows.groupBy(when(col(keyCol).isNotNull, col(keyCol)).as("__key"))
+
   /** The live pointer state: manifest sequence number, last applied
-    * foreachBatch id, entry → dir (relative to the store root). A keyed
-    * view's entries are its bucket numbers, a snapshot's its part names. */
-  case class Manifest(seq: Long, lastBatchId: Long, entries: Map[String, String]) {
+    * foreachBatch id, entry → dir (relative to the store root), and the
+    * key column a keyed view's rows are bucketed by. A keyed view's
+    * entries are its bucket numbers, a snapshot's its part names (and its
+    * `keyCol` is None).
+    *
+    * On disk: a `batchId=<id>` line, then a `keyCol=<name>` line for a
+    * keyed view, then one `<entry>=<dir>` line per entry, buckets in
+    * numeric order, parts in name order. A manifest without the `keyCol`
+    * line (written before the line existed) reads as unkeyed: its reads
+    * are not pruned until the next commit writes the line. */
+  case class Manifest(
+      seq: Long, lastBatchId: Long, entries: Map[String, String], keyCol: Option[String] = None) {
     /** A keyed view's entries by bucket number. */
     def buckets: Map[Int, String] = entries.map { case (b, rel) => b.toInt -> rel }
   }
@@ -137,12 +158,15 @@ object ViewStore {
     val text = try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
     val lines = text.split("\n").filter(_.nonEmpty)
     val batchId = lines.head.stripPrefix("batchId=").toLong
-    val entries = lines.tail.map { l =>
+    val keyCol = lines.lift(1).filter(_.startsWith(KeyColHeader)).map(_.stripPrefix(KeyColHeader))
+    val entries = lines.drop(1 + keyCol.size).map { l =>
       val Array(e, rel) = l.split("=", 2)
       e -> rel
     }.toMap
-    Manifest(seq, batchId, entries)
+    Manifest(seq, batchId, entries, keyCol)
   }
+
+  private val KeyColHeader = "keyCol="
 
   def readManifest(spark: SparkSession, viewPath: String): Option[Manifest] = {
     val f = fs(spark, viewPath)
@@ -192,16 +216,18 @@ object ViewStore {
     val f = fs(spark, viewPath)
     val root = new Path(viewPath)
     manifestSeqs(f, root).find(_._1 == seq).flatMap { case (s, name) =>
-      relation(spark, viewPath, parseManifest(f, root, s, name).entries.values)
+      val m = parseManifest(f, root, s, name)
+      relation(spark, viewPath, m.entries, m.keyCol)
     }
   }
 
   private[streaming] def alreadyApplied(spark: SparkSession, viewPath: String, batchId: Long): Boolean =
     readManifest(spark, viewPath).exists(_.lastBatchId >= batchId)
 
-  /** The whole view (all live buckets), or None if never written. */
+  /** The whole view (all live buckets), or None if never written. A
+    * filter on the key column prunes the read to the key's buckets. */
   def read(spark: SparkSession, viewPath: String): Option[DataFrame] =
-    readManifest(spark, viewPath).flatMap(m => relation(spark, viewPath, m.entries.values))
+    readManifest(spark, viewPath).flatMap(m => relation(spark, viewPath, m.entries, m.keyCol))
 
   /** Only the named buckets' current rows (None if none of them exist). */
   private[streaming] def readBuckets(
@@ -210,45 +236,98 @@ object ViewStore {
 
   private def bucketsOf(
       spark: SparkSession, viewPath: String, m: Manifest, touched: Seq[Int]): Option[DataFrame] =
-    relation(spark, viewPath, touched.flatMap(b => m.entries.get(b.toString)))
+    relation(spark, viewPath, touched.map(_.toString).flatMap(b => m.entries.get(b).map(b -> _)), m.keyCol)
 
-  /** The parquet files of the bucket dirs `rels` as a DataFrame, or None
-    * if they hold no file. The dirs are listed here, on the driver, and
-    * the schema is read from one footer the way `spark.read.parquet`
-    * reads it (Spark's row metadata, made nullable), so no Spark job
-    * runs. Each dir is read as a leaf, with no partition column. */
-  private def relation(spark: SparkSession, viewPath: String, rels: Iterable[String]): Option[DataFrame] = {
+  /** The parquet files of the `entries`' dirs as a DataFrame, or None if
+    * they hold no file. The dirs are listed here, on the driver, and the
+    * schema is read from one footer the way `spark.read.parquet` reads it
+    * (Spark's row metadata, made nullable), so no Spark job runs. Each dir
+    * is read as a leaf, with no partition column. With `keyCol`, the
+    * entries are buckets of that column, and a key filter prunes them. */
+  private def relation(
+      spark: SparkSession, viewPath: String, entries: Iterable[(String, String)],
+      keyCol: Option[String]): Option[DataFrame] = {
     val f = fs(spark, viewPath)
-    val dirs = rels.map(rel => new Path(viewPath, rel)).toSeq
+    val dirs = entries.map { case (e, rel) => e -> new Path(viewPath, rel) }.toSeq
     // Spark's rule for data files: hidden and underscore names are not
     // data, nor are empty files
-    val files = dirs.flatMap(d => f.listStatus(d)).filter { st =>
+    val files = dirs.flatMap { case (e, d) => f.listStatus(d).map(e -> _) }.filter { case (_, st) =>
       val n = st.getPath.getName
       st.isFile && st.getLen > 0 && !n.startsWith("_") && !n.startsWith(".")
     }
-    files.headOption.map { first =>
+    files.headOption.map { case (_, first) =>
       val conf = spark.sparkContext.hadoopConfiguration
       val reader = ParquetFileReader.open(HadoopInputFile.fromStatus(first, conf))
       val footer = try reader.getFooter finally reader.close()
       val schema = ParquetFileFormat.readSchemaFromFooter(
         new Footer(first.getPath, footer), new ParquetToSparkSchemaConverter(SQLConf.get))
       spark.baseRelationToDataFrame(HadoopFsRelation(
-        new ManifestFileIndex(dirs, files), new StructType(), GraftSqlBridge.asNullable(schema),
-        None, new ParquetFileFormat, Map.empty)(spark))
+        new ManifestFileIndex(dirs.map(_._2), files, keyCol), new StructType(),
+        GraftSqlBridge.asNullable(schema), None, new ParquetFileFormat, Map.empty)(spark))
     }
   }
 
   /** A fixed file list as Spark's file index: what the manifest resolved
-    * to when the read was built. */
+    * to when the read was built, each file with its entry. With
+    * `keyCol`, [[listFiles]] keeps only the files of the buckets the
+    * pushed filters let the key fall into ([[keyBuckets]]); `inputFiles`
+    * and `sizeInBytes` stay those of the whole read. */
   private final class ManifestFileIndex(
-      override val rootPaths: Seq[Path], files: Seq[FileStatus]) extends FileIndex {
+      override val rootPaths: Seq[Path], files: Seq[(String, FileStatus)], keyCol: Option[String])
+      extends FileIndex {
     override def listFiles(
-        partitionFilters: Seq[Expression], dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-      Seq(PartitionDirectory(InternalRow.empty, files.toArray))
-    override def inputFiles: Array[String] = files.map(_.getPath.toString).toArray
+        partitionFilters: Seq[Expression], dataFilters: Seq[Expression]): Seq[PartitionDirectory] = {
+      val kept = keyCol.flatMap(keyBuckets(_, dataFilters)).fold(files) { buckets =>
+        files.filter { case (e, _) => e.toIntOption.exists(buckets) }
+      }
+      Seq(PartitionDirectory(InternalRow.empty, kept.map(_._2).toArray))
+    }
+    override def inputFiles: Array[String] = files.map(_._2.getPath.toString).toArray
     override def refresh(): Unit = ()
-    override def sizeInBytes: Long = files.map(_.getLen).sum
+    override def sizeInBytes: Long = files.map(_._2.getLen).sum
     override def partitionSchema: StructType = new StructType()
+  }
+
+  /** The buckets a row must sit in to pass every filter of `filters` (a
+    * conjunction) that binds `keyCol` to literal values: `EqualTo`,
+    * `EqualNullSafe`, `In` or `InSet` on the bare column, with literals of
+    * the column's type. Each such filter allows the buckets of its values
+    * and the filters intersect; None if no filter binds the key. The
+    * buckets come from the expression [[bucketOf]] writes with, evaluated
+    * on the driver. Only types whose SQL equality means equal hash input
+    * are pruned: not floats or doubles (-0.0 = 0.0 hash apart) nor
+    * collated strings. A null matches only through `EqualNullSafe`. */
+  private[streaming] def keyBuckets(keyCol: String, filters: Seq[Expression]): Option[Set[Int]] = {
+    def key(e: Expression): Option[DataType] = e match {
+      case a: AttributeReference if a.name == keyCol && prunable(a.dataType) => Some(a.dataType)
+      case _ => None
+    }
+    // the key's type and the values `k` is compared with, if all are literals of that type
+    def literals(k: Expression, vs: Seq[Expression]): Option[(DataType, Seq[Any])] =
+      key(k).filter(t => vs.forall { case Literal(_, lt) => lt == t; case _ => false })
+        .map(_ -> vs.map(_.asInstanceOf[Literal].value))
+    // a null value matches no key, except through `<=>`
+    def bound(filter: Expression): Option[(DataType, Seq[Any])] = filter match {
+      case EqualTo(l, r) => bound(In(l, Seq(r))).orElse(bound(In(r, Seq(l))))
+      case EqualNullSafe(l, r) => literals(l, Seq(r)).orElse(literals(r, Seq(l)))
+      case In(k, vs) => literals(k, vs).map { case (t, xs) => t -> xs.filter(_ != null) }
+      case InSet(k, vs) => key(k).map(_ -> vs.toSeq.filter(_ != null))
+      case _ => None
+    }
+    filters.flatMap(bound)
+      .map { case (t, vs) => vs.map(v => bucketOfValue(Literal(v, t))).toSet }
+      .reduceOption(_ intersect _)
+  }
+
+  /** [[bucketOf]] of one literal, on the driver. */
+  private def bucketOfValue(v: Literal): Int =
+    Pmod(new XxHash64(Seq(v)), Literal(NumBuckets.toLong)).eval().asInstanceOf[Long].toInt
+
+  private def prunable(t: DataType): Boolean = t match {
+    case ByteType | ShortType | IntegerType | LongType | BooleanType | DateType | TimestampType | BinaryType |
+        _: DecimalType => true
+    case s: StringType => s.collationId == CollationFactory.UTF8_BINARY_COLLATION_ID
+    case _ => false
   }
 
   /** The foreachBatch commit protocol of a view keyed by `keyCol`:
@@ -257,18 +336,20 @@ object ViewStore {
     *     after a crash past the flip), so additive partials are never
     *     merged twice;
     *  1. `combine` gets the current rows of the buckets `incoming`'s keys
-    *     fall into (None if none holds a row) and returns their new
-    *     contents, with `keyCol`; untouched buckets are never read or
-    *     rewritten;
+    *     fall into (None if none holds a row) and the batch, and returns
+    *     the buckets' new contents, with `keyCol`; untouched buckets are
+    *     never read or rewritten;
     *  1. the result lands as generation `gen-<batchId>` and the manifest
-    *     flips to it, recording `batchId`.
+    *     flips to it, recording `batchId` and `keyCol`.
     *
-    * One manifest read serves steps 1 and 2. `incoming` is persisted for
-    * the call and released when it returns, so the touched-bucket scan
-    * and `combine` (which reads the cache when it builds on the same
-    * frame) evaluate it once; a caller must not persist it itself. An
-    * empty batch calls no `combine` and writes no generation; it only
-    * records its batchId.
+    * One manifest read serves steps 1 and 2. The batch `combine` gets is
+    * `incoming` coalesced (no shuffle) to at most one partition per core
+    * and persisted for the call, then released: the touched-bucket scan
+    * and `combine`, which builds on it, evaluate `incoming` once, and
+    * with one task per core however many partitions the source gave the
+    * batch (a `MemoryStream` gives one per `addData`, Kafka one per
+    * topic-partition). An empty batch calls no `combine` and writes no
+    * generation; it only records its batchId.
     * Whatever `combine` writes beside the view (CdcStream's change feed)
     * is written before the flip, so a crash in between leaves the batch
     * unrecorded and its re-delivery rewrites both. A throw anywhere
@@ -277,17 +358,17 @@ object ViewStore {
   def mergeKeyed(
       spark: SparkSession, viewPath: String, batchId: Long,
       incoming: DataFrame, keyCol: String)(
-      combine: Option[DataFrame] => DataFrame): Unit = {
+      combine: (Option[DataFrame], DataFrame) => DataFrame): Unit = {
     val prior = readManifest(spark, viewPath)
     if (prior.exists(_.lastBatchId >= batchId)) return
-    incoming.persist()
+    val batch = incoming.coalesce(spark.sparkContext.defaultParallelism).persist()
     try {
-      val touched = touchedBuckets(incoming, keyCol)
+      val touched = touchedBuckets(batch, keyCol)
       publish(spark, viewPath,
-        writeGen(spark, viewPath, prior, s"gen-$batchId", touched.map(_.toString), batchId) {
-          writeBuckets(bucketed(combine(prior.flatMap(bucketsOf(spark, viewPath, _, touched))), keyCol), _)
+        writeGen(spark, viewPath, prior, s"gen-$batchId", touched.map(_.toString), batchId, Some(keyCol)) {
+          writeBuckets(bucketed(combine(prior.flatMap(bucketsOf(spark, viewPath, _, touched)), batch), keyCol), _)
         })
-    } finally incoming.unpersist()
+    } finally batch.unpersist()
   }
 
   /** A snapshot maintainer: the stream of `input`, each batch of which
@@ -328,7 +409,7 @@ object ViewStore {
     if (prior.exists(_.lastBatchId >= batchId)) return
     val parts = if (batch.isEmpty) Map.empty[String, DataFrame] else step(batch)
     publish(spark, statePath,
-      writeGen(spark, statePath, prior, s"gen-$batchId", parts.keys.toSeq, batchId) { dir =>
+      writeGen(spark, statePath, prior, s"gen-$batchId", parts.keys.toSeq, batchId, None) { dir =>
         parts.foreach { case (part, rows) => rows.write.mode("overwrite").parquet(s"$dir/$part") }
       })
   }
@@ -337,7 +418,7 @@ object ViewStore {
     * generation. */
   def readSnapshot(spark: SparkSession, statePath: String, part: String = Snapshot): Option[DataFrame] =
     readManifest(spark, statePath).flatMap(_.entries.get(part))
-      .flatMap(rel => relation(spark, statePath, Seq(rel)))
+      .flatMap(rel => relation(spark, statePath, Seq(part -> rel), None))
 
   /** Write `rows` (carrying `__bucket`) under `dir`, one leaf dir per
     * bucket. */
@@ -354,10 +435,12 @@ object ViewStore {
     * entry maps to the child dir it was written to, or leaves the map if
     * it got none; every other entry keeps its dir. Crash-safe: until the
     * manifest is published the old state is fully live, and a retry
-    * overwrites the half-written generation. */
+    * overwrites the half-written generation. A keyed view's manifest
+    * records `keyCol`. */
   private def writeGen(
       spark: SparkSession, viewPath: String, base: Option[Manifest],
-      genRel: String, touched: Seq[String], lastBatchId: Long)(write: String => Unit): Manifest = {
+      genRel: String, touched: Seq[String], lastBatchId: Long, keyCol: Option[String])(
+      write: String => Unit): Manifest = {
     val f = fs(spark, viewPath)
     val root = new Path(viewPath)
     f.mkdirs(root)
@@ -368,7 +451,7 @@ object ViewStore {
         .collect { case dir if want(entryOf(dir)) => entryOf(dir) -> s"$genRel/$dir" }
     }
     Manifest(base.map(_.seq + 1).getOrElse(0L), lastBatchId,
-      base.map(_.entries).getOrElse(Map.empty[String, String]) -- touched ++ written)
+      base.map(_.entries).getOrElse(Map.empty[String, String]) -- touched ++ written, keyCol)
   }
 
   private def publish(spark: SparkSession, viewPath: String, m: Manifest): Unit = {
@@ -390,8 +473,8 @@ object ViewStore {
   def compact(spark: SparkSession, viewPath: String, keyCol: String): Unit =
     readManifest(spark, viewPath).filter(_.entries.nonEmpty).foreach { m =>
       val next = writeGen(spark, viewPath, Some(m), f"compact-${m.seq + 1}%020d",
-          m.entries.keys.toSeq, m.lastBatchId) {
-        writeBuckets(bucketed(relation(spark, viewPath, m.entries.values).get, keyCol)
+          m.entries.keys.toSeq, m.lastBatchId, Some(keyCol)) {
+        writeBuckets(bucketed(relation(spark, viewPath, m.entries, None).get, keyCol)
           .repartition(m.entries.size, col(BucketCol)), _)
       }
       publish(spark, viewPath, next)
@@ -465,7 +548,8 @@ object ViewStore {
     val removed = current.filter(isPurged).count()
     // a touched bucket the purge empties leaves the manifest
     val next = writeGen(spark, viewPath, Some(m), f"purge-${m.seq + 1}%020d",
-      touched.map(_.toString), m.lastBatchId)(writeBuckets(bucketed(current.filter(!isPurged), keyCol), _))
+      touched.map(_.toString), m.lastBatchId, Some(keyCol))(
+      writeBuckets(bucketed(current.filter(!isPurged), keyCol), _))
     // history truncation FIRST: drop every snapshot older than the current
     // one before declaring the purge, so a crash can never leave purged
     // rows readable further back than the immediately-prior state
@@ -496,7 +580,7 @@ object ViewStore {
     * first, and link/rename are both all-or-nothing. */
   private[streaming] def writeManifest(f: FileSystem, root: Path, m: Manifest): Unit = {
     // bucket numbers in numeric order, part names in name order
-    val body = (s"batchId=${m.lastBatchId}" +:
+    val body = (Seq(s"batchId=${m.lastBatchId}") ++ m.keyCol.map(KeyColHeader + _) ++
       m.entries.toSeq.sortBy { case (e, _) => (e.toIntOption, e) }.map { case (e, rel) => s"$e=$rel" })
       .mkString("", "\n", "\n")
     // per-writer tmp name: concurrent losers must not truncate the tmp

@@ -17,7 +17,9 @@ import graft.cdc.{CdcEvent, EventGen}
   * compilations are counted by `CodegenMetrics.METRIC_COMPILATION_TIME`,
   * which records one sample per compiled class. The other [[KeyedFold]]
   * streams whose state holds no collection (Transition, Compaction,
-  * NearDup) are held to the second-query rule too. */
+  * NearDup) are held to the second-query rule too, and the foreachBatch
+  * merge ([[CdcStream.mergeBatchIntoParquet]]) onto a stored view
+  * compiles nothing after its first call. */
 class CdcCodegenReuseSpec extends SparkSpec {
 
   private val RocksProvider =
@@ -96,4 +98,21 @@ class CdcCodegenReuseSpec extends SparkSpec {
           s"first query $first, second query $second, per batch then stop")
       } finally spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
     }
+
+  test("foreachBatch path: a second and third mergeBatchIntoParquet compile nothing") {
+    import spark.implicits._
+    val viewPath = java.nio.file.Files.createTempDirectory("graft-codegen-view").toString + "/view"
+    val events = EventGen.generate(nTx = 40, seed = 95L)
+    val batches = events.grouped(math.ceil(events.size / 4.0).toInt).toSeq
+    assert(batches.size == 4)
+    // a preloaded view, as a live stream merges onto one: every call then
+    // reads stored rows (a first merge onto an empty view plans no scan)
+    CdcStream.mergeBatchIntoParquet(spark, batches.head.toDS(), viewPath, 0L)
+    val perCall = batches.tail.zipWithIndex.map { case (b, i) =>
+      val c0 = compilations()
+      CdcStream.mergeBatchIntoParquet(spark, b.toDS(), viewPath, i + 1L)
+      compilations() - c0
+    }
+    assert(perCall.drop(1).forall(_ == 0), s"compilations per call after the preload: $perCall")
+  }
 }

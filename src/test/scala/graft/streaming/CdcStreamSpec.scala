@@ -419,6 +419,56 @@ class CdcStreamSpec extends SparkSpec {
       changelog = true)
     assert(evals.value == b0.size + b1.size)
   }
+
+  test("changelog: readChangelog finds the feed of a view on a file: URI path") {
+    import spark.implicits._
+    val viewPath = "file://" + java.nio.file.Files.createTempDirectory("graft-view-cl-uri").toString + "/view"
+    val events = EventGen.generate(nTx = 4, seed = 57L)
+    CdcStream.mergeBatchIntoParquet(spark, events.toDS(), viewPath, 0L, changelog = true)
+    val feed = CdcStream.readChangelog(spark, viewPath)
+    assert(feed.isDefined, "the change feed of a file: URI view read as absent")
+    // a first batch creates every key it lands: one feed row per view row
+    val keys = ViewStore.read(spark, viewPath).get.select("transactionId").as[String].collect().toSet
+    assert(keys.nonEmpty && feed.get.collect().map(_.transactionId).toSet == keys)
+  }
+
+  test("mergeBatchIntoParquet writes through no AppendColumns or MapElements") {
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.plans.logical.{AppendColumns, LogicalPlan, MapElements}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
+    val writes = new java.util.concurrent.ConcurrentLinkedQueue[LogicalPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit =
+        if (qe.analyzed.exists(_.isInstanceOf[InsertIntoHadoopFsRelationCommand])) writes.add(qe.optimizedPlan)
+      override def onFailure(funcName: String, qe: QueryExecution, exception: Exception): Unit = ()
+    }
+    /** Every node of `p`, inside cached relations too. */
+    def nodes(p: LogicalPlan): Seq[LogicalPlan] = p.flatMap {
+      case m: InMemoryRelation => m +: nodes(m.cacheBuilder.logicalPlan)
+      case n => Seq(n)
+    }
+    val viewPath = java.nio.file.Files.createTempDirectory("graft-view-plan").toString + "/view"
+    val events = EventGen.generate(nTx = 8, seed = 59L)
+    val (b0, b1) = events.splitAt(events.size / 2)
+    spark.listenerManager.register(listener)
+    try {
+      CdcStream.mergeBatchIntoParquet(spark, b0.toDS(), viewPath, 0L)
+      CdcStream.mergeBatchIntoParquet(spark, b1.toDS(), viewPath, 1L, changelog = true)
+      // listener events arrive in order: a sentinel write is seen last
+      spark.range(1).write.mode("overwrite").parquet(viewPath + "-sentinel")
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (writes.size < 4 && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally spark.listenerManager.unregister(listener)
+    val plans = scala.jdk.CollectionConverters.IteratorHasAsScala(writes.iterator()).asScala.toSeq
+    // two view writes, one feed write, the sentinel
+    assert(plans.size == 4, s"captured ${plans.size} writes")
+    plans.foreach { p =>
+      val typed = nodes(p).collect { case n @ (_: AppendColumns | _: MapElements) => n.nodeName }
+      assert(typed.isEmpty, s"write plan holds $typed:\n$p")
+    }
+  }
 }
 
 object CdcStreamSpec {

@@ -64,4 +64,21 @@ class DeadLetterSpec extends SparkSpec {
     val q = DeadLetter.readQuarantine(spark, dir)
     assert(q.count() == 0 && q.columns.toSeq == Seq("raw", "err", "batch_id"))
   }
+
+  test("readQuarantine on a file: URI dir finds the quarantined batches") {
+    val dir = "file://" + Files.createTempDirectory("graft-dlq-uri").toString
+    DeadLetter.quarantine(Seq(("x:1", "e")).toDF("raw", "err"), dir, 3L)
+    val q = DeadLetter.readQuarantine(spark, dir)
+    assert(q.select("raw", "batch_id").as[(String, Long)].collect().toSeq == Seq(("x:1", 3L)))
+  }
+
+  test("purge on a file: URI dir deletes the retired batches") {
+    val local = Files.createTempDirectory("graft-dlq-uri-purge").toString
+    val dir = "file://" + local
+    DeadLetter.quarantine(Seq(("x:1", "e")).toDF("raw", "err"), dir, 0L)
+    DeadLetter.quarantine(Seq(("y:2", "e")).toDF("raw", "err"), dir, 1L)
+    DeadLetter.purge(dir, upToBatch = 0L)
+    assert(!new java.io.File(local, "batch-0").exists(), "batch 0 was not purged")
+    assert(new java.io.File(local, "batch-1").exists(), "batch 1 was purged")
+  }
 }

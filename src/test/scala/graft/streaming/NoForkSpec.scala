@@ -50,7 +50,7 @@ class NoForkSpec extends SparkSpec {
     val view = Files.createTempDirectory("graft-nofork-view").toString
     val rows = (1L to 40L).map(k => (k, k * 10)).toDF("k", "v")
     val forks = processStarts {
-      ViewStore.mergeKeyed(spark, view, 0L, rows, "k")(_.fold(rows)(_.unionByName(rows)))
+      ViewStore.mergeKeyed(spark, view, 0L, rows, "k")((existing, in) => existing.fold(in)(_.unionByName(in)))
     }
     assert(ViewStore.readManifest(spark, view).exists(_.lastBatchId == 0L))
     assertNoFsForks(forks)

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
@@ -24,7 +24,7 @@ class ViewStoreSpec extends SparkSpec {
     replaceBuckets(path, batchId, rows.toDF("k", "v"))
 
   private def replaceBuckets(path: String, batchId: Long, df: DataFrame): Unit =
-    ViewStore.mergeKeyed(spark, path, batchId, df, "k")(_ => df)
+    ViewStore.mergeKeyed(spark, path, batchId, df, "k")((_, in) => in)
 
   /** Rows with nullable, non-nullable, string and timestamp columns. */
   private def commitWide(path: String, batchId: Long, keys: Seq[Long]): Unit =
@@ -425,9 +425,9 @@ class ViewStoreSpec extends SparkSpec {
   private def mergeMax(path: String, batchId: Long, rows: Seq[(Long, Long)],
       calls: java.util.concurrent.atomic.AtomicInteger): Unit = {
     val incoming = rows.toDF("k", "v")
-    ViewStore.mergeKeyed(spark, path, batchId, incoming, "k") { existing =>
+    ViewStore.mergeKeyed(spark, path, batchId, incoming, "k") { (existing, in) =>
       calls.incrementAndGet()
-      existing.fold(incoming)(_.unionByName(incoming).groupBy("k").agg(max("v").as("v")))
+      existing.fold(in)(_.unionByName(in).groupBy("k").agg(max("v").as("v")))
     }
   }
 
@@ -445,8 +445,8 @@ class ViewStoreSpec extends SparkSpec {
       case (rows, batchId) =>
         val before = evals.value
         val incoming = counted(rows)
-        ViewStore.mergeKeyed(spark, path, batchId.toLong, incoming, "k") { existing =>
-          existing.fold(incoming)(_.unionByName(incoming).groupBy("k").agg(max("v").as("v")))
+        ViewStore.mergeKeyed(spark, path, batchId.toLong, incoming, "k") { (existing, in) =>
+          existing.fold(in)(_.unionByName(in).groupBy("k").agg(max("v").as("v")))
         }
         assert(evals.value - before == rows.size, s"batch $batchId")
         assert(incoming.storageLevel == org.apache.spark.storage.StorageLevel.NONE, "incoming left cached")
@@ -488,9 +488,9 @@ class ViewStoreSpec extends SparkSpec {
     val want = (0L until 200L).toDF("k")
       .where(ViewStore.bucketOf(col("k")).isin(touched: _*)).as[Long].collect().toSet
     var seen = Option.empty[org.apache.spark.sql.DataFrame]
-    ViewStore.mergeKeyed(spark, path, 1L, incoming, "k") { existing =>
+    ViewStore.mergeKeyed(spark, path, 1L, incoming, "k") { (existing, in) =>
       seen = existing
-      existing.get.unionByName(incoming).groupBy("k").agg(max("v").as("v"))
+      existing.get.unionByName(in).groupBy("k").agg(max("v").as("v"))
     }
     assert(seen.get.columns.toSeq == Seq("k", "v"))
     assert(seen.get.select("k").as[Long].collect().toSet == want)
@@ -504,12 +504,12 @@ class ViewStoreSpec extends SparkSpec {
     val before = ViewStore.readManifest(spark, path)
     val incoming = Seq((1L, 11L)).toDF("k", "v")
     intercept[IllegalStateException] {
-      ViewStore.mergeKeyed(spark, path, 1L, incoming, "k")(_ => throw new IllegalStateException("boom"))
+      ViewStore.mergeKeyed(spark, path, 1L, incoming, "k")((_, _) => throw new IllegalStateException("boom"))
     }
     assert(ViewStore.readManifest(spark, path) == before)
     intercept[Exception] {
       ViewStore.mergeKeyed(spark, path, 1L, incoming, "k")(
-        _ => incoming.withColumn("v", expr("CAST(raise_error('boom') AS BIGINT)")))
+        (_, in) => in.withColumn("v", expr("CAST(raise_error('boom') AS BIGINT)")))
     }
     assert(ViewStore.readManifest(spark, path) == before)
     assert(kv(path) == Set((1L, 10L), (2L, 20L)))
@@ -653,5 +653,158 @@ class ViewStoreSpec extends SparkSpec {
       refused("first batch")(q.processAllAvailable())
     } finally q.stop()
     assert(!new java.io.File(state, "gen-0").exists(), "a refused batch wrote a generation")
+  }
+
+  // ---- bucket-pruned point reads ----
+
+  /** The scan of an executed read: files it opened. */
+  private def scannedFiles(df: DataFrame): Long =
+    collectAllPlans(executedPlan(df)).collect {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.metrics("numFiles").value
+    }.sum
+
+  /** Parquet files under the live manifest's dirs of `buckets` (all if None). */
+  private def liveFiles(path: String, buckets: Option[Seq[Int]] = None): Long = {
+    val m = ViewStore.readManifest(spark, path).get.buckets
+    buckets.fold(m.values.toSeq)(_.flatMap(m.get)).map { rel =>
+      val it = java.nio.file.Files.list(java.nio.file.Paths.get(path, rel))
+      try it.filter(_.toString.endsWith(".parquet")).count() finally it.close()
+    }.sum
+  }
+
+  private def bucketOfKey(k: Column): Int =
+    spark.range(1).select(ViewStore.bucketOf(k)).as[Long].head().toInt
+
+  private def sortedRows(df: DataFrame): Seq[String] = df.collect().map(_.toString).sorted.toSeq
+
+  test("pruning property: a key-filtered read returns the rows of an unpruned read") {
+    val rnd = new scala.util.Random(20261020L)
+    Seq("long", "string").foreach { keyType =>
+      withClue(keyType) {
+        val path = tmp()
+        def key(i: Long): Column = if (keyType == "long") lit(i) else lit(s"key-$i")
+        val keys = (0 until 300).map(_ => rnd.nextInt(1000).toLong).distinct
+        // null keys ride in their own bucket; several write tasks per batch
+        val rows = keys.map(k => (Option(k), k * 7)) :+ ((Option.empty[Long], -1L))
+        val df = rows.toDF("k0", "v").repartition(3)
+          .select((if (keyType == "long") col("k0") else concat(lit("key-"), col("k0"))).as("k"), col("v"))
+        replaceBuckets(path, 0L, df)
+        replaceBuckets(path, 1L, df.where(col("v") % 2 === 0).withColumn("v", col("v") + 1))
+        val full = readParquet(path)
+        def someKeys(n: Int): Seq[Long] = Seq.fill(n)(if (rnd.nextBoolean()) keys(rnd.nextInt(keys.size)) else 1000L + rnd.nextInt(100))
+        (0 until 24).foreach { i =>
+          val ks = someKeys(1 + rnd.nextInt(16))
+          val filter = i % 6 match {
+            case 0 => col("k") === key(ks.head)
+            case 1 => col("k").isin(ks.take(4).map(k => if (keyType == "long") k else s"key-$k"): _*)
+            // more than 10 distinct values: the optimizer makes an InSet
+            case 2 => col("k").isin((ks ++ (5000L until 5012L)).map(k => if (keyType == "long") k else s"key-$k"): _*)
+            case 3 => col("k") <=> key(ks.head)
+            case 4 => col("k") <=> lit(null).cast(if (keyType == "long") "bigint" else "string")
+            case _ => col("k").isin(ks.take(3).map(k => if (keyType == "long") k else s"key-$k"): _*) && col("k") === key(ks.head)
+          }
+          withClue(filter) {
+            assert(sortedRows(ViewStore.read(spark, path).get.where(filter)) == sortedRows(full.where(filter)))
+          }
+        }
+      }
+    }
+  }
+
+  test("pruning: a point read opens only its key's bucket's files") {
+    val path = tmp()
+    replaceBuckets(path, 0L, (0L until 400L).map(k => (k, k)).toDF("k", "v").repartition(3))
+    val b = bucketOfKey(lit(42L))
+    assert(liveFiles(path, Some(Seq(b))) < liveFiles(path), "precondition: more than one bucket")
+    val read = ViewStore.read(spark, path).get.where(col("k") === 42L)
+    assert(scannedFiles(read) == liveFiles(path, Some(Seq(b))))
+    assert(read.select("v").as[Long].collect().toSeq == Seq(42L))
+    // inputFiles and the size estimate stay those of the whole view
+    assert(read.inputFiles.length == liveFiles(path))
+  }
+
+  test("pruning: a manifest written without keyCol reads every file") {
+    val path = tmp()
+    replaceBuckets(path, 0L, (0L until 400L).map(k => (k, k)).toDF("k", "v"))
+    val f = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    val m = ViewStore.readManifest(spark, path).get
+    assert(m.keyCol.contains("k"))
+    ViewStore.writeManifest(f, new org.apache.hadoop.fs.Path(path), m.copy(seq = m.seq + 1, keyCol = None))
+    val read = ViewStore.read(spark, path).get.where(col("k") === 42L)
+    assert(scannedFiles(read) == liveFiles(path))
+    assert(read.select("v").as[Long].collect().toSeq == Seq(42L))
+    // the next commit writes the line back
+    commitBatch(path, 1L, Seq((1000L, 1L)))
+    assert(ViewStore.readManifest(spark, path).get.keyCol.contains("k"))
+  }
+
+  test("pruning: a Double key and a collated-string key are never pruned") {
+    val dbl = tmp()
+    // -0.0 = 0.0 in SQL, but the two hash apart
+    replaceBuckets(dbl, 0L, ((0 until 200).map(i => (i.toDouble, i.toLong)) :+ ((-0.0, -1L))).toDF("k", "v"))
+    val zero = ViewStore.read(spark, dbl).get.where(col("k") === 0.0)
+    assert(scannedFiles(zero) == liveFiles(dbl))
+    assert(zero.select("v").as[Long].collect().toSet == Set(0L, -1L))
+    val lcase = tmp()
+    replaceBuckets(lcase, 0L, (0 until 200).map(i => (s"Key-$i", i.toLong)).toDF("k0", "v")
+      .select(expr("collate(k0, 'UTF8_LCASE')").as("k"), col("v")))
+    val viewRead = ViewStore.read(spark, lcase).get
+    assert(viewRead.schema("k").dataType != org.apache.spark.sql.types.StringType, "precondition: collated")
+    val hit = viewRead.where(col("k") === "KEY-7")
+    assert(scannedFiles(hit) == liveFiles(lcase))
+    assert(hit.select("v").as[Long].collect().toSeq == Seq(7L))
+  }
+
+  test("manifest text round-trips, with and without keyCol") {
+    val path = tmp()
+    val f = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(path), spark.sparkContext.hadoopConfiguration)
+    val root = new org.apache.hadoop.fs.Path(path)
+    val keyed = ViewStore.Manifest(0L, 7L, Map("3" -> "gen-7/__bucket=3", "12" -> "gen-5/__bucket=12"), Some("transactionId"))
+    ViewStore.writeManifest(f, root, keyed)
+    assert(ViewStore.readManifest(spark, path).get == keyed)
+    val text = new String(java.nio.file.Files.readAllBytes(
+      java.nio.file.Paths.get(path, "MANIFEST-00000000000000000000")), "UTF-8")
+    assert(text == "batchId=7\nkeyCol=transactionId\n3=gen-7/__bucket=3\n12=gen-5/__bucket=12\n")
+    val plain = ViewStore.Manifest(1L, 8L, Map(ViewStore.Snapshot -> "gen-8/snapshot"))
+    ViewStore.writeManifest(f, root, plain)
+    assert(ViewStore.readManifest(spark, path).get == plain)
+  }
+
+  test("mergeKeyed: a 25-partition batch runs no stage wider than the cores") {
+    val path = tmp()
+    val sc = spark.sparkContext
+    val group = s"viewstore-width-${System.nanoTime()}"
+    val widths = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onStageSubmitted(e: org.apache.spark.scheduler.SparkListenerStageSubmitted): Unit =
+        widths.add(Option(e.properties).map(_.getProperty("spark.jobGroup.id")).orNull -> e.stageInfo.numTasks)
+    }
+    // one input partition per row, as a MemoryStream gives one per addData
+    def batch(from: Long) = sc.parallelize((from until from + 25L).map(k => (k, k)), 25).toDF("k", "v")
+    assert(batch(0L).rdd.getNumPartitions == 25)
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "mergeKeyed width")
+      // on an empty view and over a written one; a combine that builds on
+      // the batch alone (a union with the stored rows adds their scan's
+      // partitions, which the batch does not decide)
+      ViewStore.mergeKeyed(spark, path, 0L, batch(0L), "k")((_, in) => in)
+      ViewStore.mergeKeyed(spark, path, 1L, batch(10L), "k")((_, in) => in.where(col("k") < 25L))
+      // listener events arrive in order: once this sentinel stage is seen,
+      // every stage of the merges has been seen too
+      sc.setJobGroup(group + "-sentinel", "sentinel")
+      spark.range(1).collect()
+      def all = scala.jdk.CollectionConverters.IteratorHasAsScala(widths.iterator()).asScala.toSeq
+      val deadline = System.nanoTime() + 30L * 1000000000L
+      while (!all.exists(_._1 == group + "-sentinel") && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally {
+      sc.clearJobGroup()
+      sc.removeSparkListener(listener)
+    }
+    val seen = scala.jdk.CollectionConverters.IteratorHasAsScala(widths.iterator()).asScala.toSeq
+      .collect { case (g, n) if g == group => n }
+    assert(seen.nonEmpty)
+    assert(seen.forall(_ <= sc.defaultParallelism), s"stage widths $seen, cores ${sc.defaultParallelism}")
+    assert(kv(path).filter(_._1 >= 10L) == (10L until 25L).map(k => (k, k)).toSet)
   }
 }
