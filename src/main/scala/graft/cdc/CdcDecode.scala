@@ -11,6 +11,9 @@ import org.apache.spark.sql.functions._
   * exact skip semantics, minus the side-channel log (countable via
   * `observe`, see [[graft.streaming.StreamHealth]]).
   *
+  * Each envelope supplies its document column, `operationType` rule and
+  * clock; one private tail, `decoded`, applies every other rule.
+  *
   * Works identically on batch and streaming DataFrames (same expression).
   */
 object CdcDecode {
@@ -19,17 +22,9 @@ object CdcDecode {
 
   /** Parse a JSON-string column into typed events; corrupt records and
     * records missing the required envelope fields are dropped. */
-  def fromJson(raw: DataFrame, jsonCol: String = "json"): Dataset[CdcEvent] = {
-    val parsed = raw
-      .withColumn("e", from_json(col(jsonCol), eventEncoder.schema))
-      // PERMISSIVE from_json nulls the struct on unparseable input; a
-      // parseable record must still carry the envelope's required fields
-      .filter(col("e").isNotNull &&
-        col("e.id").isNotNull && col("e.transactionId").isNotNull &&
-        col("e.eventCode").isNotNull && col("e.tsMs").isNotNull)
-      .select(col("e.*"))
-    withDefaults(parsed, InsertByDefault).as[CdcEvent](eventEncoder)
-  }
+  def fromJson(raw: DataFrame, jsonCol: String = "json"): Dataset[CdcEvent] =
+    decoded(raw.withColumn("e", from_json(col(jsonCol), eventEncoder.schema)), "e",
+      insertByDefault("e"), clock = None).as[CdcEvent](eventEncoder)
 
   /** Serialize typed events to the JSON wire form (round-trip partner of
     * [[fromJson]]; used by tests and as the file-sink wire format). */
@@ -62,10 +57,7 @@ object CdcDecode {
     * broker metadata survives as `_topic/_partition/_offset/_ingestTsMs`
     * via [[fromKafkaEnvelopeWithMeta]] when lineage is needed. */
   def fromKafkaEnvelope(kafka: DataFrame): Dataset[CdcEvent] =
-    fromJson(
-      kafka.filter(col("value").isNotNull)
-        .select(col("value").cast("string").as("json")),
-      "json")
+    kafkaDecoded(kafka).as[CdcEvent](eventEncoder)
 
   /** O1 — decode a Debezium JSON envelope, the other dominant CDC wire
     * format (the reference's Mongo change stream has the same envelope
@@ -88,21 +80,14 @@ object CdcDecode {
         StructField("after", StringType),
         StructField("op", StringType),
         StructField("ts_ms", LongType))))))
-    val parsed = raw
+    val envelopes = raw
       .withColumn("p", from_json(col(jsonCol), envSchema))
       .filter(col("p.payload.op").isin("c", "r", "u") &&
         col("p.payload.after").isNotNull)
       .withColumn("doc", from_json(col("p.payload.after"), eventEncoder.schema))
-      .filter(col("doc").isNotNull &&
-        col("doc.id").isNotNull && col("doc.transactionId").isNotNull &&
-        col("doc.eventCode").isNotNull)
-      .select(col("doc.*"),
-        col("p.payload.op").as("__op"), col("p.payload.ts_ms").as("__envTs"))
-      .withColumn("tsMs", coalesce(col("tsMs"), col("__envTs")))
-      .filter(col("tsMs").isNotNull)
-    withDefaults(parsed, when(col("__op") === "u", lit("update")).otherwise(lit("insert")))
-      .drop("__op", "__envTs")
-      .as[CdcEvent](eventEncoder)
+    decoded(envelopes, "doc",
+      when(col("p.payload.op") === "u", lit("update")).otherwise(lit("insert")),
+      clock = Some(col("p.payload.ts_ms"))).as[CdcEvent](eventEncoder)
   }
 
   /** O1 — decode a MongoDB change-stream envelope, the reference's OWN wire
@@ -139,54 +124,63 @@ object CdcDecode {
         StructField("$timestamp", StructType(Seq(
           StructField("t", LongType), StructField("i", LongType))))))),
       StructField("fullDocument", eventEncoder.schema)))
-    val parsed = raw
+    val envelopes = raw
       .withColumn("p", from_json(col(jsonCol), envSchema))
-      .filter(col("p.operationType").isin("insert", "update", "replace") &&
-        col("p.fullDocument").isNotNull)
+      .filter(col("p.operationType").isin("insert", "update", "replace"))
       // ttl applicative skip: the reference cannot filter server-side on
       // operationType alone (the driver reports null for some stores), so
       // any document carrying ttl is the migration update and is skipped
       .filter(col("p.fullDocument.ttl").isNull)
-      .select(col("p.fullDocument.*"),
-        col("p.operationType").as("__op"),
-        col("p.clusterTime.`$timestamp`.t").as("__ct"))
-      .filter(col("id").isNotNull && col("transactionId").isNotNull &&
-        col("eventCode").isNotNull)
-      .withColumn("tsMs", coalesce(col("tsMs"), col("__ct") * lit(1000L)))
-      .filter(col("tsMs").isNotNull)
-    withDefaults(parsed, when(col("__op") === "insert", lit("insert")).otherwise(lit("update")))
-      .drop("__op", "__ct")
-      .as[CdcEvent](eventEncoder)
+    decoded(envelopes, "p.fullDocument",
+      when(col("p.operationType") === "insert", lit("insert")).otherwise(lit("update")),
+      clock = Some(col("p.clusterTime.`$timestamp`.t") * lit(1000L))).as[CdcEvent](eventEncoder)
   }
 
   /** [[fromKafkaEnvelope]] plus the broker-side lineage columns. */
-  def fromKafkaEnvelopeWithMeta(kafka: DataFrame): DataFrame = {
-    val parsed = kafka.filter(col("value").isNotNull)
-      .withColumn("e", from_json(col("value").cast("string"), eventEncoder.schema))
-      .filter(col("e").isNotNull &&
-        col("e.id").isNotNull && col("e.transactionId").isNotNull &&
-        col("e.eventCode").isNotNull && col("e.tsMs").isNotNull)
-    withDefaults(parsed.select(
-      col("e.*"),
+  def fromKafkaEnvelopeWithMeta(kafka: DataFrame): DataFrame =
+    kafkaDecoded(kafka,
       col("topic").as("_topic"),
       col("partition").as("_partition"),
       col("offset").as("_offset"),
-      (col("timestamp").cast("double") * 1000).cast("long").as("_ingestTsMs")),
-      InsertByDefault)
-  }
+      (col("timestamp").cast("double") * 1000).cast("long").as("_ingestTsMs"))
 
-  /** The model's `operationType` default: from_json does NOT apply
-    * case-class defaults, and a missing operationType would silently fail
-    * the downstream insert/update/replace filter. */
-  private val InsertByDefault = coalesce(col("operationType"), lit("insert"))
+  /** The Kafka decode: tombstones dropped, the value parsed as a plain
+    * JSON document, `lineage` carried beside the event's columns. */
+  private def kafkaDecoded(kafka: DataFrame, lineage: Column*): DataFrame =
+    decoded(
+      kafka.filter(col("value").isNotNull)
+        .withColumn("e", from_json(col("value").cast("string"), eventEncoder.schema)),
+      "e", insertByDefault("e"), clock = None, lineage: _*)
 
-  /** The envelope defaults every decoder ends with: `operationType` as the
-    * decoder maps it, and `creationDate` derived from `tsMs` when the
-    * writer omitted it. */
-  private def withDefaults(parsed: DataFrame, operationType: Column): DataFrame =
-    parsed
-      .withColumn("operationType", operationType)
+  /** The document's own `operationType`, defaulted as the model does:
+    * from_json does NOT apply case-class defaults. */
+  private def insertByDefault(doc: String): Column =
+    coalesce(col(s"$doc.operationType"), lit("insert"))
+
+  /** The tail of every envelope: drops a corrupt `doc` (null) or one
+    * missing `id`, `transactionId` or `eventCode`; fills a missing `tsMs`
+    * from the envelope `clock` (so ordering rides the source clock), else
+    * drops the row; defaults `creationDate` from `tsMs`. Returns the
+    * event's columns, then `lineage`. */
+  private def decoded(
+      envelopes: DataFrame,
+      doc: String,
+      operationType: Column,
+      clock: Option[Column],
+      lineage: Column*): DataFrame = {
+    def field(name: String) = col(s"$doc.$name")
+    val event = eventEncoder.schema.fieldNames.toSeq.map {
+      case "operationType" => operationType.as("operationType")
+      case "tsMs" => clock.fold(field("tsMs"))(coalesce(field("tsMs"), _)).as("tsMs")
+      case name => field(name).as(name)
+    }
+    envelopes
+      .filter(col(doc).isNotNull && field("id").isNotNull &&
+        field("transactionId").isNotNull && field("eventCode").isNotNull)
+      .select(event ++ lineage: _*)
+      .filter(col("tsMs").isNotNull)
       .withColumn("creationDate",
         coalesce(col("creationDate"),
           date_format(timestamp_millis(col("tsMs")), "yyyy-MM-dd'T'HH:mm:ss.SSSX")))
+  }
 }

@@ -29,20 +29,30 @@ object ReferenceFold {
       store.updated(e.transactionId, processOne(store.get(e.transactionId), e))
     }
 
-  def processOne(view: Option[TransactionView], e: CdcEvent): TransactionView =
+  def processOne(view: Option[TransactionView], e: CdcEvent): TransactionView = step(view, e)._1
+
+  /** The rung an event takes: `Full` (rungs 1-2 above), `Enrich` or
+    * `Noop` (rung 3, with or without a data update). */
+  sealed trait Rung
+  case object Full extends Rung
+  case object Enrich extends Rung
+  case object Noop extends Rung
+
+  /** One event folded onto `view`: the view after it and the rung it took. */
+  def step(view: Option[TransactionView], e: CdcEvent): (TransactionView, Rung) =
     view match {
       case None =>
-        applyStatusUpdate(TransactionView.empty(e.transactionId), e)
+        (applyStatusUpdate(TransactionView.empty(e.transactionId), e), Full)
       case Some(v) if v.lastProcessedEventAt.forall(_ < e.tsMs) =>
-        applyStatusUpdate(v, e)
+        (applyStatusUpdate(v, e), Full)
       case Some(v) =>
-        applyDataUpdate(v, e) // stale event: enrichment only (or no-op)
+        applyDataUpdate(v, e).fold[(TransactionView, Rung)]((v, Noop))((_, Enrich))
     }
 
   /** The conditional "status update" fragment: everything the handler sets,
     * including status and the watermark. */
   def applyStatusUpdate(v0: TransactionView, e: CdcEvent): TransactionView = {
-    val v = applyDataUpdate(v0, e) // statusUpdate ⊇ dataUpdate in every handler
+    val v = applyDataUpdate(v0, e).getOrElse(v0) // statusUpdate ⊇ dataUpdate in every handler
       .copy(lastProcessedEventAt = Some(e.tsMs))
     e.eventCode match {
       case Activated => v.copy(status = Some(Status.Activated))
@@ -97,9 +107,9 @@ object ReferenceFold {
   }
 
   /** The unconditional "data update" fragment (enrichment fields only —
-    * applied regardless of event order). Returns the view unchanged for
-    * handlers with no data update. */
-  def applyDataUpdate(v: TransactionView, e: CdcEvent): TransactionView =
+    * applied regardless of event order), or None for handlers with no
+    * data update. */
+  def applyDataUpdate(v: TransactionView, e: CdcEvent): Option[TransactionView] =
     e.eventCode match {
       case Activated =>
         val w = v.copy(
@@ -107,18 +117,18 @@ object ReferenceFold {
           paymentNoticesJson = e.paymentNoticesJson,
           clientId = e.clientId,
           creationDate = Some(e.creationDate))
-        if (e.userId.isDefined) w.copy(userId = e.userId) else w
+        Some(if (e.userId.isDefined) w.copy(userId = e.userId) else w)
       case AuthRequested =>
-        v.copy(
+        Some(v.copy(
           paymentGateway = e.paymentGateway,
           paymentTypeCode = e.paymentTypeCode,
           pspId = e.pspId,
           feeTotal = e.fee,
-          authorizationRequestId = e.authorizationRequestId)
+          authorizationRequestId = e.authorizationRequestId))
       case AuthCompleted =>
         // set-or-unset: a null payload field explicitly clears the view field
         val base = v.copy(authorizationCode = e.authorizationCode, rrn = e.rrn)
-        e.gatewayType match {
+        Some(e.gatewayType match {
           case Some("NPG") =>
             val w = base.copy(
               gatewayAuthorizationStatus = e.operationResult,
@@ -129,19 +139,11 @@ object ReferenceFold {
               gatewayAuthorizationStatus = e.outcome,
               authorizationErrorCode = e.gatewayErrorCode)
           case _ => base // unhandled gateway type: only code/rrn written
-        }
+        })
       case UserReceiptRequested =>
-        v.copy(sendPaymentResultOutcome = e.responseOutcome)
+        Some(v.copy(sendPaymentResultOutcome = e.responseOutcome))
       case Closed | ClosureSynthetic =>
-        v.copy(closureErrorJson = None) // $unset
-      case _ => v // no data update for the remaining handlers
+        Some(v.copy(closureErrorJson = None)) // $unset
+      case _ => None // no data update for the remaining handlers
     }
-
-  /** True iff the handler produces a data (enrichment) update — determines
-    * whether a stale event is an enrichment write or a no-op. */
-  def hasDataUpdate(eventCode: String): Boolean = eventCode match {
-    case Activated | AuthRequested | AuthCompleted | UserReceiptRequested |
-        Closed | ClosureSynthetic => true
-    case _ => false
-  }
 }

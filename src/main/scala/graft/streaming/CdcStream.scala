@@ -16,7 +16,7 @@ import graft.cdc.{Admission, CdcEvent, ReferenceFold, TransactionView}
   *    per-key serial execution, so the Redis `SET NX` lock (O7,
   *    `CdcLockService.kt:40-50`) reduces to per-key duplicate-id tracking
   *    in state;
-  *  - merge ladder: [[ReferenceFold.processOne]] — the SAME pure function
+  *  - merge ladder: [[ReferenceFold.step]] — the SAME pure function
   *    the batch fold uses — applied per event in arrival order via
   *    [[KeyedFold]] (O10–O13).
   *
@@ -87,10 +87,10 @@ object CdcStream {
 
   /** One ladder step, shared by the stateful and the foreachBatch path: a
     * key's batch events fold onto `view` in (tsMs, id) order through
-    * [[ReferenceFold.processOne]]; an id already in `seen`, or repeated
-    * in the batch, is dropped and counted as DupDropped, so the copy with
-    * the earliest tsMs is the one applied. Returns the new view and the
-    * ids seen after the batch. */
+    * [[ReferenceFold.step]], each counted under the rung it reports; an
+    * id already in `seen`, or repeated in the batch, is dropped and
+    * counted as DupDropped, so the copy with the earliest tsMs is the one
+    * applied. Returns the new view and the ids seen after the batch. */
   private def ladder(
       view: Option[TransactionView],
       seen: Set[String],
@@ -105,8 +105,9 @@ object CdcStream {
         metrics.foreach(_.add(MergeMetrics.key(e.eventCode, MergeMetrics.DupDropped)))
         (v, ids)
       } else {
-        metrics.foreach(_.add(MergeMetrics.key(e.eventCode, MergeMetrics.classify(v, e))))
-        (Some(ReferenceFold.processOne(v, e)), ids + e.id)
+        val (after, rung) = ReferenceFold.step(v, e)
+        metrics.foreach(_.add(MergeMetrics.key(e.eventCode, MergeMetrics.outcome(rung))))
+        (Some(after), ids + e.id)
       }
     }
 
@@ -173,9 +174,15 @@ object CdcStream {
     * classpath, SURVEY.md §7; on Delta/Iceberg this collapses to one
     * `MERGE INTO`). Fully distributed: a cogroup on the key folds each
     * key's batch events onto its stored view row — exactly the ladder,
-    * one shuffle, no driver-side state. Replayed batchIds are skipped
-    * (the ladder itself is replay-idempotent, the skip just saves the
-    * I/O). The cogroup builds on the batch `mergeKeyed` persists, so the
+    * one shuffle, no driver-side state. Replayed batchIds are skipped,
+    * and the skip is load-bearing: the ladder is not replay-idempotent.
+    * Folding `[Closed(t1), ClosureRetried(t2, closureErrorJson = X)]`
+    * onto an absent view leaves `closureErrorJson` = X; applied again,
+    * both events are stale, Closed's data update unsets the field and
+    * ClosureRetried, which has no data update, does not set it back.
+    * Duplicate ids are dropped within a batch only (no seen-id set is
+    * stored), as in [[EventsView]]. The cogroup builds on the batch
+    * `mergeKeyed` persists, so the
     * pre-filtered events are decoded once for both the touched-bucket
     * scan and the cogroup. Both sides are grouped by the `transactionId`
     * column ([[ViewStore.groupedByKey]]) and the view and feed are

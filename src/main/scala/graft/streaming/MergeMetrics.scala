@@ -4,7 +4,7 @@ import scala.collection.concurrent.TrieMap
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.util.AccumulatorV2
-import graft.cdc.{CdcEvent, ReferenceFold, TransactionView}
+import graft.cdc.ReferenceFold
 
 /** Per-(eventCode, outcome) merge counters — the metrics form of the
   * reference's per-event tracing span (`ViewUpdateTracingUtils.kt:23-37`
@@ -61,12 +61,11 @@ object MergeMetrics {
     a
   }
 
-  /** Which ladder rung the event will take against the given pre-state
-    * (must match [[ReferenceFold.processOne]]'s dispatch exactly). */
-  def classify(view: Option[TransactionView], e: CdcEvent): String = view match {
-    case None => OkFull
-    case Some(v) if v.lastProcessedEventAt.forall(_ < e.tsMs) => OkFull
-    case _ => if (ReferenceFold.hasDataUpdate(e.eventCode)) OkEnrich else NoopStale
+  /** The outcome of the rung [[ReferenceFold.step]] reports. */
+  def outcome(rung: ReferenceFold.Rung): String = rung match {
+    case ReferenceFold.Full => OkFull
+    case ReferenceFold.Enrich => OkEnrich
+    case ReferenceFold.Noop => NoopStale
   }
 
   /** Sum of one outcome across all event codes. */

@@ -521,18 +521,11 @@ object ViewStore {
     val root = new Path(viewPath)
     val purgeNull = keys.contains(null)
     val nonNull = keys.filter(_ != null)
-    // buckets the keys hash into — evaluated through the same bucketOf
-    // expression the writer uses (xxhash64 is engine-side, not JVM-side).
-    // The probe frame carries the TYPED values (not strings cast back):
-    // toString does not round-trip through a SQL cast for timestamps,
-    // binary or exponent-formatted doubles, which would silently skip the
-    // key's real bucket.
-    val keyType = read(spark, viewPath).get.schema(keyCol).dataType
-    val probeSchema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("__k", keyType, nullable = true)))
-    val probeRows = keys.map(k => org.apache.spark.sql.Row(k))
-    import scala.jdk.CollectionConverters._
-    val touched = touchedBuckets(spark.createDataFrame(probeRows.asJava, probeSchema), "__k")
+    // the keys' buckets by the rule pruning uses: bucketOf of each key as
+    // a literal of the key column's type (one bucket's footer tells it),
+    // so no key is rendered as a string and cast back
+    val keyType = bucketsOf(spark, viewPath, m, Seq(m.buckets.keys.head)).get.schema(keyCol).dataType
+    val touched = keys.map(k => bucketOfValue(Literal.create(k, keyType))).distinct.sorted
       .filter(b => m.entries.contains(b.toString))
     if (touched.isEmpty) { retireHistory(f, root); return 0L }
     val current = bucketsOf(spark, viewPath, m, touched)

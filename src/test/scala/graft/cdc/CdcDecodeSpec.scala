@@ -8,6 +8,21 @@ class CdcDecodeSpec extends SparkSpec {
 
   import spark.implicits._
 
+  /** A document as a JSON string inside an envelope's JSON. */
+  private def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
+
+  /** A Mongo change-stream envelope around `doc`, with clusterTime `ct` seconds. */
+  private def mongoEnv(doc: String, op: String, ct: Long = 8888L) =
+    s"""{"operationType":"$op","clusterTime":{"$$timestamp":{"t":$ct,"i":1}},""" +
+      s""""fullDocument":$doc}"""
+
+  /** One record of the exact schema spark's kafka source emits: key/value
+    * binary, topic/partition/offset, broker timestamp, timestampType. */
+  private def rec(value: Array[Byte], off: Long) =
+    ("k1".getBytes("UTF-8"), value, "tx-log", 0, off, new java.sql.Timestamp(1700000000000L + off), 0)
+
+  private val KafkaCols = Seq("key", "value", "topic", "partition", "offset", "timestamp", "timestampType")
+
   test("toJson -> fromJson round-trips generated events exactly") {
     val events = EventGen.generate(nTx = 20, seed = 13L).distinctBy(_.id)
     val back = CdcDecode.fromJson(CdcDecode.toJson(events.toDS()))
@@ -46,18 +61,12 @@ class CdcDecodeSpec extends SparkSpec {
   }
 
   test("kafka envelope decode: binary payloads, tombstones and corrupt records (O1)") {
-    import java.sql.Timestamp
     val good = EventGen.generate(nTx = 4, seed = 17L, noise = false)
     val wire = CdcDecode.toJson(good.toDS()).collect().map(_.getString(0))
-    // the exact schema spark's kafka source emits: key/value binary,
-    // topic/partition/offset, broker timestamp, timestampType
-    def rec(value: Array[Byte], off: Long) =
-      ("k1".getBytes("UTF-8"), value, "tx-log", 0, off, new Timestamp(1700000000000L + off), 0)
     val rows = wire.zipWithIndex.map { case (j, i) => rec(j.getBytes("UTF-8"), i.toLong) } :+
       rec(null, 100L) :+ // tombstone (compaction delete)
       rec("{ not json".getBytes("UTF-8"), 101L) // corrupt payload
-    val kafka = rows.toSeq
-      .toDF("key", "value", "topic", "partition", "offset", "timestamp", "timestampType")
+    val kafka = rows.toSeq.toDF(KafkaCols: _*)
     val out = CdcDecode.fromKafkaEnvelope(kafka).collect()
     assert(out.map(_.id).toSet == good.map(_.id).toSet)
     val withMeta = CdcDecode.fromKafkaEnvelopeWithMeta(kafka)
@@ -74,7 +83,6 @@ class CdcDecodeSpec extends SparkSpec {
 
   test("debezium envelope decode: op mapping, deletes/corrupt dropped, envelope ts_ms fallback (O1)") {
     val good = EventGen.generate(nTx = 2, seed = 23L, noise = false)
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
     val wire = CdcDecode.toJson(good.toDS()).collect().map(_.getString(0))
     // wrap each document in a Debezium envelope; alternate create/update
     val envelopes = wire.zipWithIndex.map { case (doc, i) =>
@@ -108,7 +116,6 @@ class CdcDecodeSpec extends SparkSpec {
     import org.scalacheck.Prop.forAllNoShrink
     import org.scalacheck.{Gen, Test => SCTest}
     import graft.streaming.{CdcStream, ViewStore}
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
     // The delivery model this mirrors (q04's redelivery + the CDC wire
     // contract): micro-batches are consecutive source-time slices (a
     // change stream is offset-ordered between restarts); WITHIN a batch
@@ -166,9 +173,6 @@ class CdcDecodeSpec extends SparkSpec {
     val good = EventGen.generate(nTx = 3, seed = 29L, noise = false)
       .filter(_.ttl.isEmpty)
     val wire = CdcDecode.toJson(good.toDS()).collect().map(_.getString(0))
-    def mongoEnv(doc: String, op: String, ct: Long = 8888L) =
-      s"""{"operationType":"$op","clusterTime":{"$$timestamp":{"t":$ct,"i":1}},""" +
-        s""""fullDocument":$doc}"""
     // op mix covering the mapping table: insert -> insert, update/replace -> update
     val ops = Seq("insert", "update", "replace")
     val mongoWire = wire.zipWithIndex.map { case (doc, i) => mongoEnv(doc, ops(i % 3)) }
@@ -199,7 +203,6 @@ class CdcDecodeSpec extends SparkSpec {
     }
     // decode parity with the Debezium twin on the SAME documents and the
     // same op semantics (insert/update/replace ≍ c/u/u)
-    def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
     val dzWire = wire.zipWithIndex.map { case (doc, i) =>
       val op = if (ops(i % 3) == "insert") "c" else "u"
       s"""{"payload":{"before":null,"after":"${esc(doc)}","op":"$op","ts_ms":8888000}}"""
@@ -216,6 +219,44 @@ class CdcDecodeSpec extends SparkSpec {
     val direct = ViewReplay.replay(good.toDF())
       .as[TransactionView].collect().map(v => v.transactionId -> v).toMap
     assert(viaStream == direct)
+  }
+
+  test("decode tail, all four envelopes: incomplete documents dropped, tsMs from the " +
+      "envelope clock or dropped, creationDate defaulted from tsMs") {
+    import org.apache.spark.sql.Dataset
+    def doc(fields: (String, String)*) =
+      fields.map { case (k, v) => s""""$k":$v""" }.mkString("{", ",", "}")
+    val code = "eventCode" -> s""""${EventCodes.Activated}""""
+    val docs = Seq(
+      doc("id" -> "\"ok\"", "transactionId" -> "\"t\"", code, "tsMs" -> "1000"),
+      doc("transactionId" -> "\"noId\"", code, "tsMs" -> "1000"),
+      doc("id" -> "\"noTx\"", code, "tsMs" -> "1000"),
+      doc("id" -> "\"noCode\"", "transactionId" -> "\"t\"", "tsMs" -> "1000"),
+      doc("id" -> "\"noTs\"", "transactionId" -> "\"t\"", code))
+    def kafka(docs: Seq[String]) =
+      docs.zipWithIndex.map { case (d, i) => rec(d.getBytes("UTF-8"), i.toLong) }.toDF(KafkaCols: _*)
+    // (envelope, its decode of the documents, the tsMs its clock gives a document without one)
+    val decoders: Seq[(String, Seq[String] => Dataset[CdcEvent], Option[Long])] = Seq(
+      ("json", d => CdcDecode.fromJson(d.toDF("json")), None),
+      ("kafka", d => CdcDecode.fromKafkaEnvelope(kafka(d)), None),
+      ("kafka with lineage",
+        d => CdcDecode.fromKafkaEnvelopeWithMeta(kafka(d)).as[CdcEvent](CdcDecode.eventEncoder), None),
+      ("debezium", d => CdcDecode.fromDebeziumEnvelope(d.map(x =>
+        s"""{"payload":{"after":"${esc(x)}","op":"c","ts_ms":7000}}""").toDF("json")), Some(7000L)),
+      ("mongo", d => CdcDecode.fromMongoChangeStream(d.map(mongoEnv(_, "insert", ct = 7L)).toDF("json")),
+        Some(7000L)))
+    val isoMs = java.time.format.DateTimeFormatter.ofPattern("yyyy-MM-dd'T'HH:mm:ss.SSSX")
+    decoders.foreach { case (name, decode, clock) =>
+      val byId = decode(docs).collect().map(e => e.id -> e).toMap
+      assert(byId.keySet == Set("ok") ++ clock.map(_ => "noTs"), name)
+      val want = Map("ok" -> 1000L) ++ clock.map("noTs" -> _)
+      want.foreach { case (id, ts) =>
+        assert(byId(id).tsMs == ts, s"$name: $id")
+        val created = java.time.OffsetDateTime.parse(byId(id).creationDate, isoMs)
+        assert(created.toInstant.toEpochMilli == ts, s"$name: $id creationDate ${byId(id).creationDate}")
+        assert(byId(id).operationType == "insert", s"$name: $id")
+      }
+    }
   }
 
   test("decode composes with the replay pipeline end-to-end") {
